@@ -161,10 +161,10 @@ def main(argv: list[str] | None = None, log=print) -> int:
     p.add_argument(
         "--threads",
         type=int,
-        default=1,
-        help="dbt --threads analog for `run`: build up to N models"
-        " concurrently (whole-DAG runs only — selection/backfill run"
-        " serially)",
+        default=None,
+        help="dbt --threads analog for `run`/`retry`/`build`: build up to"
+        " N models concurrently (default: one per selected model, up to"
+        " Spark's default parallelism)",
     )
     p.add_argument(
         "--counts",
@@ -341,6 +341,7 @@ def main(argv: list[str] | None = None, log=print) -> int:
         try:
             built = r.retry(
                 select=prior_select,
+                threads=a.threads,
                 full_refresh=a.full_refresh,
                 event_time_start=parse_ts(prior_ets),
                 event_time_end=parse_ts(prior_ete),
@@ -353,22 +354,10 @@ def main(argv: list[str] | None = None, log=print) -> int:
             log("nothing to retry: the previous run completed")
         else:
             write_artifact(prior_select, prior_ets, prior_ete, prior_state_path)
-    elif a.threads > 1 and not (
-        a.select or a.event_time_start or a.event_time_end or a.state
-    ):
-        # a lone --event-time-end must route to the serial path (which
-        # raises on a half-open backfill) — dropping it here would
-        # silently run an unbounded build
-        try:
-            built = r.run_threaded(threads=a.threads, full_refresh=a.full_refresh)
-        except Exception:
-            write_artifact(None)
-            raise
     else:
-        if a.threads > 1:
-            log("--threads applies to whole-DAG runs; running serially")
         try:
             built = r.run(
+                threads=a.threads,
                 full_refresh=a.full_refresh,
                 select=a.select,
                 event_time_start=parse_ts(a.event_time_start),

@@ -12,16 +12,67 @@ View-materialized models stay *lazy* (temp views inline into downstream
 plans — the reference's single-query CTE pipelining, and Catalyst
 optimizes across model boundaries). Table/incremental/snapshot models
 execute an action.
+
+``run()`` is dbt's ``--threads`` executor: it releases each selected
+model to a worker pool once the selected upstreams its body refs are
+built, so independent branches run their Spark jobs side by side. The
+upstreams are the string literals passed to ``ctx.ref`` in the body's
+bytecode, read without calling it. A ref that hint misses (a name in a
+variable, a ref inside a helper) still builds correctly through
+``build()``'s demand resolution and per-node lock: a miss costs
+ordering, not correctness. ``run_results``, ``run()``'s dict and
+``run_tests()``'s results keep registration/declaration order. The
+``execute_seconds`` of concurrent models overlap, so their sum can
+exceed the run's wall time.
 """
 
 from __future__ import annotations
 
+import dis
 import threading
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+
+
+class _UpstreamFailed(RuntimeError):
+    """A model needed one that already failed in this run (dbt "skipped")."""
+
+
+def _ref_literals(code) -> set[str]:
+    """The string literals a body passes to ``.ref(...)``, read from its
+    bytecode and every nested code object (lambdas, comprehensions,
+    inner functions) without calling it."""
+    names: set[str] = set()
+    prev = None
+    for ins in dis.get_instructions(code):
+        if (
+            prev is not None
+            and prev.opname in ("LOAD_ATTR", "LOAD_METHOD")
+            and prev.argval == "ref"
+            and ins.opname == "LOAD_CONST"
+            and isinstance(ins.argval, str)
+        ):
+            names.add(ins.argval)
+        prev = ins
+    for c in code.co_consts:
+        if hasattr(c, "co_code"):
+            names |= _ref_literals(c)
+    return names
+
+
+def _closure(seeds, step: Callable[[set], set]) -> set:
+    """``seeds`` plus everything reachable by repeatedly applying ``step``
+    to the newest frontier."""
+    closure, frontier = set(seeds), set(seeds)
+    while frontier:
+        frontier = step(frontier) - closure
+        closure |= frontier
+    return closure
 
 
 def _declarative_config(mdef: "_ModelDef") -> dict:
@@ -85,11 +136,11 @@ class ModelRegistry:
         self._sources: dict[str, DataFrame] = {}
         self._freshness: dict[str, dict] = {}
         self._built: dict[str, DataFrame] = {}
-        # cycle guard is PER-THREAD: run_threaded workers each carry their
-        # own in-flight stack, so only genuine same-thread recursion trips
-        # "model cycle" — a ref deps() did not observe (the documented
-        # runtime-branching case) building concurrently in another worker
-        # must WAIT on the node lock below, not error
+        # cycle guard is PER-THREAD: run() workers each carry their own
+        # in-flight stack, so only genuine same-thread recursion trips
+        # "model cycle" — a ref the scheduler's hints missed, building
+        # concurrently in another worker, must WAIT on the node lock
+        # below, not error
         self._tlocal = threading.local()
         self._node_locks: dict[str, threading.Lock] = {}
         self._locks_guard = threading.Lock()
@@ -108,6 +159,8 @@ class ModelRegistry:
         self._selected: set[str] | None = None
         self.batch_range: tuple | None = None  # microbatch backfill bounds
         self.run_results: list[dict] = []
+        # model -> its error, during run() only (one attempt per run)
+        self._failed: dict[str, Exception] | None = None
         self._exposures: dict[str, dict] = {}
         self._unit_tests: dict[str, dict] = {}
 
@@ -231,6 +284,8 @@ class ModelRegistry:
         parent through the registry — ref() lineage, not a raw table
         read. Returns ``{model: [TestResult, ...]}`` for models that
         declare tests; like dbt, tests run against the BUILT relation.
+        The checks run side by side on a worker pool (see ``_pool``);
+        the dict and each model's list keep declaration order.
         """
         from ..operators import testing as T
 
@@ -249,7 +304,7 @@ class ModelRegistry:
                 names = set()
         else:
             names = set(self._models)
-        out: dict[str, list] = {}
+        checks: list[tuple[str, str, DataFrame, dict]] = []
         for name, mdef in self._models.items():
             if name not in names:
                 continue
@@ -257,7 +312,6 @@ class ModelRegistry:
             if not specs:
                 continue
             df = self._tested_relation(name)
-            results = []
             for spec in specs:
                 opts = dict(spec[-1]) if isinstance(spec[-1], dict) else {}
                 args = spec[1:-1] if isinstance(spec[-1], dict) else spec[1:]
@@ -279,10 +333,29 @@ class ModelRegistry:
                     )
                 else:
                     raise ValueError(f"unknown test kind: {kind!r}")
-                tname = f"{kind}_{name}_{args[0]}"
-                results.append(T.run_test(v, name=tname, **opts))
-            out[name] = results
+                checks.append((name, f"{kind}_{name}_{args[0]}", v, opts))
+        pool, inherit = self._pool(len(checks))
+        with pool:
+            results = list(pool.map(
+                inherit(lambda c: T.run_test(c[2], name=c[1], **c[3])), checks
+            ))
+        out: dict[str, list] = {}
+        for (name, *_), res in zip(checks, results):
+            out.setdefault(name, []).append(res)
         return out
+
+    def _pool(
+        self, tasks: int, threads: int | None = None
+    ) -> tuple[ThreadPoolExecutor, Callable]:
+        """A pool of ``threads`` workers (default: one per task, up to
+        Spark's default parallelism) and the wrapper every task goes
+        through, which carries the calling thread's job group, job
+        description and session tags, captured now, into the worker."""
+        workers = threads or min(tasks, self.spark.sparkContext.defaultParallelism)
+        return (
+            ThreadPoolExecutor(max_workers=max(1, workers)),
+            inheritable_thread_target(self.spark),
+        )
 
     def _tested_relation(self, name: str) -> DataFrame:
         """dbt test semantics: tests read the EXISTING built relation —
@@ -385,7 +458,7 @@ class ModelRegistry:
     @property
     def _building(self) -> list[str]:
         """This THREAD's in-flight model stack (cycle guard). Thread-local
-        so run_threaded workers never see each other's frames: a shared
+        so run() workers never see each other's frames: a shared
         stack made a cross-thread in-flight node look like same-thread
         recursion and raised a spurious 'model cycle'."""
         stack = getattr(self._tlocal, "stack", None)
@@ -403,10 +476,9 @@ class ModelRegistry:
         Thread safety: a per-NODE lock serializes concurrent builds of the
         same model (second arrival waits, then reads the memo), while the
         per-THREAD ``_building`` stack catches genuine same-thread
-        recursion. The scheduler in ``run_threaded`` already releases
-        nodes only when their observed upstreams are memoized, so the
-        lock only matters for refs ``deps()`` could not observe
-        (runtime-branching bodies).
+        recursion. ``run()`` releases nodes only once their hinted
+        upstreams are memoized, so the lock matters for refs the hints
+        miss. During a run a failed model is not attempted again.
 
         A circular ref SPLIT ACROSS THREADS (X refs Y while another
         thread building Y refs X — invisible to both thread-local
@@ -439,6 +511,12 @@ class ModelRegistry:
             with self._locks_guard:
                 self._lock_owner[name] = ident
             return self._build_locked(name)
+        except Exception as exc:
+            # recorded before the lock is released, so a waiter on this
+            # node sees the failure instead of attempting the build again
+            if self._failed is not None:
+                self._failed.setdefault(name, exc)
+            raise
         finally:
             with self._locks_guard:
                 self._lock_owner.pop(name, None)
@@ -472,6 +550,10 @@ class ModelRegistry:
     def _build_locked(self, name: str) -> DataFrame:
         if name in self._built:  # built by another thread while we waited
             return self._built[name]
+        if self._failed and name in self._failed:
+            raise _UpstreamFailed(
+                f"model {name!r} already failed in this run"
+            ) from self._failed[name]
         if (
             self._selected is not None
             and name not in self._selected
@@ -787,9 +869,10 @@ class ModelRegistry:
         event_time_start=None,
         event_time_end=None,
         state: dict | None = None,
+        threads: int | None = None,
     ) -> dict[str, DataFrame]:
-        """Build every registered model (DAG order via demand resolution),
-        or — with ``select`` — a dbt-style graph selection:
+        """Build every registered model, or — with ``select`` — a dbt-style
+        graph selection:
 
         - ``"name"``  just that model
         - ``"+name"`` the model and its upstream closure
@@ -803,6 +886,11 @@ class ModelRegistry:
         rebuilt (dbt ``--select`` semantics); unselected view-materialized
         upstreams rebuild lazily — they are inlined plan fragments, not
         materialized state, so "reusing" them is the same as building them.
+
+        ``threads`` (dbt ``--threads``) sizes the worker pool (``_pool``).
+        On the first error, unstarted models never start, running ones
+        finish and the first error is re-raised; a model whose upstream
+        failed gets no row (dbt's "skipped"), so ``retry()`` reruns it.
         """
         self.full_refresh = full_refresh
         self._built.clear()
@@ -822,23 +910,7 @@ class ModelRegistry:
                 raise ValueError("state:modified requires state=<saved manifest>")
             selected = self.modified_nodes(state)
             if select.endswith("+") and selected:
-                # ONE discovery pass + children-map BFS for every
-                # modified node's closure (retry()'s pattern) —
-                # select_nodes per node would re-execute deps(), i.e.
-                # every model body, once per modified node
-                children: dict[str, set[str]] = {}
-                for child, ups in self.deps().items():
-                    for up in ups:
-                        children.setdefault(up, set()).add(child)
-                frontier = set(selected)
-                closure = set(selected)
-                while frontier:
-                    nxt = set().union(
-                        *(children.get(n, set()) for n in frontier)
-                    )
-                    frontier = nxt - closure
-                    closure |= nxt
-                selected = closure & set(self._models)
+                selected = self._downstream(selected)
         elif isinstance(select, (set, frozenset, list, tuple)):
             # explicit node set (retry()'s path; also a programmatic API)
             unknown = set(select) - set(self._models)
@@ -848,34 +920,63 @@ class ModelRegistry:
         else:
             selected = self.select_nodes(select) if select else None
         self._selected = selected
-        results: list[dict] = []
+        rows: dict[str, dict] = {}
         out: dict[str, DataFrame] = {}
-        try:
-            for name in self._models:
-                if selected is not None and name not in selected:
-                    continue
-                t0 = time.monotonic()
-                try:
-                    out[name] = self.build(name)
-                    status = "success"
-                except Exception:
-                    # record the failure in the artifact, then surface it
-                    # (dbt marks downstream models skipped; demand-driven
-                    # builds stop at the first error instead)
-                    results.append({
+        errors: list[Exception] = []
+
+        def build_one(name: str) -> DataFrame:
+            t0 = time.monotonic()
+            status = "error"
+            try:
+                df = self.build(name)
+                status = "success"
+                return df
+            except _UpstreamFailed:
+                status = None  # dbt's "skipped": no row
+                raise
+            finally:
+                if status:
+                    rows[name] = {
                         "model": name,
                         "materialized": self._models[name].materialized,
-                        "status": "error",
+                        "status": status,
                         "execute_seconds": round(time.monotonic() - t0, 3),
-                    })
-                    raise
-                results.append({
-                    "model": name,
-                    "materialized": self._models[name].materialized,
-                    "status": status,
-                    "execute_seconds": round(time.monotonic() - t0, 3),
-                })
+                    }
+
+        running: dict = {}
+        try:
+            self._failed = {}
+            ups = self._upstream_hints(selected)
+            pool, inherit = self._pool(len(ups), threads)
+            task = inherit(build_one)
+            with pool:
+                while ups or running:
+                    if not errors:
+                        ready = [n for n, u in ups.items() if u <= out.keys()]
+                        if not ready and not running:
+                            # the hints form a cycle: release the first node
+                            # and let build()'s guard report (or resolve) it
+                            ready = [next(iter(ups))]
+                        for n in ready:
+                            del ups[n]
+                            running[pool.submit(task, n)] = n
+                    if not running:
+                        break  # after an error, unstarted models never start
+                    finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for f in finished:
+                        n = running.pop(f)
+                        try:
+                            out[n] = f.result()
+                        except Exception as exc:  # noqa: BLE001 - re-raised below
+                            errors.append(exc)
+            if errors:
+                raise next(
+                    (e for e in errors if not isinstance(e, _UpstreamFailed)),
+                    errors[0],
+                )
+            return {n: out[n] for n in self._models if n in out}
         finally:
+            self._failed = None
             self._selected = None
             self.batch_range = None  # a later build()/run_tests() must
             # not silently re-enter the backfill's table writes
@@ -883,107 +984,33 @@ class ModelRegistry:
             # into a later direct build() would CTAS over an incremental
             # target's accumulated history
             # run_results.json analog (dbt's per-run artifact: one row per
-            # node with status + timing); memoized builds register ~0s
-            self.run_results = results
-        return out
+            # attempted node with status + timing, registration order)
+            self.run_results = [rows[n] for n in self._models if n in rows]
 
     def run_threaded(
         self, threads: int = 4, full_refresh: bool = False
     ) -> dict[str, DataFrame]:
-        """dbt ``--threads`` analog: build the DAG with up to ``threads``
-        models in flight. A node is released only when every discovered
-        upstream is ALREADY BUILT, so a worker's ``build()`` finds its
-        refs memoized and never races another worker into the same
-        node — the scheduler provides the safety the demand-driven
-        single-thread path gets from recursion. Spark handles the
-        concurrent actions (one scheduler, many jobs), which is where
-        the win comes from on real DAGs: independent branches overlap
-        their cluster time instead of serializing driver-side.
+        """Alias of ``run(threads=…, full_refresh=…)``."""
+        return self.run(full_refresh=full_refresh, threads=threads)
 
-        Tests/hook ordering per NODE are unchanged; ACROSS independent
-        nodes, hook and build order is concurrent (dbt's documented
-        --threads semantics). Failure fails the whole run (fail-fast):
-        in-flight nodes finish, unstarted nodes never start, and
-        run_results records success/error rows for everything that ran.
-        """
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-        self.full_refresh = full_refresh
-        self._built.clear()
-        deps = self.deps()
-        # ref()-of-a-source is legal (build() resolves it) and deps()
-        # records the source name as an edge — but a source is never a
-        # buildable node, so the readiness check below could never
-        # satisfy it and the model would deadlock into the
-        # 'unbuildable nodes' error on a perfectly acyclic DAG. Sources
-        # are always ready: drop them from the upstream sets.
-        pending = {
-            n: {u for u in ups if u not in self._sources}
-            for n, ups in deps.items()
+    def _upstream_hints(self, selected: set[str] | None) -> dict[str, set[str]]:
+        """Each selected model (registration order) mapped to the selected
+        models its body refs by literal name, directly or through
+        unselected models (which ``build()`` resolves on demand)."""
+        hints = {
+            n: _ref_literals(m.fn.__code__) & self._models.keys()
+            for n, m in self._models.items()
         }
-        results: list[dict] = []
-        out: dict[str, DataFrame] = {}
-        failed: Exception | None = None
+        chosen = set(self._models) if selected is None else selected
 
-        def build_one(name: str):
-            t0 = time.monotonic()
-            try:
-                df = self.build(name)
-            except Exception:
-                results.append({
-                    "model": name,
-                    "materialized": self._models[name].materialized,
-                    "status": "error",
-                    "execute_seconds": round(time.monotonic() - t0, 3),
-                })
-                raise
-            return name, df, round(time.monotonic() - t0, 3)
+        def through_unselected(front: set) -> set:
+            return set().union(*(hints[u] for u in front if u not in chosen))
 
-        with ThreadPoolExecutor(max_workers=max(1, threads)) as pool:
-            futures = set()
-            while (pending or futures) and failed is None:
-                ready = [
-                    n for n, ups in pending.items()
-                    if all(u in out for u in ups)
-                ]
-                for n in ready:
-                    del pending[n]
-                    futures.add(pool.submit(build_one, n))
-                if not futures:
-                    raise RuntimeError(
-                        f"dependency cycle or unbuildable nodes: {sorted(pending)}"
-                    )
-                done, futures = wait(futures, return_when=FIRST_COMPLETED)
-                for f in done:
-                    try:
-                        name, df, secs = f.result()
-                    except Exception as exc:  # noqa: BLE001 - recorded + re-raised
-                        failed = exc
-                        continue
-                    out[name] = df
-                    results.append({
-                        "model": name,
-                        "materialized": self._models[name].materialized,
-                        "status": "success",
-                        "execute_seconds": secs,
-                    })
-            # drain in-flight work before surfacing the failure
-            for f in futures:
-                try:
-                    name, df, secs = f.result()
-                    out[name] = df
-                    results.append({
-                        "model": name,
-                        "materialized": self._models[name].materialized,
-                        "status": "success",
-                        "execute_seconds": secs,
-                    })
-                except Exception:  # noqa: BLE001
-                    pass
-        self.run_results = results
-        if failed is not None:
-            raise failed
-        return out
+        return {
+            n: _closure(hints[n], through_unselected) & chosen
+            for n in self._models
+            if n in chosen
+        }
 
     def retry(
         self, select: str | None = None, **run_kwargs
@@ -1025,20 +1052,7 @@ class ModelRegistry:
             # means skipped when the run actually failed)
             return {}
         todo = {n for n in self._models if n not in done}
-        # ONE discovery pass serves every failed node's downstream
-        # closure (select_nodes per node would re-run deps() — i.e.
-        # every model body — once per failure)
-        children: dict[str, set[str]] = {n: set() for n in self._models}
-        for child, ups in self.deps().items():
-            for up in ups:
-                children.setdefault(up, set()).add(child)
-        frontier = set(failed)
-        downstream = set(failed)
-        while frontier:
-            nxt = set().union(*(children.get(n, set()) for n in frontier))
-            frontier = nxt - downstream
-            downstream |= nxt
-        todo |= downstream
+        todo |= self._downstream(failed)
         if select in ("state:modified", "state:modified+"):
             state = run_kwargs.get("state")
             if state is None:
@@ -1048,7 +1062,7 @@ class ModelRegistry:
                 )
             sel = self.modified_nodes(state)
             if select.endswith("+") and sel:
-                sel = set().union(*[self.select_nodes(f"{n}+") for n in sel])
+                sel = self._downstream(sel)
             todo &= sel
         elif select is not None:
             todo &= self.select_nodes(select)
@@ -1141,27 +1155,19 @@ class ModelRegistry:
             raise KeyError(f"unknown model: {name}")
         g = self.deps()
         selected = {name}
-        if up:
-            frontier = [name]
-            while frontier:
-                n = frontier.pop()
-                for parent in g.get(n, ()):  # sources have no entry
-                    if parent in g and parent not in selected:
-                        selected.add(parent)
-                        frontier.append(parent)
+        if up:  # sources are edges in g but not models
+            selected |= _closure(
+                selected, lambda f: {p for n in f for p in g[n] if p in g}
+            )
         if down:
-            children: dict[str, set[str]] = {}
-            for child, parents in g.items():
-                for p in parents:
-                    children.setdefault(p, set()).add(child)
-            frontier = [name]
-            while frontier:
-                n = frontier.pop()
-                for c in children.get(n, ()):
-                    if c not in selected:
-                        selected.add(c)
-                        frontier.append(c)
+            selected |= self._downstream({name}, g)
         return selected
+
+    def _downstream(self, seeds: set[str], g: dict | None = None) -> set[str]:
+        """``seeds`` and every model downstream of them, from ONE
+        ``deps()`` pass (a pass runs every model body)."""
+        g = self.deps() if g is None else g
+        return _closure(seeds, lambda f: {c for c, ps in g.items() if ps & f})
 
 
 def admin_print_query(
