@@ -256,7 +256,15 @@ def personalized_pagerank(
     ``seeds`` is bounded driver model state (the operator's point: a
     handful of known-good ids); unknown seed ids raise loudly — a
     silently dropped seed changes the whole distribution. Returns
-    ``(id, rank_fp)``."""
+    ``(id, rank_fp)``.
+
+    EAGER: the call itself runs Spark jobs before it returns. It
+    collects the node count and the seed-presence check (one job),
+    materializes the edge×degree relation, cuts lineage per the
+    ``checkpoint_every`` cadence inside the loop, and makes one final
+    ``truncate_lineage`` cut of the output. The returned frame reads
+    that last materialization (``localCheckpoint`` blocks, or the
+    checkpoint dir with ``reliable=True``), not the input plan."""
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     seed_list = sorted({str(s) for s in seeds})
@@ -273,8 +281,9 @@ def personalized_pagerank(
     # a SINK node (inbound edges, no outbound) must still receive its
     # endorsement flow and appear in the output — building nodes from
     # out-edge sources alone silently dropped both. PERSISTED: the
-    # node frame is referenced twice per round (seed mass + left-join
-    # universe), and as a bare plan each round re-ran the edge scan.
+    # node frame is read twice, by the node-count/seed check below and
+    # by the one universe join after the loop, and as a bare plan each
+    # read re-ran the edge scan.
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))

@@ -16,6 +16,7 @@ no driver-side collect on any data path.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -37,36 +38,35 @@ from ..functions import (
     split_part,
     surrogate_key,
 )
-from ..session import ensure_utc
+from ..session import ensure_utc, session_cached
 from .gap_pipeline import GapParams, fct_gap_exceptions, gap_status, gap_tri_state_violations
 
 # ---------------------------------------------------------------------------
 # shared helpers
 # ---------------------------------------------------------------------------
 
-# Resolved-scan memo: spark.read.parquet eagerly lists the directory and
-# reads the footer schema (~80-95 ms measured per call on this host), and
-# a 200-query bench session re-pays that for every query touching the
-# same 10 tables. Memoize the RESOLVED DataFrame per (sf_dir, table,
-# session) — guide §1.2's "don't redo identical work", applied to plan
-# construction. NO persist() and no data caching: the DataFrame object
-# only carries the analyzed scan relation, every action still reads the
-# parquet from disk. Keyed like _session_cached (id-reuse safe).
-_LOAD_CACHE: dict = {}
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    full = ((sf_dir, name), id(spark))
-    hit = _LOAD_CACHE.get(full)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = _load_fresh(spark, sf_dir, name)
-    _LOAD_CACHE[full] = (spark, df)
-    return df
+    """The resolved scan of ``{sf_dir}/{name}.parquet``, memoized per
+    session. ``spark.read.parquet`` eagerly lists the directory and
+    reads the footer schema (~80-95 ms measured per call on a 4-core
+    host), and a 200-query session re-pays that for every query touching
+    the same 10 tables — guide §1.2's "don't redo identical work",
+    applied to plan construction. NO persist() and no data caching: the
+    DataFrame only carries the analyzed scan relation, and every action
+    still reads the parquet from disk.
+
+    The session timezone is pinned to UTC on every call, memo hit or
+    not. The memo assumes the ``sf_dir`` tables and the scan confs
+    (``spark.sql.files.*``) are fixed for the session's lifetime: the
+    file listing and split planning resolved on the first call are
+    reused by every later one."""
+    ensure_utc(spark)
+    return session_cached(
+        spark, ("load", sf_dir, name), lambda: _load_fresh(spark, sf_dir, name)
+    )
 
 
 def _load_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_utc(spark)
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS). Depending on the Spark
         # build it surfaces as int64 nanos (legacy nanosAsLong path) or
@@ -105,20 +105,21 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     split count comes from the physical scan's partitioning, computed
     once per (table, session) and memoized alongside the scan itself."""
     base = load(spark, sf_dir, name)
-    full = ((sf_dir, name), id(spark))
-    hit = _SPREAD_CACHE.get(full)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    par = spark.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        df = base.repartition(par)
-    else:
-        df = base
-    _SPREAD_CACHE[full] = (spark, df)
-    return df
+
+    def build():
+        par = spark.sparkContext.defaultParallelism
+        return base.repartition(par) if base.rdd.getNumPartitions() < par else base
+
+    return session_cached(spark, ("spread", sf_dir, name), build)
 
 
-_SPREAD_CACHE: dict = {}
+def _persisted(spark: SparkSession, key, build) -> DataFrame:
+    """``session_cached`` for a shared intermediate frame: built once per
+    session and persisted MEMORY_AND_DISK, so every query of the family
+    reads the one materialization."""
+    return session_cached(
+        spark, key, lambda: build().persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 # The COL code set recast onto part brands (FIXTURES.md §B role mapping).
@@ -171,9 +172,6 @@ CCS_PARAMS = GapParams(
 DEC = "decimal(18,2)"  # exact money arithmetic → bit-identical doubles
 
 
-_GAP_INPUT_CACHE: dict = {}
-
-
 def _gap_inputs(spark: SparkSession, sf_dir: str):
     """The datamart's two STAGING relations (member spine, typed claim
     lines) + the code seed. members/claims are SESSION-CACHED (the
@@ -212,12 +210,8 @@ def _gap_inputs(spark: SparkSession, sf_dir: str):
             )
         )
 
-    members = _session_cached(
-        _GAP_INPUT_CACHE, spark, (sf_dir, "members"), build_members
-    )
-    claims = _session_cached(
-        _GAP_INPUT_CACHE, spark, (sf_dir, "claims"), build_claims
-    )
+    members = _persisted(spark, ("gap_members", sf_dir), build_members)
+    claims = _persisted(spark, ("gap_claims", sf_dir), build_claims)
     codes = spark.createDataFrame(GAP_CODES, "code string, evidence_type string")
     return members, claims, codes
 
@@ -889,9 +883,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rolling_fingerprint(load(spark, sf_dir, "documents"), "text", "doc_id")
 
 
-_BOARD_CACHE: dict = {}
-
-
 def _cosine_board10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PUBLISHED exact cosine top-10 board for vec_id=0 — the
     retrieval family's shared serving artifact: ``cosine_topk``
@@ -901,8 +892,8 @@ def _cosine_board10(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer reads the published ranking."""
     from ..llmops.similarity import cosine_topk
 
-    return _session_cached(
-        _BOARD_CACHE, spark, (sf_dir, "cosine10"),
+    return _persisted(
+        spark, ("board_cosine10", sf_dir),
         lambda: cosine_topk(
             load(spark, sf_dir, "embeddings"), query_id=0, k=10
         ),
@@ -915,8 +906,8 @@ def _bm25_board15(spark: SparkSession, sf_dir: str) -> DataFrame:
     it); same convention as ``_cosine_board10``."""
     from ..llmops.retrieval import bm25_topk
 
-    return _session_cached(
-        _BOARD_CACHE, spark, (sf_dir, "bm25_15"),
+    return _persisted(
+        spark, ("board_bm25_15", sf_dir),
         lambda: bm25_topk(
             load_spread(spark, sf_dir, "documents"),
             ["filter", "join", "spark"], k=15,
@@ -933,8 +924,8 @@ def _ivf_board10(spark: SparkSession, sf_dir: str) -> DataFrame:
     train-once quantizer — layout-invariance is property-tested)."""
     from ..llmops.similarity import ivf_topk
 
-    return _session_cached(
-        _BOARD_CACHE, spark, (sf_dir, "ivf10"),
+    return _persisted(
+        spark, ("board_ivf10", sf_dir),
         lambda: ivf_topk(
             load_spread(spark, sf_dir, "embeddings"),
             query_id=0, k=10, n_centroids=8, nprobe=2, n_iter=2,
@@ -966,24 +957,22 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_pairs_lsh(load(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
-# Trained coarse quantizers, one Lloyd fit per (table, k, n_iter) per
-# session — IVF quantizers are trained once at index-build time and
-# shared by every probe/report pass (similarity.py::ivf_topk docstring);
-# the fit is deterministic, so reuse cannot change any oracle result.
-_QUANTIZER_CACHE: dict[tuple, list] = {}
-
-
 def _trained_centroids(
     spark: SparkSession, sf_dir: str, k: int = 8, n_iter: int = 2
 ) -> list:
-    key = (sf_dir, k, n_iter)
-    if key not in _QUANTIZER_CACHE:
-        from ..llmops.similarity import kmeans_lloyd
+    """Session train-once cache for the coarse quantizer: one Lloyd fit
+    per (table, k, n_iter) per session — IVF quantizers are trained once
+    at index-build time and shared by every probe/report pass
+    (similarity.py::ivf_topk docstring); the fit is deterministic, so
+    reuse cannot change any oracle result."""
+    from ..llmops.similarity import kmeans_lloyd
 
-        _QUANTIZER_CACHE[key] = kmeans_lloyd(
+    return session_cached(
+        spark, ("centroids", sf_dir, k, n_iter),
+        lambda: kmeans_lloyd(
             load(spark, sf_dir, "embeddings"), k=k, n_iter=n_iter
-        )
-    return _QUANTIZER_CACHE[key]
+        ),
+    )
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1023,14 +1012,14 @@ def _trained_pq_books(
     index-build time and shared by encode, ADC search, re-rank and
     IVFADC; the fit is deterministic, so reuse cannot change any oracle
     result."""
-    key = ("pq", sf_dir, m, k, n_iter)
-    if key not in _QUANTIZER_CACHE:
-        from ..llmops.similarity import pq_codebooks_trained
+    from ..llmops.similarity import pq_codebooks_trained
 
-        _QUANTIZER_CACHE[key] = pq_codebooks_trained(
+    return session_cached(
+        spark, ("pq_books", sf_dir, m, k, n_iter),
+        lambda: pq_codebooks_trained(
             load(spark, sf_dir, "embeddings"), m=m, k=k, n_iter=n_iter
-        )
-    return _QUANTIZER_CACHE[key]
+        ),
+    )
 
 
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1678,9 +1667,6 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _near_dup_labels(spark, sf_dir)
 
 
-_CLAIMS_CACHE: dict = {}
-
-
 def _claim_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deduped claim-line grain (fct_claims' at-least-once rule).
 
@@ -1709,7 +1695,7 @@ def _claim_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("is_screening", F.lit(0)).alias("is_screening"),
         ).distinct()
 
-    return _session_cached(_CLAIMS_CACHE, spark, sf_dir, build)
+    return _persisted(spark, ("claim_grain", sf_dir), build)
 
 
 def q_claim_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4016,41 +4002,6 @@ def q_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return logreg_score(feats, ["x1", "x2"], model["weights"], "doc_id")
 
 
-# The supplier match log is a build-once artifact like the trained
-# quantizers (_QUANTIZER_CACHE): one lineitem self-join per (session,
-# sf_dir), persisted and shared by every leaderboard query — whichever
-# runs first pays the build (elo_ratings in dict order; wilson_winrate
-# reads the cache). Reuse cannot change any oracle result: the cached
-# frame is the identical deterministic plan, only materialized.
-_MATCH_LOG_CACHE: dict = {}
-_PAIR_PERIOD_CACHE: dict = {}
-
-
-_NEAR_DUP_CACHE: dict = {}
-
-
-def _session_cached(cache: dict, spark, key, build) -> DataFrame:
-    """Shared lookup for the session caches: keyed by (key, id(session))
-    so two live sessions alternating on one sf_dir each keep their own
-    persisted entry instead of thrashing a single slot, and the one
-    supersede path (a new session object reusing a dead session's id)
-    unpersists the stale frame before rebuilding (round-11 ADVICE)."""
-    full = (key, id(spark))
-    hit = cache.get(full)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:  # id reuse by a new session: release the stale frame
-            hit[1].unpersist()
-        except Exception:
-            pass
-    from pyspark import StorageLevel
-
-    df = build().persist(StorageLevel.MEMORY_AND_DISK)
-    cache[full] = (spark, df)
-    return df
-
-
 def _near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH CANDIDATE pair table at the repo's operating point
     (shingle-3 → 8 minhashes → 4 bands of 2 → bucket collapse) — the
@@ -4075,9 +4026,7 @@ def _near_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
             lsh_band_buckets(sigs, "doc_id", 8, 2), "doc_id"
         )
 
-    return _session_cached(
-        _NEAR_DUP_CACHE, spark, (sf_dir, "candidates"), build
-    )
+    return _persisted(spark, ("near_dup_candidates", sf_dir), build)
 
 
 def _near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4099,7 +4048,7 @@ def _near_dup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
             threshold=0.4, n_shingle=3,
         )
 
-    return _session_cached(_NEAR_DUP_CACHE, spark, (sf_dir, "verified"), build)
+    return _persisted(spark, ("near_dup_verified", sf_dir), build)
 
 
 def _near_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4114,7 +4063,7 @@ def _near_dup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             _near_dup_verified(spark, sf_dir).select("id_a", "id_b")
         )
 
-    return _session_cached(_NEAR_DUP_CACHE, spark, (sf_dir, "labels"), build)
+    return _persisted(spark, ("near_dup_labels", sf_dir), build)
 
 
 def _supplier_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4124,7 +4073,13 @@ def _supplier_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper (cents_a·qty_b < cents_b·qty_a — exact integer
     cross-multiplication, no division); period = order year (the
     FIDE/arena rating-period unit). This exact construction is
-    pre-proven at driver shape in tests/test_round10_replays.py."""
+    pre-proven at driver shape in tests/test_round10_replays.py.
+
+    Persisted once per session and shared by every leaderboard query:
+    whichever runs first pays the build. The cached frame is the same
+    deterministic plan, only materialized, so reuse cannot change any
+    oracle result. The fitted rating frames below follow suit: a
+    serving session fits once and joins many times."""
 
     def build():
         # load_spread: the self-join reads lineitem twice, and the
@@ -4161,7 +4116,7 @@ def _supplier_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _session_cached(_MATCH_LOG_CACHE, spark, sf_dir, build)
+    return _persisted(spark, ("match_log", sf_dir), build)
 
 
 def _supplier_pair_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4182,21 +4137,7 @@ def _supplier_pair_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("long").alias("n_m"))
         )
 
-    return _session_cached(_PAIR_PERIOD_CACHE, spark, sf_dir, build)
-
-
-_RATING_FRAME_CACHE: dict = {}
-
-
-def _session_rating_frame(spark, sf_dir: str, key: str, build) -> DataFrame:
-    """Session cache for the FITTED leaderboard rating frames (bounded
-    model state, one row per item). The leaderboard family publishes
-    the same fit through several queries (the board, the agreement
-    stat, the release gate) — a real serving session fits once and
-    joins many times, and the caches make the queries cost the same.
-    Keyed by (sf_dir, key, session), the ``_session_cached``
-    convention."""
-    return _session_cached(_RATING_FRAME_CACHE, spark, (sf_dir, key), build)
+    return _persisted(spark, ("pair_periods", sf_dir), build)
 
 
 def _supplier_bt3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4218,7 +4159,7 @@ def _supplier_bt3(spark: SparkSession, sf_dir: str) -> DataFrame:
             pc, n_iter=BT_ROUNDS, pre_collapsed=True
         )
 
-    return _session_rating_frame(spark, sf_dir, "bt3", build)
+    return _persisted(spark, ("rating_bt3", sf_dir), build)
 
 
 def _supplier_elo_boards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4233,8 +4174,8 @@ def _supplier_elo_boards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llmops.preferences import elo_boards
     from .leaderboard_release import ELO_K
 
-    return _session_rating_frame(
-        spark, sf_dir, "elo_boards",
+    return _persisted(
+        spark, ("rating_elo_boards", sf_dir),
         lambda: elo_boards(
             _supplier_pair_periods(spark, sf_dir), ks=(16, ELO_K),
             n_col="n_m", pre_collapsed=True,
@@ -4272,8 +4213,8 @@ def _supplier_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``wilson_winrate`` board, also the release DAG's ``wilson_board``."""
     from ..llmops.preferences import wilson_winrate
 
-    return _session_rating_frame(
-        spark, sf_dir, "wilson",
+    return _persisted(
+        spark, ("rating_wilson", sf_dir),
         lambda: wilson_winrate(
             _supplier_pair_periods(spark, sf_dir), n_col="n_m"
         ),
@@ -4849,9 +4790,6 @@ def q_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return source_overlap_kmv(docs, "source", "text", k=64)
 
 
-_PANEL_CACHE: dict = {}
-
-
 def _events_rater_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dawid_skene rater panel construction shared by the
     annotation-quality family (dawid_skene / weighted_consensus /
@@ -4880,7 +4818,7 @@ def _events_rater_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("item", "rater", "label")
         )
 
-    return _session_cached(_PANEL_CACHE, spark, sf_dir, build)
+    return _persisted(spark, ("rater_panel", sf_dir), build)
 
 
 def q_implicit_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -105,6 +105,26 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def session_cached(spark: SparkSession, key, build):
+    """Return ``build()``, memoized under ``key`` for this session.
+
+    The store is one dict held by the session object itself, so its
+    entries live exactly as long as the session: ``spark.newSession()``
+    starts with an empty store, and a collected session drops its
+    entries with it. ``build`` runs on a miss only; whatever it returns
+    (a DataFrame, fitted model state) is stored as is.
+
+    The store is not synchronised. Two threads missing the same key
+    together would both build it; no caller does this today (registry
+    model bodies never call the query helpers, and the CLI's projection
+    runs them on the main thread).
+    """
+    store = vars(spark).setdefault("_session_store", {})
+    if key not in store:
+        store[key] = build()
+    return store[key]
+
+
 @contextmanager
 def job_group(spark: SparkSession, group_id: str, description: str = ""):
     """Workload attribution: tag every job submitted inside the block —

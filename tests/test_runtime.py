@@ -3227,3 +3227,56 @@ def test_load_memo_and_spread_gate(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+
+
+def test_load_pins_utc_on_memo_hit(spark):
+    """load() pins the session timezone to UTC on EVERY call, not only
+    when it builds the scan: a session switched to another zone after
+    the first (memoized) load is back on UTC at the next load, and the
+    zone-sensitive events_hourly returns its UTC rows."""
+    from healthcare_dbt_datamart_spark.models import testdata_queries as tq
+
+    sf = "/root/testdata/sf0.001"
+    tz_key = "spark.sql.session.timeZone"
+    old_tz = spark.conf.get(tz_key)
+    try:
+        tq.load(spark, sf, "events")  # fill the memo
+        want = sorted(tq.q_events_hourly(spark, sf).collect())
+        spark.conf.set(tz_key, "America/New_York")
+        tq.load(spark, sf, "events")  # memo hit
+        assert spark.conf.get(tz_key) == "UTC"
+        assert sorted(tq.q_events_hourly(spark, sf).collect()) == want
+    finally:
+        spark.conf.set(tz_key, old_tz)
+
+
+def test_session_caches_are_per_session(spark):
+    """The query caches belong to the session: spark.newSession()
+    (same SparkContext, own state) gets its own fitted quantizer and its
+    own persisted frames, while repeat calls in one session hit."""
+    from pyspark import StorageLevel
+
+    from healthcare_dbt_datamart_spark.models import testdata_queries as tq
+
+    sf = "/root/testdata/sf0.001"
+    other = spark.newSession()
+
+    c = tq._trained_centroids(spark, sf)
+    assert tq._trained_centroids(spark, sf) is c
+    c_other = tq._trained_centroids(other, sf)
+    assert c_other is not c
+    assert tq._trained_centroids(other, sf) is c_other
+    assert c_other == c  # deterministic fit
+
+    panel = tq._events_rater_panel(spark, sf)
+    panel_other = tq._events_rater_panel(other, sf)
+    assert panel_other is not panel
+    assert tq._events_rater_panel(other, sf) is panel_other
+    assert panel_other.sparkSession is other
+    assert panel.storageLevel == StorageLevel.MEMORY_AND_DISK
+    assert panel_other.storageLevel == StorageLevel.MEMORY_AND_DISK
+
+    scan = tq.load(other, sf, "events")
+    assert scan is not tq.load(spark, sf, "events")
+    assert tq.load(other, sf, "events") is scan
+    assert scan.storageLevel.useMemory is False  # never persisted
