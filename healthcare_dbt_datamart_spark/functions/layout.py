@@ -88,11 +88,18 @@ def zorder_cluster(
     """Return ``df`` re-arranged for a z-ordered write on two integer
     columns: compute both columns' bounds (one aggregate, riding in as
     a 1-row broadcast — no collect, no plan split), attach the Morton
-    key, range-partition and sort by it, drop the key. Feed the result
+    key, partition and sort by it, drop the key. Feed the result
     straight to ``materialize_table`` / any parquet write; each output
     file then covers a tight rectangle in (col_a, col_b) and footer
     min/max stats prune on EITHER column (asserted file-by-file in
     tests/test_functions.py).
+
+    Files are cut at the key's n-quantiles (a second 1-row broadcast)
+    and rows shuffle straight to their file, so the layout depends on
+    the data alone (``repartitionByRange`` would seed its sampler from
+    the RDD id). ``n`` defaults to the optimizer's size estimate over
+    64 MiB (AQE's default advisory partition size), capped at
+    ``spark.sql.shuffle.partitions``: a small table stays a few files.
 
     Dates/timestamps: pass an integer derivation (epoch day / unix
     seconds) — the key is layout-only, so the derived column never
@@ -112,11 +119,24 @@ def zorder_cluster(
             F.col("_bmn"), F.col("_bmx"),
         ),
     )
-    parted = (
-        keyed.repartitionByRange(n_partitions, "_zkey")
-        if n_partitions
-        else keyed.repartitionByRange("_zkey")
+    if not n_partitions:
+        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        n_partitions = min(
+            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+            -(-int(str(est)) // (64 << 20)),
+        )
+    n = max(int(n_partitions), 1)
+    # every key NULL -> NULL quantiles -> no cuts, one file
+    cuts = keyed.agg(
+        F.coalesce(
+            F.percentile_approx("_zkey", [i / n for i in range(1, n)]),
+            F.array().cast("array<bigint>"),
+        ).alias("_zcuts")
     )
+    keyed = keyed.crossJoin(broadcast(cuts)).withColumn(
+        "_zfile", F.size(F.filter("_zcuts", lambda c: c < F.col("_zkey")))
+    )
+    parted = keyed.repartitionById(n, "_zfile")
     return parted.sortWithinPartitions("_zkey").drop(
-        "_zkey", "_amn", "_amx", "_bmn", "_bmx"
+        "_zkey", "_amn", "_amx", "_bmn", "_bmx", "_zcuts", "_zfile"
     )

@@ -122,9 +122,9 @@ from .graph import (  # noqa: F401
     hits_fixedpoint,
     pagerank_fixedpoint,
     personalized_pagerank,
-    truncate_lineage,
     undirected_edges,
 )
+from ..session import truncate_lineage  # noqa: F401
 from .sketches import (  # noqa: F401
     cms_heavy_hitters,
     cms_sketch,

@@ -6,8 +6,8 @@ one groupBy(word) collapses 100 TB of text to a vocabulary-sized
 relation, and every merge round runs over that small table (the classic
 algorithm's word-dict representation, distributed). Each round is ONE
 pair-count shuffle + a 1-row argmax of driver model state (the chosen
-pair), then a lazy per-word string rewrite; the per-round word table is
-localCheckpoint'd so round k does not recompute rounds 1..k-1
+pair), then a lazy per-word string rewrite; ``truncate_lineage`` cuts
+the per-round word table so round k does not recompute rounds 1..k-1
 (the Lloyd-fit persistence discipline, llmops/similarity.py).
 
 Symbol representation: a word's symbols are space-joined with sentinel
@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import truncate_lineage
 
 
 def _word_symbols(df: DataFrame, text_col: str) -> DataFrame:
@@ -88,7 +90,7 @@ def bpe_train(
     artifact a training pipeline ships. Iterative: each round's argmax
     pair is bounded driver model state feeding the next round's rewrite
     (the kmeans/connected-components carve-out class)."""
-    words = _word_symbols(df, text_col).localCheckpoint(eager=True)
+    words = truncate_lineage(_word_symbols(df, text_col))
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         top = (
@@ -101,9 +103,11 @@ def bpe_train(
             break
         left, right, freq = top[0]["left"], top[0]["right"], int(top[0]["freq"])
         merges.append((left, right, freq))
-        words = words.select(
-            _apply_merge(F.col("syms"), left, right).alias("syms"), "freq"
-        ).localCheckpoint(eager=True)
+        words = truncate_lineage(
+            words.select(
+                _apply_merge(F.col("syms"), left, right).alias("syms"), "freq"
+            )
+        )
     return merges
 
 
@@ -226,7 +230,7 @@ def unigram_lm_train(
     import pandas as pd
 
     scale = int(scale)
-    wf = _word_freqs(df, text_col).localCheckpoint(eager=True)
+    wf = truncate_lineage(_word_freqs(df, text_col))
     # (vocab_size is validated against the observed character count
     # below, once chars are known)
 

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import truncate_lineage
+
 
 def tokens_col(text: Column | str, n_shingle: int = 1) -> Column:
     """Distinct token (or word-n-shingle) set of lowercased text.
@@ -295,9 +297,11 @@ def near_dup_components(
     # this edge list, and without the checkpoint each round would re-run the
     # whole upstream candidate-generation pipeline (minhash → banding →
     # verify) that produced the pairs.
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    sym = truncate_lineage(
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    )
     labels = sym.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("component")
     )
@@ -310,7 +314,7 @@ def near_dup_components(
         )
         # carry a changed flag through the checkpoint so convergence is read
         # off the materialized partitions instead of recomputing the round
-        updated = (
+        updated = truncate_lineage(  # cut the lineage per round
             labels.join(neighbor, "id", "left")
             .select(
                 "id",
@@ -321,7 +325,6 @@ def near_dup_components(
                     "chg"
                 ),
             )
-            .localCheckpoint(eager=True)  # cut the lineage per round
         )
         labels = updated.drop("chg")
         if updated.filter("chg").limit(1).count() == 0:

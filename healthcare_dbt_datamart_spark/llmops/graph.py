@@ -17,8 +17,10 @@ relation is loop-invariant and persisted); each iteration is one
 shuffle join (ranks onto edge sources) plus one partial-agg groupBy
 (sum contributions per destination) — the textbook Pregel/GraphX
 PageRank round without the dependency. State per round is one
-(node, rank) row per vertex. localCheckpoint truncates the iteration
-lineage exactly like ``near_dup_components``.
+(node, rank) row per vertex. ``session.truncate_lineage`` cuts the
+iteration lineage, as in every other loop: a ``localCheckpoint`` by
+default, a fault-tolerant ``checkpoint`` when the session has a
+checkpoint dir.
 
 Overflow bound: total rank mass is conserved at ≤ n·scale (the floor
 divisions only shed mass), and in the worst case one hub's incoming
@@ -32,43 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def truncate_lineage(
-    df: DataFrame,
-    round_idx: int,
-    reliable: bool = False,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """Per-round lineage truncation for iterative fixed-point loops.
-
-    ``localCheckpoint(eager=True)`` (the default) materializes into
-    EXECUTOR memory — fast, but the blocks are not fault-tolerant: at
-    cluster scale an executor loss mid-iteration kills the job because
-    the truncated lineage cannot recompute. ``reliable=True`` switches
-    to ``checkpoint()``, which writes to the reliable checkpoint dir
-    (``sparkContext.setCheckpointDir`` — HDFS/object storage on a real
-    cluster) and survives executor loss; ``checkpoint_every=N``
-    amortizes the write cost by truncating only every N rounds (lineage
-    then grows at most N rounds deep between cuts — fine for the 3-5
-    round loops here, and the knob for 50-round jobs). Results are
-    BIT-IDENTICAL in all modes: the loops' arithmetic is integer
-    fixed-point, and truncation only changes where the intermediate
-    state lives (parity-tested in tests/test_llmops_streaming.py).
-
-    Raises up front when ``reliable=True`` without a checkpoint dir —
-    Spark's own error surfaces mid-job otherwise."""
-    if (round_idx + 1) % max(int(checkpoint_every), 1) != 0:
-        return df
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable=True needs sparkContext.setCheckpointDir(...) "
-                "(a fault-tolerant path: HDFS/object storage on a "
-                "cluster) before the loop starts"
-            )
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+from ..session import truncate_lineage
 
 
 def undirected_edges(pairs: DataFrame) -> DataFrame:
@@ -85,7 +51,6 @@ def hits_fixedpoint(
     edges: DataFrame,
     n_iter: int = 3,
     scale: int = 10**6,
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Integer HITS (Kleinberg 1999, "Authoritative sources in a
@@ -110,8 +75,8 @@ def hits_fixedpoint(
 
     Scale shape: two shuffle joins + two partial-agg groupBys per
     round (inherent to HITS — it is two matrix-vector products);
-    lineage cut per half-round by ``truncate_lineage`` (``reliable=True``
-    for fault-tolerant cluster checkpoints). Overflow bound: the
+    ``truncate_lineage`` cuts both half-rounds' state every
+    ``checkpoint_every`` rounds and on the last round. Overflow bound: the
     normalized multiply is ``raw·scale ≤ max_degree·scale²``, so keep
     ``max(in/out-degree)·scale² < 2⁶³`` — the default 1e6 scale is safe
     to ~9·10⁶-degree nodes; drop to 1e4 for hub pages beyond that.
@@ -133,8 +98,7 @@ def hits_fixedpoint(
         .select("id", F.lit(int(scale)).cast("long").alias("h"))
     )
     auth = None
-    k = 0  # half-round counter for checkpoint_every
-    for _ in range(int(n_iter)):
+    for rnd in range(int(n_iter)):
         a_raw = (
             e.join(hubs, e["src"] == hubs["id"])
             .groupBy("dst")
@@ -145,8 +109,7 @@ def hits_fixedpoint(
             F.col("dst").alias("id"),
             F.expr(f"(s * {int(scale)}) div {mxa}").alias("a"),
         )
-        auth = truncate_lineage(auth, k, reliable, checkpoint_every)
-        k += 1
+        auth = truncate_lineage(auth, rnd, n_iter, checkpoint_every)
         h_raw = (
             e.join(auth, e["dst"] == auth["id"])
             .groupBy("src")
@@ -157,8 +120,7 @@ def hits_fixedpoint(
             F.col("src").alias("id"),
             F.expr(f"(s * {int(scale)}) div {mxh}").alias("h"),
         )
-        hubs = truncate_lineage(hubs, k, reliable, checkpoint_every)
-        k += 1
+        hubs = truncate_lineage(hubs, rnd, n_iter, checkpoint_every)
     out = hubs.join(auth, "id", "full").select(
         "id",
         F.coalesce(F.col("h"), F.lit(0)).alias("hub_fp"),
@@ -173,7 +135,6 @@ def pagerank_fixedpoint(
     n_iter: int = 3,
     damping_pct: int = 85,
     scale: int = 10**12,
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Integer PageRank over a directed edge list (``src``, ``dst``)
@@ -206,9 +167,7 @@ def pagerank_fixedpoint(
             F.col("dst").alias("id"),
             F.expr(f"({teleport} + {damping_pct} * s) div 100").alias("r"),
         )
-        # cut lineage per round (reliable=True -> fault-tolerant
-        # checkpoint() for cluster runs; see truncate_lineage)
-        ranks = truncate_lineage(ranks, rnd, reliable, checkpoint_every)
+        ranks = truncate_lineage(ranks, rnd, n_iter, checkpoint_every)
     pre.unpersist()
     return ranks.select("id", F.col("r").alias("rank_fp"))
 
@@ -219,7 +178,6 @@ def personalized_pagerank(
     n_iter: int = 3,
     damping_pct: int = 85,
     scale: int = 10**12,
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """PERSONALIZED PageRank (Page et al. 1999 §6; the random walk
@@ -261,10 +219,10 @@ def personalized_pagerank(
     EAGER: the call itself runs Spark jobs before it returns. It
     collects the node count and the seed-presence check (one job),
     materializes the edge×degree relation, cuts lineage per the
-    ``checkpoint_every`` cadence inside the loop, and makes one final
+    ``checkpoint_every`` cadence and on the last round, and makes one final
     ``truncate_lineage`` cut of the output. The returned frame reads
     that last materialization (``localCheckpoint`` blocks, or the
-    checkpoint dir with ``reliable=True``), not the input plan."""
+    session's checkpoint dir when one is set), not the input plan."""
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     seed_list = sorted({str(s) for s in seeds})
@@ -351,7 +309,7 @@ def personalized_pagerank(
                 (F.col("sm") + F.expr(f"({d} * s) div 100")).alias("r"),
             )
         )
-        ranks = truncate_lineage(ranks, rnd, reliable, checkpoint_every)
+        ranks = truncate_lineage(ranks, rnd, n_iter, checkpoint_every)
     # ONE universe join total (vs one per round): emit rank-0 rows for
     # unreachable non-seeds, then cut so the returned plan reads a
     # bounded materialization instead of re-deriving nodes/pre after
@@ -363,7 +321,7 @@ def personalized_pagerank(
             F.coalesce(F.col("r"), F.lit(0).cast("long")).alias("rank_fp"),
         )
     )
-    out = truncate_lineage(out, 0, reliable, 1)
+    out = truncate_lineage(out)
     pre.unpersist()
     nodes.unpersist()
     return out

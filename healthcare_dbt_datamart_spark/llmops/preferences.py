@@ -26,14 +26,14 @@ Scale shape (``bradley_terry``): outcomes collapse ONCE to per-ordered-
 pair win counts (one shuffle, partial-agg); each MM round is one join
 of ratings onto the bounded pair table + one partial-agg groupBy —
 state per round is one (item, rating) row per item, lineage cut by
-localCheckpoint exactly like the PageRank/Lloyd loops.
+``session.truncate_lineage`` like every other loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .graph import truncate_lineage
+from ..session import truncate_lineage
 
 
 def majority_vote(
@@ -109,7 +109,6 @@ def bradley_terry(
     smoothing2: int = 1,
     winner_col: str = "winner_id",
     loser_col: str = "loser_id",
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Bradley-Terry ratings from pairwise outcomes ``(winner, loser)``
@@ -150,8 +149,7 @@ def bradley_terry(
     # defensive re-aggregation (one fewer shuffle of the pair table)
     return bradley_terry_from_pairs(
         raw, n_iter=n_iter, scale=scale, smoothing2=smoothing2,
-        reliable=reliable, checkpoint_every=checkpoint_every,
-        pre_collapsed=True,
+        checkpoint_every=checkpoint_every, pre_collapsed=True,
     )
 
 
@@ -160,7 +158,6 @@ def bradley_terry_from_pairs(
     n_iter: int = 5,
     scale: int = 10**6,
     smoothing2: int = 1,
-    reliable: bool = False,
     checkpoint_every: int = 1,
     pre_collapsed: bool = False,
 ) -> DataFrame:
@@ -229,8 +226,7 @@ def bradley_terry_from_pairs(
     # without this cut every consumer action re-executed the whole
     # outcome/pair pipeline just to re-derive the totals (the elo
     # `tot` fix, round-12 verdict item 6, applied to the BT twin).
-    # reliable-aware like every other cut; integer sums unchanged.
-    tot = truncate_lineage(tot, 0, reliable, 1)
+    tot = truncate_lineage(tot)
     w_tot = tot.select("i", "wins2")
 
     s2 = scale * scale
@@ -263,11 +259,7 @@ def bradley_terry_from_pairs(
                 F.expr(f"(wins2 * cast({s2} as bigint)) div D").alias("p"),
             )
         )
-        # cut lineage per MM round (reliable=True -> fault-tolerant
-        # checkpoint() for cluster runs; see graph.truncate_lineage)
-        ratings = truncate_lineage(
-            ratings, rnd, reliable, checkpoint_every
-        )
+        ratings = truncate_lineage(ratings, rnd, n_iter, checkpoint_every)
     pairs.unpersist()
     return (
         ratings.join(tot.withColumnsRenamed({"i": "id"}), "id")
@@ -607,7 +599,6 @@ def dawid_skene(
     n_iter: int = 2,
     scale: int = 10**6,
     smoothing: int = 1,
-    reliable: bool = False,
     checkpoint_every: int = 1,
     log_space: bool = False,
 ) -> DataFrame:
@@ -653,8 +644,8 @@ def dawid_skene(
     BROADCAST rate tables (raters × labels² — model state) onto the
     ×|labels| vote fan-out and folds per (item, class). Labels are
     bounded MODEL STATE (one distinct-collect, the BPE-argmax class);
-    per-round lineage cuts through ``truncate_lineage`` (reliable
-    checkpoint knob as PageRank/Bradley-Terry).
+    per-round lineage cuts through ``truncate_lineage`` (the same
+    cadence knob as PageRank/Bradley-Terry).
 
     Returns ``(item, ds_label, posterior, n_votes, majority_label,
     flipped)`` — ``flipped`` marks items EM moved off the raw majority
@@ -867,7 +858,7 @@ def dawid_skene(
                     f"cast(floor(e.score / _tot * {scale} + 0.5d) as bigint)"
                 ).alias("p"),
             )
-        new_post = truncate_lineage(new_post, rnd, reliable, checkpoint_every)
+        new_post = truncate_lineage(new_post, rnd, n_iter, checkpoint_every)
         post.unpersist()
         post = new_post
 
@@ -983,7 +974,6 @@ def rasch_fit(
     n_iter: int = 4,
     lr: float = 1.0,
     scale: int = 10**6,
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Rasch-model (1PL IRT) fit — per-ITEM difficulty next to
@@ -1061,12 +1051,7 @@ def rasch_fit(
             F.lit(0).cast("bigint").alias("_bad"),
         )
     )
-    # setup-frame cut honors the fault-tolerance contract: reliable=True
-    # must checkpoint() to the reliable dir exactly like the loop's
-    # per-round cuts — a localCheckpoint here would leave the truncated
-    # params lineage only in executor memory on a cluster (round-12
-    # ADVICE). round_idx 0 / every 1 => always cut.
-    params = truncate_lineage(params, 0, reliable, 1)
+    params = truncate_lineage(params)
     head = params.agg(
         F.sum((F.col("kind") == "i").cast("bigint")).alias("ni"),
         F.sum("_bad").alias("nb"),
@@ -1149,9 +1134,7 @@ def rasch_fit(
             )
             .alias("p_fp"),
         )
-        new_params = truncate_lineage(
-            new_params, rnd, reliable, checkpoint_every
-        )
+        new_params = truncate_lineage(new_params, rnd, n_iter, checkpoint_every)
         # sum-to-zero re-anchor in exact integers (location invariance);
         # read off the materialized round — one bounded scalar (model
         # state), subtracted from BOTH vectors as before
@@ -1400,7 +1383,6 @@ def elo_ratings(
     k: int = 32,
     initial: int = 1000,
     scale: int = 10**6,
-    reliable: bool = False,
     checkpoint_every: int = 1,
     n_col: str | None = None,
     pre_collapsed: bool = False,
@@ -1548,8 +1530,8 @@ def elo_ratings(
     # cached: the returned plan reads tot AFTER mp_all.unpersist(), so
     # without this cut the consumer's action re-executed the whole
     # upstream collapse just to re-derive the side totals (round-12
-    # verdict item 6). reliable-aware like every other cut.
-    tot = truncate_lineage(tot, 0, reliable, 1)
+    # verdict item 6).
+    tot = truncate_lineage(tot)
     ratings = tot.select(
         "item", F.lit(int(initial) * scale).cast("long").alias("r_fp")
     )
@@ -1561,7 +1543,7 @@ def elo_ratings(
             ratings, mp.filter(F.col("p") == p), k=k, scale=scale,
             check_items=False, n_col="n_m",
         )
-        ratings = truncate_lineage(ratings, rnd, reliable, checkpoint_every)
+        ratings = truncate_lineage(ratings, rnd, len(periods), checkpoint_every)
     mp_all.unpersist()
     return ratings.join(tot, "item").select(
         "item",
@@ -1579,7 +1561,6 @@ def elo_boards(
     period_col: str = "period",
     initial: int = 1000,
     scale: int = 10**6,
-    reliable: bool = False,
     checkpoint_every: int = 1,
     n_col: str | None = None,
     pre_collapsed: bool = False,
@@ -1673,7 +1654,7 @@ def elo_boards(
     )
     # bounded totals cut once while mp_all is cached — the returned
     # plan reads tot after unpersist (see elo_ratings)
-    tot = truncate_lineage(tot, 0, reliable, 1)
+    tot = truncate_lineage(tot)
     r_cols = [f"r_{k}" for k in ks]
     ratings = tot.select(
         "item",
@@ -1762,7 +1743,7 @@ def elo_boards(
                 for k, rc in zip(ks, r_cols)
             ],
         )
-        ratings = truncate_lineage(ratings, rnd, reliable, checkpoint_every)
+        ratings = truncate_lineage(ratings, rnd, len(periods), checkpoint_every)
     mp_all.unpersist()
     return ratings.join(tot, "item").select(
         "item",
@@ -1883,7 +1864,6 @@ def bradley_terry_ties(
     a_col: str = "side_a",
     b_col: str = "side_b",
     tie_col: str = "is_tie",
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> DataFrame:
     """Bradley-Terry with TIES — the Rao-Kupper model (Rao & Kupper
@@ -1987,7 +1967,7 @@ def bradley_terry_ties(
     )
     # bounded totals cut once while pairs is cached — the returned plan
     # joins tot after unpersist (see bradley_terry_from_pairs)
-    tot = truncate_lineage(tot, 0, reliable, 1)
+    tot = truncate_lineage(tot)
     a_tot = tot.select("i", "A")
 
     s2 = scale * scale
@@ -2020,7 +2000,7 @@ def bradley_terry_ties(
             F.col("i").alias("id"),
             F.expr(f"(A * cast({s2} as bigint)) div B").alias("p"),
         )
-        ratings = truncate_lineage(ratings, rnd, reliable, checkpoint_every)
+        ratings = truncate_lineage(ratings, rnd, n_iter, checkpoint_every)
     pairs.unpersist()
     return ratings.join(tot.withColumnsRenamed({"i": "id"}), "id").select(
         F.col("id").alias("item"),

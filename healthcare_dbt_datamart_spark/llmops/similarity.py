@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import truncate_lineage
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -292,7 +294,7 @@ def ivf_topk(
         )
         # k rows; materialize before the cache is released so the caller's
         # later action doesn't recompute the whole train+assign lineage
-        return out.localCheckpoint(eager=True)
+        return truncate_lineage(out)
     finally:
         cached.unpersist()
 
@@ -448,7 +450,7 @@ def ivf_topk_batch(
         )
         if own_cache:
             # |Q|·k rows; materialize before the cache is released
-            out = out.localCheckpoint(eager=True)
+            out = truncate_lineage(out)
         return out
     finally:
         if own_cache:
@@ -1134,7 +1136,7 @@ def kmeans_cells(
                 F.round(F.min("cell_sim"), 6).alias("min_sim"),
             )
         )
-        return report.localCheckpoint(eager=True)
+        return truncate_lineage(report)
     finally:
         cached.unpersist()
 
@@ -1431,7 +1433,7 @@ def ivfadc_topk(
             .limit(k)
         )
         # k rows; materialize before the cache is released
-        return out.localCheckpoint(eager=True)
+        return truncate_lineage(out)
     finally:
         cached.unpersist()
 
@@ -1557,16 +1559,18 @@ def ivfpq_index_upsert(
        partition-overwrite ``insertInto``, so untouched partitions'
        files are never rewritten (asserted byte-for-byte in the test).
 
-    The merged rows are eagerly localCheckpoint-ed before the write
+    The merged rows are eagerly cut (``truncate_lineage``) before the write
     because they derive from the table being overwritten (Spark refuses
     the direct self-read cycle); the checkpoint materializes only the
     touched partitions' rows. A deployment with a transactional table
     format would express step 3 as MERGE — the files it rewrites are
     the same ones."""
     spark = delta.sparkSession
-    enc = ivfpq_index_rows(
-        delta, centroids, codebooks, id_col, vec_col, residual
-    ).localCheckpoint(eager=True)  # delta-batch-size; read 3x below
+    enc = truncate_lineage(  # delta-batch-size; read 3x below
+        ivfpq_index_rows(
+            delta, centroids, codebooks, id_col, vec_col, residual
+        )
+    )
     ids = enc.select(id_col)
     old_cells = (
         spark.table(table)
@@ -1582,11 +1586,7 @@ def ivfpq_index_upsert(
         .filter(F.col("cell").isin(touched))
         .join(broadcast(ids), id_col, "left_anti")
     )
-    merged = (
-        survivors.unionByName(enc)
-        .repartition("cell")
-        .localCheckpoint(eager=True)
-    )
+    merged = truncate_lineage(survivors.unionByName(enc).repartition("cell"))
     # a touched cell can end up EMPTY (its only vectors re-embedded
     # into other cells): dynamic overwrite only rewrites partitions
     # present in the written data, so the vacated partition's stale

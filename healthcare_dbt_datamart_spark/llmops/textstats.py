@@ -6,6 +6,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import truncate_lineage
+
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a", "in", "is"),
@@ -833,7 +835,6 @@ def sparse_logreg_train(
     lr: float = 0.5,
     scale: int = 10**6,
     l2: float = 0.0,
-    reliable: bool = False,
     checkpoint_every: int = 1,
 ) -> dict:
     """Distributed SPARSE logistic regression over ``(id, feat, v)``
@@ -870,8 +871,6 @@ def sparse_logreg_train(
     "n_rows": n, "n_iter": k, "scale": scale}`` — feed to
     ``sparse_logreg_score``."""
     import math
-
-    from .graph import truncate_lineage
 
     if int(n_iter) < 1:
         raise ValueError(f"n_iter must be >= 1: got {n_iter!r}")
@@ -951,7 +950,7 @@ def sparse_logreg_train(
                 ).alias("w_fp"),
             )
         )
-        weights = truncate_lineage(new_w, rnd, reliable, checkpoint_every)
+        weights = truncate_lineage(new_w, rnd, n_iter, checkpoint_every)
         b_fp = math.floor(
             (b_fp / scale - lr_c * (g0 / (n_rows * scale))) * scale + 0.5
         )

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import ModelRegistry
+from ..session import truncate_lineage
 
 N_CELLS = 8
 PQ_M = 8
@@ -230,23 +231,25 @@ def build_index_scorecard(
         # §1.2 — the similarity.py "k rows; materialize before release"
         # convention applied at the DAG layer)
         idx = ctx.ref("ann_index")
-        return ivf_topk_batch(
-            idx,
-            query_ids,
-            k=K_EVAL,
-            nprobe=NPROBE,
-            centroids=_state["centroids"],
-            assigned=idx,
-        ).localCheckpoint(eager=True)
+        return truncate_lineage(
+            ivf_topk_batch(
+                idx,
+                query_ids,
+                k=K_EVAL,
+                nprobe=NPROBE,
+                centroids=_state["centroids"],
+                assigned=idx,
+            )
+        )
 
     @r.model()
     def brute_topk(ctx):
         # |panel|·k rows — the exact-oracle scan runs ONCE per release
         # instead of once per downstream reference (same reasoning as
         # ann_results; the full-corpus cosine scan is the expensive part)
-        return cosine_topk_batch(
-            ctx.ref("stg_vectors"), query_ids, k=K_EVAL
-        ).localCheckpoint(eager=True)
+        return truncate_lineage(
+            cosine_topk_batch(ctx.ref("stg_vectors"), query_ids, k=K_EVAL)
+        )
 
     @r.model()
     def judged_pool(ctx):

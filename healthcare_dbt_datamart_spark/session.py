@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory, per-session state and the lineage-cut policy.
 
 Mirrors the runtime assumptions the reference bakes into its adapter:
 UTC timestamps (dbt-snowflake normalizes ``current_timestamp`` to UTC,
@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _WAREHOUSE_DIR: str | None = None
 
@@ -123,6 +123,32 @@ def session_cached(spark: SparkSession, key, build):
     if key not in store:
         store[key] = build()
     return store[key]
+
+
+def truncate_lineage(
+    df: DataFrame, rnd: int = 0, n_iter: int = 1, checkpoint_every: int = 1
+) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage: the one place the
+    package calls ``checkpoint``/``localCheckpoint``.
+
+    Where the cut lives is a session setting, not an operator option
+    (MLlib's ``checkpointInterval`` rule). With a checkpoint dir set
+    (``sparkContext.setCheckpointDir`` — HDFS/object storage on a real
+    cluster) it is ``checkpoint(eager=True)``, which survives executor
+    loss. Without one it is ``localCheckpoint(eager=True)``: executor
+    memory, fast, but lost with the executor that holds it.
+
+    In a loop, pass the round index ``rnd`` of ``n_iter`` rounds: the
+    cut runs every ``checkpoint_every`` rounds (lineage grows at most
+    that many rounds deep between cuts) and always on the last round,
+    so a loop never returns a plan that reads through caches it has
+    released. The defaults cut unconditionally. Results are identical
+    in every mode: a cut only moves where the state lives."""
+    if rnd + 1 != int(n_iter) and (rnd + 1) % max(int(checkpoint_every), 1):
+        return df
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 @contextmanager

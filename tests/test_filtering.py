@@ -752,15 +752,13 @@ def test_hits_fixedpoint_structure_replay_and_layout(spark):
         hits_fixedpoint(edges.filter("src < 0"))
 
 
-def test_reliable_checkpoint_parity_and_guard(spark, tmp_path):
-    """The iterative loops' truncation knob: reliable=True
-    (fault-tolerant checkpoint()) and checkpoint_every=2 produce
-    BIT-IDENTICAL results to the localCheckpoint default for PageRank
-    and Bradley-Terry (the arithmetic is integer fixed-point —
-    truncation only moves where state lives), and reliable=True without
-    a checkpoint dir raises up front instead of failing mid-job."""
-    import pytest
-
+def test_reliable_checkpoint_parity_and_guard(spark, request):
+    """The iterative loops' truncation policy: with a checkpoint dir set
+    (every cut a fault-tolerant checkpoint()), and with
+    checkpoint_every=2, PageRank and Bradley-Terry produce BIT-IDENTICAL
+    results to the localCheckpoint default (the arithmetic is integer
+    fixed-point — truncation only moves where state lives), and the
+    cuts land in the checkpoint dir."""
     from healthcare_dbt_datamart_spark.llmops.graph import (
         pagerank_fixedpoint,
         undirected_edges,
@@ -778,49 +776,30 @@ def test_reliable_checkpoint_parity_and_guard(spark, tmp_path):
         [(1, 2, 6), (2, 1, 2), (2, 3, 4), (3, 1, 2)], "i long, j long, w2 long"
     )
 
+    assert spark.sparkContext.getCheckpointDir() is None
     base_pr = {r.id: r.rank_fp for r in pagerank_fixedpoint(edges).collect()}
     base_bt = {
         r.item: (r.wins2, r.comparisons2, r.rating_fp)
         for r in bradley_terry_from_pairs(wins).collect()
     }
 
-    sc = spark.sparkContext
-    had_dir = sc.getCheckpointDir()
-    assert had_dir is None  # the test session never set one
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        pagerank_fixedpoint(edges, reliable=True).collect()
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        bradley_terry_from_pairs(wins, reliable=True).collect()
-
-    sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        rel_pr = {
-            r.id: r.rank_fp
-            for r in pagerank_fixedpoint(edges, reliable=True).collect()
-        }
-        rel_bt = {
-            r.item: (r.wins2, r.comparisons2, r.rating_fp)
-            for r in bradley_terry_from_pairs(wins, reliable=True).collect()
-        }
-        # amortized reliable cuts (every 2nd round) — lineage grows two
-        # rounds deep between cuts, values unchanged
-        amort_pr = {
-            r.id: r.rank_fp
-            for r in pagerank_fixedpoint(
-                edges, reliable=True, checkpoint_every=2
-            ).collect()
-        }
-        amort_bt = {
-            r.item: (r.wins2, r.comparisons2, r.rating_fp)
-            for r in bradley_terry_from_pairs(
-                wins, reliable=True, checkpoint_every=2
-            ).collect()
-        }
-    finally:
-        # tests share the session fixture: restore the no-dir state is
-        # impossible (Spark has no unset), so leave the tmp dir set —
-        # it only affects explicit checkpoint() calls
-        pass
+    ckpt = request.getfixturevalue("checkpoint_dir")
+    rel_pr = {r.id: r.rank_fp for r in pagerank_fixedpoint(edges).collect()}
+    rel_bt = {
+        r.item: (r.wins2, r.comparisons2, r.rating_fp)
+        for r in bradley_terry_from_pairs(wins).collect()
+    }
+    assert any(ckpt.rglob("part-*"))
+    # amortized reliable cuts (every 2nd round) — lineage grows two
+    # rounds deep between cuts, values unchanged
+    amort_pr = {
+        r.id: r.rank_fp
+        for r in pagerank_fixedpoint(edges, checkpoint_every=2).collect()
+    }
+    amort_bt = {
+        r.item: (r.wins2, r.comparisons2, r.rating_fp)
+        for r in bradley_terry_from_pairs(wins, checkpoint_every=2).collect()
+    }
     assert rel_pr == base_pr and amort_pr == base_pr
     assert rel_bt == base_bt and amort_bt == base_bt
 
@@ -5958,14 +5937,11 @@ def test_elo_all_self_period_skips_empty_round_bitwise(spark):
         elo_ratings(poisoned, k=32).collect()
 
 
-def test_rasch_fit_reliable_checkpoint_parity(spark, tmp_path):
-    """rasch_fit honors the fault-tolerance contract end to end: with
-    reliable=True every lineage cut (the setup frame included) goes
-    through checkpoint() to the reliable dir, results bit-identical to
-    the localCheckpoint default; without a checkpoint dir it raises up
-    front."""
-    import pytest
-
+def test_rasch_fit_reliable_checkpoint_parity(spark, request):
+    """rasch_fit honors the fault-tolerance policy end to end: with a
+    checkpoint dir set, every lineage cut (the setup frame included)
+    goes through checkpoint() to that dir, results bit-identical to the
+    localCheckpoint default."""
     from healthcare_dbt_datamart_spark.llmops.preferences import rasch_fit
 
     rows = [
@@ -5974,18 +5950,16 @@ def test_rasch_fit_reliable_checkpoint_parity(spark, tmp_path):
         for i in range(6)
     ]
     votes = spark.createDataFrame(rows, ["item_id", "annotator_id", "correct"])
+    assert spark.sparkContext.getCheckpointDir() is None
     base = {
         (r.kind, r.key): (r.n_votes, r.estimate)
         for r in rasch_fit(votes, n_iter=3).collect()
     }
 
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            rasch_fit(votes, n_iter=1, reliable=True).collect()
-        sc.setCheckpointDir(str(tmp_path / "ckpt_rasch"))
+    ckpt = request.getfixturevalue("checkpoint_dir")
     rel = {
         (r.kind, r.key): (r.n_votes, r.estimate)
-        for r in rasch_fit(votes, n_iter=3, reliable=True).collect()
+        for r in rasch_fit(votes, n_iter=3).collect()
     }
     assert rel == base
+    assert any(ckpt.rglob("part-*"))

@@ -494,6 +494,36 @@ def test_zorder_cluster_prunes_files_on_both_dimensions(spark, tmp_path):
     ) * 0.75
 
 
+def test_zorder_cluster_layout_ignores_session_history(spark):
+    """The z-order file boundaries depend on the data only: RDDs the
+    session created in between (which reseed Spark's range-partition
+    sampler) leave every file's rows unchanged."""
+    from healthcare_dbt_datamart_spark.functions.layout import zorder_cluster
+
+    orders = spark.range(15000).selectExpr(
+        "(id * 7919) % 1500 as o_custkey", "(id * 104729) % 2400 as o_day"
+    )
+
+    def files(new_rdds):
+        for _ in range(new_rdds):
+            spark.sparkContext.parallelize([0]).count()
+        z = zorder_cluster(orders, "o_custkey", "o_day", n_partitions=16)
+        return sorted(
+            tuple(r)
+            for r in z.groupBy(F.spark_partition_id().alias("p"))
+            .agg(
+                F.count(F.lit(1)),
+                F.min("o_custkey"), F.max("o_custkey"),
+                F.min("o_day"), F.max("o_day"),
+            )
+            .collect()
+        )
+
+    first = files(0)
+    assert len(first) == 16
+    assert files(1) == first and files(3) == first
+
+
 def test_materialize_table_zorder_by_knob(spark):
     """The sink-level z-order knob: a zorder_by table round-trips its
     rows exactly, and passing both sort knobs is rejected loudly."""
@@ -521,6 +551,8 @@ def test_materialize_table_zorder_by_knob(spark):
         got = sorted(map(tuple, spark.table(name).collect()))
         want = sorted(map(tuple, orders.collect()))
         assert got == want
+        # the file count follows the size estimate: a small table is one file
+        assert len(spark.table(name).inputFiles()) == 1
         with pytest.raises(ValueError, match="zorder_by replaces"):
             materialize_table(
                 spark, name, orders,

@@ -1,14 +1,22 @@
-"""Guardrails on the driver query inventory, checked without Spark.
+"""Guardrails on the package source, checked without Spark.
 
 ``QUERIES`` key order is the driver's contract (its first 50 keys are the
 correctness window) and every ``ORACLE`` body is a fixed DuckDB statement.
 A refactor that moves query code between modules must leave both byte
 for byte as they are; these digests pin them.
+
+Lineage cuts have one owner, ``session.truncate_lineage``: a source scan
+keeps every ``checkpoint``/``localCheckpoint`` call inside it, and keeps
+per-operator fault-tolerance knobs (a ``reliable`` parameter) out.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
+from pathlib import Path
+
+PACKAGE = Path(__file__).resolve().parents[1] / "healthcare_dbt_datamart_spark"
 
 QUERIES_ORDER_SHA256 = (
     "8dd5e731172fd600b2662c3d2759707b2c9ce4f3c42b39eeaaed9bbc5f3a203b"
@@ -30,3 +38,48 @@ def test_queries_order_and_oracle_bodies_unchanged():
     ).hexdigest()
     assert order == QUERIES_ORDER_SHA256
     assert bodies == ORACLE_BODIES_SHA256
+
+
+def _package_trees():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        text = path.read_text()
+        yield path, text, ast.parse(text)
+
+
+def test_lineage_cuts_only_in_truncate_lineage():
+    owner = None
+    hits = []
+    for path, text, tree in _package_trees():
+        for n, line in enumerate(text.splitlines(), 1):
+            if "localCheckpoint(" in line or ".checkpoint(" in line:
+                hits.append((path.relative_to(PACKAGE).as_posix(), n))
+        if path.name == "session.py" and path.parent == PACKAGE:
+            owner = next(
+                node
+                for node in tree.body
+                if isinstance(node, ast.FunctionDef)
+                and node.name == "truncate_lineage"
+            )
+    assert hits and owner is not None
+    stray = [
+        (f, n)
+        for f, n in hits
+        if f != "session.py" or not owner.lineno <= n <= owner.end_lineno
+    ]
+    assert stray == []
+
+
+def test_no_reliable_parameter():
+    found = []
+    for path, _, tree in _package_trees():
+        for node in ast.walk(tree):
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+            ):
+                a = node.args
+                names = a.posonlyargs + a.args + a.kwonlyargs
+                if any(arg.arg == "reliable" for arg in names):
+                    found.append(
+                        f"{path.relative_to(PACKAGE)}:{node.lineno}"
+                    )
+    assert found == []
