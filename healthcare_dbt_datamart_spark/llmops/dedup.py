@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import truncate_lineage
+from ..session import local_frame, truncate_lineage
 
 
 def tokens_col(text: Column | str, n_shingle: int = 1) -> Column:
@@ -989,7 +989,8 @@ def lsh_plan(
     ranked = [
         (i + 1, *x) for i, x in enumerate(under + over)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         ranked,
         "rank int, bands int, rows_per_band int, curve_threshold double,"
         " p_at_target double, p_below double, p_above double",

@@ -43,6 +43,8 @@ from fractions import Fraction
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _quantized_cells(
     df: DataFrame,
@@ -401,7 +403,8 @@ def calibration_summary(
     ).collect()  # bounded: <= n_bins + 1 cells
     vals = scorecard_from_cells(rows, scale)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [vals],
         "n_rows bigint, n_pos bigint, n_bins_used int, ece double,"
         " mce double, brier double",
@@ -600,7 +603,8 @@ def bleu_corpus(
     bleu = 0.0 if zero else bp * math.exp(log_sum / max_n)
 
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_pairs,
@@ -1079,7 +1083,8 @@ def spearman_rho(
         )
     rho = (n * sxy - sx * sy) / math.sqrt(var_x) / math.sqrt(var_y)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, int(sums.ncx), int(sums.ncy), round(rho, 6))],
         "n_rows bigint, n_x_cells bigint, n_y_cells bigint, rho double",
     )
@@ -1553,7 +1558,8 @@ def brier_decomposition(
     brier = Fraction(s2 - 2 * sy + pos * scale, n * scale)
     residual = brier - (rel - res + unc)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n,
@@ -1636,7 +1642,8 @@ def isotonic_calibration(
         for i, (lo, hi, n, pos) in enumerate(pools)
     ]
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "block int, s_fp_lo bigint, s_fp_hi bigint, n bigint,"
         " n_pos bigint, p_cal double",
@@ -1876,7 +1883,8 @@ def mcnemar_report_from_counts(
         else None
     )
     sig = chi2 is not None and chi2 > float(crit)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(rr + b + c + ww, rr, b, c, ww, chi2, sig)],
         "n_items bigint, both_right bigint, only_a bigint,"
         " only_b bigint, both_wrong bigint, chi2 double,"
@@ -2090,7 +2098,8 @@ def rbo(
         pw *= p_frac
     score = (1 - p_frac) * acc
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(depth, overlap, round(float(score), 6))],
         "depth bigint, n_common bigint, rbo double",
     )

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import local_frame
 from .splits import _HEX
 
 # Portable regexes: character classes + \b only — no backreferences, no
@@ -818,7 +819,7 @@ def bloom_prefilter(
     word_map = {int(r["_w"]): int(r["_m"]) for r in words_rows}
     words = [word_map.get(i, 0) for i in range(n_words)]
     spark = candidates.sparkSession
-    bits_df = spark.createDataFrame([(words,)], "_bloom array<bigint>")
+    bits_df = local_frame(spark, [(words,)], "_bloom array<bigint>")
 
     cand = positions(
         _distinct_grams(candidates, text_col, id_col, n)

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import truncate_lineage
+from ..session import local_frame, truncate_lineage
 
 
 def undirected_edges(pairs: DataFrame) -> DataFrame:
@@ -213,7 +213,9 @@ def personalized_pagerank(
 
     ``seeds`` is bounded driver model state (the operator's point: a
     handful of known-good ids); unknown seed ids raise loudly — a
-    silently dropped seed changes the whole distribution. Returns
+    silently dropped seed changes the whole distribution. The seed rows
+    are a JVM ``LocalRelation`` (``session.local_frame``), so the rounds
+    that re-read them never start a Python worker. Returns
     ``(id, rank_fp)``.
 
     EAGER: the call itself runs Spark jobs before it returns. It
@@ -275,12 +277,14 @@ def personalized_pagerank(
     pre.count()
     e.unpersist()
     d = int(damping_pct)
-    # |S| bounded driver rows: the constant restart mass, re-injected
-    # each round through the SAME aggregation as the edge flow (cf_/cs_
-    # columns keep the damping exact: rank = seed + (d·Σflow) div 100,
-    # never a second rounding)
-    seed_rows = edges.sparkSession.createDataFrame(
-        [(s,) for s in seed_list], "dst string"
+    # |S| bounded driver rows (a LocalRelation): the constant restart
+    # mass, re-injected each round through the SAME aggregation as the
+    # edge flow (cf_/cs_ columns keep the damping exact:
+    # rank = seed + (d·Σflow) div 100, never a second rounding)
+    seed_rows = local_frame(
+        edges.sparkSession,
+        [(s,) for s in seed_list],
+        "dst string",
     ).select(
         "dst",
         F.lit(0).cast("long").alias("cf"),

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import truncate_lineage
+from ..session import local_frame, truncate_lineage
 
 
 def majority_vote(
@@ -574,7 +574,8 @@ def krippendorff_alpha(
         )
     alpha = (a_o - a_e) / (1 - a_e)
     spark = votes.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_units,

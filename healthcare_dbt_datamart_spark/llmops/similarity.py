@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..session import truncate_lineage
+from ..session import local_frame, truncate_lineage
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -147,7 +147,9 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign every vector to its nearest centroid (max cosine, ties to the
     lowest centroid id) — one map-only pass, zero shuffle: the centroid
-    table rides in as a broadcast 1-row array-of-structs and the per-row
+    table rides in as a broadcast 1-row array-of-structs (a JVM
+    ``LocalRelation`` from ``session.local_frame``, so the broadcast
+    never round-trips through a Python worker) and the per-row
     work is a generic ``transform`` + ``array_max`` over (sim, -cid)
     structs. Carrying the centroids as broadcast DATA (not k·d literal
     expressions) keeps the generated code small and constant in k — an
@@ -161,7 +163,8 @@ def ivf_assign(
         (int(cid), [float(x) for x in cv], float(_py_norm(cv)))
         for cid, cv in centroids
     ]
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(cdata,)],
         "cents array<struct<cid:int,cvec:array<double>,cnorm:double>>",
     )
@@ -338,7 +341,8 @@ def _query_probe_frame(
         )
         for c in cells:
             data.append((q, int(c), qv, qn))
-    return emb.sparkSession.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         data,
         "qid bigint, cell int, q_vec array<double>, q_nrm double",
     )
@@ -930,12 +934,18 @@ def _pq_best_cols(
 
 
 def _pq_cdf(spark, codebooks):
+    """The m codebooks as one broadcastable 1-row frame,
+    ``cb array<array<struct<cid, cvec>>>`` (subspace → codes): a JVM
+    ``LocalRelation`` from ``session.local_frame``, so encoding and ADC
+    probes read the model state without starting a Python worker."""
     cdata = [
         [(int(cid), [float(x) for x in cv]) for cid, cv in book]
         for book in codebooks
     ]
-    return spark.createDataFrame(
-        [(cdata,)], "cb array<array<struct<cid:int,cvec:array<double>>>>"
+    return local_frame(
+        spark,
+        [(cdata,)],
+        "cb array<array<struct<cid:int,cvec:array<double>>>>",
     )
 
 
@@ -1003,7 +1013,7 @@ def pq_topk(
     # rule for pq_topk and both IVFADC variants (drift here silently
     # breaks their documented ADC parity)
     dt = _adc_tables(codebooks, qvec)
-    ddf = spark.createDataFrame([(dt,)], "dt array<array<double>>")
+    ddf = local_frame(spark, [(dt,)], "dt array<array<double>>")
     staged = (
         emb.filter(F.col(id_col) != query_id)
         .crossJoin(broadcast(_pq_cdf(spark, codebooks)))
@@ -1390,7 +1400,7 @@ def ivfadc_topk(
         # ADC stage: per-subspace query->codebook distance tables
         # (m·n_codes doubles of driver-computed model state)
         dt = _adc_tables(codebooks, qvec)
-        ddf = spark.createDataFrame([(dt,)], "dt array<array<double>>")
+        ddf = local_frame(spark, [(dt,)], "dt array<array<double>>")
         staged = (
             cand.crossJoin(broadcast(_pq_cdf(spark, codebooks)))
             .crossJoin(broadcast(ddf))
@@ -1667,13 +1677,13 @@ def ivfadc_topk_indexed(
             dts[cid] = _adc_tables(
                 codebooks, [q - c for q, c in zip(qvec, cmap[cid])]
             )
-        ddf = spark.createDataFrame(
-            [(dts,)], "dtc array<array<array<double>>>"
-        )
+        ddf = local_frame(spark, [(dts,)], "dtc array<array<array<double>>>")
         dt_for_row = F.element_at("dtc", F.col("cell") + 1)
     else:
-        ddf = spark.createDataFrame(
-            [(_adc_tables(codebooks, qvec),)], "dt array<array<double>>"
+        ddf = local_frame(
+            spark,
+            [(_adc_tables(codebooks, qvec),)],
+            "dt array<array<double>>",
         )
         dt_for_row = F.col("dt")
     lookups = [
@@ -1732,8 +1742,10 @@ def save_ann_model(
     for s, book in enumerate(codebooks or []):
         for cid, cv in book:
             rows.append(("pq", s, int(cid), [float(x) for x in cv]))
-    df = spark.createDataFrame(
-        rows, "kind string, grp int, cid int, cvec array<double>"
+    df = local_frame(
+        spark,
+        rows,
+        "kind string, grp int, cid int, cvec array<double>",
     )
     materialize_table(spark, table, df)
 
@@ -1787,7 +1799,7 @@ def ivf_residuals(
             "residual path expects dense 0..k-1 centroid ids, got "
             f"{[cid for cid, _ in cents]}"
         )
-    cdf = spark.createDataFrame([(cdata,)], "cvecs array<array<double>>")
+    cdf = local_frame(spark, [(cdata,)], "cvecs array<array<double>>")
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     return assigned.crossJoin(broadcast(cdf)).select(
         F.col(id_col),
@@ -2076,7 +2088,8 @@ def mmr_rerank(
         if not remaining:
             break
     spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         f"{id_col} long, mmr_rank int, relevance double,"
         " redundancy double, mmr_score double",

@@ -30,6 +30,8 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import local_frame
+
 
 def _h60(value: Column) -> Column:
     """Exact 60-bit integer hash: first 15 hex chars of md5 → bigint.
@@ -389,7 +391,7 @@ def logbucket_quantiles(
     cum = sk.withColumn("cum", F.sum("cnt").over(w)).withColumn(
         "n", F.sum("cnt").over(Window.partitionBy(*part))
     )
-    qdf = df.sparkSession.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(df.sparkSession, [(float(q),) for q in qs], "q double")
     hits = cum.crossJoin(broadcast(qdf)).filter(
         F.col("cum") >= F.ceil(F.col("q") * F.col("n"))
     )

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import local_frame
 from .dedup import (
     candidate_pairs,
     jaccard_pairs,
@@ -708,7 +709,8 @@ def domain_concentration(
     n, t = int(row.n), int(row.t)
     gini = Fraction(2 * int(row.rw), n * t) - Fraction(n + 1, n)
     spark = counts.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n,

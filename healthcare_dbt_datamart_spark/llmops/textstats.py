@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import truncate_lineage
+from ..session import local_frame, truncate_lineage
 
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -751,7 +751,8 @@ def vocab_richness(
     slope = round(num / den, 6) if den != 0 else None
 
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(tot.n),

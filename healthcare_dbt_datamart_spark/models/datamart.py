@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import ModelRegistry
+from ..session import local_frame
 from .gap_pipeline import (
     GapParams,
     fct_gap_exceptions,
@@ -87,7 +88,8 @@ def build_datamart(
         "stg_claim_lines_normalizes_codes",
         "stg_claim_lines",
         given={
-            "raw_claim_lines": lambda s: s.createDataFrame(
+            "raw_claim_lines": lambda s: local_frame(
+                s,
                 [
                     (1, 10, "2024-01-02", "g0121"),
                     (2, 11, "2024-02-03", "82270"),
@@ -96,7 +98,8 @@ def build_datamart(
                 " proc_code string",
             )
         },
-        expect=lambda s: s.createDataFrame(
+        expect=lambda s: local_frame(
+            s,
             [
                 (1, 10, "2024-01-02", "G0121"),
                 (2, 11, "2024-02-03", "82270"),

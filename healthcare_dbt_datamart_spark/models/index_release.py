@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import ModelRegistry
-from ..session import truncate_lineage
+from ..session import local_frame, truncate_lineage
 
 N_CELLS = 8
 PQ_M = 8
@@ -108,8 +108,10 @@ def build_index_release(
             for s, book in enumerate(books)
             for cid, cv in book
         ]
-        return ctx.spark.createDataFrame(
-            rows, "kind string, grp int, cid int, cvec array<double>"
+        return local_frame(
+            ctx.spark,
+            rows,
+            "kind string, grp int, cid int, cvec array<double>",
         )
 
     @r.model(materialized="table", partition_by=["cell"])

@@ -38,7 +38,7 @@ from ..functions import (
     split_part,
     surrogate_key,
 )
-from ..session import ensure_utc, session_cached
+from ..session import ensure_utc, local_frame, session_cached
 from .gap_pipeline import GapParams, fct_gap_exceptions, gap_status, gap_tri_state_violations
 
 # ---------------------------------------------------------------------------
@@ -212,7 +212,7 @@ def _gap_inputs(spark: SparkSession, sf_dir: str):
 
     members = _persisted(spark, ("gap_members", sf_dir), build_members)
     claims = _persisted(spark, ("gap_claims", sf_dir), build_claims)
-    codes = spark.createDataFrame(GAP_CODES, "code string, evidence_type string")
+    codes = local_frame(spark, GAP_CODES, "code string, evidence_type string")
     return members, claims, codes
 
 
@@ -2070,7 +2070,7 @@ def q_gap_status_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .gap_pipeline import gap_status_multi
 
     members, claims, codes_col = _gap_inputs(spark, sf_dir)
-    codes_bcs = spark.createDataFrame(BCS_CODES, "code string, evidence_type string")
+    codes_bcs = local_frame(spark, BCS_CODES, "code string, evidence_type string")
     return gap_status_multi(
         members, claims, [(GAP_PARAMS, codes_col), (BCS_PARAMS, codes_bcs)]
     )
@@ -2085,8 +2085,8 @@ def q_gap_status_tri(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .gap_pipeline import gap_status_multi
 
     members, claims, codes_col = _gap_inputs(spark, sf_dir)
-    codes_bcs = spark.createDataFrame(BCS_CODES, "code string, evidence_type string")
-    codes_ccs = spark.createDataFrame(CCS_CODES, "code string, evidence_type string")
+    codes_bcs = local_frame(spark, BCS_CODES, "code string, evidence_type string")
+    codes_ccs = local_frame(spark, CCS_CODES, "code string, evidence_type string")
     return gap_status_multi(
         members,
         claims,

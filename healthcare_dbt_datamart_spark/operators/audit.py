@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 
 def _prep(a: DataFrame, b: DataFrame, key_cols, compare_cols):
     if isinstance(key_cols, str):
@@ -169,7 +171,8 @@ def compare_columns(
         )
     rows.sort(key=lambda t: (t[4] if t[4] is not None else -1.0, t[0]))
     spark = a.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column string, n_both bigint, n_match bigint, n_mismatch bigint,"
         " match_rate double",

@@ -1,4 +1,5 @@
-"""SparkSession factory, per-session state and the lineage-cut policy.
+"""SparkSession factory, per-session state, the lineage-cut policy and
+driver-held local frames.
 
 Mirrors the runtime assumptions the reference bakes into its adapter:
 UTC timestamps (dbt-snowflake normalizes ``current_timestamp`` to UTC,
@@ -149,6 +150,51 @@ def truncate_lineage(
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples matching ``schema``,
+    a DDL string or ``StructType``): the one place the package calls
+    ``createDataFrame``.
+
+    The rows travel as one Arrow table and plan as a JVM
+    ``LocalRelation`` (``LocalTableScan``). ``createDataFrame(list, …)``
+    would plan a ``PythonRDD`` scan instead, so every action touching
+    the frame (a broadcast of centroids, a seed row, a one-row report)
+    would start Python workers. Rows are checked as the list path
+    checks them: a row of the wrong arity raises ``ValueError``, a value
+    its column cannot hold (``"x"`` or ``1.5`` in a ``bigint``) raises
+    ``TypeError``/``ValueError``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import (
+        StructType,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    struct = (
+        schema
+        if isinstance(schema, StructType)
+        else _parse_datatype_string(schema)
+    )
+    verify = _make_type_verifier(struct)
+    rows = list(rows)
+    for row in rows:
+        if not isinstance(row, (tuple, list)) or len(row) != len(struct):
+            raise ValueError(
+                f"row {row!r} does not match {struct.simpleString()}"
+            )
+        verify(row)
+    columns = zip(*rows) if rows else [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, type=to_arrow_type(f.dataType))
+            for col, f in zip(columns, struct.fields)
+        ],
+        names=struct.fieldNames(),
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 @contextmanager

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import local_frame
+
 _META_BIN = -2  # ledger row: (bin=-2, n=last_batch_id, zeros elsewhere)
 
 _CELL_SCHEMA = (
@@ -58,8 +60,10 @@ def calib_cells_merge_batch(
         )
     else:
         merged = batch_cells
-    meta = spark.createDataFrame(
-        [(_META_BIN, int(batch_id), 0, 0, 0, 0, 0)], _CELL_SCHEMA
+    meta = local_frame(
+        spark,
+        [(_META_BIN, int(batch_id), 0, 0, 0, 0, 0)],
+        _CELL_SCHEMA,
     )
     materialize_table(
         spark,
@@ -152,8 +156,10 @@ def auc_cells_merge_batch(
         )
     else:
         merged = cells
-    meta = spark.createDataFrame(
-        [("meta", None, int(batch_id), 0, 0)], _AUC_SCHEMA
+    meta = local_frame(
+        spark,
+        [("meta", None, int(batch_id), 0, 0)],
+        _AUC_SCHEMA,
     )
     materialize_table(spark, target_table, merged.unionByName(meta))
     return True
@@ -237,7 +243,8 @@ def auc_from_cells(
         pr2 += pos * (2 * below + cnt + 1)
         below += cnt
     auc = round((pr2 - n_pos * (n_pos + 1)) / (2.0 * n_pos * n_neg), 6)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n, n_pos, n_neg, len(clean), auc)],
         "n_rows bigint, n_pos bigint, n_neg bigint,"
         " n_score_cells bigint, auc double",
@@ -263,7 +270,8 @@ def calibration_from_cells(
         .collect()
     )
     vals = scorecard_from_cells(rows, int(scale))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [vals],
         "n_rows bigint, n_pos bigint, n_bins_used int, ece double,"
         " mce double, brier double",
@@ -319,7 +327,8 @@ def conformal_from_cells(
         if cum >= k:
             q_fp = s_fp
             break
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_cal, int(k), round(q_fp / int(scale), 6))],
         "n_cal bigint, k bigint, threshold double",
     )
@@ -363,8 +372,10 @@ def mcnemar_cells_merge_batch(
         )
     else:
         merged = cells
-    meta = spark.createDataFrame(
-        [("meta", int(batch_id), 0, 0, 0, 0)], _MCN_SCHEMA
+    meta = local_frame(
+        spark,
+        [("meta", int(batch_id), 0, 0, 0, 0)],
+        _MCN_SCHEMA,
     )
     materialize_table(spark, target_table, merged.unionByName(meta))
     return True
@@ -466,7 +477,7 @@ def chrf_cells_merge_batch(
         for (n, cn, rn, mn) in per_n_rows
     ]
     rows.append(("pairs", 0, int(n_pairs), int(n_nulls), 0))
-    cells = spark.createDataFrame(rows, _CHRF_SCHEMA)
+    cells = local_frame(spark, rows, _CHRF_SCHEMA)
     if spark.catalog.tableExists(target_table):
         cur = spark.table(target_table)
         mark = cur.filter(F.col("kind") == "meta").select("a").collect()
@@ -484,9 +495,7 @@ def chrf_cells_merge_batch(
         )
     else:
         merged = cells
-    meta = spark.createDataFrame(
-        [("meta", 0, int(batch_id), 0, 0)], _CHRF_SCHEMA
-    )
+    meta = local_frame(spark, [("meta", 0, int(batch_id), 0, 0)], _CHRF_SCHEMA)
     materialize_table(spark, target_table, merged.unionByName(meta))
     return True
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import local_frame
+
 _META_SEED = -1  # the ledger row: (seed=-1, bucket=-1, cnt=last_batch_id)
 
 
@@ -55,8 +57,10 @@ def cms_merge_batch(
         )
     else:
         merged = batch_sketch
-    meta = spark.createDataFrame(
-        [(_META_SEED, -1, int(batch_id))], "seed int, bucket bigint, cnt bigint"
+    meta = local_frame(
+        spark,
+        [(_META_SEED, -1, int(batch_id))],
+        "seed int, bucket bigint, cnt bigint",
     )
     materialize_table(
         spark,
@@ -292,8 +296,10 @@ def logbucket_merge_batch(
         )
     else:
         merged = batch_sketch
-    meta = spark.createDataFrame(
-        [(-1, -1, int(batch_id))], "b int, m bigint, cnt bigint"
+    meta = local_frame(
+        spark,
+        [(-1, -1, int(batch_id))],
+        "b int, m bigint, cnt bigint",
     )
     materialize_table(
         spark,
@@ -389,8 +395,10 @@ def pref_counts_merge_batch(
         )
     else:
         merged = batch
-    meta = spark.createDataFrame(
-        [(_LEDGER, _LEDGER, int(batch_id))], "i string, j string, w2 bigint"
+    meta = local_frame(
+        spark,
+        [(_LEDGER, _LEDGER, int(batch_id))],
+        "i string, j string, w2 bigint",
     )
     materialize_table(
         spark,
@@ -462,7 +470,7 @@ def elo_merge_batch(
             "item", "r_fp", "n_matches", "wins"
         )
     else:
-        state = spark.createDataFrame([], _ELO_SCHEMA).select(
+        state = local_frame(spark, [], _ELO_SCHEMA).select(
             "item", "r_fp", "n_matches", "wins"
         )
 
@@ -506,8 +514,10 @@ def elo_merge_batch(
             ).cast("bigint").alias("wins"),
         )
     )
-    meta = spark.createDataFrame(
-        [("meta", None, int(batch_id), 0, 0)], _ELO_SCHEMA
+    meta = local_frame(
+        spark,
+        [("meta", None, int(batch_id), 0, 0)],
+        _ELO_SCHEMA,
     )
     materialize_table(spark, target_table, merged.unionByName(meta))
     return True

@@ -8,6 +8,8 @@ for byte as they are; these digests pin them.
 Lineage cuts have one owner, ``session.truncate_lineage``: a source scan
 keeps every ``checkpoint``/``localCheckpoint`` call inside it, and keeps
 per-operator fault-tolerance knobs (a ``reliable`` parameter) out.
+Driver-held rows have one owner too, ``session.local_frame``: no other
+``createDataFrame`` call ships rows through Python workers.
 """
 
 from __future__ import annotations
@@ -46,27 +48,35 @@ def _package_trees():
         yield path, text, ast.parse(text)
 
 
-def test_lineage_cuts_only_in_truncate_lineage():
+def _calls_outside(owner_name, *needles):
+    """(file, line) of every package line holding one of ``needles``
+    outside the body of ``session.<owner_name>``."""
     owner = None
     hits = []
     for path, text, tree in _package_trees():
         for n, line in enumerate(text.splitlines(), 1):
-            if "localCheckpoint(" in line or ".checkpoint(" in line:
+            if any(needle in line for needle in needles):
                 hits.append((path.relative_to(PACKAGE).as_posix(), n))
         if path.name == "session.py" and path.parent == PACKAGE:
             owner = next(
                 node
                 for node in tree.body
                 if isinstance(node, ast.FunctionDef)
-                and node.name == "truncate_lineage"
+                and node.name == owner_name
             )
     assert hits and owner is not None
-    stray = [
+    return [
         (f, n)
         for f, n in hits
         if f != "session.py" or not owner.lineno <= n <= owner.end_lineno
     ]
-    assert stray == []
+
+
+def test_lineage_cuts_only_in_truncate_lineage():
+    assert (
+        _calls_outside("truncate_lineage", "localCheckpoint(", ".checkpoint(")
+        == []
+    )
 
 
 def test_no_reliable_parameter():
@@ -83,3 +93,7 @@ def test_no_reliable_parameter():
                         f"{path.relative_to(PACKAGE)}:{node.lineno}"
                     )
     assert found == []
+
+
+def test_driver_rows_only_through_local_frame():
+    assert _calls_outside("local_frame", "createDataFrame(") == []
