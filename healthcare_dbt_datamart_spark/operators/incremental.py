@@ -35,6 +35,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .materialize import materialize_table
+
 
 def is_incremental(spark: SparkSession, name: str, full_refresh: bool = False) -> bool:
     """I6 (``is_incremental.sql:2-13``) — with crash recovery: a target
@@ -44,9 +46,10 @@ def is_incremental(spark: SparkSession, name: str, full_refresh: bool = False) -
 
 
 def recover_swap(spark: SparkSession, name: str) -> bool:
-    """If a crash mid-``_swap_in`` left no target, promote the backup —
-    the swap never completed, so the pre-swap contents are the correct
-    durable state. Returns whether the target exists after recovery."""
+    """If a crash mid-``materialize_table`` swap left no target, promote
+    the backup — the swap never completed, so the pre-swap contents are
+    the correct durable state. Returns whether the target exists after
+    recovery."""
     if spark.catalog.tableExists(name):
         return True
     backup = f"{name}__dbt_backup"
@@ -55,43 +58,6 @@ def recover_swap(spark: SparkSession, name: str) -> bool:
         spark.catalog.refreshTable(name)
         return True
     return False
-
-
-def _swap_in(
-    spark: SparkSession,
-    name: str,
-    new_contents: DataFrame,
-    cluster_by: list[str] | None = None,
-    zorder_by: tuple[str, str] | None = None,
-) -> None:
-    """Write new contents (which may read from the current target) to a
-    temp table, then swap via the reference's backup-rename-drop
-    (``dbt-adapters/.../table.sql:36-59``): the old target is RENAMED to
-    a backup — never dropped before the new table holds its name — so a
-    crash at any point leaves either the target or its backup in the
-    catalog, and ``recover_swap`` restores the pre-swap state on the next
-    run (a DROP-then-RENAME swap has a window where a crash silently
-    loses the whole table).
-
-    Delegates to ``materialize_table`` so there is exactly ONE swap
-    implementation: the orphan-backup promotion, the protected-slot
-    guard, and the EXTERNAL-occupant backup relocation (clone targets
-    whose catalog rename does not move files) all apply to incremental
-    rewrites too — a second hand-rolled swap here silently missed them
-    once already.
-
-    ``cluster_by`` / ``zorder_by`` are forwarded so the declared sort
-    layout survives EVERY rewrite, exactly as Snowflake re-applies
-    ``cluster by`` on each incremental rebuild
-    (``dbt-snowflake/macros/relations/table/create.sql:115-120``) —
-    without this, the first incremental run silently flattens the
-    table's file-footer min/max stats and downstream scans lose
-    row-group pruning."""
-    from .materialize import materialize_table
-
-    materialize_table(
-        spark, name, new_contents, cluster_by=cluster_by, zorder_by=zorder_by
-    )
 
 
 def _key_cols(unique_key: str | list[str]) -> list[str]:
@@ -210,7 +176,9 @@ def _apply_schema_change(
             *[F.col(c) for c in t_cols if c in s_cols],
             *[F.lit(None).cast(source.schema[c].dataType).alias(c) for c in new_cols],
         )
-        _swap_in(spark, name, synced, cluster_by, zorder_by)
+        materialize_table(
+            spark, name, synced, cluster_by=cluster_by, zorder_by=zorder_by
+        )
     elif new_cols:
         _add_columns(new_cols)
     return source.select(*s_cols)
@@ -248,8 +216,6 @@ def incremental_run(
     the target's values for the rest; mutually exclusive, like the
     reference.
     """
-    from .materialize import materialize_table
-
     in_window = None
     if strategy == "microbatch":
         # validate + normalize the window spec up front so BOTH the
@@ -288,6 +254,12 @@ def incremental_run(
         )
         return
 
+    # every rewrite below (and the schema-sync one) passes cluster_by /
+    # zorder_by, so the declared sort layout survives EVERY incremental
+    # run, as Snowflake re-applies ``cluster by`` on each incremental
+    # rebuild (``dbt-snowflake/macros/relations/table/create.sql:115-120``);
+    # a rewrite without it would flatten the file-footer min/max stats and
+    # downstream scans would lose row-group pruning
     source = _apply_schema_change(
         spark, name, source, on_schema_change, cluster_by, zorder_by
     )
@@ -360,13 +332,16 @@ def incremental_run(
             new_rows = source.join(
                 match_target.select(*keys).distinct(), keys, "left_anti"
             )
-            _swap_in(
+            materialize_table(
                 spark, name,
                 kept.unionByName(matched).unionByName(new_rows),
-                cluster_by, zorder_by,
+                cluster_by=cluster_by, zorder_by=zorder_by,
             )
             return
-        _swap_in(spark, name, kept.unionByName(source), cluster_by, zorder_by)
+        materialize_table(
+            spark, name, kept.unionByName(source),
+            cluster_by=cluster_by, zorder_by=zorder_by,
+        )
         return
 
     if strategy == "delete+insert":
@@ -386,7 +361,10 @@ def incremental_run(
             kept = protected.unionByName(
                 candidates.join(source.select(*keys).distinct(), keys, "left_anti")
             )
-        _swap_in(spark, name, kept.unionByName(source), cluster_by, zorder_by)
+        materialize_table(
+            spark, name, kept.unionByName(source),
+            cluster_by=cluster_by, zorder_by=zorder_by,
+        )
         return
 
     if strategy == "insert_overwrite":
@@ -404,7 +382,10 @@ def incremental_run(
         # predicate was validated and applied to ``source`` up front so
         # the first-run CTAS shares it
         kept = target.filter(~in_window)
-        _swap_in(spark, name, kept.unionByName(source), cluster_by, zorder_by)
+        materialize_table(
+            spark, name, kept.unionByName(source),
+            cluster_by=cluster_by, zorder_by=zorder_by,
+        )
         return
 
     raise ValueError(f"unknown incremental strategy: {strategy}")

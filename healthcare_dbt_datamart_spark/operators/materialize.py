@@ -173,9 +173,9 @@ def materialize_table(
         # never dropped before the new table holds its name, so a crash
         # at any point leaves either the target or {name}__dbt_backup in
         # the catalog and incremental.recover_swap restores it — a
-        # DROP/RENAME window would silently lose the whole table (the
-        # exact hazard _swap_in's docstring forbids; this path rebuilds
-        # incremental targets via compact_table too)
+        # DROP/RENAME window would silently lose the whole table (this
+        # path rebuilds incremental and snapshot targets and every
+        # streaming state table too)
         spark.sql(f"ALTER TABLE {name} RENAME TO {backup}")
         # a MANAGED rename moved its directory out of the name slot; an
         # EXTERNAL old target (e.g. a clone target parked at the slot)

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import surrogate_key
+from .materialize import materialize_table
 
 SCD_COLS = ["dbt_scd_id", "dbt_updated_at", "dbt_valid_from", "dbt_valid_to"]
 
@@ -119,8 +120,6 @@ def snapshot_run(
             upd.alias("dbt_valid_from"),
             open_to.alias("dbt_valid_to"),
         )
-        from .materialize import materialize_table
-
         materialize_table(
             spark, name, first, cluster_by=cluster_by, zorder_by=zorder_by
         )
@@ -287,6 +286,6 @@ def snapshot_run(
                 "dbt_is_deleted", F.coalesce(F.col("dbt_is_deleted"), F.lit("False"))
             )
 
-    from .incremental import _swap_in
-
-    _swap_in(spark, name, result, cluster_by, zorder_by)
+    materialize_table(
+        spark, name, result, cluster_by=cluster_by, zorder_by=zorder_by
+    )

@@ -221,7 +221,7 @@ def microbatch_stream(
     watermark bounds the batch's event-time span, so the period count is
     span/period, never data-sized.
     """
-    from ..operators.incremental import incremental_run
+    from ..operators.incremental import incremental_run, recover_swap
     from pyspark.sql import functions as F
 
     stream = source_stream.withWatermark(event_time, watermark_delay)
@@ -296,9 +296,11 @@ def microbatch_stream(
             # restart: re-arm from the TARGET's landed high-water mark —
             # the in-memory mark dies with the driver, and an unarmed
             # guard would let a straggler in the first post-restart
-            # batch wipe its already-complete period
+            # batch wipe its already-complete period. recover_swap, not
+            # tableExists: after a crash mid-swap only the backup holds
+            # the landed rows
             spark = batch_df.sparkSession
-            if spark.catalog.tableExists(name):
+            if recover_swap(spark, name):
                 max_seen = (
                     spark.table(name).agg(F.max(event_time)).first()[0]
                 )

@@ -6,11 +6,10 @@ filter running on live ingest) maintains its calibration scorecard by
 sum-merging each micro-batch's bounded cells into a persistent table —
 no history replay, state bounded by ``n_bins + 1`` rows forever.
 
-Exactly-once across foreachBatch replays: sum-merges double-count on a
-crash-replay, so the sink records the applied batch id INSIDE the cell
-table (one ``bin = -2`` meta row riding the same atomic table swap as
-the merged cells) and skips any batch id at or below the stored
-high-water mark — the ``cms_merge_batch`` ledger, unchanged.
+Every sink here is a sum-merge, so every one keeps the exactly-once
+ledger of ``streaming/state.py::merge_state`` (which also recovers a
+mid-swap crash). Each ``*_merge_batch`` below supplies only its merge
+step and its ledger row.
 """
 
 from __future__ import annotations
@@ -19,8 +18,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import local_frame
+from .state import Ledger, merge_state, start_ingest
 
 _META_BIN = -2  # ledger row: (bin=-2, n=last_batch_id, zeros elsewhere)
+_CALIB = Ledger("n", (_META_BIN, 0, 0, 0, 0, 0, 0))
 
 _CELL_SCHEMA = (
     "bin int, n bigint, pos bigint, s_sum bigint, s2_sum bigint,"
@@ -36,44 +37,24 @@ def calib_cells_merge_batch(
     batch_id: int,
 ) -> bool:
     """Merge one micro-batch's calibration cells into ``target_table``
-    by (bin) SUM over every counter column, atomically (the
-    materialize_table swap) and idempotently (skip when ``batch_id`` ≤
-    the stored high-water mark — ledger and cells travel in the same
-    swap, so a crash between them cannot desynchronize). Returns
-    whether the batch was applied. The merge aggregate runs over ≤
-    2·(n_bins + 1) rows — bounded model state, never corpus-sized."""
-    from ..operators.materialize import materialize_table
+    by (bin) SUM over every counter column, under the ledger. The
+    dirty-row counter cell from ``_bin_cells`` carries bin = NULL and
+    is a data row: it merges like any other bin. Returns whether the
+    batch was applied. The merge aggregate runs over ≤ 2·(n_bins + 1)
+    rows — bounded model state, never corpus-sized."""
 
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("bin") == _META_BIN).select("n").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        # NULL-safe: the dirty-row counter cell from _bin_cells carries
-        # bin = NULL, and `bin != -2` evaluates to NULL on it — a plain
-        # filter would silently drop merged dirty counts every batch.
-        base = cur.filter(~F.col("bin").eqNullSafe(F.lit(_META_BIN)))
-        merged = (
-            base.unionByName(batch_cells)
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return batch_cells
+        return (
+            cur.unionByName(batch_cells)
             .groupBy("bin")
             .agg(*[F.sum(c).alias(c) for c in _CELL_COLS[1:]])
         )
-    else:
-        merged = batch_cells
-    meta = local_frame(
-        spark,
-        [(_META_BIN, int(batch_id), 0, 0, 0, 0, 0)],
-        _CELL_SCHEMA,
+
+    return merge_state(
+        spark, target_table, merge, _CELL_SCHEMA, _CALIB, batch_id
     )
-    materialize_table(
-        spark,
-        target_table,
-        merged.select(
-            F.col("bin").cast("int"),
-            *[F.col(c).cast("bigint") for c in _CELL_COLS[1:]],
-        ).unionByName(meta),
-    )
-    return True
 
 
 def streaming_calibration_ingest(
@@ -84,7 +65,6 @@ def streaming_calibration_ingest(
     n_bins: int = 10,
     scale: int = 10**6,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Maintain a calibration cell table over a scored stream: each
     micro-batch builds its own bounded ``_bin_cells`` aggregate
@@ -103,18 +83,12 @@ def streaming_calibration_ingest(
             batch_df.sparkSession, target_table, cells, batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
 
 
 _AUC_SCHEMA = "kind string, s_fp bigint, cnt bigint, pos bigint, bad bigint"
 _AUC_COLS = ["cnt", "pos", "bad"]
+_AUC = Ledger("cnt", ("meta", None, 0, 0, 0))
 
 
 def auc_cells_merge_batch(
@@ -125,44 +99,27 @@ def auc_cells_merge_batch(
 ) -> bool:
     """Merge one micro-batch's quantized-score cells (``llmops.
     evaluation._quantized_cells`` output) into ``target_table`` by
-    (s_fp) SUM — the ``calib_cells_merge_batch`` ledger discipline with
-    a ``kind`` discriminator column instead of a sentinel key value:
-    AUC score cells span the whole BIGINT range (scores can be
-    negative), so no s_fp value is safe to reserve, and the dirty-row
-    cell already owns s_fp = NULL. Meta row: ``(kind='meta', cnt =
-    last applied batch id)``; cells ride as ``kind='cell'`` and the
-    merge groupBy keys (kind, s_fp) — NULL s_fp is a real group, never
-    filtered (the round-7 streamed-calibration lesson, applied from
-    birth)."""
-    from ..operators.materialize import materialize_table
-
+    (s_fp) SUM under the ledger, keyed by a ``kind`` discriminator
+    column instead of a sentinel key value: AUC score cells span the
+    whole BIGINT range (scores can be negative), so no s_fp value is
+    safe to reserve, and the dirty-row cell already owns s_fp = NULL.
+    Cells ride as ``kind='cell'`` and the merge groupBy keys (kind,
+    s_fp) — NULL s_fp is a real group, never filtered."""
     cells = batch_cells.select(
         F.lit("cell").alias("kind"),
-        F.col("s_fp").cast("bigint"),
-        F.col("cnt").cast("bigint"),
-        F.col("pos").cast("bigint"),
-        F.col("bad").cast("bigint"),
+        *[F.col(c).cast("bigint") for c in ["s_fp", *_AUC_COLS]],
     )
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("kind") == "meta").select("cnt").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        merged = (
-            cur.filter(F.col("kind") == "cell")
-            .unionByName(cells)
+
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return cells
+        return (
+            cur.unionByName(cells)
             .groupBy("kind", "s_fp")
             .agg(*[F.sum(c).alias(c) for c in _AUC_COLS])
         )
-    else:
-        merged = cells
-    meta = local_frame(
-        spark,
-        [("meta", None, int(batch_id), 0, 0)],
-        _AUC_SCHEMA,
-    )
-    materialize_table(spark, target_table, merged.unionByName(meta))
-    return True
+
+    return merge_state(spark, target_table, merge, _AUC_SCHEMA, _AUC, batch_id)
 
 
 def streaming_auc_ingest(
@@ -172,7 +129,6 @@ def streaming_auc_ingest(
     label_col: str,
     scale: int = 10**4,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Maintain a ROC-AUC cell table over a scored stream — the
     ``streaming_calibration_ingest`` twin for the ranking metric: each
@@ -195,14 +151,7 @@ def streaming_auc_ingest(
             batch_df.sparkSession, target_table, cells, batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
 
 
 def auc_from_cells(
@@ -338,6 +287,7 @@ _MCN_SCHEMA = (
     "kind string, rr bigint, b bigint, c bigint, ww bigint, bad bigint"
 )
 _MCN_COLS = ["rr", "b", "c", "ww", "bad"]
+_MCN = Ledger("rr", ("meta", 0, 0, 0, 0, 0))
 
 
 def mcnemar_cells_merge_batch(
@@ -350,35 +300,22 @@ def mcnemar_cells_merge_batch(
     evaluation._contingency_cells`` output) into ``target_table`` —
     the ``auc_cells_merge_batch`` ledger discipline at its smallest:
     the whole state is ONE cell row of five associative BIGINTs plus
-    the ``(kind='meta', rr = last applied batch id)`` marker, so
-    replays are idempotent and a crash between write and commit
-    re-merges nothing twice."""
-    from ..operators.materialize import materialize_table
-
+    the ``(kind='meta', rr = last applied batch id)`` ledger row."""
     cells = batch_cells.select(
         F.lit("cell").alias("kind"),
         *[F.col(c).cast("bigint") for c in _MCN_COLS],
     )
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("kind") == "meta").select("rr").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        merged = (
-            cur.filter(F.col("kind") == "cell")
-            .unionByName(cells)
+
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return cells
+        return (
+            cur.unionByName(cells)
             .groupBy("kind")
             .agg(*[F.sum(c).alias(c) for c in _MCN_COLS])
         )
-    else:
-        merged = cells
-    meta = local_frame(
-        spark,
-        [("meta", int(batch_id), 0, 0, 0, 0)],
-        _MCN_SCHEMA,
-    )
-    materialize_table(spark, target_table, merged.unionByName(meta))
-    return True
+
+    return merge_state(spark, target_table, merge, _MCN_SCHEMA, _MCN, batch_id)
 
 
 def streaming_mcnemar_ingest(
@@ -387,7 +324,6 @@ def streaming_mcnemar_ingest(
     correct_a_col: str,
     correct_b_col: str,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Maintain the paired-classifier contingency table over a live
     judged stream — the ``streaming_auc_ingest`` twin for A/B model
@@ -404,14 +340,7 @@ def streaming_mcnemar_ingest(
             batch_df.sparkSession, target_table, cells, batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
 
 
 def mcnemar_from_cells(
@@ -448,6 +377,7 @@ def mcnemar_from_cells(
 _CHRF_SCHEMA = (
     "kind string, n int, a bigint, b bigint, c bigint"
 )
+_CHRF = Ledger("a", ("meta", 0, 0, 0, 0))
 
 
 def chrf_cells_merge_batch(
@@ -457,47 +387,36 @@ def chrf_cells_merge_batch(
     n_nulls: int,
     per_n_rows: list,
     batch_id: int,
-    max_n: int = 6,
 ) -> bool:
     """Merge one micro-batch's chrF sufficient statistics into
-    ``target_table`` under the exactly-once ledger (the
-    ``mcnemar_cells_merge_batch`` discipline): state = one
-    ``kind='cell'`` row per char-gram order carrying the three
-    associative BIGINT sums (cand/ref/match as a/b/c), one
-    ``kind='pairs'`` row carrying (n_pairs, n_null_pairs), and the
-    ``kind='meta'`` marker whose ``a`` is the last applied batch id.
-    Clipping is PER PAIR (inside one row), so per-batch cells
-    sum-merge to exactly the whole-corpus counts as long as each
-    (cand, ref) pair arrives whole in one batch — the document-level
-    atomicity every row-shaped ingest has by construction."""
-    from ..operators.materialize import materialize_table
-
+    ``target_table`` under the ledger: state = one ``kind='cell'`` row
+    per char-gram order carrying the three associative BIGINT sums
+    (cand/ref/match as a/b/c), one ``kind='pairs'`` row carrying
+    (n_pairs, n_null_pairs), and the ``kind='meta'`` ledger row whose
+    ``a`` is the last applied batch id. Clipping is PER PAIR (inside
+    one row), so per-batch cells sum-merge to exactly the whole-corpus
+    counts as long as each (cand, ref) pair arrives whole in one batch
+    — the document-level atomicity every row-shaped ingest has by
+    construction."""
     rows = [
         ("cell", int(n), int(cn), int(rn), int(mn))
         for (n, cn, rn, mn) in per_n_rows
     ]
     rows.append(("pairs", 0, int(n_pairs), int(n_nulls), 0))
     cells = local_frame(spark, rows, _CHRF_SCHEMA)
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("kind") == "meta").select("a").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        merged = (
-            cur.filter(F.col("kind") != "meta")
-            .unionByName(cells)
+
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return cells
+        return (
+            cur.unionByName(cells)
             .groupBy("kind", "n")
-            .agg(
-                F.sum("a").alias("a"),
-                F.sum("b").alias("b"),
-                F.sum("c").alias("c"),
-            )
+            .agg(F.sum("a").alias("a"), F.sum("b").alias("b"), F.sum("c").alias("c"))
         )
-    else:
-        merged = cells
-    meta = local_frame(spark, [("meta", 0, int(batch_id), 0, 0)], _CHRF_SCHEMA)
-    materialize_table(spark, target_table, merged.unionByName(meta))
-    return True
+
+    return merge_state(
+        spark, target_table, merge, _CHRF_SCHEMA, _CHRF, batch_id
+    )
 
 
 def streaming_chrf_ingest(
@@ -508,7 +427,6 @@ def streaming_chrf_ingest(
     id_col: str,
     max_n: int = 6,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Maintain corpus chrF over a live (candidate, reference) stream
     — the generation-eval twin of ``streaming_mcnemar_ingest``: each
@@ -529,17 +447,10 @@ def streaming_chrf_ingest(
         ]
         chrf_cells_merge_batch(
             batch_df.sparkSession, target_table, n_pairs, n_nulls, rows,
-            batch_id, max_n=int(max_n),
+            batch_id,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
 
 
 def chrf_from_cells(

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from .state import merge_state, start_ingest
+
 
 def _best_of(df: DataFrame) -> DataFrame:
     """Per-member argmin over (reason_rank asc, event_date desc, claim_id
@@ -63,40 +65,33 @@ def streaming_best_evidence(
     existing rows survive unless the batch brings a strictly better
     (lower-rank / more recent) candidate. Deterministic across arrival
     orders: the kept row is always the global argmin of everything seen.
+    The table is read and published through ``merge_state``, so a
+    restart after a crash mid-swap merges into the accumulated state.
+    The query runs until stopped.
     """
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.incremental import recover_swap
-
-        spark = batch_df.sparkSession
         batch_best = _best_of(batch_df)
-        # recover_swap: a restart after a crash mid-swap must restore the
-        # accumulated state table, not rebuild it from this batch alone
-        if not recover_swap(spark, name):
-            from ..operators.materialize import _drop_stale_location
 
-            # stale-slot discipline (materialize.py): a leftover dir the
-            # catalog doesn't know about wedges the first-batch CTAS
-            _drop_stale_location(spark, name)
-            batch_best.write.format("parquet").saveAsTable(name)
-            return
-        # re-rank ONLY members present in this batch (semi-join); the rest
-        # of the table passes through untouched. On plain parquet the
-        # publish still rewrites the table (Delta MERGE would make it a
-        # partial file rewrite); the RANKING compute is ∝ batch either way.
-        target = spark.table(name)
-        affected = batch_best.select("member_id")
-        winners = _best_of(
-            target.join(affected, "member_id", "left_semi").unionByName(batch_best)
-        )
-        untouched = target.join(affected, "member_id", "left_anti")
-        from ..operators.incremental import _swap_in
+        def merge(target: DataFrame | None) -> DataFrame:
+            if target is None:
+                return batch_best
+            # re-rank ONLY members present in this batch (semi-join); the
+            # rest of the table passes through untouched. On plain parquet
+            # the publish still rewrites the table (Delta MERGE would make
+            # it a partial file rewrite); the RANKING compute is ∝ batch
+            # either way.
+            affected = batch_best.select("member_id")
+            winners = _best_of(
+                target.join(affected, "member_id", "left_semi").unionByName(
+                    batch_best
+                )
+            )
+            untouched = target.join(affected, "member_id", "left_anti")
+            return untouched.unionByName(winners)
 
-        _swap_in(spark, name, untouched.unionByName(winners))
+        merge_state(batch_df.sparkSession, name, merge)
 
-    return (
-        evidence_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return start_ingest(
+        evidence_stream, apply_batch, checkpoint_dir, available_now=False
     )

@@ -6,13 +6,10 @@ the persistent sketch table cell-by-cell. No reindex, no history replay
 — the property that makes CMS the standard streaming heavy-hitter
 structure.
 
-Exactly-once across foreachBatch replays: Structured Streaming re-runs
-the last uncommitted batch after a crash, and a sum-merge applied twice
-double-counts. The sink therefore records the applied batch id INSIDE
-the sketch table (one meta row, written in the same atomic table swap
-as the merged cells) and skips any batch id at or below the stored
-high-water mark — the canonical idempotent-sink ledger, made crash-safe
-here by riding the swap instead of a second non-atomic write.
+Every sink here merges through ``streaming/state.py::merge_state``,
+which recovers a mid-swap crash and keeps the exactly-once ledger.
+Each ``*_merge_batch`` below supplies only its merge step and, for the
+sum-merges, its ledger row.
 """
 
 from __future__ import annotations
@@ -21,8 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..session import local_frame
+from .state import Ledger, merge_state, start_ingest
 
-_META_SEED = -1  # the ledger row: (seed=-1, bucket=-1, cnt=last_batch_id)
+_CMS = Ledger("cnt", (-1, -1, 0))  # (seed=-1, bucket=-1, cnt=batch id)
 
 
 def cms_merge_batch(
@@ -32,75 +30,46 @@ def cms_merge_batch(
     batch_id: int,
 ) -> bool:
     """Merge one micro-batch's sketch into ``target_table`` by
-    (seed, bucket) SUM, atomically (the materialize_table swap) and
-    idempotently (skip if ``batch_id`` ≤ the stored high-water mark —
-    the ledger row travels in the same swap, so a crash between merge
-    and ledger cannot desynchronize them). Returns whether the batch
-    was applied. The merge aggregate runs over ≤ d·w + batch cells —
-    bounded model-sized state, never corpus-sized."""
-    from ..operators.materialize import materialize_table
+    (seed, bucket) SUM under the ledger (``streaming/state.py``).
+    Returns whether the batch was applied. The merge aggregate runs
+    over ≤ d·w + batch cells — bounded model-sized state, never
+    corpus-sized."""
 
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = (
-            cur.filter(F.col("seed") == _META_SEED)
-            .select("cnt")
-            .collect()
-        )
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        base = cur.filter(F.col("seed") != _META_SEED)
-        merged = (
-            base.unionByName(batch_sketch)
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return batch_sketch
+        return (
+            cur.unionByName(batch_sketch)
             .groupBy("seed", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
         )
-    else:
-        merged = batch_sketch
-    meta = local_frame(
-        spark,
-        [(_META_SEED, -1, int(batch_id))],
-        "seed int, bucket bigint, cnt bigint",
+
+    return merge_state(
+        spark, target_table, merge, "seed int, bucket bigint, cnt bigint",
+        _CMS, batch_id,
     )
-    materialize_table(
-        spark,
-        target_table,
-        merged.select(
-            F.col("seed").cast("int"),
-            F.col("bucket").cast("bigint"),
-            F.col("cnt").cast("bigint"),
-        ).unionByName(meta),
-    )
-    return True
 
 
 def hll_merge_batch(
     spark: SparkSession, target_table: str, batch_regs: DataFrame
 ) -> None:
     """Merge one micro-batch's sparse HLL registers into
-    ``target_table`` by (bucket) MAX, atomically via the table swap.
-    Unlike the CMS sum-merge, MAX is IDEMPOTENT — re-applying a batch
-    after a foreachBatch crash-replay yields the identical table — so
-    the HLL sink needs no batch-id ledger; at-least-once delivery IS
-    exactly-once here. The merged state never exceeds 2^b rows."""
-    from ..operators.materialize import materialize_table
+    ``target_table`` by (bucket) MAX. Unlike the CMS sum-merge, MAX is
+    IDEMPOTENT — re-applying a batch after a foreachBatch crash-replay
+    yields the identical table — so the HLL sink needs no batch-id
+    ledger; at-least-once delivery IS exactly-once here. The merged
+    state never exceeds 2^b rows."""
 
-    if spark.catalog.tableExists(target_table):
-        merged = (
-            spark.table(target_table)
-            .unionByName(batch_regs)
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return batch_regs
+        return (
+            cur.unionByName(batch_regs)
             .groupBy("bucket")
             .agg(F.max("mj").alias("mj"))
         )
-    else:
-        merged = batch_regs
-    materialize_table(
-        spark,
-        target_table,
-        merged.select(
-            F.col("bucket").cast("bigint"), F.col("mj").cast("int")
-        ),
-    )
+
+    merge_state(spark, target_table, merge, "bucket bigint, mj int")
 
 
 def streaming_hll_ingest(
@@ -109,7 +78,6 @@ def streaming_hll_ingest(
     value_col: str,
     b: int = 10,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Continuously fold a stream of values into a persistent
     HyperLogLog register table: per micro-batch, build the batch's own
@@ -124,18 +92,11 @@ def streaming_hll_ingest(
     spark = stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         hll_merge_batch(
             spark, target_table, hll_registers(batch_df, value_col, b=b)
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
 
 
 def hll_table_estimate(
@@ -161,7 +122,6 @@ def streaming_cms_ingest(
     d: int = 4,
     term_col: str = "term",
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Continuously fold a token stream into a persistent count-min
     sketch: per micro-batch, build the batch's own d×w sketch (the same
@@ -175,8 +135,6 @@ def streaming_cms_ingest(
     spark = token_stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         cms_merge_batch(
             spark,
             target_table,
@@ -184,14 +142,7 @@ def streaming_cms_ingest(
             batch_id,
         )
 
-    writer = token_stream.writeStream.foreachBatch(apply_batch).outputMode(
-        "append"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(token_stream, apply_batch, checkpoint_dir)
 
 
 def reservoir_merge_batch(
@@ -208,21 +159,20 @@ def reservoir_merge_batch(
     merge is IDEMPOTENT (a replayed batch's rows dedupe away), so like
     the HLL sink — and unlike the CMS sum — no batch-id ledger is
     needed. State is ≤ k rows regardless of stream volume."""
-    from ..operators.materialize import materialize_table
     from pyspark.sql.window import Window
 
-    pool = batch_sample
-    if spark.catalog.tableExists(target_table):
-        pool = spark.table(target_table).unionByName(batch_sample)
-    dedup = Window.partitionBy(id_col).orderBy(F.col("_wkey").asc())
-    merged = (
-        pool.withColumn("_rn", F.row_number().over(dedup))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .orderBy(F.col("_wkey").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    materialize_table(spark, target_table, merged)
+    def merge(cur: DataFrame | None) -> DataFrame:
+        pool = batch_sample if cur is None else cur.unionByName(batch_sample)
+        dedup = Window.partitionBy(id_col).orderBy(F.col("_wkey").asc())
+        return (
+            pool.withColumn("_rn", F.row_number().over(dedup))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+            .orderBy(F.col("_wkey").asc(), F.col(id_col).asc())
+            .limit(k)
+        )
+
+    merge_state(spark, target_table, merge)
 
 
 def streaming_weighted_reservoir(
@@ -233,7 +183,6 @@ def streaming_weighted_reservoir(
     k: int,
     seed: str = "w1",
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Continuously maintain a k-row weighted sample over an unbounded
     feed — the streaming face of ``llmops/splits.py::weighted_sample``.
@@ -251,8 +200,6 @@ def streaming_weighted_reservoir(
     spark = stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         reservoir_merge_batch(
             spark,
             target_table,
@@ -261,12 +208,10 @@ def streaming_weighted_reservoir(
             id_col=id_col,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
+
+
+_LOGBUCKET = Ledger("cnt", (-1, -1, 0))  # (b=-1, m=-1, cnt=batch id)
 
 
 def logbucket_merge_batch(
@@ -277,40 +222,23 @@ def logbucket_merge_batch(
 ) -> bool:
     """Merge one micro-batch's log-bucket quantile cells into
     ``target_table`` by (b, m) SUM — counts, so like the CMS sink (and
-    unlike HLL/reservoir) a replay would double-count: the applied
-    batch id rides the same atomic swap as the merged cells (ledger row
-    at b=-1) and stale batch ids are skipped. Returns whether the batch
-    was applied. State stays ≤ 63·2^s cells + 1 meta row."""
-    from ..operators.materialize import materialize_table
+    unlike HLL/reservoir) a replay would double-count: ledgered, ledger
+    row at b=-1. Returns whether the batch was applied. State stays
+    ≤ 63·2^s cells + 1 meta row."""
 
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("b") == -1).select("cnt").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False
-        merged = (
-            cur.filter(F.col("b") != -1)
-            .unionByName(batch_sketch)
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return batch_sketch
+        return (
+            cur.unionByName(batch_sketch)
             .groupBy("b", "m")
             .agg(F.sum("cnt").alias("cnt"))
         )
-    else:
-        merged = batch_sketch
-    meta = local_frame(
-        spark,
-        [(-1, -1, int(batch_id))],
-        "b int, m bigint, cnt bigint",
+
+    return merge_state(
+        spark, target_table, merge, "b int, m bigint, cnt bigint",
+        _LOGBUCKET, batch_id,
     )
-    materialize_table(
-        spark,
-        target_table,
-        merged.select(
-            F.col("b").cast("int"),
-            F.col("m").cast("bigint"),
-            F.col("cnt").cast("bigint"),
-        ).unionByName(meta),
-    )
-    return True
 
 
 def streaming_logbucket_ingest(
@@ -319,7 +247,6 @@ def streaming_logbucket_ingest(
     value_col: str,
     s: int = 4,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Continuously fold a numeric stream into the persistent
     log-bucket quantile sketch — live percentiles over an unbounded
@@ -333,8 +260,6 @@ def streaming_logbucket_ingest(
     spark = stream.sparkSession
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         logbucket_merge_batch(
             spark,
             target_table,
@@ -342,12 +267,10 @@ def streaming_logbucket_ingest(
             batch_id,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
+
+
+_PREF = Ledger("w2", ("__batch_ledger__", "__batch_ledger__", 0))
 
 
 def pref_counts_merge_batch(
@@ -362,16 +285,12 @@ def pref_counts_merge_batch(
     maintained ``(i, j, w2)`` DOUBLED-win-count table — the live
     arena-leaderboard ingest: counts SUM-merge (so, like the CMS sink
     and unlike HLL/reservoir, a replayed batch would double-count —
-    the applied batch id rides the same atomic swap as the merged
-    counts, ledger row at i = '__batch_ledger__'), and
+    ledgered, ledger row at i = '__batch_ledger__'), and
     ``llmops/preferences.py::bradley_terry_from_pairs`` re-derives
     ratings from this bounded table on any schedule without re-reading
     a single outcome. Ids are stored as strings so the sentinel row is
     type-safe for any id type. State is one row per observed ordered
     pair."""
-    from ..operators.materialize import materialize_table
-
-    _LEDGER = "__batch_ledger__"
     # drop self-comparisons at ingest, mirroring bradley_terry's batch
     # path — streamed and single-shot counts must rate identically
     batch = (
@@ -382,35 +301,26 @@ def pref_counts_merge_batch(
         )
         .agg((F.lit(2) * F.count(F.lit(1))).alias("w2"))
     )
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("i") == _LEDGER).select("w2").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        merged = (
-            cur.filter(F.col("i") != _LEDGER)
-            .unionByName(batch)
+
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return batch
+        return (
+            cur.unionByName(batch)
             .groupBy("i", "j")
             .agg(F.sum("w2").alias("w2"))
         )
-    else:
-        merged = batch
-    meta = local_frame(
-        spark,
-        [(_LEDGER, _LEDGER, int(batch_id))],
-        "i string, j string, w2 bigint",
+
+    return merge_state(
+        spark, target_table, merge, "i string, j string, w2 bigint",
+        _PREF, batch_id,
     )
-    materialize_table(
-        spark,
-        target_table,
-        merged.select("i", "j", F.col("w2").cast("bigint")).unionByName(meta),
-    )
-    return True
 
 
 _ELO_SCHEMA = (
     "kind string, item string, r_fp bigint, n_matches bigint, wins bigint"
 )
+_ELO = Ledger("r_fp", ("meta", None, 0, 0, 0))
 
 
 def elo_merge_batch(
@@ -435,15 +345,13 @@ def elo_merge_batch(
     ``period = batch index``).
 
     State: one ``kind='rating'`` row per item ``(item, r_fp,
-    n_matches, wins)`` + one ``kind='meta'`` ledger row (``r_fp`` =
-    last applied batch id) riding the same atomic swap — a replayed
-    batch id at or below the mark is skipped, the idempotent-sink
-    discipline. Unseen items enter at ``initial·scale`` BEFORE the
-    period applies (identical to the batch operator, whose every item
-    starts at the initial rating). NULL keys raise, the batch path's
-    guard — a streamed leaderboard must not diverge from the batch one
-    on dirty input."""
-    from ..operators.materialize import materialize_table
+    n_matches, wins)`` + the ``kind='meta'`` ledger row (``r_fp`` =
+    last applied batch id). Unseen items enter at ``initial·scale``
+    BEFORE the period applies (identical to the batch operator, whose
+    every item starts at the initial rating). NULL keys raise, the
+    batch path's guard — a streamed leaderboard must not diverge from
+    the batch one on dirty input."""
+    from ..llmops.preferences import elo_update_period
 
     m = batch_matches.select(
         F.col(winner_col).cast("string").alias("w"),
@@ -461,66 +369,52 @@ def elo_merge_batch(
         )
     m = m.filter(F.col("w") != F.col("l"))
 
-    if spark.catalog.tableExists(target_table):
-        cur = spark.table(target_table)
-        mark = cur.filter(F.col("kind") == "meta").select("r_fp").collect()
-        if mark and batch_id <= mark[0][0]:
-            return False  # replay of an already-applied batch
-        state = cur.filter(F.col("kind") == "rating").select(
-            "item", "r_fp", "n_matches", "wins"
-        )
-    else:
-        state = local_frame(spark, [], _ELO_SCHEMA).select(
-            "item", "r_fp", "n_matches", "wins"
-        )
-
-    from ..llmops.preferences import elo_update_period
-
-    players = m.select(F.col("w").alias("item")).unionByName(
-        m.select(F.col("l").alias("item"))
-    ).distinct()
-    newbies = players.join(state.select("item"), "item", "left_anti").select(
-        "item",
-        F.lit(int(initial) * int(scale)).cast("long").alias("r_fp"),
-        F.lit(0).cast("long").alias("n_matches"),
-        F.lit(0).cast("long").alias("wins"),
-    )
-    state0 = state.unionByName(newbies)
-    # check_items=False: `newbies` just seeded every item this batch
-    # names, so the guard's anti-join is redundant here by construction
-    updated = elo_update_period(
-        state0.select("item", "r_fp"), m, k=int(k), scale=int(scale),
-        check_items=False,
-    )
-    sides = m.select(F.col("w").alias("item"), F.lit(1).alias("win")).unionByName(
-        m.select(F.col("l").alias("item"), F.lit(0).alias("win"))
-    ).groupBy("item").agg(
-        F.count(F.lit(1)).alias("dn"), F.sum("win").alias("dw")
-    )
-    merged = (
-        updated.join(
-            state0.select("item", "n_matches", "wins"), "item"
-        )
-        .join(sides, "item", "left")
-        .select(
-            F.lit("rating").alias("kind"),
+    def merge(cur: DataFrame | None) -> DataFrame:
+        state = (
+            local_frame(spark, [], _ELO_SCHEMA) if cur is None else cur
+        ).select("item", "r_fp", "n_matches", "wins")
+        players = m.select(F.col("w").alias("item")).unionByName(
+            m.select(F.col("l").alias("item"))
+        ).distinct()
+        newbies = players.join(
+            state.select("item"), "item", "left_anti"
+        ).select(
             "item",
-            F.col("r_fp").cast("bigint"),
-            (
-                F.col("n_matches") + F.coalesce(F.col("dn"), F.lit(0))
-            ).cast("bigint").alias("n_matches"),
-            (
-                F.col("wins") + F.coalesce(F.col("dw"), F.lit(0))
-            ).cast("bigint").alias("wins"),
+            F.lit(int(initial) * int(scale)).cast("long").alias("r_fp"),
+            F.lit(0).cast("long").alias("n_matches"),
+            F.lit(0).cast("long").alias("wins"),
         )
+        state0 = state.unionByName(newbies)
+        # check_items=False: `newbies` just seeded every item this batch
+        # names, so the guard's anti-join is redundant here by construction
+        updated = elo_update_period(
+            state0.select("item", "r_fp"), m, k=int(k), scale=int(scale),
+            check_items=False,
+        )
+        sides = m.select(
+            F.col("w").alias("item"), F.lit(1).alias("win")
+        ).unionByName(
+            m.select(F.col("l").alias("item"), F.lit(0).alias("win"))
+        ).groupBy("item").agg(
+            F.count(F.lit(1)).alias("dn"), F.sum("win").alias("dw")
+        )
+        return (
+            updated.join(state0.select("item", "n_matches", "wins"), "item")
+            .join(sides, "item", "left")
+            .select(
+                F.lit("rating").alias("kind"),
+                "item",
+                "r_fp",
+                (
+                    F.col("n_matches") + F.coalesce(F.col("dn"), F.lit(0))
+                ).alias("n_matches"),
+                (F.col("wins") + F.coalesce(F.col("dw"), F.lit(0))).alias("wins"),
+            )
+        )
+
+    return merge_state(
+        spark, target_table, merge, _ELO_SCHEMA, _ELO, batch_id
     )
-    meta = local_frame(
-        spark,
-        [("meta", None, int(batch_id), 0, 0)],
-        _ELO_SCHEMA,
-    )
-    materialize_table(spark, target_table, merged.unionByName(meta))
-    return True
 
 
 def streaming_elo_ingest(
@@ -532,7 +426,6 @@ def streaming_elo_ingest(
     initial: int = 1000,
     scale: int = 10**6,
     checkpoint_dir: str | None = None,
-    trigger_once: bool = True,
 ) -> StreamingQuery:
     """Maintain a live Elo leaderboard over a match stream: each
     micro-batch applies as one rating period via ``elo_merge_batch``.
@@ -553,14 +446,7 @@ def streaming_elo_ingest(
             scale=scale,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode(
-        "update"
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_ingest(stream, apply_batch, checkpoint_dir)
 
 
 def elo_from_state(spark: SparkSession, target_table: str) -> DataFrame:

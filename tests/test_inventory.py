@@ -5,11 +5,20 @@ correctness window) and every ``ORACLE`` body is a fixed DuckDB statement.
 A refactor that moves query code between modules must leave both byte
 for byte as they are; these digests pin them.
 
-Lineage cuts have one owner, ``session.truncate_lineage``: a source scan
-keeps every ``checkpoint``/``localCheckpoint`` call inside it, and keeps
-per-operator fault-tolerance knobs (a ``reliable`` parameter) out.
-Driver-held rows have one owner too, ``session.local_frame``: no other
-``createDataFrame`` call ships rows through Python workers.
+Shared mechanisms have one owner each, and source scans keep their
+calls inside it:
+
+- lineage cuts: ``session.truncate_lineage`` holds every
+  ``checkpoint``/``localCheckpoint`` call;
+- driver-held rows: ``session.local_frame`` holds the one
+  ``createDataFrame`` call;
+- streaming state tables: ``streaming/state.py`` reads, replay-checks
+  and publishes them, and its ``start_ingest`` is the one stream writer
+  of the state sinks.
+
+Per-call knobs those owners replaced stay out: no function takes a
+``reliable`` (fault tolerance comes from the session's checkpoint dir)
+or a ``trigger_once`` (every state sink ingest drains what is available).
 """
 
 from __future__ import annotations
@@ -48,16 +57,18 @@ def _package_trees():
         yield path, text, ast.parse(text)
 
 
-def _calls_outside(owner_name, *needles):
+def _calls_outside(owner_module, owner_name, *needles):
     """(file, line) of every package line holding one of ``needles``
-    outside the body of ``session.<owner_name>``."""
+    outside the body of function ``owner_name`` in ``owner_module`` (a
+    path relative to the package)."""
     owner = None
     hits = []
     for path, text, tree in _package_trees():
+        rel = path.relative_to(PACKAGE).as_posix()
         for n, line in enumerate(text.splitlines(), 1):
             if any(needle in line for needle in needles):
-                hits.append((path.relative_to(PACKAGE).as_posix(), n))
-        if path.name == "session.py" and path.parent == PACKAGE:
+                hits.append((rel, n))
+        if rel == owner_module:
             owner = next(
                 node
                 for node in tree.body
@@ -68,18 +79,23 @@ def _calls_outside(owner_name, *needles):
     return [
         (f, n)
         for f, n in hits
-        if f != "session.py" or not owner.lineno <= n <= owner.end_lineno
+        if f != owner_module or not owner.lineno <= n <= owner.end_lineno
     ]
 
 
 def test_lineage_cuts_only_in_truncate_lineage():
     assert (
-        _calls_outside("truncate_lineage", "localCheckpoint(", ".checkpoint(")
+        _calls_outside(
+            "session.py", "truncate_lineage", "localCheckpoint(", ".checkpoint("
+        )
         == []
     )
 
 
-def test_no_reliable_parameter():
+BANNED_PARAMETERS = {"reliable", "trigger_once"}
+
+
+def test_no_banned_parameter():
     found = []
     for path, _, tree in _package_trees():
         for node in ast.walk(tree):
@@ -88,7 +104,7 @@ def test_no_reliable_parameter():
             ):
                 a = node.args
                 names = a.posonlyargs + a.args + a.kwonlyargs
-                if any(arg.arg == "reliable" for arg in names):
+                if any(arg.arg in BANNED_PARAMETERS for arg in names):
                     found.append(
                         f"{path.relative_to(PACKAGE)}:{node.lineno}"
                     )
@@ -96,4 +112,20 @@ def test_no_reliable_parameter():
 
 
 def test_driver_rows_only_through_local_frame():
-    assert _calls_outside("local_frame", "createDataFrame(") == []
+    assert (
+        _calls_outside("session.py", "local_frame", "createDataFrame(") == []
+    )
+
+
+STATE_SINK_MODULES = (
+    "streaming/sketches.py",
+    "streaming/evaluation.py",
+    "streaming/gap.py",
+)
+
+
+def test_state_sinks_only_through_streaming_state():
+    hits = _calls_outside(
+        "streaming/state.py", "start_ingest", "catalog.tableExists(", "writeStream"
+    )
+    assert [(f, n) for f, n in hits if f in STATE_SINK_MODULES] == []
