@@ -1260,9 +1260,10 @@ def elo_update_period(
     check_items: bool = True,
     n_col: str | None = None,
 ) -> DataFrame:
-    """ONE Elo rating-period update — the reusable core ``elo_ratings``
-    loops over and a streaming ``foreachBatch`` twin can apply per
-    micro-batch (each batch = one rating period, the arena cadence).
+    """ONE Elo rating-period update — the step ``elo_boards`` (and so
+    ``elo_ratings``) loops over, one board at a time, and a streaming
+    ``foreachBatch`` twin can apply per micro-batch (each batch = one
+    rating period, the arena cadence).
 
     ``ratings`` is the bounded model state ``(item, r_fp)`` (BIGINT,
     ``scale`` units); ``period_matches`` is ``(w, l)`` decided matches.
@@ -1289,9 +1290,9 @@ def elo_update_period(
     an item with no ratings row would silently vanish. With
     ``check_items=True`` (the default — the direct ``foreachBatch``
     contract) that raises via a left-anti guard; loop drivers that
-    pre-seed every item from the match log itself (``elo_ratings``,
-    ``elo_merge_batch``) pass ``check_items=False`` to skip the extra
-    per-period job their construction makes redundant.
+    pre-seed every item from the match log itself (``elo_boards``,
+    ``elo_merge_batch``) skip the guard: the extra per-period job is
+    redundant by their construction.
 
     ``n_col`` names an optional MULTIPLICITY column: a row then stands
     for n identical (w, l) matches of the period. Within a period
@@ -1316,8 +1317,31 @@ def elo_update_period(
                 " join would silently drop those matches; pre-seed every"
                 " item (as elo_ratings does) or clean the period feed"
             )
-    ri = ratings.select(F.col("item").alias("w"), F.col("r_fp").alias("r_w"))
-    rj = ratings.select(F.col("item").alias("l"), F.col("r_fp").alias("r_l"))
+    return _elo_period(ratings, period_matches, {"r_fp": k}, scale, n_col)
+
+
+def _elo_period(
+    ratings: DataFrame,
+    period_matches: DataFrame,
+    boards: dict[str, int],
+    scale: int,
+    n_col: str | None,
+) -> DataFrame:
+    """The Elo period step (formula on ``elo_update_period``) for one or
+    more boards at once: ``ratings`` is ``(item, *boards)``, one BIGINT
+    rating column per board, and ``boards`` maps each column to its k.
+    Each board's expected scores come from its own period-start ratings
+    and its per-item sums stay separate, so carrying N boards through
+    one join + one explode + one groupBy does the integer work of N
+    single-board steps while scanning the period relation once.
+    Returns ``(item, *boards)``."""
+    r_cols = list(boards)
+    ri = ratings.select(
+        F.col("item").alias("w"), *[F.col(rc).alias(f"{rc}_w") for rc in r_cols]
+    )
+    rj = ratings.select(
+        F.col("item").alias("l"), *[F.col(rc).alias(f"{rc}_l") for rc in r_cols]
+    )
     x = 400.0 * scale
     mult = (
         F.col(n_col).cast("long") if n_col is not None else F.lit(1).cast("long")
@@ -1329,10 +1353,14 @@ def elo_update_period(
             "w",
             "l",
             mult.alias("n_m"),
-            F.expr(
-                f"cast(floor({scale}.0d / (1.0d + power(10.0d,"
-                f" cast(r_l - r_w as double) / {x!r}d)) + 0.5d) as bigint)"
-            ).alias("e_fp"),
+            *[
+                F.expr(
+                    f"cast(floor({scale}.0d / (1.0d + power(10.0d,"
+                    f" cast({rc}_l - {rc}_w as double) / {x!r}d)) + 0.5d)"
+                    " as bigint)"
+                ).alias(f"e_{rc}")
+                for rc in r_cols
+            ],
         )
     )
     # ONE pass over the period relation: a union of two projections of
@@ -1341,38 +1369,45 @@ def elo_update_period(
     # the explode emits the winner (+c) and loser (−c) terms from a
     # single evaluation — the same multiset of integer contributions,
     # so the associative SUM is bit-identical
+    unit = F.lit(int(scale)).cast("long")
     per_item = (
         contrib.select(
             F.explode(
                 F.array(
                     F.struct(
                         F.col("w").alias("item"),
-                        (
-                            F.col("n_m")
-                            * (F.lit(int(scale)).cast("long") - F.col("e_fp"))
-                        ).alias("c"),
+                        *[
+                            (F.col("n_m") * (unit - F.col(f"e_{rc}"))).alias(f"c_{rc}")
+                            for rc in r_cols
+                        ],
                     ),
                     F.struct(
                         F.col("l").alias("item"),
-                        (
-                            F.col("n_m")
-                            * (F.col("e_fp") - F.lit(int(scale)).cast("long"))
-                        ).alias("c"),
+                        *[
+                            (F.col("n_m") * (F.col(f"e_{rc}") - unit)).alias(f"c_{rc}")
+                            for rc in r_cols
+                        ],
                     ),
                 )
             ).alias("x")
         )
-        .select(F.col("x.item").alias("item"), F.col("x.c").alias("c"))
+        .select(
+            F.col("x.item").alias("item"),
+            *[F.col(f"x.c_{rc}").alias(f"c_{rc}") for rc in r_cols],
+        )
         .groupBy("item")
-        .agg(F.sum("c").alias("C"))
+        .agg(*[F.sum(f"c_{rc}").alias(f"C_{rc}") for rc in r_cols])
     )
     return ratings.join(per_item, "item", "left").select(
         "item",
-        (
-            F.col("r_fp")
-            + F.lit(int(k)).cast("long")
-            * F.coalesce(F.col("C"), F.lit(0).cast("long"))
-        ).alias("r_fp"),
+        *[
+            (
+                F.col(rc)
+                + F.lit(int(k)).cast("long")
+                * F.coalesce(F.col(f"C_{rc}"), F.lit(0).cast("long"))
+            ).alias(rc)
+            for rc, k in boards.items()
+        ],
     )
 
 
@@ -1404,7 +1439,7 @@ def elo_ratings(
     every (w, l) pair within a period shares ONE expected score, the
     match log collapses in a single corpus aggregation pass to the
     bounded ``(w, l, period, n)`` pair-count table and the whole loop
-    runs on THAT (weighted ``elo_update_period``: broadcast ratings,
+    runs on THAT (the weighted period step: broadcast ratings,
     map-side partial sums, per-period lineage cuts) — bit-identical to
     per-match rows, so a 100 TB match log is scanned exactly once and
     each round is model-state-sized work.
@@ -1425,7 +1460,8 @@ def elo_ratings(
     shared-collapse path, so a release DAG can scan the raw log ONCE
     and feed Elo, Wilson and BT from the same table). Weighted rows are
     bit-identical to per-match rows by the shared-expected-score
-    argument below; n must be ≥ 1. ``pre_collapsed=True`` (requires
+    argument on ``elo_update_period``; n must be ≥ 1.
+    ``pre_collapsed=True`` (requires
     ``n_col``) additionally skips the internal re-aggregation — pure
     shuffle avoidance for callers feeding the collapsed pair-count
     relation itself, NOT a correctness contract: duplicate (w, l, p)
@@ -1433,125 +1469,15 @@ def elo_ratings(
     carries the same period-start expected score), so the flag can
     never change a rating.
 
-    Returns ``(item, n_matches, wins, rating_fp)`` — totals over all
-    periods, rating in ``scale`` fixed-point units."""
-    if int(k) < 1:
-        raise ValueError(f"k must be a positive integer: got {k!r}")
-    if int(initial) <= 0:
-        raise ValueError(f"initial rating must be positive: got {initial!r}")
-    scale = int(scale)
-
-    cols = [
-        F.col(winner_col).cast("string").alias("w"),
-        F.col(loser_col).cast("string").alias("l"),
-        F.col(period_col).cast("bigint").alias("p"),
-    ]
-    if n_col is not None:
-        cols.append(F.col(n_col).cast("long").alias("n"))
-    m = matches.select(*cols)
-    bad_pred = (
-        F.col("w").isNull() | F.col("l").isNull() | F.col("p").isNull()
-    )
-    if n_col is not None:
-        bad_pred = bad_pred | F.col("n").isNull() | (F.col("n") < 1)
-    # ONE corpus aggregation pass: within a period every (w, l) pair
-    # shares one expected score, so the whole loop runs bit-identically
-    # on the bounded (w, l, p, n) pair-count table — a 100 TB match log
-    # is scanned once, and every Elo round is model-state-sized work
-    # (the bradley_terry one-join pair-build discipline). The NULL /
-    # multiplicity validation RIDES THIS SAME PASS as a per-group bad
-    # count read off the persisted collapse (the old shape paid a whole
-    # extra corpus scan just to validate); self-matches and any
-    # bad-keyed groups are filtered AFTER the check on the bounded
-    # table, so the loop input is identical to the old
-    # filter-then-collapse construction.
-    if pre_collapsed and n_col is None:
-        raise ValueError("elo_ratings: pre_collapsed requires n_col")
-    n_agg = (
-        F.sum("n") if n_col is not None else F.count(F.lit(1))
-    )
-    # PERIOD-CLUSTERED cache layout: the loop below scans the cached
-    # pair table once per period with a p == const filter, and Spark's
-    # in-memory scan prunes whole column batches on their min/max
-    # stats — range-partitioning on (p, w) makes every batch
-    # single-period, so each round reads ~1/|periods| of the cache
-    # instead of all of it (measured 2x on the 7-period supplier log).
-    # Ranging on w inside p keeps one giant period from becoming one
-    # giant partition. Layout only — the per-item sums are associative
-    # integers, bit-identical under any partitioning.
-    collapsed = (
-        m.select(
-            "w", "l", "p", F.col("n").cast("long").alias("n_m"),
-            bad_pred.cast("bigint").alias("_bad"),
-        )
-        if pre_collapsed
-        else m.groupBy("w", "l", "p").agg(
-            n_agg.cast("long").alias("n_m"),
-            F.sum(bad_pred.cast("bigint")).alias("_bad"),
-        )
-    )
-    mp_all = collapsed.repartitionByRange("p", "w").persist()
-    # one job over the bounded cached table: validation total + the
-    # bounded period calendar together. The calendar counts NON-SELF
-    # rows per period so a period holding only w==l rows (filtered
-    # below) never schedules an empty loop round — output-identical
-    # (an empty round is the identity update) but each skipped round
-    # saves a join+explode+groupBy job and a lineage cut (round-12
-    # ADVICE).
-    stats = mp_all.groupBy("p").agg(
-        F.sum("_bad").alias("nb"),
-        F.sum((F.col("w") != F.col("l")).cast("bigint")).alias("nm"),
-    ).collect()
-    n_bad = sum(int(r.nb or 0) for r in stats)
-    if n_bad > 0:
-        mp_all.unpersist()
-        raise ValueError(
-            f"elo_ratings: {n_bad} matches have a NULL winner, loser or"
-            f" period (or a NULL/non-positive multiplicity) — clean the"
-            f" match log first"
-        )
-    mp = mp_all.filter(F.col("w") != F.col("l")).drop("_bad")
-    periods = sorted(
-        r.p for r in stats if r.p is not None and int(r.nm or 0) > 0
-    )
-
-    sides = mp.select(
-        F.col("w").alias("item"), F.col("n_m").alias("n"),
-        F.col("n_m").alias("win_n"),
-    ).unionByName(
-        mp.select(
-            F.col("l").alias("item"), F.col("n_m").alias("n"),
-            F.lit(0).cast("long").alias("win_n"),
-        )
-    )
-    tot = sides.groupBy("item").agg(
-        F.sum("n").alias("n_matches"), F.sum("win_n").alias("wins")
-    )
-    # materialize the bounded per-item totals ONCE while mp_all is still
-    # cached: the returned plan reads tot AFTER mp_all.unpersist(), so
-    # without this cut the consumer's action re-executed the whole
-    # upstream collapse just to re-derive the side totals (round-12
-    # verdict item 6).
-    tot = truncate_lineage(tot)
-    ratings = tot.select(
-        "item", F.lit(int(initial) * scale).cast("long").alias("r_fp")
-    )
-    for rnd, p in enumerate(periods):
-        # check_items=False: `ratings` seeds EVERY item in the match
-        # log by construction (tot derives from both match sides), so
-        # the per-period anti-join guard would be |periods| wasted jobs
-        ratings = elo_update_period(
-            ratings, mp.filter(F.col("p") == p), k=k, scale=scale,
-            check_items=False, n_col="n_m",
-        )
-        ratings = truncate_lineage(ratings, rnd, len(periods), checkpoint_every)
-    mp_all.unpersist()
-    return ratings.join(tot, "item").select(
-        "item",
-        F.col("n_matches").cast("bigint").alias("n_matches"),
-        F.col("wins").cast("bigint").alias("wins"),
-        F.col("r_fp").alias("rating_fp"),
-    )
+    This is ``elo_boards`` with one board. Returns ``(item, n_matches,
+    wins, rating_fp)`` — totals over all periods, rating in ``scale``
+    fixed-point units."""
+    return elo_boards(
+        matches, (k,), winner_col=winner_col, loser_col=loser_col,
+        period_col=period_col, initial=initial, scale=scale,
+        checkpoint_every=checkpoint_every, n_col=n_col,
+        pre_collapsed=pre_collapsed,
+    ).withColumnRenamed(f"rating_fp_{int(k)}", "rating_fp")
 
 
 def elo_boards(
@@ -1569,16 +1495,17 @@ def elo_boards(
     """``elo_ratings`` for SEVERAL k values in ONE period loop — the
     multi-board fit a release session runs when different consumers
     publish boards at different k (e.g. a k=16 exploratory board next
-    to the release DAG's k=32 snapshot). Each board's arithmetic is
-    EXACTLY ``elo_ratings(k=k_i)``'s: within a round the k_i expected
-    score is computed from the k_i ratings alone and the per-item
-    contribution sums are independent per k — carrying all boards
-    through one join + one explode + one groupBy per period does the
-    same integer operations per board as N separate loops while
-    scanning the period relation and cutting lineage ONCE instead of N
-    times (guide §2.4: share the pass; parity pinned bit-for-bit in
-    tests/test_runtime.py). Same validation, same collapse, same
-    overflow bounds per board.
+    to the release DAG's k=32 snapshot); ``elo_ratings`` is the
+    one-board call. Each board's arithmetic is EXACTLY a single-k
+    fit's: within a round the k_i expected score is computed from the
+    k_i ratings alone and the per-item contribution sums are
+    independent per k — carrying all boards through one join + one
+    explode + one groupBy per period does the same integer operations
+    per board as N separate loops while scanning the period relation
+    and cutting lineage ONCE instead of N times (guide §2.4: share the
+    pass; each board is pinned bit-for-bit against a pure-Python
+    period replay in tests/test_runtime.py). Same validation, same
+    collapse, same overflow bounds per board.
 
     Returns ``(item, n_matches, wins, rating_fp_<k> ...)`` — one
     rating column per requested k, ks de-duplicated and sorted."""
@@ -1607,9 +1534,25 @@ def elo_boards(
     if pre_collapsed and n_col is None:
         raise ValueError("elo_boards: pre_collapsed requires n_col")
     n_agg = F.sum("n") if n_col is not None else F.count(F.lit(1))
-    # validation rides the collapse pass (the elo_ratings discipline —
-    # no separate corpus scan just to count bad rows); self-matches and
-    # bad-keyed groups filter AFTER the check on the bounded table
+    # ONE corpus aggregation pass: within a period every (w, l) pair
+    # shares one expected score, so the whole loop runs bit-identically
+    # on the bounded (w, l, p, n) pair-count table — a 100 TB match log
+    # is scanned once, and every Elo round is model-state-sized work
+    # (the bradley_terry one-join pair-build discipline). The NULL /
+    # multiplicity validation RIDES THIS SAME PASS as a per-group bad
+    # count read off the persisted collapse (no separate corpus scan
+    # just to validate); self-matches and any bad-keyed groups are
+    # filtered AFTER the check on the bounded table.
+    #
+    # PERIOD-CLUSTERED cache layout: the loop below scans the cached
+    # pair table once per period with a p == const filter, and Spark's
+    # in-memory scan prunes whole column batches on their min/max
+    # stats — range-partitioning on (p, w) makes every batch
+    # single-period, so each round reads ~1/|periods| of the cache
+    # instead of all of it (measured 2x on the 7-period supplier log).
+    # Ranging on w inside p keeps one giant period from becoming one
+    # giant partition. Layout only — the per-item sums are associative
+    # integers, bit-identical under any partitioning.
     collapsed = (
         m.select(
             "w", "l", "p", F.col("n").cast("long").alias("n_m"),
@@ -1622,8 +1565,12 @@ def elo_boards(
         )
     )
     mp_all = collapsed.repartitionByRange("p", "w").persist()
-    # calendar counts NON-SELF rows per period (the elo_ratings
-    # discipline): all-self periods never schedule an empty loop round
+    # one job over the bounded cached table: validation total + the
+    # bounded period calendar together. The calendar counts NON-SELF
+    # rows per period so a period holding only w==l rows (filtered
+    # below) never schedules an empty loop round — output-identical
+    # (an empty round is the identity update) but each skipped round
+    # saves a join+explode+groupBy job and a lineage cut.
     stats = mp_all.groupBy("p").agg(
         F.sum("_bad").alias("nb"),
         F.sum((F.col("w") != F.col("l")).cast("bigint")).alias("nm"),
@@ -1653,96 +1600,22 @@ def elo_boards(
     tot = sides.groupBy("item").agg(
         F.sum("n").alias("n_matches"), F.sum("win_n").alias("wins")
     )
-    # bounded totals cut once while mp_all is cached — the returned
-    # plan reads tot after unpersist (see elo_ratings)
+    # materialize the bounded per-item totals ONCE while mp_all is still
+    # cached: the returned plan reads tot AFTER mp_all.unpersist(), so
+    # without this cut the consumer's action would re-execute the whole
+    # upstream collapse just to re-derive the side totals
     tot = truncate_lineage(tot)
-    r_cols = [f"r_{k}" for k in ks]
+    boards = {f"r_{k}": k for k in ks}
     ratings = tot.select(
         "item",
-        *[
-            F.lit(int(initial) * scale).cast("long").alias(rc)
-            for rc in r_cols
-        ],
+        *[F.lit(int(initial) * scale).cast("long").alias(rc) for rc in boards],
     )
-    x = 400.0 * scale
     for rnd, p in enumerate(periods):
-        pm = mp.filter(F.col("p") == p)
-        ri = ratings.select(
-            F.col("item").alias("w"),
-            *[F.col(rc).alias(f"{rc}_w") for rc in r_cols],
-        )
-        rj = ratings.select(
-            F.col("item").alias("l"),
-            *[F.col(rc).alias(f"{rc}_l") for rc in r_cols],
-        )
-        # one join + one expected score per board from a single pass
-        # over the period relation — elo_update_period's shape with the
-        # k axis carried as columns instead of separate loops
-        contrib = pm.join(F.broadcast(ri), "w").join(
-            F.broadcast(rj), "l"
-        ).select(
-            "w",
-            "l",
-            F.col("n_m").cast("long").alias("n_m"),
-            *[
-                F.expr(
-                    f"cast(floor({scale}.0d / (1.0d + power(10.0d,"
-                    f" cast({rc}_l - {rc}_w as double) / {x!r}d)) + 0.5d)"
-                    " as bigint)"
-                ).alias(f"e_{rc}")
-                for rc in r_cols
-            ],
-        )
-        per_item = (
-            contrib.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("w").alias("item"),
-                            *[
-                                (
-                                    F.col("n_m")
-                                    * (
-                                        F.lit(int(scale)).cast("long")
-                                        - F.col(f"e_{rc}")
-                                    )
-                                ).alias(f"c_{rc}")
-                                for rc in r_cols
-                            ],
-                        ),
-                        F.struct(
-                            F.col("l").alias("item"),
-                            *[
-                                (
-                                    F.col("n_m")
-                                    * (
-                                        F.col(f"e_{rc}")
-                                        - F.lit(int(scale)).cast("long")
-                                    )
-                                ).alias(f"c_{rc}")
-                                for rc in r_cols
-                            ],
-                        ),
-                    )
-                ).alias("x")
-            )
-            .select(
-                F.col("x.item").alias("item"),
-                *[F.col(f"x.c_{rc}").alias(f"c_{rc}") for rc in r_cols],
-            )
-            .groupBy("item")
-            .agg(*[F.sum(f"c_{rc}").alias(f"C_{rc}") for rc in r_cols])
-        )
-        ratings = ratings.join(per_item, "item", "left").select(
-            "item",
-            *[
-                (
-                    F.col(rc)
-                    + F.lit(int(k)).cast("long")
-                    * F.coalesce(F.col(f"C_{rc}"), F.lit(0).cast("long"))
-                ).alias(rc)
-                for k, rc in zip(ks, r_cols)
-            ],
+        # `ratings` seeds EVERY item in the match log by construction
+        # (tot derives from both match sides), so the step needs no
+        # unseeded-item guard
+        ratings = _elo_period(
+            ratings, mp.filter(F.col("p") == p), boards, scale, "n_m"
         )
         ratings = truncate_lineage(ratings, rnd, len(periods), checkpoint_every)
     mp_all.unpersist()
@@ -1750,10 +1623,7 @@ def elo_boards(
         "item",
         F.col("n_matches").cast("bigint").alias("n_matches"),
         F.col("wins").cast("bigint").alias("wins"),
-        *[
-            F.col(rc).alias(f"rating_fp_{k}")
-            for k, rc in zip(ks, r_cols)
-        ],
+        *[F.col(rc).alias(f"rating_fp_{k}") for rc, k in boards.items()],
     )
 
 
@@ -1794,8 +1664,6 @@ def wilson_winrate(
 
     Returns ``(item, n_matches, wins, winrate, ci_lo, ci_hi,
     rank_lb)``."""
-    from pyspark.sql import Window
-
     if not 0.0 < float(z):
         raise ValueError(f"z must be positive: got {z!r}")
     cols = [
@@ -1828,6 +1696,16 @@ def wilson_winrate(
     tot = sides.groupBy("item").agg(
         F.sum("cnt").alias("n"), F.sum("win").alias("wins")
     )
+    return _wilson_board(tot, z)
+
+
+def _wilson_board(tot: DataFrame, z: float) -> DataFrame:
+    """The Wilson interval and ``rank_lb`` over per-item ``(item, n,
+    wins)`` integer totals — the one scoring body of ``wilson_winrate``
+    and ``wilson_from_pairs``. Returns ``(item, n_matches, wins,
+    winrate, ci_lo, ci_hi, rank_lb)``."""
+    from pyspark.sql import Window
+
     zf = float(z)
     p = F.col("wins").cast("double") / F.col("n").cast("double")
     nn = F.col("n").cast("double")
@@ -1836,10 +1714,7 @@ def wilson_winrate(
     center = (p + z2 / (F.lit(2.0) * nn)) / denom
     half = (
         F.lit(zf)
-        * F.sqrt(
-            p * (F.lit(1.0) - p) / nn
-            + z2 / (F.lit(4.0) * nn * nn)
-        )
+        * F.sqrt(p * (F.lit(1.0) - p) / nn + z2 / (F.lit(4.0) * nn * nn))
         / denom
     )
     scored = tot.select(
@@ -2032,8 +1907,6 @@ def wilson_from_pairs(
     from-log (numeric keys would tie-break numerically where the
     from-log board ties lexicographically; real ci_lo ties appear at
     corpus scale — seen at sf0.1)."""
-    from pyspark.sql import Window
-
     if not 0.0 < float(z):
         raise ValueError(f"z must be positive: got {z!r}")
     # union-of-sides (wilson_winrate's shape): per item, Σ_j w2(i,j) +
@@ -2065,26 +1938,4 @@ def wilson_from_pairs(
         F.expr("sum(m2) div 2").cast("bigint").alias("n"),
         F.expr("sum(win2) div 2").cast("bigint").alias("wins"),
     )
-    zf = float(z)
-    p = F.col("wins").cast("double") / F.col("n").cast("double")
-    nn = F.col("n").cast("double")
-    z2 = F.lit(zf * zf)
-    denom = F.lit(1.0) + z2 / nn
-    center = (p + z2 / (F.lit(2.0) * nn)) / denom
-    half = (
-        F.lit(zf)
-        * F.sqrt(p * (F.lit(1.0) - p) / nn + z2 / (F.lit(4.0) * nn * nn))
-        / denom
-    )
-    scored = tot.select(
-        "item",
-        F.col("n").alias("n_matches"),
-        "wins",
-        F.round(p, 6).alias("winrate"),
-        F.round(center - half, 6).alias("ci_lo"),
-        F.round(center + half, 6).alias("ci_hi"),
-    )
-    w_rank = Window.orderBy(F.col("ci_lo").desc(), F.col("item").asc())
-    return scored.withColumn(
-        "rank_lb", F.row_number().over(w_rank).cast("bigint")
-    )
+    return _wilson_board(tot, z)

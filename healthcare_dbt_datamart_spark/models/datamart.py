@@ -50,6 +50,65 @@ from .gap_pipeline import (
 )
 
 
+def int_claim_rollups(lines: DataFrame) -> DataFrame:
+    """Declared intent of models/intermediate/claims/int_claim_rollups.sql
+    (0-byte): line facts rolled to the CLAIM HEADER. ``lines`` is the
+    deduped claim-line grain (``claim_id, member_id, service_date,
+    proc_code, is_screening``, fct_claims' at-least-once discipline);
+    the testdata claim_id encodes header*10+line
+    (testdata_queries._gap_inputs), so header = claim_id DIV 10. One
+    partial-agg groupBy."""
+    return (
+        lines.select(
+            F.floor(F.col("claim_id") / 10).cast("long").alias("claim_hdr_id"),
+            "member_id",
+            "service_date",
+            "proc_code",
+            "is_screening",
+        )
+        .groupBy("claim_hdr_id", "member_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.count_distinct("proc_code").alias("n_codes"),
+            F.min("service_date").alias("first_service_date"),
+            F.max("service_date").alias("last_service_date"),
+            F.sum("is_screening").alias("n_screening_lines"),
+        )
+    )
+
+
+def int_claim_status(rollups: DataFrame) -> DataFrame:
+    """Declared intent of .../int_claim_status.sql (0-byte): header-level
+    classification off ``int_claim_rollups`` — pure projection, no extra
+    scan."""
+    return rollups.select(
+        "claim_hdr_id",
+        "member_id",
+        F.when(F.col("n_screening_lines") > 0, F.lit("screening"))
+        .when(F.col("n_lines") > 1, F.lit("multi-line"))
+        .otherwise(F.lit("routine"))
+        .alias("claim_status"),
+        (F.col("n_codes") > 1).cast("int").alias("is_multi_code"),
+    )
+
+
+def int_member_enrollment(lines: DataFrame) -> DataFrame:
+    """Declared intent of
+    models/intermediate/members/int_member_enrollment.sql (0-byte): the
+    OBSERVED enrollment span — first/last service activity and distinct
+    active months per member over the deduped claim-line grain (no
+    eligibility feed ships with the reference either; activity is the
+    proxy)."""
+    return lines.groupBy("member_id").agg(
+        F.min("service_date").alias("observed_from"),
+        F.max("service_date").alias("observed_to"),
+        F.count_distinct(F.floor(F.col("claim_id") / 10)).alias("n_claims"),
+        F.count_distinct(F.date_trunc("month", F.col("service_date"))).alias(
+            "active_months"
+        ),
+    )
+
+
 def build_datamart(
     spark: SparkSession,
     raw_members: DataFrame,
@@ -222,62 +281,17 @@ def build_datamart(
             run_ts=run_ts,
         )
 
-    @r.model()
-    def int_claim_rollups(ctx):
-        # declared intent of models/intermediate/claims/int_claim_rollups.sql
-        # (0-byte): line facts rolled to the CLAIM HEADER — the testdata
-        # claim_id encodes header*10+line (testdata_queries._gap_inputs),
-        # so header = claim_id DIV 10. One partial-agg groupBy over the
-        # deduped line grain (fct_claims' at-least-once discipline).
-        lines = ctx.ref("fct_claims")
-        return (
-            lines.select(
-                F.floor(F.col("claim_id") / 10).cast("long").alias("claim_hdr_id"),
-                "member_id",
-                "service_date",
-                "proc_code",
-                "is_screening",
-            )
-            .groupBy("claim_hdr_id", "member_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                F.count_distinct("proc_code").alias("n_codes"),
-                F.min("service_date").alias("first_service_date"),
-                F.max("service_date").alias("last_service_date"),
-                F.sum("is_screening").alias("n_screening_lines"),
-            )
-        )
+    @r.model(name="int_claim_rollups")
+    def int_claim_rollups_model(ctx):
+        return int_claim_rollups(ctx.ref("fct_claims"))
 
-    @r.model()
-    def int_claim_status(ctx):
-        # declared intent of .../int_claim_status.sql (0-byte): header-level
-        # classification off the rollups — pure projection, no extra scan
-        ru = ctx.ref("int_claim_rollups")
-        return ru.select(
-            "claim_hdr_id",
-            "member_id",
-            F.when(F.col("n_screening_lines") > 0, F.lit("screening"))
-            .when(F.col("n_lines") > 1, F.lit("multi-line"))
-            .otherwise(F.lit("routine"))
-            .alias("claim_status"),
-            (F.col("n_codes") > 1).cast("int").alias("is_multi_code"),
-        )
+    @r.model(name="int_claim_status")
+    def int_claim_status_model(ctx):
+        return int_claim_status(ctx.ref("int_claim_rollups"))
 
-    @r.model()
-    def int_member_enrollment(ctx):
-        # declared intent of models/intermediate/members/int_member_enrollment.sql
-        # (0-byte): the OBSERVED enrollment span — first/last service
-        # activity and distinct active months per member (no eligibility
-        # feed ships with the reference either; activity is the proxy)
-        lines = ctx.ref("fct_claims")
-        return lines.groupBy("member_id").agg(
-            F.min("service_date").alias("observed_from"),
-            F.max("service_date").alias("observed_to"),
-            F.count_distinct(F.floor(F.col("claim_id") / 10)).alias("n_claims"),
-            F.count_distinct(F.date_trunc("month", F.col("service_date"))).alias(
-                "active_months"
-            ),
-        )
+    @r.model(name="int_member_enrollment")
+    def int_member_enrollment_model(ctx):
+        return int_member_enrollment(ctx.ref("fct_claims"))
 
     @r.model(materialized="table")
     def member_cost_summary(ctx):

@@ -7,10 +7,13 @@ Re-expresses the reference's flagship model chain —
 ``models/marts/gaps/fct_gap_exceptions.sql`` (incremental exception fact)
 — as parameterized DataFrame functions.
 
+The status chain has one body, ``gap_status_multi``, which takes a list
+of (params, code set) measures; ``gap_status`` is its one-measure call.
+
 Scale notes (100 TB discipline):
-- the params relation is a broadcast 1-row cross join (reference's
-  constant-broadcast idiom, ``int_gap_col_status.sql:57,142``) — Catalyst
-  turns it into a BroadcastNestedLoopJoin with negligible cost;
+- the params relation is a broadcast cross join, one row per measure
+  (reference's constant-broadcast idiom, ``int_gap_col_status.sql:57,142``)
+  — Catalyst turns it into a BroadcastNestedLoopJoin with negligible cost;
 - the code set is always broadcast (tiny dimension; the reference's
   correlated EXISTS, ``int_gap_col_status.sql:87-93``, becomes a broadcast
   hash join);
@@ -69,10 +72,10 @@ class GapParams:
     lookback_years: dict[str, int] = field(default_factory=lambda: dict(DEFAULT_LOOKBACK_YEARS))
 
 
-def _rank_expr(params: GapParams, col: str = "closure_reason") -> F.Column:
+def _rank_expr(params: GapParams) -> F.Column:
     expr = F.lit(DEFAULT_RANK_FALLBACK)
     for reason, rank in reversed(list(params.evidence_rank.items())):
-        expr = F.when(F.col(col) == reason, F.lit(rank)).otherwise(expr)
+        expr = F.when(F.col("evidence_type") == reason, F.lit(rank)).otherwise(expr)
     return expr
 
 
@@ -86,7 +89,8 @@ def gap_status(
     params: GapParams,
     exclusions: DataFrame | None = None,
 ) -> DataFrame:
-    """Tri-state COL gap status, one row per member.
+    """Tri-state COL gap status, one row per member: ``gap_status_multi``
+    with one measure.
 
     Inputs:
       members: (member_id long, birth_date date)
@@ -114,118 +118,7 @@ def gap_status(
     what the NOT_QUALIFIED_HAS_VALUE violation family exists to catch
     downstream.
     """
-    spark = members.sparkSession
-    p_start = F.lit(params.period_start).cast("date")
-    p_end = F.lit(params.period_end).cast("date")
-
-    # params CTE cross-joined onto the member spine (J1 fidelity:
-    # constant broadcast via 1-row cross join, int_gap_col_status.sql:57)
-    params_df = spark.range(1).select(
-        p_start.alias("period_start"),
-        p_end.alias("period_end"),
-        F.lit(params.min_age).alias("min_age"),
-        F.lit(params.max_age).alias("max_age"),
-    )
-    spine = members.crossJoin(broadcast(params_df))
-
-    # age + eligibility band (int_gap_col_status.sql:33-58): Snowflake
-    # datediff('year') boundary count with the birthday-correction term.
-    spine = spine.withColumn("age", age_at("birth_date", "period_end")).withColumn(
-        "is_age_eligible",
-        F.coalesce(
-            F.col("age").between(F.col("min_age"), F.col("max_age")), F.lit(False)
-        ),
-    )
-
-    # scenario classification: the correlated EXISTS semi-join against the
-    # code set (int_gap_col_status.sql:87-93) becomes a broadcast equi-join
-    # that also yields the evidence type; non-matching claims drop, which is
-    # the EXISTS-filtered branch.
-    scored = claims.withColumn("proc_code_u", F.upper("proc_code")).join(
-        broadcast(codes.select(F.upper("code").alias("proc_code_u"), "evidence_type")),
-        "proc_code_u",
-    )
-
-    # qualifying-window predicate per evidence type
-    # (int_gap_col_status.sql:106-144): measurement-year for FIT_FOBT,
-    # N-year lookback from period_end otherwise; then filter to qualified.
-    window_ok = F.when(
-        F.col("evidence_type") == "FIT_FOBT",
-        F.col("service_date").between(p_start, p_end),
-    )
-    for ev, years in params.lookback_years.items():
-        window_ok = window_ok.when(
-            F.col("evidence_type") == ev,
-            F.col("service_date").between(dateadd("year", -years, p_end), p_end),
-        )
-    qualifying = (
-        scored.withColumn(
-            "closure_reason", F.when(window_ok, F.col("evidence_type"))
-        )
-        .filter(F.col("closure_reason").isNotNull())
-    )
-
-    # best evidence: durability rank then recency then claim_id for full
-    # determinism (int_gap_col_status.sql:159-183 rank-then-filter top-1).
-    qualifying = qualifying.withColumn("reason_rank", _rank_expr(params))
-    w = Window.partitionBy("member_id").orderBy(
-        F.col("reason_rank").asc(),
-        F.col("service_date").desc(),
-        F.col("claim_id").desc(),
-    )
-    best = (
-        qualifying.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "member_id",
-            F.col("service_date").alias("closure_date"),
-            "closure_reason",
-            F.col("claim_id").alias("evidence_id"),
-        )
-    )
-
-    # final status: eligibility spine ⟕ exclusions ⟕ best evidence,
-    # tri-state flag CASE (int_gap_col_status.sql:185-218). NULL is
-    # semantic ("not qualified"); never fillna this column. Closure
-    # columns pass through unmasked (reference final select :205-207).
-    joined = spine.join(best, "member_id", "left")
-    if exclusions is None:
-        # reference stub (int_gap_col_status.sql:60-66): all-zero flags,
-        # literal columns — no second members scan
-        for flag in EXCLUSION_FLAGS:
-            joined = joined.withColumn(flag, F.lit(0))
-    else:
-        joined = joined.join(
-            exclusions.select("member_id", *EXCLUSION_FLAGS), "member_id", "left"
-        )
-        for flag in EXCLUSION_FLAGS:
-            joined = joined.withColumn(
-                flag, F.coalesce(F.col(flag).cast("int"), F.lit(0))
-            )
-    has_evidence = F.col("evidence_id").isNotNull()
-    eligible = F.col("is_age_eligible")
-    excluded = F.lit(False)
-    for flag in EXCLUSION_FLAGS:
-        excluded = excluded | (F.col(flag) == 1)
-    return joined.select(
-        "member_id",
-        F.lit(params.measure_id).alias("measure_id"),
-        F.year("period_end").alias("measurement_year"),
-        "age",
-        "is_age_eligible",
-        *EXCLUSION_FLAGS,
-        F.when(~eligible, F.lit(None).cast("int"))
-        .when(excluded, F.lit(None).cast("int"))
-        .when(has_evidence, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("gap_flag"),
-        "closure_date",
-        "closure_reason",
-        "evidence_id",
-        "period_start",
-        "period_end",
-        F.lit(params.rule_version).alias("rule_version"),
-    )
+    return gap_status_multi(members, claims, [(params, codes)], exclusions)
 
 
 def gap_status_multi(
@@ -237,7 +130,7 @@ def gap_status_multi(
     """Multi-measure gap status in ONE pass over members and claims.
 
     The per-measure model tree (``int_gap_<measure>_status``) naively runs
-    ``gap_status`` once per measure — M full claims/members scans. Here
+    the 9-CTE chain once per measure — M full claims/members scans. Here
     the measure configuration is data: each measure's code set explodes
     into (measure_id, proc_code, evidence_type, reason_rank, win_start,
     win_end) rows, the union of all measures' configs broadcasts onto a
@@ -248,16 +141,23 @@ def gap_status_multi(
     shuffle + one spine join, regardless of M — at 100 TB adding a
     measure adds broadcast rows, not scans.
 
-    Output: identical schema to ``gap_status``, one row per
-    member × measure; exclusions (if given) apply to every measure.
+    ``measures`` is a non-empty list of (params, codes) with distinct
+    ``measure_id``s; a repeated id would fan every member out once per
+    copy. Output: ``gap_status``'s schema, one row per member × measure;
+    exclusions (if given) apply to every measure.
     """
+    if not measures:
+        raise ValueError("gap_status_multi needs at least one measure")
+    ids = [params.measure_id for params, _ in measures]
+    if len(set(ids)) != len(ids):
+        raise ValueError(f"gap_status_multi: repeated measure_id in {ids!r}")
     spark = members.sparkSession
     config_parts = []
     params_parts = []
     for params, codes in measures:
         p_start = F.lit(params.period_start).cast("date")
         p_end = F.lit(params.period_end).cast("date")
-        rank = _rank_expr(params, col="evidence_type")
+        rank = _rank_expr(params)
         # qualifying window per evidence type, resolved to literal dates at
         # config-build time (int_gap_col_status.sql:106-144): FIT_FOBT the
         # measurement year, otherwise the N-year lookback from period_end;
@@ -267,6 +167,9 @@ def gap_status_multi(
             win_start = win_start.when(
                 F.col("evidence_type") == ev, dateadd("year", -years, p_end)
             )
+        # the code set is always broadcast: the reference's correlated
+        # EXISTS (int_gap_col_status.sql:87-93) becomes a broadcast
+        # equi-join that also yields the evidence type
         config_parts.append(
             codes.select(
                 F.upper("code").alias("proc_code_u"),
@@ -277,6 +180,8 @@ def gap_status_multi(
                 p_end.alias("win_end"),
             )
         )
+        # the params CTE as a broadcast 1-row-per-measure relation
+        # (J1 fidelity: constant broadcast, int_gap_col_status.sql:57)
         params_parts.append(
             spark.range(1).select(
                 F.lit(params.measure_id).alias("measure_id"),
@@ -294,6 +199,8 @@ def gap_status_multi(
     for part in params_parts[1:]:
         params_df = params_df.unionByName(part)
 
+    # age + eligibility band (int_gap_col_status.sql:33-58): Snowflake
+    # datediff('year') boundary count with the birthday-correction term
     spine = (
         members.crossJoin(broadcast(params_df))
         .withColumn("age", age_at("birth_date", "period_end"))
@@ -311,7 +218,13 @@ def gap_status_multi(
         .filter(F.col("service_date").between(F.col("win_start"), F.col("win_end")))
         .withColumnRenamed("evidence_type", "closure_reason")
     )
-    w = Window.partitionBy("member_id", "measure_id").orderBy(
+    # best evidence: durability rank then recency then claim_id for full
+    # determinism (int_gap_col_status.sql:159-183 rank-then-filter top-1).
+    # With one measure the window keys on member_id alone: Catalyst folds
+    # the constant measure_id out of the spine join's keys but not out of
+    # a window partitioning, so keying it here too would add a shuffle.
+    keys = ["member_id"] if len(measures) == 1 else ["member_id", "measure_id"]
+    w = Window.partitionBy(*keys).orderBy(
         F.col("reason_rank").asc(),
         F.col("service_date").desc(),
         F.col("claim_id").desc(),
@@ -328,8 +241,14 @@ def gap_status_multi(
         )
     )
 
+    # final status: eligibility spine ⟕ exclusions ⟕ best evidence,
+    # tri-state flag CASE (int_gap_col_status.sql:185-218). NULL is
+    # semantic ("not qualified"); never fillna this column. Closure
+    # columns pass through unmasked (reference final select :205-207).
     joined = spine.join(best, ["member_id", "measure_id"], "left")
     if exclusions is None:
+        # reference stub (int_gap_col_status.sql:60-66): all-zero flags,
+        # literal columns — no second members scan
         for flag in EXCLUSION_FLAGS:
             joined = joined.withColumn(flag, F.lit(0))
     else:

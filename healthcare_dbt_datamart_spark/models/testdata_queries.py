@@ -39,6 +39,7 @@ from ..functions import (
     surrogate_key,
 )
 from ..session import ensure_utc, local_frame, session_cached
+from .datamart import int_claim_rollups, int_claim_status, int_member_enrollment
 from .gap_pipeline import GapParams, fct_gap_exceptions, gap_status, gap_tri_state_violations
 
 # ---------------------------------------------------------------------------
@@ -1703,58 +1704,21 @@ def q_claim_rollups(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference intermediate/claims/int_claim_rollups.sql declared intent):
     line facts rolled to header grain (claim_id DIV 10), one partial-agg
     groupBy over the deduped line grain."""
-    return (
-        _claim_grain(spark, sf_dir)
-        .select(
-            F.floor(F.col("claim_id") / 10).cast("long").alias("claim_hdr_id"),
-            "member_id",
-            "service_date",
-            "proc_code",
-            "is_screening",
-        )
-        .groupBy("claim_hdr_id", "member_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.count_distinct("proc_code").alias("n_codes"),
-            F.min("service_date").alias("first_service_date"),
-            F.max("service_date").alias("last_service_date"),
-            F.sum("is_screening").alias("n_screening_lines"),
-        )
-    )
+    return int_claim_rollups(_claim_grain(spark, sf_dir))
 
 
 def q_claim_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header classification (datamart.py::int_claim_status —
     int_claim_status.sql declared intent): screening / multi-line /
     routine off the rollups, pure projection."""
-    ru = q_claim_rollups(spark, sf_dir)
-    return ru.select(
-        "claim_hdr_id",
-        "member_id",
-        F.when(F.col("n_screening_lines") > 0, F.lit("screening"))
-        .when(F.col("n_lines") > 1, F.lit("multi-line"))
-        .otherwise(F.lit("routine"))
-        .alias("claim_status"),
-        (F.col("n_codes") > 1).cast("int").alias("is_multi_code"),
-    )
+    return int_claim_status(q_claim_rollups(spark, sf_dir))
 
 
 def q_member_enrollment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observed-enrollment spans (datamart.py::int_member_enrollment —
     int_member_enrollment.sql declared intent): first/last activity +
     distinct active months per member."""
-    return (
-        _claim_grain(spark, sf_dir)
-        .groupBy("member_id")
-        .agg(
-            F.min("service_date").alias("observed_from"),
-            F.max("service_date").alias("observed_to"),
-            F.count_distinct(F.floor(F.col("claim_id") / 10)).alias("n_claims"),
-            F.count_distinct(
-                F.date_trunc("month", F.col("service_date"))
-            ).alias("active_months"),
-        )
-    )
+    return int_member_enrollment(_claim_grain(spark, sf_dir))
 
 
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4165,12 +4129,11 @@ def _supplier_bt3(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _supplier_elo_boards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH published Elo boards (k=16 exploratory, k=ELO_K=32 release
     snapshot) from ONE period loop over the shared pair-period
-    collapse (llmops/preferences.py::elo_boards — per-board arithmetic
-    identical to elo_ratings, parity pinned in tests/test_runtime.py):
-    the session previously ran two full 7-period fits over the same
-    pair table; one loop halves the Elo phase of a release session.
-    elo_ratings casts keys to string internally, so the boards are
-    bit-identical to the per-k fits either way."""
+    collapse (llmops/preferences.py::elo_boards, of which elo_ratings
+    is the one-board call; each board is pinned against a pure-Python
+    period replay in tests/test_runtime.py): one loop instead of two
+    full 7-period fits over the same pair table halves the Elo phase
+    of a release session."""
     from ..llmops.preferences import elo_boards
     from .leaderboard_release import ELO_K
 
@@ -4186,7 +4149,8 @@ def _supplier_elo_boards(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _supplier_elo16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Period-batched Elo (k=16) over the shared pair-period collapse —
     the ``elo_ratings`` board, shared with ``kendall_tau``. Served from
-    the dual-k board fit."""
+    the dual-k board fit (``elo_ratings(k=16)`` is the same fit with
+    one board)."""
     return _supplier_elo_boards(spark, sf_dir).select(
         "item", "n_matches", "wins",
         F.col("rating_fp_16").alias("rating_fp"),
@@ -4198,8 +4162,8 @@ def _supplier_elo32(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared pair-period collapse — the ``elo_snapshot`` board of
     models/leaderboard_release.py, published once per session and
     served back to the gate through its warm-start hook. Served from
-    the dual-k board fit (bit-identical to the per-k elo_ratings fit —
-    the elo_boards parity contract)."""
+    the dual-k board fit (``elo_ratings(k=ELO_K)`` is the same fit with
+    one board)."""
     from .leaderboard_release import ELO_K
 
     return _supplier_elo_boards(spark, sf_dir).select(

@@ -10,7 +10,8 @@ Re-expresses the reference's materialization layer
 - incremental -> strategy-dispatched DML (see ``incremental_strategies.py``)
 - seed   -> CSV -> typed table (``seeds/helpers.sql:7-27,98-130``; Spark's
             bulk reader replaces the 10k-row INSERT batching)
-- materialized_view -> recompute-on-run table (Spark has no MV; S10)
+- materialized_view -> recompute-on-run table (Spark has no MV; S10):
+            the registry writes it through ``materialize_table``
 
 Tables are plain parquet through the session catalog. The swap gives the
 same reader-consistency the reference gets from Snowflake's atomic
@@ -349,11 +350,6 @@ def materialize_seed(
     )
     for col, dtype in (column_types or {}).items():
         df = df.withColumn(col, df[col].cast(dtype))
-    materialize_table(spark, name, df)
-
-
-def materialize_materialized_view(spark: SparkSession, name: str, df: DataFrame) -> None:
-    """S10: Spark has no native MV — recompute-on-run table."""
     materialize_table(spark, name, df)
 
 

@@ -339,10 +339,11 @@ def elo_merge_batch(
     ingest beside ``pref_counts_merge_batch``: BT re-derives from
     summed counts (order-free), Elo is order-DEPENDENT, so its
     streaming form is exactly the batch operator's period semantics
-    with micro-batch = period (``llmops/preferences.py::
-    elo_update_period`` is the shared core — streamed state after N
+    with micro-batch = period. ``llmops/preferences.py::
+    elo_update_period`` runs the same period step that ``elo_boards``
+    (and so ``elo_ratings``) loops over, so streamed state after N
     batches is BIT-IDENTICAL to ``elo_ratings`` over the same log with
-    ``period = batch index``).
+    ``period = batch index``.
 
     State: one ``kind='rating'`` row per item ``(item, r_fp,
     n_matches, wins)`` + the ``kind='meta'`` ledger row (``r_fp`` =

@@ -182,6 +182,54 @@ def test_gap_status_multi_equals_per_measure_union(spark, demo):
     assert s_rows == m_rows
 
 
+def test_gap_status_multi_rejects_empty_and_repeated_measures(spark, demo):
+    """An empty measure list has no config to broadcast, and a repeated
+    measure_id would fan every member out once per copy."""
+    from healthcare_dbt_datamart_spark.models.gap_pipeline import gap_status_multi
+
+    members, claims, codes = demo
+    with pytest.raises(ValueError, match="at least one measure"):
+        gap_status_multi(members, claims, [])
+    with pytest.raises(ValueError, match="repeated measure_id"):
+        gap_status_multi(members, claims, [(PARAMS, codes), (PARAMS, codes)])
+
+
+def _hash_exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("Exchange hashpartitioning")
+
+
+def test_gap_status_shuffle_counts(spark, demo):
+    """One measure: one window shuffle plus the spine side of the status
+    join (the window's member_id partitioning serves the join). Keying
+    the one-measure window on (member_id, measure_id) adds a third,
+    because the constant measure_id folds out of the join keys but not
+    out of a window partitioning once the code set is a local relation.
+    Three measures key both on (member_id, measure_id): still two."""
+    from healthcare_dbt_datamart_spark.models.gap_pipeline import gap_status_multi
+    from healthcare_dbt_datamart_spark.session import local_frame
+
+    members, claims, _ = demo
+    codes = local_frame(
+        spark, [("82274", "FIT_FOBT")], "code string, evidence_type string"
+    )
+    measures = [
+        (GapParams(period_start="2025-01-01", period_end="2025-12-31",
+                   measure_id=m, rule_version=f"{m}_V1"), codes)
+        for m in ("COL", "BCS", "CCS")
+    ]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    # no size-based broadcast: only the pipeline's own hints remain, so
+    # the count does not depend on how small the fixtures are
+    spark.conf.set(key, "-1")
+    try:
+        assert _hash_exchanges(gap_status(members, claims, codes, PARAMS)) == 2
+        assert _hash_exchanges(gap_status_multi(members, claims, measures)) == 2
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_exception_fact_dedups_incrementally(spark, demo):
     members, claims, codes = demo
     status = gap_status(members, claims, codes, PARAMS)

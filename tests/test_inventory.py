@@ -16,6 +16,11 @@ calls inside it:
   and publishes them, and its ``start_ingest`` is the one stream writer
   of the state sinks.
 
+Algorithms have one body each: the Elo expected score lives only in
+``preferences._elo_period``, the step every Elo fit and the streaming
+sink run, and ``gap_pipeline.py`` ranks best evidence in one window
+(``gap_status`` is ``gap_status_multi`` with one measure).
+
 Per-call knobs those owners replaced stay out: no function takes a
 ``reliable`` (fault tolerance comes from the session's checkpoint dir)
 or a ``trigger_once`` (every state sink ingest drains what is available).
@@ -129,3 +134,22 @@ def test_state_sinks_only_through_streaming_state():
         "streaming/state.py", "start_ingest", "catalog.tableExists(", "writeStream"
     )
     assert [(f, n) for f, n in hits if f in STATE_SINK_MODULES] == []
+
+
+def test_elo_expected_score_in_one_function():
+    assert (
+        _calls_outside("llmops/preferences.py", "_elo_period", "power(10.0d")
+        == []
+    )
+
+
+def test_gap_pipeline_has_one_best_evidence_window():
+    tree = ast.parse((PACKAGE / "models" / "gap_pipeline.py").read_text())
+    windows = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "row_number"
+    ]
+    assert len(windows) == 1

@@ -517,6 +517,29 @@ def test_registry_dag_and_materializations(spark):
     assert spark.table("stg").count() == 2
 
 
+def test_registry_materialized_view_recomputes_on_run(spark):
+    """S10: a ``materialized_view`` model is a catalog table the
+    registry rewrites from its current inputs on every run."""
+    r = ModelRegistry(spark)
+    r.add_source("mv_raw", _df(spark, [(1, 10), (2, 20)], "id long, v long"))
+
+    @r.model(materialized="materialized_view")
+    def mv_totals(ctx):
+        return ctx.source("mv_raw").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("v").alias("total")
+        )
+
+    r.run()
+    assert spark.catalog.tableExists("mv_totals")
+    assert [tuple(x) for x in spark.table("mv_totals").collect()] == [(2, 30)]
+
+    r.add_source(
+        "mv_raw", _df(spark, [(1, 10), (2, 20), (3, 5)], "id long, v long")
+    )
+    r.run()
+    assert [tuple(x) for x in spark.table("mv_totals").collect()] == [(3, 35)]
+
+
 def test_registry_incremental_model_uses_this(spark):
     r = ModelRegistry(spark)
     r.add_source("events_src", _df(spark, [(1, "a"), (2, "b")], "id long, v string"))
@@ -3076,11 +3099,14 @@ def test_compare_relations_bucket_partition_invariants(spark, rows_a, rows_b):
     assert g.in_both == g.identical + g.changed
 
 
-def test_elo_boards_matches_per_k_elo_ratings_bitwise(spark):
-    """The dual-k board fit is bit-for-bit each single-k fit: one
-    period loop carrying both k columns does the identical integer
-    arithmetic per board (the elo_boards parity contract the
-    leaderboard session caches rely on)."""
+def test_elo_boards_match_python_period_replay_bitwise(spark):
+    """Each board of the multi-k fit is bit-for-bit a pure-Python replay
+    of the quantized period loop at its own k: one period loop carrying
+    both k columns does each board's integer arithmetic independently
+    (the parity the leaderboard session caches rely on). ``elo_ratings``
+    is the one-board call and matches the same replay."""
+    import math
+
     from healthcare_dbt_datamart_spark.llmops.preferences import (
         elo_boards,
         elo_ratings,
@@ -3094,23 +3120,35 @@ def test_elo_boards_matches_per_k_elo_ratings_bitwise(spark):
     m = spark.createDataFrame(
         rows, "winner_id string, loser_id string, period long, n_m long"
     )
-    boards = {
-        r["item"]: r
-        for r in elo_boards(
-            m, ks=(16, 32), n_col="n_m", pre_collapsed=True
-        ).collect()
-    }
+
+    def replay(k, scale=10**6, initial=1000):
+        r = {i: initial * scale for i in "abcd"}
+        for per in sorted({p for _, _, p, _ in rows}):
+            c = dict.fromkeys(r, 0)
+            for w, l, p, n in rows:
+                if p == per:
+                    e = math.floor(
+                        scale
+                        / (1.0 + 10.0 ** ((r[l] - r[w]) / (400.0 * scale)))
+                        + 0.5
+                    )
+                    c[w] += n * (scale - e)
+                    c[l] -= n * (scale - e)
+            r = {i: v + k * c[i] for i, v in r.items()}
+        return r
+
+    n_matches = {i: sum(n for w, l, _, n in rows if i in (w, l)) for i in "abcd"}
+    wins = {i: sum(n for w, _, _, n in rows if w == i) for i in "abcd"}
+    boards = elo_boards(m, ks=(16, 32), n_col="n_m", pre_collapsed=True)
+    got = {r["item"]: r for r in boards.collect()}
+    assert set(got) == set(n_matches)
     for k in (16, 32):
-        single = elo_ratings(
-            m, k=k, n_col="n_m", pre_collapsed=True
-        ).collect()
-        assert len(single) == len(boards)
-        for r in single:
-            b = boards[r["item"]]
-            assert (r["n_matches"], r["wins"]) == (
-                b["n_matches"], b["wins"],
-            )
-            assert r["rating_fp"] == b[f"rating_fp_{k}"]
+        want = replay(k)
+        assert {i: r[f"rating_fp_{k}"] for i, r in got.items()} == want
+        single = elo_ratings(m, k=k, n_col="n_m", pre_collapsed=True)
+        assert {r["item"]: r["rating_fp"] for r in single.collect()} == want
+    assert {i: r["n_matches"] for i, r in got.items()} == n_matches
+    assert {i: r["wins"] for i, r in got.items()} == wins
 
 
 def test_bradley_terry_pre_collapsed_parity_bitwise(spark):
