@@ -15,13 +15,21 @@ fold — sequential, deterministic, whole-stage codegen; no Python UDF):
 The fold accumulates in ``double`` left-to-right, so results are
 bit-reproducible; cross-engine comparison rounds to 6 decimals to absorb
 summation-order differences in the oracle engine.
+
+One body per search step: every exact cosine is ``_cosine_score``, every
+PQ/IVFADC search is ``_adc_search`` and the batch searches rank in
+``_ranked_probe``. The single-query ``cosine_topk``/``ivf_topk`` keep
+their own TakeOrderedAndProject plans: the batch body's per-query window
+would add an exchange to them.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.window import Window
 
 from ..session import local_frame, truncate_lineage
 
@@ -44,8 +52,17 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _cosine_score(
+    vec: Column, q: Column, q_nrm: Column, nrm: Column | None = None
+) -> Column:
+    """The exact-cosine score every search, assignment and pairing path
+    ranks by: ``dot(vec, q) / (‖vec‖ · q_nrm)`` rounded to 6 dp. The
+    query norm (and ``nrm``, when the caller staged the row's own norm)
+    comes in precomputed, so a norm known once per query or per vector
+    is not folded again per candidate."""
+    if nrm is None:
+        nrm = _norm(vec)
+    return F.round(_dot(vec, q) / (nrm * q_nrm), 6)
 
 
 def cosine_topk(
@@ -81,10 +98,8 @@ def cosine_topk(
     return (
         joined.select(
             id_col,
-            F.round(
-                _dot(F.col(vec_col), F.col("q_vec"))
-                / (_norm(F.col(vec_col)) * F.col("q_nrm")),
-                6,
+            _cosine_score(
+                F.col(vec_col), F.col("q_vec"), F.col("q_nrm")
             ).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -108,12 +123,13 @@ def ivf_centroids(
         .collect()
     )
     if len(rows) < k:
-        # fail LOUDLY like pq_codebooks does for the same seed rule: a
-        # short seed set would silently train fewer cells and hand
-        # downstream assigns NULL cells / semantic_salt a zero divisor
+        # fail LOUDLY: a short seed set would silently train fewer cells
+        # (or codes) and hand downstream assigns NULL cells /
+        # semantic_salt a zero divisor
         raise ValueError(
-            f"seed rule needs ids 0..{k - 1} present; found {len(rows)}"
-            f" of {k} — remap ids or pass pre-trained centroids"
+            f"seed rule needs {id_col} 0..{k - 1} present; found"
+            f" {len(rows)} of {k} — pass a smaller k, remap ids or pass"
+            " a pre-trained model"
         )
     return [(int(r[0]), [float(x) for x in r[1]]) for r in rows]
 
@@ -168,13 +184,10 @@ def ivf_assign(
         [(cdata,)],
         "cents array<struct<cid:int,cvec:array<double>,cnorm:double>>",
     )
-    nrm = _norm(F.col(vec_col))
     sims = F.transform(
         "cents",
         lambda c: F.struct(
-            F.round(
-                _dot(F.col(vec_col), c["cvec"]) / (nrm * c["cnorm"]), 6
-            ).alias("sim"),
+            _cosine_score(F.col(vec_col), c["cvec"], c["cnorm"]).alias("sim"),
             (-c["cid"]).alias("neg_cid"),
         ),
     )
@@ -226,9 +239,8 @@ def _adc_tables(
 ) -> list[list[float]]:
     """Per-subspace query→codebook squared-L2 distance tables —
     m·n_codes doubles of driver-computed model state, the ADC lookup
-    side of Jégou et al.'s product quantization. Shared by the in-plan
-    and index-table IVFADC variants (same parity argument as
-    ``_probe_cells``); residual mode passes the query's residual to the
+    side of Jégou et al.'s product quantization, read by
+    ``_adc_search``; residual mode passes the query's residual to a
     probed cell as ``qv``."""
     sub = len(codebooks[0][0][1])
     return [
@@ -268,8 +280,6 @@ def ivf_topk(
     result is eagerly materialized off the cache before release. In a
     real deployment train/assign happen once at index-build time and only
     the probe scan runs per query."""
-    from pyspark import StorageLevel
-
     cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if centroids is None:
@@ -286,10 +296,8 @@ def ivf_topk(
             cand.select(
                 id_col,
                 "cell",
-                F.round(
-                    _dot(F.col(vec_col), _lit_vec(qvec))
-                    / (_norm(F.col(vec_col)) * F.lit(qn)),
-                    6,
+                _cosine_score(
+                    F.col(vec_col), _lit_vec(qvec), F.lit(qn)
                 ).alias("cosine"),
             )
             .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
@@ -356,18 +364,32 @@ def cosine_topk_batch(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Multi-query brute-force cosine top-k — ``cosine_topk`` for a
-    QUERY BATCH: the query vectors ride in as one broadcast relation
-    (|Q| rows of model-sized state), every candidate row scores all
-    queries in a single O(n·|Q|·d) scan, and the per-query top-k
-    resolves in one window PARTITIONED BY the query (no
-    single-partition stage at any query count). This is the exact
-    recall oracle the ANN release gate (``models/index_release.py``)
-    grades against. Returns ``(query_id, vec_id, cosine, rank)``,
-    rank 1..k by (cosine desc, id asc) per query."""
-    from pyspark.sql.window import Window
-
+    QUERY BATCH, and the exact recall oracle the ANN release gate
+    (``models/index_release.py``) grades against. It is
+    ``_ranked_probe`` with every vector in cell −1, the one cell
+    ``_query_probe_frame`` gives each query without centroids: one
+    O(n·|Q|·d) scan against the broadcast query vectors, per-query top-k
+    in a window PARTITIONED BY the query. Returns ``(query_id, vec_id,
+    cosine, rank)``, rank 1..k by (cosine desc, id asc) per query."""
     q = _query_probe_frame(emb, query_ids, id_col, vec_col, None, 0)
-    cand = emb.select(id_col, vec_col).join(broadcast(q)).filter(
+    idx = emb.select(id_col, vec_col, F.lit(-1).alias("cell"))
+    return _ranked_probe(idx, q, k, id_col, vec_col, keep_cell=False)
+
+
+def _ranked_probe(
+    idx: DataFrame,
+    q: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    keep_cell: bool,
+) -> DataFrame:
+    """The per-query rank body of the batch searches: index rows
+    ``(id, vec, cell)`` meet the broadcast ``_query_probe_frame`` rows
+    on ``cell`` (a query never matches itself), and exact cosine ranks
+    1..k per query by (cosine desc, id asc) in one window PARTITIONED BY
+    the query. Returns ``(query_id, id[, cell], cosine, rank)``."""
+    cand = idx.join(broadcast(q), "cell").filter(
         F.col(id_col) != F.col("qid")
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -377,10 +399,9 @@ def cosine_topk_batch(
         cand.select(
             F.col("qid").alias("query_id"),
             F.col(id_col),
-            F.round(
-                _dot(F.col(vec_col), F.col("q_vec"))
-                / (_norm(F.col(vec_col)) * F.col("q_nrm")),
-                6,
+            *(["cell"] if keep_cell else []),
+            _cosine_score(
+                F.col(vec_col), F.col("q_vec"), F.col("q_nrm")
             ).alias("cosine"),
         )
         .withColumn("rank", F.row_number().over(w))
@@ -402,21 +423,13 @@ def ivf_topk_batch(
 ) -> DataFrame:
     """Batched IVF serving — ``ivf_topk`` for a QUERY BATCH: one index
     build (train + assign, or a pre-built ``assigned`` index table),
-    then ONE probe scan for ALL queries. Each query's ``_probe_cells``
-    probe list (the single probe rule every IVF variant is hash-gated
-    on) joins as a broadcast (query, cell) relation, so candidates are
-    touched once per probing query via the cell key; per-query exact
-    cosine top-k resolves in one window PARTITIONED BY the query. On a
-    cell-PARTITIONED index table the cell join becomes partition
-    pruning of the union of probe cells — the serving plan of a real
-    ANN deployment (reference analog: the materialize-then-probe split
-    of dbt's mart tables, dbt_project.yml:31-33).
+    then ONE probe scan for all queries. Each query's ``_probe_cells``
+    list joins as a broadcast (query, cell) relation and
+    ``_ranked_probe`` ranks per query; on a cell-PARTITIONED index table
+    the cell join becomes partition pruning of the union of probe cells.
 
     Returns ``(query_id, vec_id, cell, cosine, rank)`` — rank 1..k per
     query by (cosine desc, id asc); queries never match themselves."""
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
     own_cache = assigned is None
     cached = emb.persist(StorageLevel.MEMORY_AND_DISK) if own_cache else emb
     try:
@@ -432,26 +445,7 @@ def ivf_topk_batch(
             if assigned is not None
             else ivf_assign(cached, centroids, id_col, vec_col)
         )
-        cand = idx.join(broadcast(q), "cell").filter(
-            F.col(id_col) != F.col("qid")
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col(id_col).asc()
-        )
-        out = (
-            cand.select(
-                F.col("qid").alias("query_id"),
-                F.col(id_col),
-                "cell",
-                F.round(
-                    _dot(F.col(vec_col), F.col("q_vec"))
-                    / (_norm(F.col(vec_col)) * F.col("q_nrm")),
-                    6,
-                ).alias("cosine"),
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= int(k))
-        )
+        out = _ranked_probe(idx, q, k, id_col, vec_col, keep_cell=True)
         if own_cache:
             # |Q|·k rows; materialize before the cache is released
             out = truncate_lineage(out)
@@ -550,10 +544,8 @@ def near_dup_pairs_lsh(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                _dot(F.col("vec_a"), F.col("vec_b"))
-                / (F.col("nrm_a") * F.col("nrm_b")),
-                6,
+            _cosine_score(
+                F.col("vec_a"), F.col("vec_b"), F.col("nrm_b"), F.col("nrm_a")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -592,23 +584,31 @@ def hard_negatives(
     Returns ``(anchor_id, negative_id, cosine, neg_rank)`` with
     neg_rank 1..k by descending cosine (ties → ascending negative id).
     """
-    from pyspark.sql.window import Window
-
-    crossed = _lsh_labeled_pairs(
+    pairs = _lsh_labeled_pairs(
         emb, label_col, id_col, vec_col, dims, band_size, max_bucket
-    ).filter(~F.col("_lab_a").eqNullSafe(F.col("_lab_b")))
+    )
+    return _top_neighbours(pairs, False, k, "neg_rank").select(
+        "anchor_id",
+        F.col("other_id").alias("negative_id"),
+        "cosine",
+        "neg_rank",
+    )
+
+
+def _top_neighbours(
+    pairs: DataFrame, same_label: bool, k: int, rank_col: str
+) -> DataFrame:
+    """Per-anchor top-``k`` of ``_lsh_labeled_pairs`` rows on one side
+    of the label predicate, ranked into ``rank_col`` by (cosine desc,
+    other_id asc) in one window partitioned by anchor."""
+    same = F.col("_lab_a").eqNullSafe(F.col("_lab_b"))
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cosine").desc(), F.col("other_id").asc()
     )
     return (
-        crossed.withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= k)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("negative_id"),
-            "cosine",
-            "neg_rank",
-        )
+        pairs.filter(same if same_label else ~same)
+        .withColumn(rank_col, F.row_number().over(w))
+        .filter(F.col(rank_col) <= k)
     )
 
 
@@ -683,33 +683,18 @@ def contrastive_triplets(
 
     Returns ``(anchor_id, positive_id, negative_id, pos_cosine,
     neg_cosine, margin)``, margins rounded 6dp."""
-    from pyspark.sql.window import Window
-
     base = _lsh_labeled_pairs(
         emb, label_col, id_col, vec_col, dims, band_size, max_bucket
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("other_id").asc()
+    pos = _top_neighbours(base, True, k_pos, "_rn").select(
+        "anchor_id",
+        F.col("other_id").alias("positive_id"),
+        F.col("cosine").alias("pos_cosine"),
     )
-    pos = (
-        base.filter(F.col("_lab_a").eqNullSafe(F.col("_lab_b")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k_pos)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("positive_id"),
-            F.col("cosine").alias("pos_cosine"),
-        )
-    )
-    neg = (
-        base.filter(~F.col("_lab_a").eqNullSafe(F.col("_lab_b")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k_neg)
-        .select(
-            "anchor_id",
-            F.col("other_id").alias("negative_id"),
-            F.col("cosine").alias("neg_cosine"),
-        )
+    neg = _top_neighbours(base, False, k_neg, "_rn").select(
+        "anchor_id",
+        F.col("other_id").alias("negative_id"),
+        F.col("cosine").alias("neg_cosine"),
     )
     return pos.join(neg, "anchor_id").select(
         "anchor_id",
@@ -781,18 +766,10 @@ def pq_codebooks(
     """Product-quantization codebooks: split the d-dim space into ``m``
     subspaces of d/m dims; each subspace gets ``k`` centroids taken from
     the k lowest-id vectors' subvectors (deterministic seeding, the same
-    rule as ``ivf_centroids`` — a production build Lloyd-iterates each
+    rule, via ``ivf_centroids`` — a production build Lloyd-iterates each
     subspace from these). Returns bounded MODEL STATE: m·k·(d/m) = k·d
     floats, one driver collect of k rows."""
-    rows = (
-        emb.filter(F.col(id_col) < k).select(id_col, vec_col).orderBy(id_col).collect()
-    )
-    vecs = [[float(x) for x in r[1]] for r in rows]
-    if len(vecs) < k:
-        raise ValueError(
-            f"pq_codebooks needs {k} seed vectors with {id_col} < {k};"
-            f" found {len(vecs)} — pass a smaller k or reassign ids"
-        )
+    vecs = [v for _, v in ivf_centroids(emb, k, id_col, vec_col)]
     d = len(vecs[0])
     if d % m:
         raise ValueError(f"dims {d} not divisible by m={m}")
@@ -837,8 +814,6 @@ def pq_codebooks_trained(
     ``embedding_outliers`` discipline) so the next round's codebooks are
     identical literals. Empty cells keep their previous centroid.
     """
-    from pyspark import StorageLevel
-
     spark = emb.sparkSession
     books = pq_codebooks(emb, m, k, id_col, vec_col)
     sub = len(books[0][0][1])
@@ -860,21 +835,9 @@ def pq_codebooks_trained(
     )
     try:
         for _ in range(n_iter):
-            cands = F.transform(
-                F.element_at("cb", F.col("s") + 1),
-                lambda c: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("sv"), c["cvec"], lambda a, b: (a - b) * (a - b)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("d2"),
-                    c["cid"].alias("cid"),
-                ),
-            )
+            best = _nearest_code(F.col("sv"), F.element_at("cb", F.col("s") + 1))
             assigned = subs.crossJoin(broadcast(_pq_cdf(spark, books))).select(
-                "s", "sv", F.array_min(cands)["cid"].alias("cell")
+                "s", "sv", best["cid"].alias("cell")
             )
             means = (
                 assigned.select("s", "cell", F.posexplode("sv"))
@@ -904,17 +867,14 @@ def pq_codebooks_trained(
     return books
 
 
-def _pq_best_cols(
-    vec_col: str, codebooks: list[list[tuple[int, list[float]]]]
-) -> list[Column]:
-    """Per-subspace nearest-code struct(d2, cid) columns against the
-    broadcast codebook column ``cb`` (see ``pq_encode_report``)."""
-    sub = len(codebooks[0][0][1])
-
-    def best_for(s: int) -> Column:
-        seg = F.slice(F.col(vec_col), s * sub + 1, sub)
-        cands = F.transform(
-            F.element_at("cb", s + 1),
+def _nearest_code(seg: Column, book: Column) -> Column:
+    """struct(d2, cid) of the code in ``book`` (``array<struct<cid,
+    cvec>>``) nearest the subvector ``seg`` by squared L2, ties to the
+    lowest code id — the one PQ encode rule the codebook fit and every
+    encode share."""
+    return F.array_min(
+        F.transform(
+            book,
             lambda c: F.struct(
                 F.aggregate(
                     F.zip_with(
@@ -928,9 +888,21 @@ def _pq_best_cols(
                 c["cid"].alias("cid"),
             ),
         )
-        return F.array_min(cands)
+    )
 
-    return [best_for(s).alias(f"_b{s}") for s in range(len(codebooks))]
+
+def _pq_best_cols(
+    vec_col: str, codebooks: list[list[tuple[int, list[float]]]]
+) -> list[Column]:
+    """Per-subspace nearest-code columns ``_b{s}`` against the broadcast
+    codebook column ``cb`` (see ``pq_encode_report``)."""
+    sub = len(codebooks[0][0][1])
+    return [
+        _nearest_code(
+            F.slice(F.col(vec_col), s * sub + 1, sub), F.element_at("cb", s + 1)
+        ).alias(f"_b{s}")
+        for s in range(len(codebooks))
+    ]
 
 
 def _pq_cdf(spark, codebooks):
@@ -998,41 +970,110 @@ def pq_topk(
 ) -> DataFrame:
     """ADC (asymmetric distance computation) top-k over PQ codes — the
     search half of a production PQ index: the QUERY stays exact, every
-    database vector is represented by its m codes, and its distance is
-    approximated as sqrt(Σ_s ‖q_s − cvec_{s,code_s}‖²) via per-subspace
-    lookup tables (m·n_codes doubles of driver-computed model state, like
-    the IVF probe list). Here codes are derived in the same pass for the
-    test fixture; at scale the encode is materialized once at index-build
-    and this scan reads ONLY the 32x-smaller code columns. Map-only +
-    TakeOrderedAndProject — no shuffle, no Python on the data path."""
-    spark = emb.sparkSession
+    database vector is represented by its m codes, and its distance
+    sqrt(Σ_s ‖q_s − cvec_{s,code_s}‖²) is summed from per-subspace
+    lookup tables (``_adc_search``). The codes are encoded in the same
+    pass here; at scale they are materialized once at index-build and
+    the scan reads only the 32x-smaller code columns. Map-only +
+    TakeOrderedAndProject. Returns ``(id, adc_dist)``."""
     if codebooks is None:
         codebooks = pq_codebooks(emb, m, n_codes, id_col, vec_col)
     qvec = _query_vec(emb, id_col, vec_col, query_id)
-    # per-subspace distance table via the SHARED helper — one table
-    # rule for pq_topk and both IVFADC variants (drift here silently
-    # breaks their documented ADC parity)
-    dt = _adc_tables(codebooks, qvec)
-    ddf = local_frame(spark, [(dt,)], "dt array<array<double>>")
-    staged = (
-        emb.filter(F.col(id_col) != query_id)
-        .crossJoin(broadcast(_pq_cdf(spark, codebooks)))
-        .crossJoin(broadcast(ddf))
-        .select(F.col(id_col), F.col("dt"), *_pq_best_cols(vec_col, codebooks))
-    )
-    n = len(codebooks)
+    codes = _pq_codes(emb, codebooks, id_col, vec_col)
+    return _adc_search(codes, codebooks, qvec, query_id, k, id_col)
+
+
+def _pq_codes(
+    df: DataFrame,
+    codebooks: list[list[tuple[int, list[float]]]],
+    id_col: str,
+    enc_col: str,
+    *extra: str,
+) -> DataFrame:
+    """``(id, codes, *extra)``: every row's per-subspace nearest code ids
+    of ``enc_col`` against the broadcast books, one map-only pass — the
+    codes column every ADC search reads, in flight or from the index
+    table."""
+    staged = df.crossJoin(
+        broadcast(_pq_cdf(df.sparkSession, codebooks))
+    ).select(F.col(id_col), *extra, *_pq_best_cols(enc_col, codebooks))
+    codes = F.array(*[F.col(f"_b{s}.cid") for s in range(len(codebooks))])
+    return staged.select(F.col(id_col), codes.alias("codes"), *extra)
+
+
+def _adc_search(
+    index: DataFrame,
+    codebooks: list[list[tuple[int, list[float]]]],
+    qvec: list[float],
+    query_id,
+    shortlist: int,
+    id_col: str,
+    probes: list[int] | None = None,
+    residual_to: list[tuple[int, list[float]]] | None = None,
+    rerank: DataFrame | None = None,
+    vec_col: str = "embedding",
+    k: int = 10,
+) -> DataFrame:
+    """The ADC search of every PQ and IVFADC operator, over an
+    ``(id, codes[, cell])`` index frame in flight or in a table: keep
+    the ``probes`` cells (partition pruning on a cell-partitioned table)
+    minus the query row, sum each row's per-subspace ``_adc_tables``
+    lookups, and take ``shortlist`` rows by (adc_dist, id). With
+    ``residual_to`` (a residual build's coarse centroids) the tables are
+    per probed cell, against the query's residual to it; other cells
+    carry empty slots. With a ``rerank`` source frame the shortlist
+    joins back to its ``vec_col`` as a broadcast and the top ``k`` by
+    exact cosine are kept. Returns ``(id[, cell], adc_dist[, cosine])``."""
+    spark = index.sparkSession
+    keep = F.col(id_col) != query_id
+    cell = []
+    if probes is not None:
+        keep = F.col("cell").isin(probes) & keep
+        cell = ["cell"]
+    if residual_to is None:
+        ddf = local_frame(
+            spark, [(_adc_tables(codebooks, qvec),)], "dt array<array<double>>"
+        )
+        table = F.col("dt")
+    else:
+        cmap = {cid: [float(x) for x in cv] for cid, cv in residual_to}
+        dtc: list[list[list[float]]] = [[] for _ in range(max(cmap) + 1)]
+        for cid in probes:
+            dtc[cid] = _adc_tables(
+                codebooks, [q - c for q, c in zip(qvec, cmap[cid])]
+            )
+        ddf = local_frame(spark, [(dtc,)], "dtc array<array<array<double>>>")
+        table = F.element_at("dtc", F.col("cell") + 1)
     lookups = [
-        F.element_at(F.element_at("dt", s + 1), F.col(f"_b{s}.cid") + 1)
-        for s in range(n)
+        F.element_at(
+            F.element_at(table, s + 1), F.element_at("codes", s + 1) + 1
+        )
+        for s in range(len(codebooks))
     ]
-    total = lookups[0]
-    for term in lookups[1:]:
-        total = total + term
-    return (
-        staged.select(
-            id_col, F.round(F.sqrt(total), 6).alias("adc_dist")
+    short = (
+        index.filter(keep)
+        .crossJoin(broadcast(ddf))
+        .select(
+            id_col,
+            *cell,
+            F.round(F.sqrt(sum(lookups[1:], lookups[0])), 6).alias("adc_dist"),
         )
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
+        .limit(shortlist)
+    )
+    if rerank is None:
+        return short
+    return (
+        rerank.join(broadcast(short), id_col)
+        .select(
+            id_col,
+            *cell,
+            "adc_dist",
+            _cosine_score(
+                F.col(vec_col), _lit_vec(qvec), F.lit(_py_norm(qvec))
+            ).alias("cosine"),
+        )
+        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
         .limit(k)
     )
 
@@ -1062,8 +1103,6 @@ def kmeans_lloyd(
     re-runs whatever lineage produced ``emb`` — at 100 TB that is a full
     re-scan per round (memory-and-disk: spills rather than evicts under
     pressure). Released before returning."""
-    from pyspark import StorageLevel
-
     cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         return _lloyd_fit(cached, k, n_iter, id_col, vec_col)
@@ -1128,8 +1167,6 @@ def kmeans_cells(
     unpersisted lineage a further time (the round-2 bench regression),
     and the k-row report is eagerly materialized before the cache is
     released so the caller's collect doesn't recompute anything."""
-    from pyspark import StorageLevel
-
     cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         trained = (
@@ -1204,8 +1241,8 @@ def semantic_dedup(
     cand = assigned.select(
         "cell", F.col(id_col), F.col(vec_col), F.col("_nrm")
     )
-    sim = F.round(
-        _dot(F.col("_kvec"), F.col(vec_col)) / (F.col("_knrm") * F.col("_nrm")), 6
+    sim = _cosine_score(
+        F.col("_kvec"), F.col(vec_col), F.col("_nrm"), F.col("_knrm")
     )
     # Salt-replicate the pair join (operators/skew.py pattern): the pair
     # stage's INPUT is tiny (one vector per row) but its compute is
@@ -1267,8 +1304,6 @@ def embedding_outliers(
     Lloyd update; the rank pass shuffles once on the group key. With a
     bounded group count the centroid join is always a broadcast.
     """
-    from pyspark.sql.window import Window
-
     means = (
         emb.select(F.col(group_col).alias("_g"), F.posexplode(F.col(vec_col)))
         .groupBy("_g", "pos")
@@ -1284,7 +1319,9 @@ def embedding_outliers(
     ).select(
         F.col(group_col),
         F.col(id_col),
-        F.round(cosine_sim(F.col(vec_col), F.col("_cvec")), 6).alias("centroid_cosine"),
+        _cosine_score(
+            F.col(vec_col), F.col("_cvec"), _norm(F.col("_cvec"))
+        ).alias("centroid_cosine"),
     )
     w = Window.partitionBy(group_col).orderBy(
         F.col("centroid_cosine").asc(), F.col(id_col).asc()
@@ -1308,33 +1345,18 @@ def pq_rerank(
     vec_col: str = "embedding",
     codebooks: list[list[tuple[int, list[float]]]] | None = None,
 ) -> DataFrame:
-    """Two-stage retrieval — the production PQ serving pattern: stage 1
-    shortlists ``shortlist`` candidates by compressed ADC distance
-    (32x-smaller codes, map-only), stage 2 re-ranks ONLY the shortlist by
-    exact cosine against the raw vectors and returns the top ``k``.
-
-    The shortlist rides into the re-rank scan as a broadcast hash table
-    (``shortlist`` rows of model-state size), so stage 2 reads raw
-    vectors for a constant-size candidate set no matter the corpus size —
-    the recall/cost dial is ``shortlist``, not data volume. Returns
-    ``(id, adc_dist, cosine)`` ordered by exact cosine.
-    """
-    cand = pq_topk(
-        emb, query_id, shortlist, m, n_codes, id_col, vec_col, codebooks
-    )
-    q = emb.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("q_vec")
-    )
-    return (
-        emb.join(broadcast(cand), id_col)
-        .crossJoin(broadcast(q))
-        .select(
-            id_col,
-            "adc_dist",
-            F.round(cosine_sim(F.col(vec_col), F.col("q_vec")), 6).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
+    """Two-stage retrieval — the production PQ serving pattern: ADC over
+    the codes shortlists ``shortlist`` candidates, then exact cosine
+    re-ranks ONLY that broadcast shortlist against the raw vectors to
+    the top ``k``. The recall/cost dial is ``shortlist``, not data
+    volume. Returns ``(id, adc_dist, cosine)`` ordered by exact cosine."""
+    if codebooks is None:
+        codebooks = pq_codebooks(emb, m, n_codes, id_col, vec_col)
+    qvec = _query_vec(emb, id_col, vec_col, query_id)
+    codes = _pq_codes(emb, codebooks, id_col, vec_col)
+    return _adc_search(
+        codes, codebooks, qvec, query_id, shortlist, id_col,
+        rerank=emb, vec_col=vec_col, k=k,
     )
 
 
@@ -1356,28 +1378,20 @@ def ivfadc_topk(
     """IVFADC — the composed production ANN index (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): a TRAINED
     coarse quantizer prunes the scan to the ``nprobe`` cells nearest the
-    query, ADC over TRAINED PQ codes ranks only vectors inside the probed
-    cells (reading 32x-compressed codes, never raw vectors), and exact
-    cosine re-ranks the constant-size shortlist. Three independent cost
-    dials: n_centroids/nprobe (fraction of the corpus touched), m/n_codes
-    (bytes per compressed vector), shortlist (raw vectors read).
+    query, ADC over TRAINED PQ codes ranks only vectors inside those
+    cells, and exact cosine re-ranks the constant-size shortlist. Three
+    cost dials: n_centroids/nprobe (fraction of the corpus touched),
+    m/n_codes (bytes per compressed vector), shortlist (raw vectors
+    read). Either quantizer can be passed in pre-trained (the session
+    caches do) or is fit on the spot.
 
-    Scale shape: at index-build time the assignment+codes table is
-    written PARTITIONED BY (cell), so the probe filter is partition
-    pruning at the scan; the per-query work is a map-only ADC pass over
-    ~nprobe/n_centroids of the codes plus a broadcast-joined re-rank of
-    ``shortlist`` raw vectors. Here (index fixture) both quantizers can
-    be passed in pre-trained — the session caches do — or are fit on the
-    spot. This variant PQ-encodes raw vectors, not residuals (v − cell
-    centroid): residual encoding needs per-cell distance tables (k·m·
-    n_codes driver state) for a recall gain the blob fixtures don't
-    exercise; the raw-vector books are shared with ``pq_encode``/
-    ``pq_topk``, keeping ONE codes table serving both index layouts.
+    The codes are encoded in flight by ``ivfpq_index_rows``, the rows
+    ``build_ivfpq_index`` writes, and searched by the same
+    ``_adc_search`` as ``ivfadc_topk_indexed``, so the two are
+    row-for-row identical. Raw vectors are encoded, not residuals; the
+    raw books are shared with ``pq_encode_report``/``pq_topk``.
 
     Returns (id, cell, adc_dist, cosine) ordered by exact cosine."""
-    from pyspark import StorageLevel
-
-    spark = emb.sparkSession
     cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if centroids is None:
@@ -1387,60 +1401,12 @@ def ivfadc_topk(
                 cached, m, n_codes, n_iter, id_col, vec_col
             )
         qvec = _query_vec(cached, id_col, vec_col, query_id)
-        qn = _py_norm(qvec)
-
-        # probe selection: k·d driver-side arithmetic on model state,
-        # same rounding/tie rule as ivf_topk
-        probes = _probe_cells(centroids, qvec, qn, nprobe)
-
-        cand = ivf_assign(cached, centroids, id_col, vec_col).filter(
-            F.col("cell").isin(probes) & (F.col(id_col) != query_id)
-        )
-
-        # ADC stage: per-subspace query->codebook distance tables
-        # (m·n_codes doubles of driver-computed model state)
-        dt = _adc_tables(codebooks, qvec)
-        ddf = local_frame(spark, [(dt,)], "dt array<array<double>>")
-        staged = (
-            cand.crossJoin(broadcast(_pq_cdf(spark, codebooks)))
-            .crossJoin(broadcast(ddf))
-            .select(
-                F.col(id_col),
-                F.col("cell"),
-                F.col("dt"),
-                *_pq_best_cols(vec_col, codebooks),
-            )
-        )
-        lookups = [
-            F.element_at(F.element_at("dt", s + 1), F.col(f"_b{s}.cid") + 1)
-            for s in range(len(codebooks))
-        ]
-        total = lookups[0]
-        for term in lookups[1:]:
-            total = total + term
-        short = (
-            staged.select(
-                id_col, "cell", F.round(F.sqrt(total), 6).alias("adc_dist")
-            )
-            .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-            .limit(shortlist)
-        )
-
-        # exact re-rank of the broadcast-size shortlist only
-        out = (
-            cached.join(broadcast(short), id_col)
-            .select(
-                id_col,
-                "cell",
-                "adc_dist",
-                F.round(
-                    _dot(F.col(vec_col), _lit_vec(qvec))
-                    / (_norm(F.col(vec_col)) * F.lit(qn)),
-                    6,
-                ).alias("cosine"),
-            )
-            .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-            .limit(k)
+        # the in-flight encode is the indexed path's table, row for row
+        out = _adc_search(
+            ivfpq_index_rows(cached, centroids, codebooks, id_col, vec_col),
+            codebooks, qvec, query_id, shortlist, id_col,
+            probes=_probe_cells(centroids, qvec, _py_norm(qvec), nprobe),
+            rerank=cached, vec_col=vec_col, k=k,
         )
         # k rows; materialize before the cache is released
         return truncate_lineage(out)
@@ -1463,20 +1429,11 @@ def ivfpq_index_rows(
     (``streaming/dedup_join.py::streaming_ivfpq_ingest``): the identical
     function serving both engines is what makes a streamed append land
     byte-compatible in the batch-built table."""
-    spark = df.sparkSession
     if residual:
         enc = ivf_residuals(df, centroids, id_col, vec_col)
-        enc_col = "residual"
-    else:
-        enc = ivf_assign(df, centroids, id_col, vec_col)
-        enc_col = vec_col
-    staged = enc.crossJoin(broadcast(_pq_cdf(spark, codebooks))).select(
-        F.col(id_col), F.col("cell"), *_pq_best_cols(enc_col, codebooks)
-    )
-    codes = F.array(
-        *[F.col(f"_b{s}.cid") for s in range(len(codebooks))]
-    ).alias("codes")
-    return staged.select(F.col(id_col), codes, F.col("cell"))
+        return _pq_codes(enc, codebooks, id_col, "residual", "cell")
+    enc = ivf_assign(df, centroids, id_col, vec_col)
+    return _pq_codes(enc, codebooks, id_col, vec_col, "cell")
 
 
 def build_ivfpq_index(
@@ -1636,85 +1593,27 @@ def ivfadc_topk_indexed(
     codebooks: list[list[tuple[int, list[float]]]],
     residual: bool = False,
 ) -> DataFrame:
-    """IVFADC query against the MATERIALIZED index table: probe
-    selection on driver-side model state, a codes-only scan of the
-    probed cells (the cell filter is PARTITION PRUNING on the
-    ``build_ivfpq_index`` layout — asserted in the parity test), ADC by
-    per-subspace distance-table lookups on the stored codes, exact
-    cosine re-rank of the shortlist against the source vectors.
-    Raw mode is row-for-row identical to the in-plan ``ivfadc_topk``
-    (same rounding and tie rules); the difference is WHERE the codes
-    come from — the 32x-smaller index table instead of an in-flight
-    encode.
-
+    """IVFADC query against the MATERIALIZED ``build_ivfpq_index`` table:
+    the probed-cell filter is PARTITION PRUNING (asserted in the parity
+    test), ADC reads the stored codes only, and the shortlist re-ranks
+    against the source vectors. It is ``_adc_search`` over the table, so
+    raw mode is row-for-row identical to the in-plan ``ivfadc_topk``.
     ``residual=True`` matches a ``residual=True`` build: the distance
-    tables become PER-CELL — dt_c[s][j] = ‖(q − c_cell)_s − cvec_{s,j}‖²
-    — nprobe·m·n_codes doubles of driver model state (non-probed cells
-    carry empty slots in the broadcast array; their partitions are
-    pruned before any lookup), which is exactly how the paper's IVFADC
-    serves: one table set per probed cell, computed once per query.
+    tables become one set per probed cell, dt_c[s][j] =
+    ‖(q − c_cell)_s − cvec_{s,j}‖² (Jégou et al. §III).
 
     Both quantizers are REQUIRED (keyword-only): the stored codes were
     produced by the build-time quantizers, so probing with anything else
     — including a fresh on-the-spot fit, which ``ivfadc_topk``'s
-    in-plan variant legitimately offers — would silently compute
-    distances against the wrong codebooks."""
-    spark = emb.sparkSession
+    in-plan variant offers — would silently compute distances against
+    the wrong codebooks."""
     qvec = _query_vec(emb, id_col, vec_col, query_id)
-    qn = _py_norm(qvec)
-    probes = _probe_cells(centroids, qvec, qn, nprobe)
-
-    scan = spark.table(table).filter(
-        F.col("cell").isin(probes) & (F.col(id_col) != query_id)
-    )
-    if residual:
-        # per-cell tables against the query's residual to that cell;
-        # dense array indexed by cell id, empty for non-probed cells
-        cmap = {cid: [float(x) for x in cv] for cid, cv in centroids}
-        n_cells = max(cmap) + 1
-        dts: list[list[list[float]]] = [[] for _ in range(n_cells)]
-        for cid in probes:
-            dts[cid] = _adc_tables(
-                codebooks, [q - c for q, c in zip(qvec, cmap[cid])]
-            )
-        ddf = local_frame(spark, [(dts,)], "dtc array<array<array<double>>>")
-        dt_for_row = F.element_at("dtc", F.col("cell") + 1)
-    else:
-        ddf = local_frame(
-            spark,
-            [(_adc_tables(codebooks, qvec),)],
-            "dt array<array<double>>",
-        )
-        dt_for_row = F.col("dt")
-    lookups = [
-        F.element_at(
-            F.element_at(dt_for_row, s + 1), F.element_at("codes", s + 1) + 1
-        )
-        for s in range(len(codebooks))
-    ]
-    total = lookups[0]
-    for term in lookups[1:]:
-        total = total + term
-    short = (
-        scan.crossJoin(broadcast(ddf))
-        .select(id_col, "cell", F.round(F.sqrt(total), 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-        .limit(shortlist)
-    )
-    return (
-        emb.join(broadcast(short), id_col)
-        .select(
-            id_col,
-            "cell",
-            "adc_dist",
-            F.round(
-                _dot(F.col(vec_col), _lit_vec(qvec))
-                / (_norm(F.col(vec_col)) * F.lit(qn)),
-                6,
-            ).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
+    return _adc_search(
+        emb.sparkSession.table(table), codebooks, qvec, query_id, shortlist,
+        id_col,
+        probes=_probe_cells(centroids, qvec, _py_norm(qvec), nprobe),
+        residual_to=centroids if residual else None,
+        rerank=emb, vec_col=vec_col, k=k,
     )
 
 
@@ -1972,13 +1871,7 @@ def pca_apply(
         *[_dot(v, _lit_vec(ws[c])) - F.lit(bs[c]) for c in range(d_out)]
     )
     if renorm:
-        nrm = F.sqrt(
-            F.aggregate(
-                F.transform(proj, lambda x: x * x),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-        )
+        nrm = _norm(proj)
         proj = F.transform(proj, lambda x: x / F.greatest(nrm, F.lit(1e-12)))
     out = F.transform(proj, lambda x: F.round(x, 6))
     guarded = F.when(F.size(v) == d_in, out)

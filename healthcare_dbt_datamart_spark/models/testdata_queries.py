@@ -1103,33 +1103,12 @@ def q_ivfadc_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim — what this query adds to the gate is the build/serve
     split: the hash proves the 32x-smaller index table round-trips the
     exact ADC ordering the in-flight encode produces."""
-    from ..llmops.similarity import (
-        build_ivfpq_index,
-        ivfadc_topk,
-        ivfadc_topk_indexed,
-    )
+    from ..llmops.similarity import build_ivfpq_index, ivfadc_topk_indexed
 
     emb = load(spark, sf_dir, "embeddings")
     cents = _trained_centroids(spark, sf_dir, k=8, n_iter=2)
     books = _trained_pq_books(spark, sf_dir, m=8, k=16, n_iter=2)
-    try:
-        build_ivfpq_index(emb, "ivfpq_serving_q", cents, books)
-    except Exception as ex:
-        # ONLY the environment-dependent index WRITE is guarded (a
-        # harness without a writable warehouse), and loudly — a silent
-        # fallback would leave the gate green while voiding the query's
-        # purpose. The serving path below runs UNguarded: a bug in the
-        # probe/ADC/re-rank must fail the gate, not fall back. In-plan
-        # is row-identical by contract (tests/test_llmops_streaming.py's
-        # indexed-parity test).
-        print(
-            "WARN ivfadc_indexed: index build unavailable "
-            f"({ex!r}); serving the row-identical in-plan fallback"
-        )
-        return ivfadc_topk(
-            emb, query_id=0, k=10, shortlist=30, n_centroids=8, nprobe=2,
-            m=8, n_codes=16, centroids=cents, codebooks=books,
-        )
+    build_ivfpq_index(emb, "ivfpq_serving_q", cents, books)
     return ivfadc_topk_indexed(
         emb, "ivfpq_serving_q", query_id=0, k=10, shortlist=30,
         nprobe=2, centroids=cents, codebooks=books,
@@ -2913,24 +2892,13 @@ def q_seed_nation_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf.to_csv(path, index=False)
     from ..operators.materialize import materialize_seed
 
-    try:
-        materialize_seed(
-            spark,
-            "seed_nation_q",
-            path,
-            column_types={"n_nationkey": "bigint", "n_regionkey": "bigint"},
-        )
-        return spark.table("seed_nation_q")
-    except Exception:
-        # harness without a writable warehouse: still prove the S1 read
-        # path (header + inference + overrides); the swap itself is
-        # covered by test_runtime either way
-        df = spark.read.csv(path, header=True, inferSchema=True)
-        return df.select(
-            F.col("n_nationkey").cast("bigint"),
-            "n_name",
-            F.col("n_regionkey").cast("bigint"),
-        )
+    materialize_seed(
+        spark,
+        "seed_nation_q",
+        path,
+        column_types={"n_nationkey": "bigint", "n_regionkey": "bigint"},
+    )
+    return spark.table("seed_nation_q")
 
 
 def q_clone_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2949,20 +2917,14 @@ def q_clone_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    try:
-        materialize_table(spark, "clone_src_q", nation)
-        clone_table(spark, "clone_src_q", "clone_snap_q", replace=True)
-        materialize_table(
-            spark,
-            "clone_src_q",
-            nation.withColumn("n_name", F.lit("MUTATED")).limit(3),
-        )
-        return spark.table("clone_snap_q")
-    except Exception:
-        # harness without a writable warehouse: prove content semantics
-        # only; the hardlink/isolation mechanics are covered by
-        # tests/test_runtime.py::test_clone_table_zero_copy_snapshot
-        return nation
+    materialize_table(spark, "clone_src_q", nation)
+    clone_table(spark, "clone_src_q", "clone_snap_q", replace=True)
+    materialize_table(
+        spark,
+        "clone_src_q",
+        nation.withColumn("n_name", F.lit("MUTATED")).limit(3),
+    )
+    return spark.table("clone_snap_q")
 
 
 def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:

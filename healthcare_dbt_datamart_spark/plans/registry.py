@@ -422,9 +422,17 @@ class ModelRegistry:
         """md5 over the model's materialization, declarative config, and
         a RECURSIVE bytecode fingerprint of its body — ``repr`` of a code
         object embeds a memory address, so nested code objects (lambdas,
-        comprehensions) are replaced by their own fingerprints; the
-        result is stable across processes for unchanged source."""
+        comprehensions) are replaced by their own fingerprints.
+
+        The fingerprint also covers every function of the body's own
+        top-level package that the body reaches through module globals,
+        transitively (``int_gap_col_status`` → ``gap_status`` →
+        ``gap_status_multi``), so an edit to a called helper marks the
+        model modified. Modules, builtins and functions of other
+        packages are not followed. The result is stable across
+        processes for unchanged source."""
         import hashlib
+        import types
 
         def fp(code) -> str:
             consts = tuple(
@@ -435,9 +443,33 @@ class ModelRegistry:
                 repr((code.co_code, consts, code.co_names)).encode()
             ).hexdigest()
 
+        def names(code):
+            yield from code.co_names
+            for c in code.co_consts:
+                if hasattr(c, "co_code"):
+                    yield from names(c)
+
+        def package(fn) -> str:
+            return (fn.__module__ or "").split(".")[0]
+
+        root = package(mdef.fn)
+        seen, todo, parts = {mdef.fn}, [mdef.fn], []
+        while todo:
+            fn = todo.pop()
+            parts.append((fn.__module__, fn.__qualname__, fp(fn.__code__)))
+            for name in names(fn.__code__):
+                ref = fn.__globals__.get(name)
+                if (
+                    isinstance(ref, types.FunctionType)
+                    and ref not in seen
+                    and package(ref) == root
+                ):
+                    seen.add(ref)
+                    todo.append(ref)
+
         cfg = dict(sorted(_declarative_config(mdef).items()))
         return hashlib.md5(
-            repr((mdef.materialized, cfg, fp(mdef.fn.__code__))).encode()
+            repr((mdef.materialized, cfg, sorted(parts))).encode()
         ).hexdigest()
 
     def modified_nodes(self, state: dict) -> set[str]:

@@ -19,7 +19,11 @@ calls inside it:
 Algorithms have one body each: the Elo expected score lives only in
 ``preferences._elo_period``, the step every Elo fit and the streaming
 sink run, and ``gap_pipeline.py`` ranks best evidence in one window
-(``gap_status`` is ``gap_status_multi`` with one measure).
+(``gap_status`` is ``gap_status_multi`` with one measure). In
+``llmops/similarity.py`` every PQ/IVFADC search sums its distance-table
+lookups in ``_adc_search``, every exact-cosine score is
+``_cosine_score``, and the batch searches rank per query in
+``_ranked_probe``'s one window.
 
 Per-call knobs those owners replaced stay out: no function takes a
 ``reliable`` (fault tolerance comes from the session's checkpoint dir)
@@ -153,3 +157,63 @@ def test_gap_pipeline_has_one_best_evidence_window():
         and node.func.attr == "row_number"
     ]
     assert len(windows) == 1
+
+
+def _call_to(node, name):
+    return isinstance(node, ast.Call) and (
+        isinstance(node.func, ast.Attribute) and node.func.attr == name
+        or isinstance(node.func, ast.Name) and node.func.id == name
+    )
+
+
+def _nodes_outside(module, owner_name, match):
+    """Lines of the AST nodes of ``module`` (a path relative to the
+    package) that satisfy ``match`` outside function ``owner_name``."""
+    tree = ast.parse((PACKAGE / module).read_text())
+    owner = next(
+        node
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and node.name == owner_name
+    )
+    inside = {id(node) for node in ast.walk(owner)}
+    hits = [node for node in ast.walk(tree) if match(node)]
+    assert hits
+    return [node.lineno for node in hits if id(node) not in inside]
+
+
+def test_adc_lookup_sum_in_one_function():
+    # a distance-table lookup is an element_at of an element_at, and the
+    # tables are built only where they are read
+    def lookup(node):
+        return (
+            _call_to(node, "element_at")
+            and _call_to(node.args[0], "element_at")
+            or _call_to(node, "_adc_tables")
+        )
+
+    assert _nodes_outside("llmops/similarity.py", "_adc_search", lookup) == []
+
+
+def test_exact_cosine_score_in_one_function():
+    def score(node):
+        return (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Div)
+            and _call_to(node.left, "_dot")
+        )
+
+    assert _nodes_outside("llmops/similarity.py", "_cosine_score", score) == []
+
+
+def test_per_query_rank_window_in_one_function():
+    def query_window(node):
+        return (
+            _call_to(node, "partitionBy")
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "query_id"
+        )
+
+    assert (
+        _nodes_outside("llmops/similarity.py", "_ranked_probe", query_window)
+        == []
+    )

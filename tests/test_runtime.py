@@ -1291,6 +1291,74 @@ def test_state_modified_selection(spark):
         build_registry(False).run(select="state:modified")
 
 
+def test_state_modified_follows_called_helpers(spark):
+    """The checksum covers the package functions a model body reaches
+    through its module globals, transitively: an edit to a helper two
+    calls deep selects the model, a model that calls no helper stays
+    unselected, and the same source loaded into a fresh module keeps
+    every checksum."""
+    import types
+
+    def load(inner_body):
+        mod = types.ModuleType("ckpkg.models")
+        exec(
+            compile(
+                "def _inner(df):\n"
+                f"    return {inner_body}\n"
+                "def _outer(df):\n"
+                "    return _inner(df)\n"
+                "def t_ck_helper(ctx):\n"
+                "    return _outer(ctx.source('raw'))\n"
+                "def t_ck_plain(ctx):\n"
+                "    return ctx.source('raw')\n",
+                "ckpkg/models.py",
+                "exec",
+            ),
+            mod.__dict__,
+        )
+        r = ModelRegistry(spark)
+        r.add_source("raw", spark.range(3))
+        r.model()(mod.t_ck_helper)
+        r.model()(mod.t_ck_plain)
+        return r
+
+    state = load("df").manifest()
+    assert load("df").modified_nodes(state) == set()
+    assert load("df.limit(1)").modified_nodes(state) == {"t_ck_helper"}
+
+
+@pytest.mark.parametrize(
+    "query, module, operator",
+    [
+        ("seed_nation_csv", "operators.materialize", "materialize_seed"),
+        ("clone_snapshot", "operators.materialize", "clone_table"),
+        ("ivfadc_indexed", "llmops.similarity", "build_ivfpq_index"),
+    ],
+)
+def test_operator_gate_queries_fail_with_their_operator(
+    spark, monkeypatch, query, module, operator
+):
+    """A query that exists to gate an operator fails when the operator
+    does: no fallback serves oracle-equal rows around a broken
+    ``materialize_seed``, ``clone_table`` or ``build_ivfpq_index``."""
+    import importlib
+    from pathlib import Path
+
+    from healthcare_dbt_datamart_spark.models.testdata_queries import QUERIES
+
+    def broken(*args, **kwargs):
+        raise RuntimeError(f"{operator} is broken")
+
+    monkeypatch.setattr(
+        importlib.import_module(f"healthcare_dbt_datamart_spark.{module}"),
+        operator,
+        broken,
+    )
+    sf_dir = Path(__file__).resolve().parents[1] / "perfbench" / "data" / "sf0.01"
+    with pytest.raises(RuntimeError, match=f"{operator} is broken"):
+        QUERIES[query](spark, str(sf_dir))
+
+
 def test_registry_schema_tests_and_cli_clone(spark):
     """dbt-test parity on the registry: declared tuple tests run against
     built relations (pass/fail statuses + threshold config), and the
