@@ -17,7 +17,6 @@ from .scalar import (  # noqa: F401
     audit_columns,
     bool_or_,
     cast_bool_to_text,
-    concat_pipe,
     date_literal,
     date_spine,
     date_trunc_,
@@ -27,8 +26,6 @@ from .scalar import (  # noqa: F401
     escape_single_quotes,
     except_distinct,
     generate_series,
-    intersect_distinct,
-    hash_,
     last_day_,
     listagg,
     null_safe_eq,
@@ -39,5 +36,4 @@ from .scalar import (  # noqa: F401
     split_part,
     string_literal,
     surrogate_key,
-    union_all,
 )

@@ -8,8 +8,6 @@ Python UDFs anywhere in this module.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,12 +31,6 @@ def surrogate_key(*cols: Column | str, sep: str = "|") -> Column:
     """
     parts = [F.coalesce(_col(c).cast("string"), F.lit("")) for c in cols]
     return F.md5(F.concat_ws(sep, *parts))
-
-
-def hash_(c: Column | str) -> Column:
-    """``md5(cast(x as varchar))`` — dbt ``hash`` macro
-    (``dbt-adapters/macros/utils/hash.sql:5-7``)."""
-    return F.md5(_col(c).cast("string"))
 
 
 # ---------------------------------------------------------------------------
@@ -256,12 +248,6 @@ def right_(s: Column | str, length: Column | int) -> Column:
     return F.when(n <= 0, F.lit("")).otherwise(F.right(_col(s), n))
 
 
-def concat_pipe(*cols: Column | str) -> Column:
-    """Snowflake ``||`` chain — NULL-propagating concat
-    (``dbt-adapters/macros/utils/concat.sql:5-7``)."""
-    return F.concat(*[_col(c) for c in cols])
-
-
 def listagg(
     c: Column | str,
     delimiter: str = ",",
@@ -378,19 +364,6 @@ def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     row of ``a`` that also exists in ``b`` whenever ``a`` held duplicate
     copies of it: a=[1,1,2], b=[1] must yield [2], not [1,2].)"""
     return a.subtract(b)
-
-
-def intersect_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    """SQL set INTERSECT (``dbt-adapters/macros/utils/intersect.sql:5-9``)."""
-    return a.intersect(b)
-
-
-def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
-    """UNION ALL by name (``macros/gap_tri_state_violations.sql:84-87``)."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
 
 
 def audit_columns(

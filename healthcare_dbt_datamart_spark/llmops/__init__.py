@@ -6,7 +6,9 @@ search over embedding columns (brute-force + bucketed ANN), text analysis
 multimodal binary-column plumbing. All hot paths are Catalyst expressions
 (higher-order array functions) — no per-row Python; the only Python is
 Arrow-batched ``mapInPandas`` in the multimodal decode path where a real
-deployment would call image/audio libraries.
+deployment would call image/audio libraries. Every operator that reads
+words tokenizes with ``text.words`` and builds word n-grams with
+``text.windows``/``text.grams``.
 """
 
 from .dedup import (  # noqa: F401

@@ -32,15 +32,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import truncate_lineage
+from .text import windows, words
 
 
 def _word_symbols(df: DataFrame, text_col: str) -> DataFrame:
     """(symbols, freq): the word-frequency dict with each word exploded
     to sentinel-spaced characters. One corpus shuffle, ever."""
-    words = df.select(
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("w")
-    ).filter(F.col("w") != "")
-    wf = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
+    toks = df.select(F.explode(words(text_col)).alias("w")).filter(
+        F.col("w") != ""
+    )
+    wf = toks.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
     chars = F.transform(
         F.sequence(F.lit(1), F.length("w")),
         lambda i: F.substring(F.col("w"), i, 1),
@@ -56,16 +57,7 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     word frequency. Pairs are built as array expressions in the row and
     exploded once; one groupBy shuffle on the pair."""
     toks = F.split(F.trim(F.col("syms")), " ")
-    pairs = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("l"),
-                F.element_at(toks, i + 1).alias("r"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
+    pairs = windows(toks, 2, lambda a, b: F.struct(a.alias("l"), b.alias("r")))
     return (
         words.select(F.explode(pairs).alias("p"), "freq")
         .groupBy(F.col("p.l").alias("left"), F.col("p.r").alias("right"))
@@ -175,11 +167,7 @@ def _viterbi_pieces(word: str, logp: dict, max_len: int) -> list[str]:
 def _word_freqs(df: DataFrame, text_col: str) -> DataFrame:
     """(w, freq): the plain word-frequency dict (one corpus shuffle)."""
     return (
-        df.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("w")
-        )
+        df.select(F.explode(words(text_col)).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -362,9 +350,7 @@ def unigram_segment_report(
 
     doc_words = df.select(
         F.col(id_col),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("w"),
+        F.explode(words(text_col)).alias("w"),
     ).filter(F.col("w") != "")
     dict_words = doc_words.select("w").distinct()
 
@@ -429,9 +415,7 @@ def bpe_token_counts(
         )
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("w"),
+        F.explode(words(text_col)).alias("w"),
     ).filter(F.col("w") != "")
     vocab = toks.select("w").distinct()
     chars = F.transform(

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame, truncate_lineage
+from .text import grams, words
 
 
 def tokens_col(text: Column | str, n_shingle: int = 1) -> Column:
@@ -44,15 +45,18 @@ def tokens_col(text: Column | str, n_shingle: int = 1) -> Column:
     referencing this column N times duplicates the whole tokenize tree N
     times because it is built inline (Catalyst shares only *named*
     projection outputs, not repeated subtrees)."""
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(F.lower(F.trim(c)), r"\s+")
-    if n_shingle > 1:
-        # word n-grams: positions 0 .. size-n, joined with single spaces
-        toks = F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n_shingle, F.lit(0))),
-            lambda i: F.array_join(F.slice(toks, i + 1, n_shingle), " "),
-        )
-    return F.array_distinct(toks)
+    return F.array_distinct(_shingles(words(text), n_shingle))
+
+
+def _shingles(w: Column, n_shingle: int) -> Column:
+    """Word-``n_shingle`` shingles of the word array ``w``; a document
+    shorter than ``n_shingle`` is ONE shingle of all its words, so every
+    document keeps a non-empty set for MinHash and Jaccard."""
+    if n_shingle <= 1:
+        return w
+    return F.when(F.size(w) < n_shingle, F.array(F.array_join(w, " "))).otherwise(
+        grams(w, n_shingle)
+    )
 
 
 def tokens_df(
@@ -79,18 +83,11 @@ def tokens_df(
     w = df.select(
         F.col(id_col),
         *keep,
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
+        words(text_col).alias("_w"),
     )
     if n_shingle > 1:
         w = w.select(
-            F.col(id_col),
-            *keep,
-            F.transform(
-                F.sequence(
-                    F.lit(0), F.greatest(F.size("_w") - n_shingle, F.lit(0))
-                ),
-                lambda i: F.array_join(F.slice(F.col("_w"), i + 1, n_shingle), " "),
-            ).alias("_w"),
+            F.col(id_col), *keep, _shingles(F.col("_w"), n_shingle).alias("_w")
         )
     return w.select(F.col(id_col), *keep, F.array_distinct("_w").alias(out))
 

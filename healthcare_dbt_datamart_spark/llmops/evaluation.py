@@ -40,10 +40,11 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..session import local_frame
+from .text import grams, words
 
 
 def _quantized_cells(
@@ -464,6 +465,21 @@ def scorecard_from_cells(rows: list, scale: int) -> tuple:
     )
 
 
+def _tagged_grams(w: Column | str, orders) -> Column:
+    """Every word n-gram of ``w`` for each n in ``orders``, as one
+    ``(n, g)`` struct array (``g`` space-joined): the BLEU and distinct-n
+    gram stream."""
+
+    def tag(n: int):
+        # one-arg lambda: F.transform passes the element INDEX to a
+        # second parameter, defaulted or not
+        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("g"))
+
+    return F.flatten(
+        F.array(*[F.transform(grams(w, n), tag(int(n))) for n in orders])
+    )
+
+
 def bleu_corpus(
     df: DataFrame,
     cand_col: str,
@@ -489,10 +505,11 @@ def bleu_corpus(
     standard definition — reported, never hidden, since p_n columns
     stay visible).
 
-    Tokenization: lowercase + whitespace split, applied identically to
-    both sides (BLEU parity requires one tokenizer — swap upstream if
-    you need another). Pairs with NULL on either side are EXCLUDED
-    from every sum and COUNTED in ``n_null_pairs`` (report semantics).
+    Tokenization: the repo tokenizer ``text.words`` (lowercase +
+    whitespace split), applied identically to both sides (BLEU parity
+    requires one tokenizer — swap upstream if you need another). Pairs
+    with NULL on either side are EXCLUDED from every sum and COUNTED in
+    ``n_null_pairs`` (report semantics).
 
     Scale shape: two posexplode passes (candidate and reference grams,
     all n orders tagged in one explode each) partial-agg to per-(pair,
@@ -508,13 +525,10 @@ def bleu_corpus(
         raise ValueError(f"max_n must be in [1, 6]: got {max_n!r}")
     max_n = int(max_n)
 
-    def toks(c):
-        return F.split(F.lower(F.trim(F.col(c))), r"\s+")
-
     ok = F.col(cand_col).isNotNull() & F.col(ref_col).isNotNull()
     base = df.select(
         F.col(id_col).alias("_id"), ok.alias("_ok"),
-        toks(cand_col).alias("_c"), toks(ref_col).alias("_r"),
+        words(cand_col).alias("_c"), words(ref_col).alias("_r"),
     )
     head = base.agg(
         F.count(F.lit(1)).alias("total"),
@@ -527,38 +541,13 @@ def bleu_corpus(
         raise ValueError("bleu_corpus: no non-NULL candidate/ref pairs")
     c_len, r_len = int(head.clen), int(head.rlen)
 
-    def grams(col):
-        # sequence(1, k) DESCENDS when k < 1, so clamp the upper bound
-        # to 1 and trim the bogus entry with a 0-length slice instead
-        def one_order(n):
-            k = F.size(col) - F.lit(n - 1)
-
-            # single-arg lambda: a 2-arg callable would receive the
-            # ARRAY INDEX as its second argument from F.transform
-            def mk(i, _n=int(n)):
-                return F.struct(
-                    F.lit(_n).alias("n"),
-                    F.array_join(F.slice(col, i, _n), " ").alias("g"),
-                )
-
-            return F.slice(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                    lambda i: mk(i),
-                ),
-                1,
-                F.greatest(k, F.lit(0)),
-            )
-
-        return F.flatten(
-            F.array(*[one_order(n) for n in range(1, max_n + 1)])
-        )
-
     clean = base.filter("_ok")
 
     def side_counts(col, name):
         return (
-            clean.select("_id", F.explode(grams(F.col(col))).alias("e"))
+            clean.select(
+                "_id", F.explode(_tagged_grams(col, range(1, max_n + 1))).alias("e")
+            )
             .groupBy("_id", F.col("e.n").alias("n"), F.col("e.g").alias("g"))
             .agg(F.count(F.lit(1)).alias(name))
         )
@@ -650,9 +639,10 @@ def _chrf_gram_counts(
     n_nulls = int(head.nulls or 0)
     n_pairs = int(head.total) - n_nulls
 
-    def grams(col):
-        # the bleu_corpus clamp: sequence(1, k) DESCENDS when k < 1,
-        # so clamp to 1 and trim the bogus entry with a 0-length slice
+    def char_grams(col):
+        # character n-grams, not word windows (text.windows): sequence(1,
+        # k) DESCENDS when k < 1, so clamp to 1 and trim the bogus entry
+        # with a 0-length slice
         def one_order(n):
             k = F.length(col) - F.lit(n - 1)
 
@@ -686,14 +676,14 @@ def _chrf_gram_counts(
     # BIGINT sums out — bit-identical per_n.
     tagged = F.concat(
         F.transform(
-            grams(F.col("_c")),
+            char_grams(F.col("_c")),
             lambda e: F.struct(
                 e["n"].alias("n"), e["g"].alias("g"),
                 F.lit(0).alias("s"),
             ),
         ),
         F.transform(
-            grams(F.col("_r")),
+            char_grams(F.col("_r")),
             lambda e: F.struct(
                 e["n"].alias("n"), e["g"].alias("g"),
                 F.lit(1).alias("s"),
@@ -943,26 +933,9 @@ def distinct_n(
     orders = sorted({int(n) for n in ns})
     if not orders or orders[0] < 1 or orders[-1] > 8:
         raise ValueError(f"ns must be ints in [1, 8]: got {ns!r}")
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-
-    def one_order(n):
-        k = F.size(toks) - F.lit(n - 1)
-        return F.slice(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-                lambda i: F.struct(
-                    F.lit(int(n)).alias("n"),
-                    F.array_join(F.slice(toks, i, int(n)), " ").alias("g"),
-                ),
-            ),
-            1,
-            F.greatest(k, F.lit(0)),
-        )
-
-    grams = F.flatten(F.array(*[one_order(n) for n in orders]))
     return (
         df.filter(F.col(text_col).isNotNull())
-        .select(F.explode(grams).alias("e"))
+        .select(F.explode(_tagged_grams(words(text_col), orders)).alias("e"))
         .groupBy(F.col("e.n").alias("n"), F.col("e.g").alias("g"))
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("n")

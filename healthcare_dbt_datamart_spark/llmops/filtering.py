@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..session import local_frame
-from .splits import _HEX
+from .text import grams, hex_prefix_int, windows, words
 
 # Portable regexes: character classes + \b only — no backreferences, no
 # lookaround — so Java (Spark) and RE2 (DuckDB/Go) agree on every match.
@@ -89,23 +89,9 @@ def _distinct_grams(
     unchanged (the streaming guard carries the event-time column).
     """
     keep = [F.col(id_col), *[F.col(c) for c in carry]]
-    w = df.select(
-        *keep,
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
-    )
-    mk = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("_w"), i + k) for k in range(n)]
-        ),
-    )
-    grams = w.select(
-        *keep,
-        F.when(F.size("_w") >= n, mk)
-        .otherwise(F.array().cast("array<string>"))
-        .alias("_g"),
-    )
-    return grams.select(
+    w = df.select(*keep, words(text_col).alias("_w"))
+    g = w.select(*keep, grams("_w", n).alias("_g"))
+    return g.select(
         *keep,
         F.explode(F.array_distinct("_g")).alias("_gram"),
     ).select(*keep, F.md5(F.col("_gram")).alias("gram_hash"))
@@ -191,7 +177,7 @@ def importance_weights(
         # target — left as NULL they poison c_target/t_target sums and
         # silently drop tokens from the averaged weight
         F.coalesce(target_pred.cast("int"), F.lit(0)).alias("_is_target"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.explode(words(text_col)).alias("term"),
     )
     freq = toks.groupBy("term").agg(
         F.count(F.lit(1)).alias("c_corpus"),
@@ -223,18 +209,6 @@ def importance_weights(
             (F.round(F.avg("llr"), 6) + F.lit(0.0)).alias("dsir_weight"),
         )
     )
-
-
-def _hex_prefix_int(h: Column, n_digits: int) -> Column:
-    """Integer value of the first ``n_digits`` hex chars of ``h`` —
-    engine-independent instr arithmetic (no conv()/from_hex, which
-    DuckDB/Spark spell differently), same trick as ``epoch_order``'s
-    shard bucket. n_digits=5 → 0..1048575 (20 bits)."""
-    v = F.lit(0)
-    for i in range(1, n_digits + 1):
-        d = F.call_function("instr", F.lit(_HEX), F.substring(h, i, 1))
-        v = v * 16 + (d - 1)
-    return v
 
 
 def perplexity_buckets(
@@ -272,7 +246,7 @@ def perplexity_buckets(
     toks = df.select(
         F.col(id_col),
         F.col(lang_col).alias("lang"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.explode(words(text_col)).alias("term"),
     )
     freq = toks.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("tc"))
     lang_tot = freq.groupBy("lang").agg(
@@ -314,6 +288,24 @@ def perplexity_buckets(
         .when(F.col("ppl_rank") * 3 <= F.col("_n") * 2, F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("bucket"),
+    )
+
+
+def _word_rows(frame: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    """([keep...,] w): one tokenized word array per document — the
+    n-gram LM scorers' fit and scoring input."""
+    return frame.select(*keep, words(text_col).alias("w"))
+
+
+def _gram_rows(arr: DataFrame, n: int, *keep: str) -> DataFrame:
+    """([keep...,] w1..wn): one row per word n-gram of ``_word_rows``'
+    output; a document with fewer than n words has no row."""
+
+    def gram(*ws):
+        return F.struct(*[w.alias(f"w{j + 1}") for j, w in enumerate(ws)])
+
+    return arr.select(*keep, F.explode(windows("w", n, gram)).alias("g")).select(
+        *keep, *[f"g.w{j + 1}" for j in range(n)]
     )
 
 
@@ -379,33 +371,13 @@ def bigram_interp_scores(
             "from the doc mean"
         )
 
-    def _arr(frame: DataFrame, *extra):
-        return frame.select(
-            *extra,
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("w"),
-        )
-
-    def _pairs(arr: DataFrame, *keep):
-        return arr.filter(F.size("w") >= 2).select(
-            *keep,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 1),
-                    lambda i: F.struct(
-                        F.element_at("w", i).alias("w1"),
-                        F.element_at("w", i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("p"),
-        ).select(*keep, "p.w1", "p.w2")
-
-    ref_arr = _arr(ref_df if ref_df is not None else df)
+    ref_arr = _word_rows(ref_df if ref_df is not None else df, text_col)
     ucnt = (
         ref_arr.select(F.explode("w").alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("uc"))
     )
-    bcnt = _pairs(ref_arr).groupBy("w1", "w2").agg(
+    bcnt = _gram_rows(ref_arr, 2).groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("bc")
     )
     # model-table folds — derived from the COUNT tables, never a
@@ -417,7 +389,7 @@ def bigram_interp_scores(
         .alias("n_v1")  # N + V + 1: Laplace denominator incl. OOV mass
     )
 
-    scored_pairs = _pairs(_arr(df, F.col(id_col)), F.col(id_col))
+    scored_pairs = _gram_rows(_word_rows(df, text_col, id_col), 2, id_col)
     lam_c = F.lit(float(lam))
     p_big = F.coalesce(
         F.col("bc").cast("double") / F.col("c1"), F.lit(0.0)
@@ -487,38 +459,16 @@ def trigram_interp_scores(
                 "P=0 and ln(0) NULL-drops them from the doc mean"
             )
 
-    def _arr(frame: DataFrame, *extra):
-        return frame.select(
-            *extra,
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("w"),
-        )
-
-    def _grams(arr: DataFrame, n: int, *keep):
-        return arr.filter(F.size("w") >= n).select(
-            *keep,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                    lambda i: F.struct(
-                        *[
-                            F.element_at("w", i + j).alias(f"w{j + 1}")
-                            for j in range(n)
-                        ]
-                    ),
-                )
-            ).alias("g"),
-        ).select(*keep, *[f"g.w{j + 1}" for j in range(n)])
-
-    ref_arr = _arr(ref_df if ref_df is not None else df)
+    ref_arr = _word_rows(ref_df if ref_df is not None else df, text_col)
     ucnt = (
         ref_arr.select(F.explode("w").alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("uc"))
     )
-    bcnt = _grams(ref_arr, 2).groupBy("w1", "w2").agg(
+    bcnt = _gram_rows(ref_arr, 2).groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("bc")
     )
-    tcnt = _grams(ref_arr, 3).groupBy("w1", "w2", "w3").agg(
+    tcnt = _gram_rows(ref_arr, 3).groupBy("w1", "w2", "w3").agg(
         F.count(F.lit(1)).alias("tc")
     )
     # denominators derive from the COUNT tables, never a further corpus
@@ -531,7 +481,7 @@ def trigram_interp_scores(
         .alias("n_v1")
     )
 
-    scored = _grams(_arr(df, F.col(id_col)), 3, F.col(id_col))
+    scored = _gram_rows(_word_rows(df, text_col, id_col), 3, id_col)
     l3, l2 = F.lit(float(lam3)), F.lit(float(lam2))
     p_tri = F.coalesce(F.col("tc").cast("double") / F.col("c12"), F.lit(0.0))
     p_big = F.coalesce(F.col("bc").cast("double") / F.col("c2"), F.lit(0.0))
@@ -609,28 +559,8 @@ def kn_bigram_scores(
             "NULL-drops positions), d=1 erases every observed count"
         )
 
-    def _arr(frame: DataFrame, *extra):
-        return frame.select(
-            *extra,
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("w"),
-        )
-
-    def _pairs(arr: DataFrame, *keep):
-        return arr.filter(F.size("w") >= 2).select(
-            *keep,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 1),
-                    lambda i: F.struct(
-                        F.element_at("w", i).alias("w1"),
-                        F.element_at("w", i + 1).alias("w2"),
-                    ),
-                )
-            ).alias("p"),
-        ).select(*keep, "p.w1", "p.w2")
-
-    ref_arr = _arr(ref_df if ref_df is not None else df)
-    bcnt = _pairs(ref_arr).groupBy("w1", "w2").agg(
+    ref_arr = _word_rows(ref_df if ref_df is not None else df, text_col)
+    bcnt = _gram_rows(ref_arr, 2).groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("bc")
     )
     # every denominator/count below derives from bcnt — never a further
@@ -644,7 +574,7 @@ def kn_bigram_scores(
         F.count_distinct("w2").alias("c_vocab"),
     )
 
-    scored_pairs = _pairs(_arr(df, F.col(id_col)), F.col(id_col))
+    scored_pairs = _gram_rows(_word_rows(df, text_col, id_col), 2, id_col)
     d = F.lit(float(discount))
     p_cont = (
         F.coalesce(F.col("n1p_back"), F.lit(0)) + F.lit(1)
@@ -790,7 +720,7 @@ def bloom_prefilter(
         for j in range(k_probes):
             out = out.withColumn(
                 f"_p{j}",
-                _hex_prefix_int(
+                hex_prefix_int(
                     F.substring(F.col("gram_hash"), 1 + j * n_hex, n_hex), n_hex
                 ),
             )
@@ -914,8 +844,8 @@ def epoch_order(
     )
     # shard from the key's own first four hex digits (65536 buckets — a
     # 1000-reader trainer still gets unaliased shards; no second md5) —
-    # the shared _hex_prefix_int arithmetic (one decoding formula)
-    bucket = _hex_prefix_int(key, 4)
+    # the shared text.hex_prefix_int arithmetic (one decoding formula)
+    bucket = hex_prefix_int(key, 4)
     keyed = df.select(
         F.col(id_col),
         key.alias("shuffle_key"),
@@ -967,7 +897,7 @@ def domain_mixture_weights(
     toks = df.select(
         F.col(id_col),
         F.col(domain_col).alias("domain"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.explode(words(text_col)).alias("term"),
     )
     freq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("tc"))
     total = freq.agg(F.sum("tc").cast("double").alias("total"))
@@ -1057,7 +987,7 @@ def min_k_prob(
 
     def toks(frame, with_pos):
         arr = F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
+            words(text_col),
             lambda w: w != "",
         )
         if with_pos:

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .text import words
+
 
 def pack_offsets(
     df: DataFrame,
@@ -34,7 +36,7 @@ def pack_offsets(
     toks = df.select(
         F.col(group_col),
         F.col(id_col),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("n_tokens"),
+        F.size(words(text_col)).alias("n_tokens"),
     )
     w = (
         Window.partitionBy(group_col)
@@ -74,7 +76,7 @@ def chunk_plan(
         raise ValueError("size and stride must be positive")
     toks = df.select(
         F.col(id_col),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("n_tokens"),
+        F.size(words(text_col)).alias("n_tokens"),
     )
     starts = F.sequence(F.lit(0), F.col("n_tokens") - 1, F.lit(stride))
     chunks = toks.filter(F.col("n_tokens") > 0).select(
@@ -158,7 +160,7 @@ def length_buckets(
     """
     toks = df.select(
         F.col(id_col),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("n_tokens"),
+        F.size(words(text_col)).alias("n_tokens"),
     ).withColumn("bucket", F.floor(F.col("n_tokens") / bucket_width).cast("int"))
     w = (
         Window.partitionBy("bucket")
@@ -226,9 +228,7 @@ def token_balanced_shards(
 
     toks = df.select(
         F.col(id_col),
-        F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "n_tokens"
-        ),
+        F.size(words(text_col)).alias("n_tokens"),
     )
     n = int(n_shards)
     if bucket_width is None:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
+from .text import words
+
 
 def bm25_topk(
     docs: DataFrame,
@@ -47,7 +49,7 @@ def bm25_topk(
     qterms = sorted(set(t.lower() for t in terms))
     toks = docs.select(
         F.col(id_col),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
+        words(text_col).alias("_w"),
     )
     # corpus constants: ONE row, broadcast into the scoring join;
     # doc length is a size() projection — no explode, no shuffle

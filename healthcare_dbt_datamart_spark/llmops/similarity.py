@@ -144,10 +144,13 @@ def _query_vec(
     """Fetch the query row's vector as driver floats, failing LOUDLY
     when the id is absent — the bare ``collect()[0][0]`` this replaces
     raised an opaque IndexError only after whatever index build
-    preceded it had already paid its passes over the corpus."""
-    rows = (
-        df.filter(F.col(id_col) == query_id).select(vec_col).limit(1).collect()
-    )
+    preceded it had already paid its passes over the corpus.
+
+    A plain filtered collect reads every partition in one result job.
+    A ``limit(1)`` collect reads the first partition, then the rest in a
+    further job only when the row was not there, so its job count
+    depended on which partition held the query row."""
+    rows = df.filter(F.col(id_col) == query_id).select(vec_col).collect()
     if not rows:
         raise ValueError(
             f"query_id {query_id!r} not found in {id_col} — nothing to search for"

@@ -25,12 +25,11 @@ Scale shapes:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
 from ..session import local_frame
+from .text import words
 
 
 def _h60(value: Column) -> Column:
@@ -38,17 +37,6 @@ def _h60(value: Column) -> Column:
     15 chars keep the value strictly below 2^60 < 2^63, so the conv →
     bigint round-trip is exact on both engines."""
     return F.conv(F.substring(F.md5(value), 1, 15), 16, 10).cast("bigint")
-
-
-def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """The repo-standard tokenizer (split \\s+ of lower(trim(text))) —
-    the same rule every documents oracle uses."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("term"),
-    )
 
 
 def _cms_bucket(term: Column, seed: Column, w: int) -> Column:
@@ -105,7 +93,7 @@ def cms_heavy_hitters(
     probe joins the term list against the BROADCAST d·w sketch (one
     row of grouped cells per seed via a pivot-free min over the d
     probes)."""
-    toks = _tokens(docs, text_col, id_col)
+    toks = docs.select(F.col(id_col), F.explode(words(text_col)).alias("term"))
     sketch = cms_sketch(toks, w=w, d=d)
     exact = toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact_cnt"))
     probes = exact.select(

@@ -29,10 +29,10 @@ from .dedup import (
     lsh_band_buckets,
     minhash_signatures,
 )
+from .text import hex_prefix_int
 
 TRAIN_DIGITS = tuple("0123456789ab")
 VAL_DIGITS = ("c", "d")
-_HEX = "0123456789abcdef"
 
 
 def hash_bucket256(text: Column | str) -> Column:
@@ -41,10 +41,7 @@ def hash_bucket256(text: Column | str) -> Column:
     with md5 + strpos reproduces it) — the same property the split
     assignment relies on, at 16x finer rate granularity."""
     c = F.col(text) if isinstance(text, str) else text
-    h = F.md5(c)
-    d1 = F.call_function("instr", F.lit(_HEX), F.substring(h, 1, 1))
-    d2 = F.call_function("instr", F.lit(_HEX), F.substring(h, 2, 1))
-    return (d1 - 1) * 16 + (d2 - 1)
+    return hex_prefix_int(F.md5(c), 2)
 
 
 def mixture_sample(df: DataFrame, text_col: str, rate_num: Column) -> DataFrame:

@@ -7,6 +7,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame, truncate_lineage
+from .text import grams, hex_prefix_int, words
 
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -40,7 +41,7 @@ def quality_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     w = df.select(
         F.col(id_col),
         F.length(F.col(text_col)).alias("n_chars"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
+        words(text_col).alias("_w"),
     )
     counts = w.select(
         F.col(id_col),
@@ -127,7 +128,7 @@ def langid_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     reads the named hit columns (no tokenize duplication)."""
     w = df.select(
         F.col(id_col),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
+        words(text_col).alias("_w"),
     )
     hit_df = w.select(
         F.col(id_col),
@@ -169,21 +170,10 @@ def repetition_stats(
     transform over an index sequence) — zero shuffle, scales as a scan."""
     w = df.select(
         F.col(id_col),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
+        words(text_col).alias("_w"),
     )
-    mk = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("_w"), i + k) for k in range(n)]
-        ),
-    )
-    grams = w.select(
-        F.col(id_col),
-        F.when(F.size("_w") >= n, mk).otherwise(F.array().cast("array<string>")).alias(
-            "_g"
-        ),
-    )
-    return grams.select(
+    g = w.select(F.col(id_col), grams("_w", n).alias("_g"))
+    return g.select(
         F.col(id_col),
         F.size("_g").alias("n_grams"),
         F.size(F.array_distinct("_g")).alias("n_uniq_grams"),
@@ -219,14 +209,7 @@ def _funnel_gates(
         F.col(id_col),
         F.col(group_col),
         F.col(lang_col).alias("_lang"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
-    )
-    mk3 = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at(F.col("_w"), i), F.element_at(F.col("_w"), i + 1),
-            F.element_at(F.col("_w"), i + 2)
-        ),
+        words(text_col).alias("_w"),
     )
     pred = _lang_argmax(
         {
@@ -242,7 +225,7 @@ def _funnel_gates(
         F.when(
             F.size("_w") >= 3,
             F.lit(1.0)
-            - F.size(F.array_distinct(mk3)).cast("double")
+            - F.size(F.array_distinct(grams("_w", 3))).cast("double")
             / (F.size("_w") - 2).cast("double"),
         )
         .otherwise(F.lit(0.0))
@@ -691,9 +674,7 @@ def vocab_richness(
     scale = int(scale)
     freq = (
         df.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("t")
+            F.explode(words(text_col)).alias("t")
         )
         .filter(F.col("t") != "")
         .groupBy("t")
@@ -771,9 +752,6 @@ def vocab_richness(
     )
 
 
-_HEX_T = "0123456789abcdef"
-
-
 def hashed_ngram_features(
     df: DataFrame,
     text_col: str,
@@ -789,7 +767,7 @@ def hashed_ngram_features(
 
     One explode + partial-agg groupBy to the sparse triple table
     ``(id, feat, v)`` — v is the term frequency (exact BIGINT), feat a
-    deterministic md5-prefix bucket (the ``_hex_prefix_int``
+    deterministic md5-prefix bucket (the ``text.hex_prefix_int``
     engine-independent idiom: 5 hex digits → 20 bits, reduced mod
     ``n_buckets``), so the features replay bit-for-bit in any engine.
     Collisions are fastText's own design: the bucket space, not the
@@ -801,29 +779,22 @@ def hashed_ngram_features(
         )
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_w"),
+        words(text_col).alias("_w"),
     )
-    grams = toks.select(
+    feats = toks.select(
         "id", F.explode("_w").alias("g")
     ).filter(F.col("g") != "")
     if use_bigrams:
-        bi = toks.select(
-            "id",
-            F.explode(
-                F.expr(
-                    "transform(slice(_w, 1, greatest(size(_w) - 1, 0)),"
-                    " (x, i) -> concat(x, ' ', _w[i + 1]))"
-                )
-            ).alias("g"),
-        ).filter(~F.col("g").rlike(r"(^ )|( $)|(^$)"))
-        grams = grams.unionByName(bi)
-    h = F.md5(F.col("g"))
-    v = F.lit(0)
-    for i in range(1, 6):
-        d = F.call_function("instr", F.lit(_HEX_T), F.substring(h, i, 1))
-        v = v * 16 + (d - 1)
+        # a bigram with an empty token ("" from a tab-led or empty
+        # document) has a leading or trailing space and is dropped, the
+        # unigram side's != "" rule
+        bi = toks.select("id", F.explode(grams("_w", 2)).alias("g")).filter(
+            ~F.col("g").rlike(r"(^ )|( $)|(^$)")
+        )
+        feats = feats.unionByName(bi)
+    v = hex_prefix_int(F.md5(F.col("g")), 5)
     return (
-        grams.select("id", F.pmod(v, F.lit(int(n_buckets))).alias("feat"))
+        feats.select("id", F.pmod(v, F.lit(int(n_buckets))).alias("feat"))
         .groupBy("id", "feat")
         .agg(F.count(F.lit(1)).alias("v"))
     )
@@ -1055,17 +1026,15 @@ def gopher_rules(
     (the CCNet order), and for multilingual corpora swap in a Unicode
     letter class + per-language stop lists before trusting ``keep``."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(
-        F.split(F.lower(F.trim(t)), r"\s+"), lambda w: w != ""
-    )
+    ws = F.filter(words(t), lambda w: w != "")
     lines = F.filter(
         F.split(t, "\n"), lambda ln: F.trim(ln) != ""
     )
     base = df.select(
         F.col(id_col),
-        F.size(words).cast("bigint").alias("n_words"),
+        F.size(ws).cast("bigint").alias("n_words"),
         F.aggregate(
-            words, F.lit(0).cast("bigint"),
+            ws, F.lit(0).cast("bigint"),
             lambda acc, w: acc + F.length(w).cast("bigint"),
         ).alias("n_word_chars"),
         F.size(lines).cast("bigint").alias("n_lines"),
@@ -1096,11 +1065,11 @@ def gopher_rules(
             )
         ).cast("bigint").alias("n_ellipsis_lines"),
         F.size(
-            F.filter(words, lambda w: w.rlike("[a-z]"))
+            F.filter(ws, lambda w: w.rlike("[a-z]"))
         ).cast("bigint").alias("n_alpha_words"),
         F.size(
             F.array_intersect(
-                F.array_distinct(words),
+                F.array_distinct(ws),
                 F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
             )
         ).cast("bigint").alias("n_stop_kinds"),

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..llmops.text import words
 from ..llmops.textstats import quality_classifier
 
 
@@ -54,8 +55,7 @@ def source_data_card(
     df = df.withColumn(text_col, F.coalesce(F.col(text_col), F.lit("")))
     toks = F.size(
         F.filter(
-            F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-                    r"\s+"),
+            words(F.coalesce(F.col(text_col), F.lit(""))),
             lambda w: w != "",
         )
     )

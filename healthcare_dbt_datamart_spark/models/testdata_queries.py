@@ -38,6 +38,7 @@ from ..functions import (
     split_part,
     surrogate_key,
 )
+from ..llmops.text import windows, words
 from ..session import ensure_utc, local_frame, session_cached
 from .datamart import int_claim_rollups, int_claim_status, int_member_enrollment
 from .gap_pipeline import GapParams, fct_gap_exceptions, gap_status, gap_tri_state_violations
@@ -1145,10 +1146,11 @@ def q_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream, integer register arithmetic (shift/mask/bin-length,
     no float log2), harmonic estimate + linear-counting correction.
     One row: (m, n_exact, hll_estimate, rel_error)."""
-    from ..llmops.sketches import _tokens, hll_cardinality
+    from ..llmops.sketches import hll_cardinality
 
     docs = load_spread(spark, sf_dir, "documents")
-    return hll_cardinality(_tokens(docs, "text", "doc_id"), "term", b=10)
+    toks = docs.select("doc_id", F.explode(words("text")).alias("term"))
+    return hll_cardinality(toks, "term", b=10)
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1954,7 +1956,7 @@ def q_token_budget_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source",
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("n_tokens"),
+        F.size(words("text")).alias("n_tokens"),
         F.md5("text").alias("_h"),
     )
     w = (
@@ -2437,7 +2439,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(words("text")).alias("term"),
     )
     # scalar model state folded into the plan: column-pruned count branch
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -2532,7 +2534,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_spread(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(words("text")).alias("term"),
     )
     total = toks.agg(F.count(F.lit(1)).cast("double").alias("total"))
     freq = toks.groupBy("term").agg(F.count(F.lit(1)).alias("tc"))
@@ -2637,19 +2639,11 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     table joins back twice on the word — all partial-agg shuffles on
     natural keys, no Python."""
     docs = load_spread(spark, sf_dir, "documents")
-    w = docs.select(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("w")
-    )
+    w = docs.select(words("text").alias("w"))
     uni = w.select(F.explode("w").alias("t"))
     pairs = w.select(
         F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size("w") - 1, F.lit(0))),
-                lambda i: F.struct(
-                    F.element_at("w", i).alias("a"),
-                    F.element_at("w", i + 1).alias("b"),
-                ),
-            )
+            windows("w", 2, lambda a, b: F.struct(a.alias("a"), b.alias("b")))
         ).alias("p")
     ).select("p.a", "p.b")
     n_uni = uni.agg(F.count(F.lit(1)).cast("double").alias("n_uni"))
@@ -2686,7 +2680,7 @@ def q_vocab_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     one explode + partial-agg groupBy + global rank-then-filter."""
     docs = load_spread(spark, sf_dir, "documents")
     freq = docs.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("t")
+        F.explode(words("text")).alias("t")
     ).groupBy("t").agg(F.count(F.lit(1)).alias("freq"))
     # top-k FIRST (TakeOrderedAndProject, distributed), THEN rank the 50
     # survivors — a global row_number window over the whole vocabulary
@@ -4472,7 +4466,7 @@ def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("ca"),
         (
-            (F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= 40)
+            (F.size(words("text")) >= 40)
             == (F.col("lang") == "en")
         )
         .cast("int")
@@ -4845,7 +4839,7 @@ def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select(
         F.col("n_chars").cast("double").alias("x"),
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+        F.size(words("text"))
         .cast("double")
         .alias("y"),
     )

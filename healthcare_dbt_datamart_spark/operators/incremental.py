@@ -451,8 +451,10 @@ def microbatch_backfill(
     model sees its batch bounds exactly as dbt injects
     ``__dbt_internal_microbatch_event_time_start/end`` filters; returning
     a pre-filtered frame lets predicate pushdown prune the scan per
-    batch, and the driver clamps the frame to the window regardless, so
-    an unfiltered body is still correct. Batches run SEQUENTIALLY in event-time order (dbt's default:
+    batch, and ``incremental_run``'s microbatch branch clamps the frame
+    to the window before either the first-run CTAS or the
+    delete+insert, so an unfiltered body is still correct. Batches run
+    SEQUENTIALLY in event-time order (dbt's default:
     deterministic retries, monotone progress), each batch itself fully
     distributed. Returns ``[(start, end)]`` for the run artifact.
     """
@@ -464,19 +466,10 @@ def microbatch_backfill(
         for t in (name, f"{name}__dbt_backup"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
     for b_start, b_end in batches:
-        # clamp HERE, not only in incremental_run's microbatch branch:
-        # the first batch of a fresh target goes through the plain-CTAS
-        # first-run path, which applies no window filter — an unclamped
-        # model_fn (dbt bodies may ignore their bounds) would land rows
-        # outside the requested range in that one batch
-        ev = F.col(event_time)
-        in_window = F.coalesce(
-            (ev >= F.lit(b_start)) & (ev < F.lit(b_end)), F.lit(False)
-        )
         incremental_run(
             spark,
             name,
-            model_fn(spark, b_start, b_end).filter(in_window),
+            model_fn(spark, b_start, b_end),
             strategy="microbatch",
             event_time=event_time,
             batch_start=b_start,

@@ -29,6 +29,11 @@ def _table_exists(spark: SparkSession, name: str) -> bool:
     return spark.catalog.tableExists(name)
 
 
+def _local_path(uri: str) -> str:
+    """A ``file:`` URI as a local-FS path (other paths unchanged)."""
+    return uri[5:] if uri.startswith("file:") else uri
+
+
 def _slot_path(spark: SparkSession, name: str) -> str:
     """The warehouse-slot directory the catalog would assign ``name``,
     resolved the way the catalog does: a non-default database nests under
@@ -40,11 +45,10 @@ def _slot_path(spark: SparkSession, name: str) -> str:
     else:
         db, table = spark.catalog.currentDatabase().lower(), name.lower()
     rel = table if db == "default" else f"{db}.db/{table}"
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = wh[5:] if wh.startswith("file:") else wh
     import os
 
-    return os.path.join(wh, rel)
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    return os.path.join(_local_path(wh), rel)
 
 
 def _drop_stale_location(spark: SparkSession, name: str) -> None:
@@ -238,8 +242,7 @@ def _table_location(spark: SparkSession, name: str) -> str:
     'Location' row), scheme-stripped for local-FS use."""
     for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect():
         if (r.col_name or "").strip() == "Location":
-            loc = r.data_type.strip()
-            return loc[5:] if loc.startswith("file:") else loc
+            return _local_path(r.data_type.strip())
     raise ValueError(f"no Location in DESCRIBE FORMATTED {name}")
 
 
@@ -267,8 +270,6 @@ def clone_table(
     with MSCK REPAIR, so partition pruning works on the clone. Returns the
     number of data files linked.
     """
-    import os
-
     if "." in target:
         # the SOURCE may be database-qualified (its location is read from
         # the catalog, wherever it lives — e.g. a custom-schema model
@@ -286,9 +287,7 @@ def clone_table(
     _drop_stale_location(spark, target)
 
     src_loc = _table_location(spark, source)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = wh[5:] if wh.startswith("file:") else wh
-    dst_loc = os.path.join(wh, target.lower())
+    dst_loc = _slot_path(spark, target)
 
     n_files = _link_tree(src_loc, dst_loc)
 

@@ -112,12 +112,6 @@ def read_csv(
     return lines.select(parsed.alias("d")).select("d.*")
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan (self-describing columnar; schema travels with the file —
-    same pushdown/pruning properties as parquet)."""
-    return spark.read.orc(path)
-
-
 def corrupt_records(df: DataFrame) -> DataFrame:
     """Violation rows for the load: inputs that failed the declared
     schema. Feed to ``operators.testing.run_test`` like any other test."""

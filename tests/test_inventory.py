@@ -23,7 +23,9 @@ sink run, and ``gap_pipeline.py`` ranks best evidence in one window
 ``llmops/similarity.py`` every PQ/IVFADC search sums its distance-table
 lookups in ``_adc_search``, every exact-cosine score is
 ``_cosine_score``, and the batch searches rank per query in
-``_ranked_probe``'s one window.
+``_ranked_probe``'s one window. Text has one core, ``llmops/text.py``:
+the tokenizer ``split(lower(trim(…)))``, the word-window
+``sequence(1, size …)`` and the hex alphabet are written only there.
 
 Per-call knobs those owners replaced stay out: no function takes a
 ``reliable`` (fault tolerance comes from the session's checkpoint dir)
@@ -34,6 +36,7 @@ from __future__ import annotations
 
 import ast
 import hashlib
+import re
 from pathlib import Path
 
 PACKAGE = Path(__file__).resolve().parents[1] / "healthcare_dbt_datamart_spark"
@@ -217,3 +220,41 @@ def test_per_query_rank_window_in_one_function():
         _nodes_outside("llmops/similarity.py", "_ranked_probe", query_window)
         == []
     )
+
+
+def _pattern_hits(pattern):
+    """(file, line) of every match of regex ``pattern`` in the package
+    source (matches may span lines)."""
+    rx = re.compile(pattern)
+    hits = []
+    for path, text, _ in _package_trees():
+        rel = path.relative_to(PACKAGE).as_posix()
+        hits += [(rel, text.count("\n", 0, m.start()) + 1) for m in rx.finditer(text)]
+    return hits
+
+
+def test_tokenizer_only_in_text_core():
+    hits = _pattern_hits(
+        r"(?<!\w)split\(\s*(?:F\.)?lower\(\s*(?:F\.)?trim\("
+    )
+    assert hits and {f for f, _ in hits} == {"llmops/text.py"}, hits
+
+
+def test_word_window_only_in_text_core():
+    # sequence(1, size(w) …) or sequence(0, greatest(size(w) …)): the
+    # index range of a word window, with or without a clamp
+    hits = _pattern_hits(
+        r"sequence\(\s*(?:F\.lit\(\s*)?[01]\s*\)?\s*,\s*"
+        r"(?:F\.)?(?:greatest\(\s*(?:F\.)?)?size\("
+    )
+    assert hits and {f for f, _ in hits} == {"llmops/text.py"}, hits
+
+
+def test_hex_alphabet_defined_once():
+    hits = [
+        (path.relative_to(PACKAGE).as_posix(), node.lineno)
+        for path, _, tree in _package_trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and node.value == "0123456789abcdef"
+    ]
+    assert [f for f, _ in hits] == ["llmops/text.py"], hits

@@ -1509,6 +1509,34 @@ def test_clone_table_partitioned_and_rematerialize(spark):
     assert spark.table("t_clone_bq").count() == 100
 
 
+def test_clone_table_lands_in_current_database(spark):
+    """After ``USE`` of another database, a clone links its files into
+    that database's slot, never into the same-named default-database
+    table's directory (which would grow that table and the clone)."""
+    db0 = spark.catalog.currentDatabase()
+    spark.sql("USE default")
+    try:
+        spark.sql("DROP TABLE IF EXISTS t_clone_cur")
+        mat.materialize_table(
+            spark, "t_clone_cur", spark.range(3).selectExpr("id AS k")
+        )
+        spark.sql("CREATE DATABASE IF NOT EXISTS clone_db2")
+        spark.sql("USE clone_db2")
+        for t in ("t_clone_cur_src", "t_clone_cur"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        mat.materialize_table(
+            spark, "t_clone_cur_src", spark.range(10).selectExpr("id AS k")
+        )
+        mat.clone_table(spark, "t_clone_cur_src", "t_clone_cur")
+        assert spark.table("clone_db2.t_clone_cur").count() == 10
+        assert spark.table("default.t_clone_cur").count() == 3
+        assert mat._table_location(spark, "t_clone_cur") == mat._slot_path(
+            spark, "t_clone_cur"
+        )
+    finally:
+        spark.sql(f"USE {db0}")
+
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
