@@ -8,21 +8,31 @@ frozen: ranking power (AUC), probability honesty (ECE / MCE), and the
 proper score that combines both (Brier).
 
 Exactness discipline (the repo's integral-metrics convention): scores
-are quantized ONCE to BIGINT ``scale``-units per row (``floor(s·scale
-+ 0.5)``), and every aggregate over them is an associative integer
-sum — so the rank-sum, every calibration-bin numerator, and the Brier
-numerator are bit-identical under any partitioning and replay exactly
-in DuckDB. The only floats are the final divisions on exact integer
-operands (6dp-rounded), which both engines perform identically.
+are quantized ONCE to BIGINT ``scale``-units per row by ``_fixed``
+(``floor(s·scale + 0.5)``, NULL for a NULL or NaN score), and every
+aggregate over them is an associative integer sum — so the rank-sum,
+every calibration-bin numerator, and the Brier numerator are
+bit-identical under any partitioning and replay exactly in DuckDB. The
+only floats are the final divisions on exact integer operands (6dp-
+rounded), which both engines perform identically.
+
+One board per metric. Each metric collapses the corpus to a bounded
+cell table, then reads it off that table in ONE body, per group:
+``_auc_board`` (the Mann-Whitney rank-sum), ``_calibration_board``
+(ECE / MCE / Brier) and ``_conformal_threshold`` (the conformal order
+statistic). The per-group operators are the boards themselves; the
+scalar operators run them as one group and raise where the report
+would show a NULL; the streamed twins (``streaming/evaluation.py``)
+run the same scalar readers over a sum-merged state table.
 
 Scale shapes:
 - ``roc_auc``: one pass to a (quantized-score → count, positives) cell
   table — bounded by the score's quantized support (≤ ``scale``+1
   cells for probability scores), NOT by corpus size — then the
-  Mann-Whitney rank-sum as a single ordered window over that bounded
-  table. No corpus-sized sort anywhere: the classic "sort all scores"
-  AUC becomes a vocabulary-sized problem after cell aggregation, the
-  same collapse ``bpe_train`` uses for words.
+  rank-sum as an ordered window over that bounded table. No
+  corpus-sized sort anywhere: the classic "sort all scores" AUC
+  becomes a vocabulary-sized problem after cell aggregation, the same
+  collapse ``bpe_train`` uses for words.
 - ``calibration_report`` / ``calibration_summary``: one pass to an
   (n_bins+1)-row cell table carrying integer count / positive / score
   / score² sums; ECE, MCE and Brier all derive from those bounded
@@ -47,6 +57,30 @@ from ..session import local_frame
 from .text import grams, words
 
 
+def _fixed(x: Column, scale: int) -> Column:
+    """``x`` in BIGINT ``scale``-units, half-up: ``floor(x·scale +
+    0.5)`` — the one quantizer of this module. NULL when ``x`` is NULL
+    or NaN, so callers count both as dirty: NaN passes ``isNotNull``
+    and ``floor(NaN·scale + 0.5)`` is 0 (ANSI on or off), which would
+    silently file the row at 0."""
+    return F.when(
+        ~F.isnan(x.cast("double")),
+        F.floor(x * F.lit(int(scale)) + F.lit(0.5)).cast("bigint"),
+    )
+
+
+def _rank2(order: Column | str, cnt: str, *by: str) -> Column:
+    """Twice the average rank of a tied cell of a BOUNDED cell table:
+    ``cnt`` equal ``order`` values after ``below`` smaller ones (per
+    ``by`` partition) hold ranks below+1 … below+cnt, whose doubled
+    mean ``2·below + cnt + 1`` stays an integer."""
+    w = Window.partitionBy(*by).orderBy(order).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    below = F.coalesce(F.sum(cnt).over(w), F.lit(0))
+    return F.lit(2) * below + F.col(cnt) + F.lit(1)
+
+
 def _quantized_cells(
     df: DataFrame,
     score_col: str,
@@ -60,21 +94,17 @@ def _quantized_cells(
 
     ``bad`` counts rows whose label is NULL / not in {0, 1} or whose
     score is NULL or NaN — surfaced to callers so validation needs no
-    second corpus scan. NaN must be dirty, not merely null-checked: it
-    passes ``isNotNull`` and ``floor(NaN·scale + 0.5)`` casts to 0 in
-    non-ANSI Spark, which would silently file the row under s_fp = 0."""
-    s = F.col(score_col).cast("double")
+    second corpus scan."""
     y = F.col(label_col).cast("int")
-    ok = y.isNotNull() & y.isin(0, 1) & s.isNotNull() & ~F.isnan(s)
+    s_fp = _fixed(F.col(score_col), scale)
+    ok = y.isNotNull() & y.isin(0, 1) & s_fp.isNotNull()
     keys = ([F.col(group_col).alias("grp")] if group_col else []) + [
         F.col("s_fp")
     ]
     return (
         df.select(
             *([F.col(group_col)] if group_col else []),
-            F.when(ok, F.expr(
-                f"cast(floor({score_col} * {int(scale)} + 0.5d) as bigint)"
-            )).otherwise(F.lit(None)).alias("s_fp"),
+            F.when(ok, s_fp).alias("s_fp"),
             F.when(ok, y).otherwise(F.lit(0)).alias("y"),
             (~ok).cast("bigint").alias("bad"),
         )
@@ -87,163 +117,57 @@ def _quantized_cells(
     )
 
 
-def roc_auc(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    scale: int = 10**6,
-) -> DataFrame:
-    """Exact ROC-AUC of ``score_col`` against binary ``label_col`` via
-    the Mann-Whitney rank-sum, with average ranks for ties:
+def _auc_board(cells: DataFrame) -> DataFrame:
+    """The Mann-Whitney rank-sum, per ``grp`` of a quantized cell table
+    ``(grp, s_fp, cnt, pos, bad)``: with clean cells ordered by score,
 
-        AUC = (Σ_pos rank − n_pos·(n_pos+1)/2) / (n_pos·n_neg)
-
-    computed ENTIRELY in BIGINTs on the quantized-score cell table:
-    with cells ordered by score, a tied group of size c starting after
-    ``cb`` smaller scores has twice-average-rank ``2·cb + c + 1``, so
-
-        2U = Σ_cells pos·(2·cb + c + 1) − n_pos·(n_pos+1)
+        2U  = Σ_cells pos·rank2 − n_pos·(n_pos+1)
         AUC = 2U / (2·n_pos·n_neg)
 
-    — every term integer-exact, the final division a single float op
-    on exact operands (identical in DuckDB). AUC is reported for the
-    QUANTIZED classifier: rows whose scores collide at ``scale``
-    resolution are ties by construction (at the default 10⁻⁶ this is
-    at or below any real classifier's meaningful precision; raise
-    ``scale`` when it isn't). Overflow bound: n_pos·n below ~4.6·10¹⁸.
+    with ``rank2`` the doubled tie-average rank (``_rank2``) — every
+    term integer-exact, the final division a single float op on exact
+    operands (identical in DuckDB). The window is PARTITIONED BY the
+    group over the bounded cell table, so the group key shuffles once
+    and no stage sorts corpus rows.
 
-    Two jobs, both collapsing to the bounded cell table: one
-    validation fold (n / n_pos / bad-row totals — bounded model state,
-    the ``fleiss_kappa`` pattern) and the rank-sum plan returned. The
-    ordered window runs on the BOUNDED cell table, never corpus rows.
-
-    Raises on NULL/non-binary labels, NULL scores, or a single-class
-    relation (AUC undefined). Returns one row:
-    ``(n_rows, n_pos, n_neg, n_score_cells, auc)`` (auc 6dp).
-    """
-    cells = _quantized_cells(df, score_col, label_col, int(scale))
-    tot = cells.agg(
-        F.sum("cnt").alias("n"),
-        F.sum("pos").alias("np"),
-        F.sum("bad").alias("nb"),
-    ).collect()[0]
-    n = int(tot.n or 0)
-    n_pos = int(tot.np or 0)
-    if int(tot.nb or 0) > 0:
-        raise ValueError(
-            f"roc_auc: {tot.nb} rows have NULL/NaN scores or labels outside"
-            " {0, 1} — clean the eval relation first (silent exclusion"
-            " would misreport the operating population)"
-        )
-    n_neg = n - n_pos
-    if n_pos == 0 or n_neg == 0:
-        raise ValueError(
-            f"roc_auc is undefined on a single-class relation: "
-            f"n_pos={n_pos}, n_neg={n_neg}"
-        )
-    w = (
-        Window.orderBy("s_fp")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )  # bounded cell table: single-partition sort of <= |cells| rows
-    rank2 = F.lit(2) * F.coalesce(F.sum("cnt").over(w), F.lit(0)) + F.col(
-        "cnt"
-    ) + F.lit(1)
-    return (
-        cells.select((F.col("pos") * rank2).alias("pr2"))
-        .agg(F.sum("pr2").alias("sum_pr2"), F.count(F.lit(1)).alias("n_cells"))
-        .select(
-            F.lit(n).cast("bigint").alias("n_rows"),
-            F.lit(n_pos).cast("bigint").alias("n_pos"),
-            F.lit(n_neg).cast("bigint").alias("n_neg"),
-            F.col("n_cells").cast("bigint").alias("n_score_cells"),
-            F.round(
-                # the n_pos·(n_pos+1) product is computed in exact
-                # driver Python and shipped as ONE long literal: two
-                # int literals multiplied in-plan are 32-bit and
-                # overflow under ANSI past n_pos ~ 46k (caught by the
-                # 10x scale probe)
-                (
-                    F.col("sum_pr2") - F.lit(int(n_pos) * int(n_pos + 1))
-                ).cast("double")
-                / F.lit(2.0 * n_pos * n_neg),
-                6,
-            ).alias("auc"),
-        )
-    )
-
-
-def roc_auc_by_group(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    group_col: str,
-    scale: int = 10**6,
-) -> DataFrame:
-    """Per-group ROC-AUC — the "does the quality filter rank well in
-    EVERY language/domain?" slice of ``roc_auc``, fully in-plan (no
-    driver model state): the same BIGINT rank-sum runs under a window
-    PARTITIONED BY the group, so no single-partition stage exists at
-    any group count and the group key shuffles exactly once.
-
-    Report semantics (the ``calibration_report`` convention) instead
-    of the scalar's eager guards: a group where AUC is undefined —
-    single-class, or carrying NULL/non-binary rows — keeps its row
-    with ``auc`` NULL and the ``n_pos`` / ``n_neg`` / ``n_bad``
-    counts visible, so a dirty slice can never silently vanish from a
-    data card. Dirty rows are EXCLUDED from the clean rows' ranks
-    (they cell under a NULL score key the rank window filters out).
-
-    Returns one row per group:
-    ``(group, n_rows, n_pos, n_neg, n_bad, n_score_cells, auc)``.
-    """
-    from pyspark.sql.window import Window
-
-    cells = _quantized_cells(
-        df, score_col, label_col, int(scale), group_col=group_col
-    )
-    clean = cells.filter(F.col("s_fp").isNotNull())
-    w = Window.partitionBy("grp").orderBy("s_fp").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    rank2 = (
-        F.lit(2) * F.coalesce(F.sum("cnt").over(w), F.lit(0))
-        + F.col("cnt")
-        + F.lit(1)
-    )
-    ranked = clean.select(
+    Report semantics: a group where AUC is undefined — single-class,
+    or carrying dirty (``s_fp`` NULL) cells — keeps its row with
+    ``auc`` NULL and its counts visible. Dirty rows are EXCLUDED from
+    the clean rows' ranks. Returns ``(grp, n_rows, n_pos, n_neg,
+    n_bad, n_score_cells, auc)``."""
+    clean = F.col("s_fp").isNotNull()
+    # NULLS LAST: the dirty cell sorts after every clean cell, so it
+    # never enters a clean cell's below-count
+    ranked = cells.select(
         "grp",
+        "s_fp",
         "cnt",
         "pos",
-        (F.col("pos") * rank2).alias("pr2"),
+        "bad",
+        (
+            F.col("pos")
+            * _rank2(F.col("s_fp").asc_nulls_last(), "cnt", "grp")
+        ).alias("pr2"),
     )
-    bad = cells.groupBy("grp").agg(F.sum("bad").alias("n_bad"))
-    clean_agg = ranked.groupBy("grp").agg(
-        F.sum("cnt").alias("n"),
-        F.sum("pos").alias("np"),
-        F.sum("pr2").alias("pr2"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
-    # LEFT from the bad side: a group holding ONLY dirty rows still
-    # surfaces (n_rows 0, auc NULL) instead of vanishing. NULL-safe
-    # join key: a NULL group is a legitimate slice and a plain equi-join
-    # would drop its clean aggregates (n_rows 0 despite clean rows).
-    agg = bad.alias("b").join(
-        clean_agg.alias("c"),
-        F.col("b.grp").eqNullSafe(F.col("c.grp")),
-        "left",
-    ).drop(F.col("c.grp")).select(
-        "grp",
-        F.coalesce("n", F.lit(0)).alias("n"),
-        F.coalesce("np", F.lit(0)).alias("np"),
-        F.coalesce("pr2", F.lit(0)).alias("pr2"),
-        F.coalesce("n_cells", F.lit(0)).alias("n_cells"),
-        "n_bad",
+
+    def clean_sum(c: str) -> Column:
+        return F.coalesce(F.sum(F.when(clean, F.col(c))), F.lit(0))
+
+    # one aggregate per group, dirty cell included: a group holding
+    # ONLY dirty rows still surfaces (n_rows 0, auc NULL), and a NULL
+    # group is a slice like any other
+    agg = ranked.groupBy("grp").agg(
+        clean_sum("cnt").alias("n"),
+        clean_sum("pos").alias("np"),
+        clean_sum("pr2").alias("pr2"),
+        F.count("s_fp").alias("n_cells"),
+        F.sum("bad").alias("n_bad"),
     )
     npos, n = F.col("np"), F.col("n")
     nneg = n - npos
     ok = (F.col("n_bad") == 0) & (npos > 0) & (nneg > 0)
     return agg.select(
-        F.col("grp").alias(group_col),
+        "grp",
         n.cast("bigint").alias("n_rows"),
         npos.cast("bigint").alias("n_pos"),
         nneg.cast("bigint").alias("n_neg"),
@@ -260,6 +184,90 @@ def roc_auc_by_group(
     )
 
 
+def _auc_scalar(cells: DataFrame) -> DataFrame:
+    """``roc_auc``'s read of a cell table (batch or streamed): the whole
+    table as one ``_auc_board`` group, collected (one bounded row) and
+    guarded — dirty rows and a single-class relation raise."""
+    r = next(
+        iter(_auc_board(cells.withColumn("grp", F.lit(0))).collect()), None
+    )
+    if r is not None and r.n_bad > 0:
+        raise ValueError(
+            f"roc_auc: {r.n_bad} rows have NULL/NaN scores or labels outside"
+            " {0, 1} — clean the eval relation first (silent exclusion"
+            " would misreport the operating population)"
+        )
+    n_pos, n_neg = (r.n_pos, r.n_neg) if r is not None else (0, 0)
+    if n_pos == 0 or n_neg == 0:
+        raise ValueError(
+            f"roc_auc is undefined on a single-class relation: "
+            f"n_pos={n_pos}, n_neg={n_neg}"
+        )
+    return local_frame(
+        cells.sparkSession,
+        [(r.n_rows, n_pos, n_neg, r.n_score_cells, r.auc)],
+        "n_rows bigint, n_pos bigint, n_neg bigint,"
+        " n_score_cells bigint, auc double",
+    )
+
+
+def roc_auc(
+    df: DataFrame,
+    score_col: str,
+    label_col: str,
+    scale: int = 10**6,
+) -> DataFrame:
+    """Exact ROC-AUC of ``score_col`` against binary ``label_col`` via
+    the Mann-Whitney rank-sum, with average ranks for ties:
+
+        AUC = (Σ_pos rank − n_pos·(n_pos+1)/2) / (n_pos·n_neg)
+
+    computed ENTIRELY in BIGINTs on the quantized-score cell table
+    (``_auc_board``, run as one group). AUC is reported for the
+    QUANTIZED classifier: rows whose scores collide at ``scale``
+    resolution are ties by construction (at the default 10⁻⁶ this is
+    at or below any real classifier's meaningful precision; raise
+    ``scale`` when it isn't). Overflow bound: n_pos·n below ~4.6·10¹⁸.
+
+    One corpus read: the board's row is collected (bounded model
+    state) and returned as a local frame, so the returned plan reads
+    no corpus rows.
+
+    Raises on NULL/non-binary labels, NULL/NaN scores, or a
+    single-class relation (AUC undefined). Returns one row:
+    ``(n_rows, n_pos, n_neg, n_score_cells, auc)`` (auc 6dp).
+    """
+    return _auc_scalar(_quantized_cells(df, score_col, label_col, int(scale)))
+
+
+def roc_auc_by_group(
+    df: DataFrame,
+    score_col: str,
+    label_col: str,
+    group_col: str,
+    scale: int = 10**6,
+) -> DataFrame:
+    """Per-group ROC-AUC — the "does the quality filter rank well in
+    EVERY language/domain?" slice of ``roc_auc``, fully in-plan (no
+    driver model state): ``_auc_board`` over per-group cells, so no
+    single-partition stage exists at any group count.
+
+    Report semantics (the ``calibration_report`` convention) instead
+    of the scalar's eager guards: a group where AUC is undefined —
+    single-class, or carrying NULL/non-binary rows — keeps its row
+    with ``auc`` NULL and the ``n_pos`` / ``n_neg`` / ``n_bad``
+    counts visible, so a dirty slice can never silently vanish from a
+    data card.
+
+    Returns one row per group:
+    ``(group, n_rows, n_pos, n_neg, n_bad, n_score_cells, auc)``.
+    """
+    cells = _quantized_cells(
+        df, score_col, label_col, int(scale), group_col=group_col
+    )
+    return _auc_board(cells).withColumnRenamed("grp", group_col)
+
+
 def _bin_cells(
     df: DataFrame,
     score_col: str,
@@ -272,14 +280,14 @@ def _bin_cells(
     at most ``n_bins + 1`` rows (``sy_sum`` = Σ_{y=1} quantized-score,
     the Brier cross term); per group (keyed ``grp``) when ``group_col``
     is given. Scores outside [0, 1] land in bin −1 (kept visible,
-    never silently clamped); dirty rows land in a bin NULL cell;
-    score == 1.0 belongs to the top bin. A NaN score is DIRTY (bin
-    NULL), not out-of-range: bin −1 means "a real number outside
-    [0, 1]", and NaN's quantized moments would cast to 0 in non-ANSI
-    Spark — silent corruption, the conformal_report NaN class."""
+    never silently clamped); dirty rows (NULL/NaN score, label not in
+    {0, 1}) land in a bin NULL cell; score == 1.0 belongs to the top
+    bin."""
     s = F.col(score_col).cast("double")
     y = F.col(label_col).cast("int")
-    ok = y.isNotNull() & y.isin(0, 1) & s.isNotNull() & ~F.isnan(s)
+    sq = _fixed(F.col(score_col), scale)
+    s2q = _fixed(F.col(score_col) * F.col(score_col), scale)
+    ok = y.isNotNull() & y.isin(0, 1) & sq.isNotNull()
     in_range = (s >= 0.0) & (s <= 1.0)
     bin_ = (
         F.when(~ok, F.lit(None))
@@ -290,11 +298,6 @@ def _bin_cells(
                 F.lit(int(n_bins) - 1),
             )
         )
-    )
-    sq = F.expr(f"cast(floor({score_col} * {int(scale)} + 0.5d) as bigint)")
-    s2q = F.expr(
-        f"cast(floor({score_col} * {score_col} * {int(scale)} + 0.5d)"
-        " as bigint)"
     )
     keys = ([F.col(group_col).alias("grp")] if group_col else []) + [
         F.col("bin")
@@ -371,6 +374,118 @@ def calibration_report(
     ).orderBy("bin")
 
 
+def _calibration_board(cells: DataFrame, scale: int) -> DataFrame:
+    """ECE, MCE and the Brier score per ``grp`` of a bin-cell table
+    (``_bin_cells`` keyed by ``grp``), all from BIGINT sums:
+
+        ECE   = Σ_b |s_sum_b − scale·pos_b| / (scale·N)
+        MCE   = max_b |s_sum_b − scale·pos_b| / (scale·n_b)
+        Brier = (Σs² − 2·Σ_{y=1}s + scale·n_pos) / (scale·N)
+
+    (the weighted-gap sum telescopes: n_b/N · |conf_b − acc_b| has the
+    bin count cancel, leaving pure integer numerators; Brier expands
+    (s−y)² so the one bin pass already holds every term). Each metric
+    is one float division of exact integers, rounded 6dp in-plan.
+
+    Report semantics: a group with dirty rows, out-of-range scores, or
+    no clean rows keeps its row with NULL metrics and visible
+    ``n_bad`` / ``n_oob`` counts. Returns ``(grp, n_rows, n_pos,
+    n_bad, n_oob, n_bins_used, ece, mce, brier)``."""
+    gap_num = F.abs(F.col("s_sum") - F.lit(scale) * F.col("pos"))
+
+    def clean(c: Column) -> Column:
+        return F.when(F.col("bin") >= 0, c)
+
+    # one aggregate per group, dirty and out-of-range cells included:
+    # a group with no clean bin still surfaces, and a NULL group is a
+    # slice like any other
+    agg = cells.groupBy("grp").agg(
+        F.sum(clean(F.col("n"))).alias("N"),
+        F.sum(clean(F.col("pos"))).alias("npos"),
+        F.sum(clean(gap_num)).alias("gap_sum"),
+        F.max(
+            clean(
+                gap_num.cast("double")
+                / (F.col("n") * F.lit(scale)).cast("double")
+            )
+        ).alias("mce"),
+        F.sum(clean(F.col("s2_sum"))).alias("s2"),
+        F.sum(clean(F.col("sy_sum"))).alias("sy"),
+        F.count(clean(F.lit(1))).alias("n_bins_used"),
+        F.sum("bad").alias("n_bad"),
+        F.sum(F.when(F.col("bin") == -1, F.col("n")).otherwise(0)).alias(
+            "n_oob"
+        ),
+    )
+    n_d = F.col("N").cast("double")
+    ok = (
+        (F.col("n_bad") == 0)
+        & (F.col("n_oob") == 0)
+        & F.col("N").isNotNull()
+        & (F.coalesce(F.col("N"), F.lit(0)) > 0)
+    )
+    return agg.select(
+        "grp",
+        F.coalesce(F.col("N"), F.lit(0)).cast("bigint").alias("n_rows"),
+        F.coalesce(F.col("npos"), F.lit(0)).cast("bigint").alias("n_pos"),
+        F.col("n_bad").cast("bigint").alias("n_bad"),
+        F.col("n_oob").cast("bigint").alias("n_oob"),
+        F.col("n_bins_used").cast("int").alias("n_bins_used"),
+        F.when(
+            ok,
+            F.round(
+                F.col("gap_sum").cast("double") / (n_d * F.lit(scale)), 6
+            ),
+        ).alias("ece"),
+        F.when(ok, F.round(F.col("mce"), 6)).alias("mce"),
+        F.when(
+            ok,
+            F.round(
+                (
+                    F.col("s2") - F.lit(2) * F.col("sy")
+                    + F.lit(scale) * F.col("npos")
+                ).cast("double")
+                / (n_d * F.lit(scale)),
+                6,
+            ),
+        ).alias("brier"),
+    )
+
+
+def _calibration_scalar(cells: DataFrame, scale: int) -> DataFrame:
+    """``calibration_summary``'s read of a bin-cell table (batch or
+    streamed): the whole table as one ``_calibration_board`` group,
+    collected (one bounded row) and guarded — dirty rows, out-of-range
+    scores and an empty relation raise."""
+    r = next(
+        iter(
+            _calibration_board(
+                cells.withColumn("grp", F.lit(0)), int(scale)
+            ).collect()
+        ),
+        None,
+    )
+    if r is not None and r.n_bad > 0:
+        raise ValueError(
+            f"calibration_summary: {r.n_bad} rows have NULL/NaN scores or"
+            " labels outside {0, 1} — clean the eval relation first"
+        )
+    if r is not None and r.n_oob > 0:
+        raise ValueError(
+            f"calibration_summary: {r.n_oob} scores outside [0, 1] —"
+            " calibration bins are probability bins; map scores through"
+            " a sigmoid (logreg_score already does) before grading"
+        )
+    if r is None or r.n_rows == 0:
+        raise ValueError("calibration_summary got an empty relation")
+    return local_frame(
+        cells.sparkSession,
+        [(r.n_rows, r.n_pos, r.n_bins_used, r.ece, r.mce, r.brier)],
+        "n_rows bigint, n_pos bigint, n_bins_used int, ece double,"
+        " mce double, brier double",
+    )
+
+
 def calibration_summary(
     df: DataFrame,
     score_col: str,
@@ -379,90 +494,19 @@ def calibration_summary(
     scale: int = 10**6,
 ) -> DataFrame:
     """One-row calibration scorecard: ECE, MCE and the Brier score,
-    all derived EXACTLY from the bounded bin-cell integers:
+    all derived EXACTLY from the bounded bin-cell integers
+    (``_calibration_board`` run as one group; the formulas live
+    there). The board's row is collected — bounded model state — and
+    returned as a local frame.
 
-        ECE   = Σ_b |s_sum_b − scale·pos_b| / (scale·N)
-        MCE   = max_b |s_sum_b − scale·pos_b| / (scale·n_b)
-        Brier = (Σs² − 2·Σ_{y=1}s + scale·n_pos) / (scale·N)
-
-    (the weighted-gap sum telescopes: n_b/N · |conf_b − acc_b| has the
-    bin count cancel, leaving pure integer numerators; Brier expands
-    (s−y)² so the one bin pass already holds every term). Exact
-    rational arithmetic via ``fractions`` on the collected cell
-    integers — at most ``n_bins + 1`` rows of model state — then one
-    6dp rounding per metric.
-
-    Raises on NULL/non-binary labels, NULL scores, scores outside
+    Raises on NULL/non-binary labels, NULL/NaN scores, scores outside
     [0, 1], or an empty relation. Returns
     ``(n_rows, n_pos, n_bins_used, ece, mce, brier)``.
     """
     if int(n_bins) < 2:
         raise ValueError(f"n_bins must be >= 2: got {n_bins!r}")
-    scale = int(scale)
-    rows = _bin_cells(
-        df, score_col, label_col, int(n_bins), scale
-    ).collect()  # bounded: <= n_bins + 1 cells
-    vals = scorecard_from_cells(rows, scale)
-    spark = df.sparkSession
-    return local_frame(
-        spark,
-        [vals],
-        "n_rows bigint, n_pos bigint, n_bins_used int, ece double,"
-        " mce double, brier double",
-    )
-
-
-def scorecard_from_cells(rows: list, scale: int) -> tuple:
-    """Derive the (n_rows, n_pos, n_bins_used, ece, mce, brier)
-    scorecard from collected bin-cell rows — the shared fold behind
-    ``calibration_summary`` and the STREAMED cell table
-    (``streaming.evaluation.calibration_from_cells``): cells are
-    associative integer sums, so a sum-merged table over any number of
-    micro-batches feeds the identical arithmetic. Same guards as the
-    batch path (dirty labels, out-of-range scores, empty input)."""
-    scale = int(scale)
-    n_bad = sum(int(r.bad) for r in rows)
-    if n_bad > 0:
-        raise ValueError(
-            f"calibration_summary: {n_bad} rows have NULL/NaN scores or"
-            " labels outside {0, 1} — clean the eval relation first"
-        )
-    if any(r.bin == -1 for r in rows):
-        oob = next(r for r in rows if r.bin == -1)
-        raise ValueError(
-            f"calibration_summary: {oob.n} scores outside [0, 1] —"
-            " calibration bins are probability bins; map scores through"
-            " a sigmoid (logreg_score already does) before grading"
-        )
-    n = sum(int(r.n) for r in rows)
-    if n == 0:
-        raise ValueError("calibration_summary got an empty relation")
-    n_pos = sum(int(r.pos) for r in rows)
-    ece = Fraction(
-        sum(abs(int(r.s_sum) - scale * int(r.pos)) for r in rows),
-        scale * n,
-    )
-    mce = max(
-        (
-            Fraction(abs(int(r.s_sum) - scale * int(r.pos)), scale * int(r.n))
-            for r in rows
-        ),
-        default=Fraction(0),
-    )
-    brier = Fraction(
-        sum(int(r.s2_sum) for r in rows)
-        - 2 * sum(int(r.sy_sum) for r in rows)
-        + scale * n_pos,
-        scale * n,
-    )
-    return (
-        n,
-        n_pos,
-        sum(1 for r in rows),
-        round(float(ece), 6),
-        round(float(mce), 6),
-        round(float(brier), 6),
-    )
+    cells = _bin_cells(df, score_col, label_col, int(n_bins), int(scale))
+    return _calibration_scalar(cells, int(scale))
 
 
 def _tagged_grams(w: Column | str, orders) -> Column:
@@ -977,18 +1021,17 @@ def spearman_rho(
     in the correlation. The only float is the final formula over five
     exact integers — identical in DuckDB.
 
-    Raises on NULL values (scalar semantics, the ``roc_auc`` guard),
-    fewer than 2 rows, or a zero-variance axis (ρ undefined).
+    Raises on NULL/NaN values (scalar semantics, the ``roc_auc``
+    guard), fewer than 2 rows, or a zero-variance axis (ρ undefined).
     Returns one row: ``(n_rows, n_x_cells, n_y_cells, rho)`` (6dp).
     """
     import math
 
-    from pyspark.sql.window import Window
-
     scale = int(scale)
-    qx = F.expr(f"cast(floor({x_col} * {scale} + 0.5d) as bigint)")
-    qy = F.expr(f"cast(floor({y_col} * {scale} + 0.5d) as bigint)")
-    base = df.select(qx.alias("xq"), qy.alias("yq"))
+    base = df.select(
+        _fixed(F.col(x_col), scale).alias("xq"),
+        _fixed(F.col(y_col), scale).alias("yq"),
+    )
     chk = base.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
@@ -998,25 +1041,17 @@ def spearman_rho(
     n = int(chk.n or 0)
     if int(chk.nb or 0) > 0:
         raise ValueError(
-            f"spearman_rho: {chk.nb} rows have NULL x or y — clean the"
+            f"spearman_rho: {chk.nb} rows have NULL/NaN x or y — clean the"
             " eval relation first"
         )
     if n < 2:
         raise ValueError(f"spearman_rho needs >= 2 rows: got {n}")
 
     def cell_ranks(col, out):
-        w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, -1)
         return (
             base.groupBy(col)
             .agg(F.count(F.lit(1)).alias("c"))
-            .select(
-                col,
-                (
-                    F.lit(2) * F.coalesce(F.sum("c").over(w), F.lit(0))
-                    + F.col("c")
-                    + F.lit(1)
-                ).alias(out),
-            )
+            .select(col, _rank2(col, "c").alias(out))
         )
 
     rx = cell_ranks("xq", "r_x")
@@ -1074,9 +1109,8 @@ def calibration_by_group(
     """Per-group ECE / MCE / Brier — ``calibration_summary`` sliced by
     language/domain (the ``roc_auc_by_group`` companion: a filter can
     be calibrated on average while badly over-confident on one
-    language), fully in-plan: the same integer bin cells aggregate
-    under the group key, and every metric derives from per-group
-    BIGINT sums — one shuffle on (group, bin), one on the group, no
+    language), fully in-plan: ``_calibration_board`` over per-group
+    bin cells — one shuffle on (group, bin), one on the group, no
     driver model state, no single-partition stage.
 
     Report semantics: a group with dirty labels, out-of-range scores,
@@ -1087,77 +1121,11 @@ def calibration_by_group(
     """
     if int(n_bins) < 2:
         raise ValueError(f"n_bins must be >= 2: got {n_bins!r}")
-    scale = int(scale)
     cells = _bin_cells(
-        df, score_col, label_col, int(n_bins), scale, group_col=group_col
+        df, score_col, label_col, int(n_bins), int(scale), group_col=group_col
     )
-    gap_num = F.abs(F.col("s_sum") - F.lit(scale) * F.col("pos"))
-    clean = cells.filter(F.col("bin") >= 0).select(
-        "grp",
-        "n",
-        "pos",
-        "s2_sum",
-        "sy_sum",
-        gap_num.alias("gap_num"),
-        (gap_num.cast("double") / (F.col("n") * F.lit(scale)).cast("double"))
-        .alias("mce_term"),
-    )
-    clean_agg = clean.groupBy("grp").agg(
-        F.sum("n").alias("N"),
-        F.sum("pos").alias("npos"),
-        F.sum("gap_num").alias("gap_sum"),
-        F.max("mce_term").alias("mce"),
-        F.sum("s2_sum").alias("s2"),
-        F.sum("sy_sum").alias("sy"),
-        F.count(F.lit(1)).alias("n_bins_used"),
-    )
-    side = cells.groupBy("grp").agg(
-        F.sum("bad").alias("n_bad"),
-        F.sum(F.when(F.col("bin") == -1, F.col("n")).otherwise(0)).alias(
-            "n_oob"
-        ),
-    )
-    # NULL-safe join key: a NULL group slice keeps its clean aggregates
-    # (same fix as roc_auc_by_group — NULL never equi-matches).
-    agg = side.alias("b").join(
-        clean_agg.alias("c"),
-        F.col("b.grp").eqNullSafe(F.col("c.grp")),
-        "left",
-    ).drop(F.col("c.grp"))
-    n_d = F.col("N").cast("double")
-    ok = (
-        (F.col("n_bad") == 0)
-        & (F.col("n_oob") == 0)
-        & F.col("N").isNotNull()
-        & (F.coalesce(F.col("N"), F.lit(0)) > 0)
-    )
-    return agg.select(
-        F.col("grp").alias(group_col),
-        F.coalesce(F.col("N"), F.lit(0)).cast("bigint").alias("n_rows"),
-        F.coalesce(F.col("npos"), F.lit(0)).cast("bigint").alias("n_pos"),
-        F.col("n_bad").cast("bigint").alias("n_bad"),
-        F.col("n_oob").cast("bigint").alias("n_oob"),
-        F.coalesce(F.col("n_bins_used"), F.lit(0)).cast("int").alias(
-            "n_bins_used"
-        ),
-        F.when(
-            ok,
-            F.round(
-                F.col("gap_sum").cast("double") / (n_d * F.lit(scale)), 6
-            ),
-        ).alias("ece"),
-        F.when(ok, F.round(F.col("mce"), 6)).alias("mce"),
-        F.when(
-            ok,
-            F.round(
-                (
-                    F.col("s2") - F.lit(2) * F.col("sy")
-                    + F.lit(scale) * F.col("npos")
-                ).cast("double")
-                / (n_d * F.lit(scale)),
-                6,
-            ),
-        ).alias("brier"),
+    return _calibration_board(cells, int(scale)).withColumnRenamed(
+        "grp", group_col
     )
 
 
@@ -1342,6 +1310,52 @@ def retrieval_metrics(
     )
 
 
+def _conformal_threshold(
+    cells: DataFrame, alpha: float, who: str, dirty: str
+) -> tuple[int, int, int]:
+    """The split-conformal order statistic of a quantized ``(s_fp,
+    cnt)`` calibration cell table (dirty rows in the ``s_fp`` NULL
+    cell): ``(n_cal, k, q_fp)`` with ``k = ceil((n_cal + 1)·(1 −
+    alpha))`` and ``q_fp`` the k-th smallest quantized score. ``k`` is
+    exact rational arithmetic on alpha's IEEE value (``Fraction``), so
+    the replay is deterministic; ``q_fp`` is a cumulative-count window
+    over the BOUNDED cell table, never a corpus-scale sort. Two jobs,
+    each collecting one row.
+
+    Raises, prefixed ``who``, on an alpha outside (0, 1), on dirty
+    rows (``dirty`` names them) and when k > n_cal (the conformal set
+    degenerates to "everything")."""
+    import math
+
+    if not 0.0 < float(alpha) < 1.0:
+        raise ValueError(f"alpha must be in (0, 1): got {alpha!r}")
+    tot = cells.agg(
+        F.sum(F.when(F.col("s_fp").isNull(), F.col("cnt"))).alias("nb"),
+        F.sum("cnt").alias("n"),
+    ).collect()[0]
+    if int(tot.nb or 0) > 0:
+        raise ValueError(
+            f"{who}: {tot.nb} {dirty} — the guarantee needs every"
+            " held-out score"
+        )
+    n_cal = int(tot.n or 0)
+    k = math.ceil((n_cal + 1) * (1 - Fraction(float(alpha))))
+    if k > n_cal:
+        raise ValueError(
+            f"{who}: calibration set too small for alpha={alpha!r} —"
+            f" k={k} > n_cal={n_cal}; collect at least {k} scores or"
+            " raise alpha"
+        )
+    w = Window.orderBy("s_fp").rowsBetween(Window.unboundedPreceding, 0)
+    q_fp = (
+        cells.withColumn("cum", F.sum("cnt").over(w))
+        .filter(F.col("cum") >= F.lit(k))
+        .agg(F.min("s_fp"))
+        .collect()[0][0]
+    )
+    return n_cal, int(k), int(q_fp)
+
+
 def conformal_report(
     cal: DataFrame,
     ev: DataFrame,
@@ -1366,70 +1380,30 @@ def conformal_report(
 
     Scale shape: each relation collapses in one pass to the bounded
     quantized-score cell table (the ``roc_auc`` collapse); the order
-    statistic is a cumulative-count window over the BOUNDED cell table
-    (never a corpus-scale sort), and the empirical check on the eval
-    side is two integer sums. ``k`` is evaluated in exact rational
-    arithmetic on alpha's IEEE value (``Fraction``), so the replay is
-    deterministic; the only floats out are 6dp divisions of exact
-    integers.
+    statistic is ``_conformal_threshold`` over the calibration cells,
+    and the empirical check on the eval side is two integer sums. The
+    only floats out are 6dp divisions of exact integers.
 
-    Raises on NULL scores in either relation (silent exclusion would
+    Raises on NULL/NaN scores in either relation (silent exclusion would
     shrink the calibration set and quietly weaken the guarantee) and
     when the calibration set is too small for ``alpha`` (k > n — the
     conformal set degenerates to "everything"). Returns one row:
     ``(n_cal, k, threshold, n_eval, n_covered, coverage)``."""
-    import math
-
-    if not 0.0 < float(alpha) < 1.0:
-        raise ValueError(f"alpha must be in (0, 1): got {alpha!r}")
     scale = int(scale)
 
     def _cells(df: DataFrame) -> DataFrame:
-        # NaN is a dirty score, not a quantizable one: it passes
-        # isNotNull and floor(NaN·scale + 0.5) casts to 0 in non-ANSI
-        # Spark — it would silently enter the calibration set as the
-        # minimal nonconformity score and corrupt the 1−alpha bound.
-        s = F.col(score_col).cast("double")
         return (
-            df.select(
-                F.when(
-                    s.isNotNull() & ~F.isnan(s),
-                    F.expr(
-                        f"cast(floor({score_col} * {scale} + 0.5d)"
-                        " as bigint)"
-                    ),
-                ).alias("s_fp")
-            )
+            df.select(_fixed(F.col(score_col), scale).alias("s_fp"))
             .groupBy("s_fp")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    c = _cells(cal)
-    nulls = c.filter(F.col("s_fp").isNull()).agg(
-        F.sum("cnt").alias("nb")
-    ).collect()[0]
-    if int(nulls.nb or 0) > 0:
-        raise ValueError(
-            f"conformal_report: {nulls.nb} calibration rows have a"
-            f" NULL/NaN {score_col!r} — the guarantee needs every held-out score"
-        )
-    n_cal = int(c.agg(F.sum("cnt")).collect()[0][0] or 0)
-    k = math.ceil((n_cal + 1) * (1 - Fraction(float(alpha))))
-    if k > n_cal:
-        raise ValueError(
-            f"conformal_report: calibration set too small for"
-            f" alpha={alpha!r} — k={k} > n_cal={n_cal}; collect at least"
-            f" {k} scores or raise alpha"
-        )
-    w = Window.orderBy("s_fp").rowsBetween(
-        Window.unboundedPreceding, 0
-    )  # bounded cell table: single-partition sort of <= |cells| rows
-    q_fp = int(
-        c.withColumn("cum", F.sum("cnt").over(w))
-        .filter(F.col("cum") >= F.lit(k))
-        .agg(F.min("s_fp"))
-        .collect()[0][0]
-    )  # one scalar: bounded model state
+    n_cal, k, q_fp = _conformal_threshold(
+        _cells(cal),
+        alpha,
+        "conformal_report",
+        f"calibration rows have a NULL/NaN {score_col!r}",
+    )
 
     e = _cells(ev)
     enulls = e.filter(F.col("s_fp").isNull()).agg(
@@ -1639,16 +1613,15 @@ def isotonic_apply(
     a BROADCAST nested-loop join against the |blocks|-row frame — each
     row scans the broadcast blocks inside codegen; the eval corpus
     never shuffles (the ``gap_pipeline`` J1 broadcast-relation class,
-    generalized from 1 row to a model-sized frame). Raises on NULL
+    generalized from 1 row to a model-sized frame). Raises on NULL/NaN
     scores. Output: ``df`` + ``p_cal``."""
-    from pyspark.sql.window import Window
-
-    nb = df.agg(
-        F.sum(F.col(score_col).isNull().cast("bigint")).alias("nb")
+    q = df.withColumn("_s_fp", _fixed(F.col(score_col), int(scale)))
+    nb = q.agg(
+        F.sum(F.col("_s_fp").isNull().cast("bigint")).alias("nb")
     ).collect()[0]
     if int(nb.nb or 0) > 0:
         raise ValueError(
-            f"isotonic_apply: {nb.nb} rows have a NULL {score_col!r}"
+            f"isotonic_apply: {nb.nb} rows have a NULL/NaN {score_col!r}"
         )
     w = Window.orderBy("s_fp_lo")  # bounded block table
     rng = (
@@ -1667,10 +1640,7 @@ def isotonic_apply(
         )
         .select("_lo", "_hi", "p_cal")
     )
-    s_fp = F.expr(
-        f"cast(floor({score_col} * {int(scale)} + 0.5d) as bigint)"
-    )
-    return df.withColumn("_s_fp", s_fp).join(
+    return q.join(
         F.broadcast(rng),
         (F.col("_s_fp") >= F.col("_lo")) & (F.col("_s_fp") < F.col("_hi")),
     ).drop("_s_fp", "_lo", "_hi")
@@ -1725,10 +1695,9 @@ def kendall_tau(
         F.sum(
             (
                 F.col("item").isNull()
-                | F.col("sa").isNull()
-                | F.isnan("sa")
-                | F.col("sb").isNull()
-                | F.isnan("sb")
+                # _fixed is NULL exactly on a NULL/NaN score
+                | _fixed(F.col("sa"), 1).isNull()
+                | _fixed(F.col("sb"), 1).isNull()
             ).cast("bigint")
         ).alias("nb"),
         F.count(F.lit(1)).alias("n"),

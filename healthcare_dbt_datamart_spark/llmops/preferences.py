@@ -713,9 +713,13 @@ def dawid_skene(
 
     all_rows = Window.partitionBy()
     lbl_arr = F.array(*[F.lit(x) for x in labels])
+    cut = False
     for rnd in range(int(n_iter)):
-        post = post.persist()  # consumed by priors AND confusion
-        post.count()
+        if not cut:
+            # consumed by priors AND confusion; a posterior the previous
+            # round's truncate_lineage cut is materialized already
+            post = post.persist()
+            post.count()
         # ---- M-step: priors (BIGINT sums; ≤ |labels| rows) ----------
         prior = (
             post.groupBy("k")
@@ -859,9 +863,10 @@ def dawid_skene(
                     f"cast(floor(e.score / _tot * {scale} + 0.5d) as bigint)"
                 ).alias("p"),
             )
-        new_post = truncate_lineage(new_post, rnd, n_iter, checkpoint_every)
+        cut_post = truncate_lineage(new_post, rnd, n_iter, checkpoint_every)
+        cut = cut_post is not new_post
         post.unpersist()
-        post = new_post
+        post = cut_post
 
     w = Window.partitionBy("item").orderBy(
         F.col("p").desc(), F.col("k").asc()
@@ -1655,8 +1660,8 @@ def wilson_winrate(
 
     ``rank_lb`` ranks by (ci_lo DESC, item ASC) over the item set —
     items are a leaderboard's model list (bounded), so the single
-    global window is model-state-sized, the ``scorecard_from_cells``
-    convention. Self-matches drop; NULL keys raise loudly.
+    global window is model-state-sized. Self-matches drop; NULL keys
+    raise loudly.
 
     ``n_col`` names an optional MULTIPLICITY column (a row = n identical
     decided matches — the shared pair-count-table path; integer sums are

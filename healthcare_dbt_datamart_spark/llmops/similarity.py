@@ -1472,9 +1472,9 @@ def build_ivfpq_index(
     # the CATALOG does not know about — a previous session's leftover,
     # since in-memory catalogs evaporate with their session — wedges the
     # CTAS with LOCATION_ALREADY_EXISTS forever
-    from ..operators.materialize import _drop_stale_location, _table_exists
+    from ..operators.materialize import _drop_stale_location
 
-    if not _table_exists(spark, table):
+    if not spark.catalog.tableExists(table):
         _drop_stale_location(spark, table)
     (
         ivfpq_index_rows(emb, centroids, codebooks, id_col, vec_col, residual)

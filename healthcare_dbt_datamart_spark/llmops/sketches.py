@@ -126,6 +126,29 @@ def _hll_alpha(m: int) -> float:
     return 0.7213 / (1.0 + 1.079 / m)
 
 
+def _hll_ranks(
+    df: DataFrame, value_col: str, b: int, *keep: str
+) -> DataFrame:
+    """Per row: ``keep`` columns, the HLL ``bucket`` (top ``b`` bits of
+    the 60-bit md5 hash) and ``rank`` (leading zeros of the remaining
+    60-b bits, plus one — via ``length(bin())``, integer, no float
+    log)."""
+    rem_bits = 60 - b
+    h = _h60(F.col(value_col).cast("string"))
+    hashed = df.select(
+        *keep,
+        F.shiftright(h, rem_bits).alias("bucket"),
+        h.bitwiseAND((1 << rem_bits) - 1).alias("rem"),
+    )
+    return hashed.select(
+        *keep,
+        "bucket",
+        F.when(F.col("rem") == 0, F.lit(rem_bits + 1))
+        .otherwise(F.lit(rem_bits) - F.length(F.bin(F.col("rem"))) + 1)
+        .alias("rank"),
+    )
+
+
 def hll_registers(df: DataFrame, value_col: str, b: int = 10) -> DataFrame:
     """SPARSE HyperLogLog registers: one (bucket, mj) row per OBSERVED
     bucket, mj = max(leading-zero rank). The canonical mergeable form —
@@ -134,18 +157,7 @@ def hll_registers(df: DataFrame, value_col: str, b: int = 10) -> DataFrame:
     exploits. Absent buckets mean register 0; `hll_estimate_fold` fills
     them through a generated spine at estimate time, so the sketch
     state stays ≤ 2^b rows without materializing empties."""
-    rem_bits = 60 - b
-    h = _h60(F.col(value_col).cast("string"))
-    hashed = df.select(
-        F.shiftright(h, rem_bits).alias("bucket"),
-        h.bitwiseAND((1 << rem_bits) - 1).alias("rem"),
-    )
-    ranks = hashed.select(
-        "bucket",
-        F.when(F.col("rem") == 0, F.lit(rem_bits + 1))
-        .otherwise(F.lit(rem_bits) - F.length(F.bin(F.col("rem"))) + 1)
-        .alias("rank"),
-    )
+    ranks = _hll_ranks(df, value_col, b)
     return ranks.groupBy("bucket").agg(F.max("rank").alias("mj"))
 
 
@@ -226,24 +238,14 @@ def hll_by_group(
     n_exact is the local-fixture audit column, same as the global
     query; a sketch-only deployment drops it."""
     m = 1 << b
-    rem_bits = 60 - b
-    r_max = rem_bits + 1
+    r_max = 60 - b + 1
     num = _hll_alpha(m) * m * m * float(1 << r_max)
-    h = _h60(F.col(value_col).cast("string"))
     # NULL values carry no identity: md5(NULL)=NULL would create a
     # phantom NULL-bucket register that inflates n_obs while adding
     # nothing to s_obs (and an all-NULL group would estimate NULL) —
     # drop them, matching COUNT(DISTINCT)'s NULL semantics
-    ranks = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(group_col),
-        F.shiftright(h, rem_bits).alias("bucket"),
-        h.bitwiseAND((1 << rem_bits) - 1).alias("rem"),
-    ).select(
-        group_col,
-        "bucket",
-        F.when(F.col("rem") == 0, F.lit(rem_bits + 1))
-        .otherwise(F.lit(rem_bits) - F.length(F.bin(F.col("rem"))) + 1)
-        .alias("rank"),
+    ranks = _hll_ranks(
+        df.filter(F.col(value_col).isNotNull()), value_col, b, group_col
     )
     folded = (
         ranks.groupBy(group_col, "bucket")

@@ -35,7 +35,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .materialize import materialize_table
+from .materialize import materialize_table, recover_swap
 
 
 def is_incremental(spark: SparkSession, name: str, full_refresh: bool = False) -> bool:
@@ -43,21 +43,6 @@ def is_incremental(spark: SparkSession, name: str, full_refresh: bool = False) -
     missing because a previous run died mid-swap is restored from its
     backup before answering."""
     return recover_swap(spark, name) and not full_refresh
-
-
-def recover_swap(spark: SparkSession, name: str) -> bool:
-    """If a crash mid-``materialize_table`` swap left no target, promote
-    the backup — the swap never completed, so the pre-swap contents are
-    the correct durable state. Returns whether the target exists after
-    recovery."""
-    if spark.catalog.tableExists(name):
-        return True
-    backup = f"{name}__dbt_backup"
-    if spark.catalog.tableExists(backup):
-        spark.sql(f"ALTER TABLE {backup} RENAME TO {name}")
-        spark.catalog.refreshTable(name)
-        return True
-    return False
 
 
 def _key_cols(unique_key: str | list[str]) -> list[str]:

@@ -25,8 +25,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _table_exists(spark: SparkSession, name: str) -> bool:
-    return spark.catalog.tableExists(name)
+def recover_swap(spark: SparkSession, name: str) -> bool:
+    """If a crash mid-``materialize_table`` swap left no target, promote
+    the backup — the swap never completed, so the pre-swap contents are
+    the correct durable state. Returns whether the target exists after
+    recovery."""
+    if spark.catalog.tableExists(name):
+        return True
+    backup = f"{name}__dbt_backup"
+    if spark.catalog.tableExists(backup):
+        spark.sql(f"ALTER TABLE {backup} RENAME TO {name}")
+        spark.catalog.refreshTable(name)
+        return True
+    return False
 
 
 def _local_path(uri: str) -> str:
@@ -145,42 +156,37 @@ def materialize_table(
         # dir the CATALOG does not know about (a previous session's
         # leftover — in-memory catalogs evaporate with their session)
         # would wedge the CTAS with LOCATION_ALREADY_EXISTS forever.
-        if not _table_exists(spark, name):
+        if not spark.catalog.tableExists(name):
             _drop_stale_location(spark, name)
         writer.partitionBy(*partition_by).saveAsTable(name)
         return
     import os.path
 
     tmp, backup = f"{name}__dbt_tmp", f"{name}__dbt_backup"
-    if not _table_exists(spark, name) and _table_exists(spark, backup):
-        # a crash landed between `name RENAME TO backup` and
-        # `tmp RENAME TO name`: the backup is the ONLY surviving copy of
-        # the table — promote it (the recover_swap rule), never drop it;
-        # the rebuild below then swaps against the restored target
-        spark.sql(f"ALTER TABLE {backup} RENAME TO {name}")
-        spark.catalog.refreshTable(name)
+    # a crash between `name RENAME TO backup` and `tmp RENAME TO name`
+    # leaves the backup as the ONLY surviving copy of the table: promote
+    # it, never drop it; the rebuild below then swaps against it
+    exists = recover_swap(spark, name)
     # a promoted EXTERNAL backup keeps reading the backup SLOT directory
     # (catalog renames don't move external files) — never clear a slot a
     # live table still reads
     protected = (
-        {os.path.normpath(_table_location(spark, name))}
-        if _table_exists(spark, name)
-        else set()
+        {os.path.normpath(_table_location(spark, name))} if exists else set()
     )
     for t in (tmp, backup):
-        if _table_exists(spark, t):  # crashed mid-swap with live catalog
+        if spark.catalog.tableExists(t):  # crashed mid-swap, live catalog
             spark.sql(f"DROP TABLE {t}")
         if os.path.normpath(_slot_path(spark, t)) not in protected:
             _drop_stale_location(spark, t)  # stale dir / ex-EXTERNAL files
     writer.saveAsTable(tmp)
-    if _table_exists(spark, name):
+    if spark.catalog.tableExists(name):
         # backup-rename-drop, NOT drop-then-rename: the old target is
         # never dropped before the new table holds its name, so a crash
         # at any point leaves either the target or {name}__dbt_backup in
-        # the catalog and incremental.recover_swap restores it — a
-        # DROP/RENAME window would silently lose the whole table (this
-        # path rebuilds incremental and snapshot targets and every
-        # streaming state table too)
+        # the catalog and recover_swap restores it — a DROP/RENAME
+        # window would silently lose the whole table (this path rebuilds
+        # incremental and snapshot targets and every streaming state
+        # table too)
         spark.sql(f"ALTER TABLE {name} RENAME TO {backup}")
         # a MANAGED rename moved its directory out of the name slot; an
         # EXTERNAL old target (e.g. a clone target parked at the slot)
@@ -280,7 +286,7 @@ def clone_table(
             " scope): the warehouse-slot layout this clone manages is"
             " per-database"
         )
-    if _table_exists(spark, target):
+    if spark.catalog.tableExists(target):
         if not replace:
             raise ValueError(f"clone target {target!r} exists (replace=False)")
         spark.sql(f"DROP TABLE {target}")

@@ -107,7 +107,7 @@ def snapshot_run(
     else:
         raise ValueError(f"unknown snapshot strategy: {strategy}")
 
-    from .incremental import recover_swap
+    from .materialize import recover_swap
 
     if not recover_swap(spark, name):
         # SN5 first-run build (helpers.sql:216-231): all rows current.

@@ -221,7 +221,8 @@ def microbatch_stream(
     watermark bounds the batch's event-time span, so the period count is
     span/period, never data-sized.
     """
-    from ..operators.incremental import incremental_run, recover_swap
+    from ..operators.incremental import incremental_run
+    from ..operators.materialize import recover_swap
     from pyspark.sql import functions as F
 
     stream = source_stream.withWatermark(event_time, watermark_delay)

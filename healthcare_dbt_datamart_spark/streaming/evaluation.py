@@ -1,10 +1,16 @@
 """Streaming classifier-evaluation maintenance — the streaming face of
-``llmops/evaluation.py``'s calibration cells, following the
-``streaming/sketches.py`` twin pattern: the bin-cell table is a set of
+``llmops/evaluation.py``'s cell tables, following the
+``streaming/sketches.py`` twin pattern: every cell table is a set of
 ASSOCIATIVE BIGINT sums, so a continuously-scored feed (a quality
-filter running on live ingest) maintains its calibration scorecard by
+filter running on live ingest) maintains its scorecards by
 sum-merging each micro-batch's bounded cells into a persistent table —
-no history replay, state bounded by ``n_bins + 1`` rows forever.
+no history replay, state bounded by the cell count forever.
+
+The ``*_from_cells`` readers hold no arithmetic of their own: AUC,
+calibration and the conformal threshold run the batch operators'
+readers (``_auc_scalar``, ``_calibration_scalar``,
+``_conformal_threshold``) over the state table, so a streamed number
+cannot drift from its batch twin.
 
 Every sink here is a sum-merge, so every one keeps the exactly-once
 ledger of ``streaming/state.py::merge_state`` (which also recovers a
@@ -158,45 +164,15 @@ def auc_from_cells(
     spark: SparkSession,
     target_table: str,
 ) -> DataFrame:
-    """One-row exact AUC from a streamed cell table — the ``roc_auc``
-    arithmetic (tie-aware BIGINT rank-sum, one float division on exact
-    operands) folded in driver Python over the collected cells (bounded
-    by the ingest ``scale``). Same guards as the batch operator: dirty
-    rows and single-class relations raise."""
-    rows = (
-        spark.table(target_table)
-        .filter(F.col("kind") == "cell")
-        .collect()
-    )
-    n_bad = sum(int(r.bad) for r in rows)
-    if n_bad > 0:
-        raise ValueError(
-            f"roc_auc: {n_bad} rows have NULL/NaN scores or labels outside"
-            " {0, 1} — clean the eval relation first (silent exclusion"
-            " would misreport the operating population)"
-        )
-    clean = sorted(
-        ((int(r.s_fp), int(r.cnt), int(r.pos)) for r in rows),
-        key=lambda t: t[0],
-    )
-    n = sum(c for _, c, _ in clean)
-    n_pos = sum(p for _, _, p in clean)
-    n_neg = n - n_pos
-    if n_pos == 0 or n_neg == 0:
-        raise ValueError(
-            f"roc_auc is undefined on a single-class relation: "
-            f"n_pos={n_pos}, n_neg={n_neg}"
-        )
-    pr2, below = 0, 0
-    for _, cnt, pos in clean:
-        pr2 += pos * (2 * below + cnt + 1)
-        below += cnt
-    auc = round((pr2 - n_pos * (n_pos + 1)) / (2.0 * n_pos * n_neg), 6)
-    return local_frame(
-        spark,
-        [(n, n_pos, n_neg, len(clean), auc)],
-        "n_rows bigint, n_pos bigint, n_neg bigint,"
-        " n_score_cells bigint, auc double",
+    """One-row exact AUC from a streamed cell table — ``roc_auc``'s own
+    reader (``llmops.evaluation._auc_scalar``, the rank-sum board run
+    as one group) over the state table's cells, so the numbers and the
+    guards are the batch operator's: dirty rows and single-class
+    relations raise."""
+    from ..llmops.evaluation import _auc_scalar
+
+    return _auc_scalar(
+        spark.table(target_table).filter(F.col("kind") == "cell")
     )
 
 
@@ -206,25 +182,16 @@ def calibration_from_cells(
     scale: int = 10**6,
 ) -> DataFrame:
     """One-row ECE / MCE / Brier scorecard from a streamed cell table —
-    the exact ``calibration_summary`` arithmetic (shared
-    ``scorecard_from_cells`` fold) over the merged cells, meta row
-    excluded. Collecting the table is bounded: ≤ n_bins + 2 rows."""
-    from ..llmops.evaluation import scorecard_from_cells
+    ``calibration_summary``'s own reader (``llmops.evaluation.
+    _calibration_scalar``) over the merged cells, meta row excluded."""
+    from ..llmops.evaluation import _calibration_scalar
 
-    rows = (
-        spark.table(target_table)
-        # NULL-safe: keep the NULL-bin dirty cell so the fold raises on
-        # dirty input exactly like the batch path (parity guarantee)
-        .filter(~F.col("bin").eqNullSafe(F.lit(_META_BIN)))
-        .collect()
+    cells = spark.table(target_table).filter(
+        # NULL-safe: keep the NULL-bin dirty cell so the reader raises
+        # on dirty input exactly like the batch path (parity guarantee)
+        ~F.col("bin").eqNullSafe(F.lit(_META_BIN))
     )
-    vals = scorecard_from_cells(rows, int(scale))
-    return local_frame(
-        spark,
-        [vals],
-        "n_rows bigint, n_pos bigint, n_bins_used int, ece double,"
-        " mce double, brier double",
-    )
+    return _calibration_scalar(cells, int(scale))
 
 
 def conformal_from_cells(
@@ -236,49 +203,23 @@ def conformal_from_cells(
     """Live split-conformal threshold from a streamed score-cell table
     (``streaming_auc_ingest``'s (s_fp, cnt) state — labels ride along
     unused; a label-free calibration feed can ingest with a constant
-    label): the ``llmops.evaluation.conformal_report`` order-statistic
-    arithmetic folded over the collected bounded cells, so the
-    monitor's threshold is IDENTICAL to the batch operator's at the
+    label): ``llmops.evaluation.conformal_report``'s own threshold
+    fold (``_conformal_threshold``) over the state table's cells, so
+    the monitor's threshold is IDENTICAL to the batch operator's at the
     same ingest ``scale``. Dirty rows raise like the batch path (a
     silently shrunk calibration set quietly weakens the guarantee).
     Returns one row: ``(n_cal, k, threshold)``."""
-    import math
-    from fractions import Fraction
+    from ..llmops.evaluation import _conformal_threshold
 
-    if not 0.0 < float(alpha) < 1.0:
-        raise ValueError(f"alpha must be in (0, 1): got {alpha!r}")
-    rows = (
-        spark.table(target_table)
-        .filter(F.col("kind") == "cell")
-        .collect()
+    n_cal, k, q_fp = _conformal_threshold(
+        spark.table(target_table).filter(F.col("kind") == "cell"),
+        alpha,
+        "conformal_from_cells",
+        "ingested rows had NULL scores",
     )
-    n_bad = sum(int(r.bad) for r in rows if r.s_fp is None)
-    if n_bad > 0:
-        raise ValueError(
-            f"conformal_from_cells: {n_bad} ingested rows had NULL"
-            " scores — the guarantee needs every held-out score"
-        )
-    clean = sorted(
-        ((int(r.s_fp), int(r.cnt)) for r in rows if r.s_fp is not None),
-        key=lambda t: t[0],
-    )
-    n_cal = sum(c for _, c in clean)
-    k = math.ceil((n_cal + 1) * (1 - Fraction(float(alpha))))
-    if k > n_cal:
-        raise ValueError(
-            f"conformal_from_cells: calibration set too small for"
-            f" alpha={alpha!r} — k={k} > n_cal={n_cal}"
-        )
-    cum = 0
-    q_fp = None
-    for s_fp, cnt in clean:
-        cum += cnt
-        if cum >= k:
-            q_fp = s_fp
-            break
     return local_frame(
         spark,
-        [(n_cal, int(k), round(q_fp / int(scale), 6))],
+        [(n_cal, k, round(q_fp / int(scale), 6))],
         "n_cal bigint, k bigint, threshold double",
     )
 

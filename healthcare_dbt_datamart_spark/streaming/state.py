@@ -63,8 +63,7 @@ def merge_state(
     ``None`` before the first batch) to the new data rows; ``schema``
     is the table's DDL, required with a ``ledger``. Returns whether the
     batch was applied (``False`` for a replayed batch id)."""
-    from ..operators.incremental import recover_swap
-    from ..operators.materialize import materialize_table
+    from ..operators.materialize import materialize_table, recover_swap
 
     current = spark.table(table) if recover_swap(spark, table) else None
     if ledger is not None and current is not None:

@@ -1882,6 +1882,38 @@ def test_nan_scores_are_dirty_rows_everywhere(spark):
         isotonic_calibration(dirty, "s", "y")
 
 
+def test_spearman_rho_raises_on_nan(spark):
+    """A NaN x is a dirty row, not a value quantized to 0 (which gave
+    rho = -0.2 on this frame)."""
+    from healthcare_dbt_datamart_spark.llmops.evaluation import spearman_rho
+
+    df = spark.createDataFrame(
+        [(float("nan"), 1.0), (0.2, 2.0), (0.3, 3.0), (0.4, 4.0)],
+        "x double, y double",
+    )
+    with pytest.raises(ValueError, match="1 rows have NULL/NaN x or y"):
+        spearman_rho(df, "x", "y")
+
+
+def test_isotonic_apply_raises_on_nan(spark):
+    """A NaN score is a dirty row, not a score quantized to 0 (which
+    took the first block's p_cal)."""
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        isotonic_apply,
+        isotonic_calibration,
+    )
+
+    fit = spark.createDataFrame(
+        [(0.1, 0), (0.4, 0), (0.6, 1), (0.9, 1)], "score double, label int"
+    )
+    blocks = isotonic_calibration(fit, "score", "label")
+    ev = spark.createDataFrame(
+        [(1, float("nan")), (2, 0.5)], "rid long, score double"
+    )
+    with pytest.raises(ValueError, match="1 rows have a NULL/NaN 'score'"):
+        isotonic_apply(ev, "score", blocks)
+
+
 def test_kendall_tau_known_values_replay_and_guards(spark):
     """Kendall tau-b: perfect agreement = 1, perfect inversion = −1,
     the scipy-documented tie example matches the hand formula, a

@@ -26,6 +26,11 @@ lookups in ``_adc_search``, every exact-cosine score is
 ``_ranked_probe``'s one window. Text has one core, ``llmops/text.py``:
 the tokenizer ``split(lower(trim(…)))``, the word-window
 ``sequence(1, size …)`` and the hex alphabet are written only there.
+In the evaluation modules every score quantizes through
+``evaluation._fixed`` (the half-up ``floor`` and the NaN rule), the
+tie-average rank term ``2·below + cnt + 1`` lives only in
+``evaluation._rank2``, and the streamed readers hold no metric
+arithmetic of their own.
 
 Per-call knobs those owners replaced stay out: no function takes a
 ``reliable`` (fault tolerance comes from the session's checkpoint dir)
@@ -258,3 +263,59 @@ def test_hex_alphabet_defined_once():
         if isinstance(node, ast.Constant) and node.value == "0123456789abcdef"
     ]
     assert [f for f, _ in hits] == ["llmops/text.py"], hits
+
+
+def test_quantizer_and_nan_rule_only_in_fixed():
+    # floor(x·scale + 0.5) as a column expression or as SQL text, and
+    # any isnan
+    def half_up_or_nan(node):
+        return (
+            _call_to(node, "isnan")
+            or isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "0.5d" in node.value
+            or _call_to(node, "floor")
+            and isinstance(node.func, ast.Attribute)
+            and getattr(node.func.value, "id", None) == "F"
+            and isinstance(node.args[0], ast.BinOp)
+            and isinstance(node.args[0].op, ast.Add)
+        )
+
+    assert (
+        _nodes_outside("llmops/evaluation.py", "_fixed", half_up_or_nan) == []
+    )
+
+
+def _is_int(node, value):
+    """``value`` as a literal or as ``F.lit(value)``."""
+    if _call_to(node, "lit"):
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == value
+
+
+def test_rank_sum_term_in_one_function():
+    # 2·below + cnt + 1, in Spark columns or in driver Python
+    def twice_rank(node):
+        return (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Add)
+            and _is_int(node.right, 1)
+            and isinstance(node.left, ast.BinOp)
+            and isinstance(node.left.op, ast.Add)
+            and isinstance(node.left.left, ast.BinOp)
+            and isinstance(node.left.left.op, ast.Mult)
+            and _is_int(node.left.left.left, 2)
+        )
+
+    owners = {
+        (module, fn.name)
+        for module in ("llmops/evaluation.py", "streaming/evaluation.py")
+        for fn in ast.parse((PACKAGE / module).read_text()).body
+        if isinstance(fn, ast.FunctionDef)
+        and any(twice_rank(node) for node in ast.walk(fn))
+    }
+    assert owners == {("llmops/evaluation.py", "_rank2")}, owners
+
+
+def test_streamed_readers_hold_no_scorecard_fold():
+    assert _pattern_hits(r"scorecard_from_cells") == []
