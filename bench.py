@@ -1,7 +1,10 @@
 """Benchmark harness: runs every driver-facing query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "warmup_sec": ..., "jit_compile_s": ...,
+"jvm_args": [...]}. ``jit_compile_s`` is the JVM's total JIT compile time
+over the whole run (warmup included) and ``jvm_args`` its launch options,
+so a run shows the compiler policy it ran under and what it cost.
 
 Each query is forced end-to-end with the noop sink (full execution, no
 driver collect). A warmup query initializes the JVM/codegen so timings
@@ -83,6 +86,9 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
 
     total = round(sum(timings.values()), 3)
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    jit_compile_s = mf.getCompilationMXBean().getTotalCompilationTime() / 1000
+    jvm_args = list(mf.getRuntimeMXBean().getInputArguments())
     print(json.dumps({
         "metric": "total_query_wall_sec",
         "value": total,
@@ -90,6 +96,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "warmup_sec": warmup_sec,
+        "jit_compile_s": jit_compile_s,
+        "jvm_args": jvm_args,
     }))
 
 

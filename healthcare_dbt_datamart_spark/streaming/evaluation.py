@@ -202,12 +202,14 @@ def conformal_from_cells(
 ) -> DataFrame:
     """Live split-conformal threshold from a streamed score-cell table
     (``streaming_auc_ingest``'s (s_fp, cnt) state — labels ride along
-    unused; a label-free calibration feed can ingest with a constant
-    label): ``llmops.evaluation.conformal_report``'s own threshold
+    unused): ``llmops.evaluation.conformal_report``'s own threshold
     fold (``_conformal_threshold``) over the state table's cells, so
     the monitor's threshold is IDENTICAL to the batch operator's at the
     same ingest ``scale``. Dirty rows raise like the batch path (a
-    silently shrunk calibration set quietly weakens the guarantee).
+    silently shrunk calibration set quietly weakens the guarantee). The
+    ingest files a row as dirty when its score is NULL/NaN OR its label
+    is NULL or outside {0, 1}, so a label-free calibration feed must
+    ingest a constant 0/1 label: a NULL label is dirty.
     Returns one row: ``(n_cal, k, threshold)``."""
     from ..llmops.evaluation import _conformal_threshold
 
@@ -215,7 +217,8 @@ def conformal_from_cells(
         spark.table(target_table).filter(F.col("kind") == "cell"),
         alpha,
         "conformal_from_cells",
-        "ingested rows had NULL scores",
+        "ingested rows had a NULL/NaN score or a label that is NULL or"
+        " not 0/1",
     )
     return local_frame(
         spark,

@@ -3481,6 +3481,35 @@ def test_conformal_from_cells_matches_batch(spark):
         conformal_from_cells(spark, "conf_cells_t", alpha=0.2)
 
 
+def test_conformal_from_cells_null_label_is_dirty(spark):
+    """A valid score with a NULL label lands in the dirty cell too, and
+    the raise names the label as a cause, not only NULL scores: a
+    label-free feed must ingest a constant 0/1 label."""
+    import pytest
+
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        _quantized_cells,
+    )
+    from healthcare_dbt_datamart_spark.streaming.evaluation import (
+        auc_cells_merge_batch,
+        conformal_from_cells,
+    )
+
+    df = spark.createDataFrame(
+        [(i / 300.0, None) for i in range(300)], "score double, label int"
+    )
+    spark.sql("DROP TABLE IF EXISTS conf_nolabel_t")
+    auc_cells_merge_batch(
+        spark,
+        "conf_nolabel_t",
+        _quantized_cells(df, "score", "label", 10**4),
+        0,
+    )
+    with pytest.raises(ValueError, match="label") as err:
+        conformal_from_cells(spark, "conf_nolabel_t", alpha=0.2)
+    assert "300 ingested rows" in str(err.value)
+
+
 def test_wilson_from_streamed_pair_counts_matches_batch(spark):
     """The Wilson board re-derived from the streamed pair-count state
     equals wilson_winrate over the raw outcomes field-for-field — the
