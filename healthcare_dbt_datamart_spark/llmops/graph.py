@@ -32,9 +32,11 @@ graphs.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import local_frame, truncate_lineage
+from ..session import local_frame, pinned, truncate_lineage
 
 
 def undirected_edges(pairs: DataFrame) -> DataFrame:
@@ -85,49 +87,46 @@ def hits_fixedpoint(
     (kept in the output via the node universe, never dropped). Raises
     on an empty edge list. Returns ``(id, hub_fp, auth_fp)``.
     """
-    e = edges.select("src", "dst").persist()
-    if e.count() == 0:
-        e.unpersist()
-        raise ValueError("hits_fixedpoint got an empty edge list")
-    # every src earns a hub row and every dst an auth row each round,
-    # so hubs ⋈full auth covers the whole node universe at the end
-    hubs = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .select("id", F.lit(int(scale)).cast("long").alias("h"))
-    )
-    auth = None
-    for rnd in range(int(n_iter)):
-        a_raw = (
-            e.join(hubs, e["src"] == hubs["id"])
-            .groupBy("dst")
-            .agg(F.sum("h").alias("s"))
+    with pinned(edges.select("src", "dst")) as e:
+        if e.count() == 0:
+            raise ValueError("hits_fixedpoint got an empty edge list")
+        # every src earns a hub row and every dst an auth row each round,
+        # so hubs ⋈full auth covers the whole node universe at the end
+        hubs = (
+            e.select(F.col("src").alias("id"))
+            .unionAll(e.select(F.col("dst").alias("id")))
+            .distinct()
+            .select("id", F.lit(int(scale)).cast("long").alias("h"))
         )
-        mxa = int(a_raw.agg(F.max("s")).collect()[0][0])
-        auth = a_raw.select(
-            F.col("dst").alias("id"),
-            F.expr(f"(s * {int(scale)}) div {mxa}").alias("a"),
+        auth = None
+        for rnd in range(int(n_iter)):
+            a_raw = (
+                e.join(hubs, e["src"] == hubs["id"])
+                .groupBy("dst")
+                .agg(F.sum("h").alias("s"))
+            )
+            mxa = int(a_raw.agg(F.max("s")).collect()[0][0])
+            auth = a_raw.select(
+                F.col("dst").alias("id"),
+                F.expr(f"(s * {int(scale)}) div {mxa}").alias("a"),
+            )
+            auth = truncate_lineage(auth, rnd, n_iter, checkpoint_every)
+            h_raw = (
+                e.join(auth, e["dst"] == auth["id"])
+                .groupBy("src")
+                .agg(F.sum("a").alias("s"))
+            )
+            mxh = int(h_raw.agg(F.max("s")).collect()[0][0])
+            hubs = h_raw.select(
+                F.col("src").alias("id"),
+                F.expr(f"(s * {int(scale)}) div {mxh}").alias("h"),
+            )
+            hubs = truncate_lineage(hubs, rnd, n_iter, checkpoint_every)
+        return hubs.join(auth, "id", "full").select(
+            "id",
+            F.coalesce(F.col("h"), F.lit(0)).alias("hub_fp"),
+            F.coalesce(F.col("a"), F.lit(0)).alias("auth_fp"),
         )
-        auth = truncate_lineage(auth, rnd, n_iter, checkpoint_every)
-        h_raw = (
-            e.join(auth, e["dst"] == auth["id"])
-            .groupBy("src")
-            .agg(F.sum("a").alias("s"))
-        )
-        mxh = int(h_raw.agg(F.max("s")).collect()[0][0])
-        hubs = h_raw.select(
-            F.col("src").alias("id"),
-            F.expr(f"(s * {int(scale)}) div {mxh}").alias("h"),
-        )
-        hubs = truncate_lineage(hubs, rnd, n_iter, checkpoint_every)
-    out = hubs.join(auth, "id", "full").select(
-        "id",
-        F.coalesce(F.col("h"), F.lit(0)).alias("hub_fp"),
-        F.coalesce(F.col("a"), F.lit(0)).alias("auth_fp"),
-    )
-    e.unpersist()
-    return out
 
 
 def pagerank_fixedpoint(
@@ -149,27 +148,26 @@ def pagerank_fixedpoint(
                        + damping_pct * sum(contrib)) div 100
     """
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # loop-invariant: every round re-reads edge+degree, never recomputes
-    pre = edges.join(deg, "src").persist()
-    pre.count()
     ranks = deg.select(
         F.col("src").alias("id"), F.lit(scale).cast("long").alias("r")
     )
     teleport = (100 - damping_pct) * scale
-    for rnd in range(n_iter):
-        contribs = (
-            pre.join(ranks, pre["src"] == ranks["id"])
-            .select("dst", F.expr("r div deg").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
-        )
-        ranks = contribs.select(
-            F.col("dst").alias("id"),
-            F.expr(f"({teleport} + {damping_pct} * s) div 100").alias("r"),
-        )
-        ranks = truncate_lineage(ranks, rnd, n_iter, checkpoint_every)
-    pre.unpersist()
-    return ranks.select("id", F.col("r").alias("rank_fp"))
+    # loop-invariant: every round re-reads edge+degree, never recomputes
+    with pinned(edges.join(deg, "src")) as pre:
+        pre.count()
+        for rnd in range(n_iter):
+            contribs = (
+                pre.join(ranks, pre["src"] == ranks["id"])
+                .select("dst", F.expr("r div deg").alias("contrib"))
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("s"))
+            )
+            ranks = contribs.select(
+                F.col("dst").alias("id"),
+                F.expr(f"({teleport} + {damping_pct} * s) div 100").alias("r"),
+            )
+            ranks = truncate_lineage(ranks, rnd, n_iter, checkpoint_every)
+        return ranks.select("id", F.col("r").alias("rank_fp"))
 
 
 def personalized_pagerank(
@@ -231,101 +229,103 @@ def personalized_pagerank(
     # persist the (possibly expensive — e.g. an LSH near-dup pipeline)
     # edge plan ONCE: deg, the node universe, and the pre relation all
     # branch from it, and without the cache each materialization below
-    # re-ran the whole upstream plan
-    e = edges.select(
-        F.col("src").cast("string").alias("src"),
-        F.col("dst").cast("string").alias("dst"),
-    ).persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # node universe = src UNION dst (the hits_fixedpoint convention):
-    # a SINK node (inbound edges, no outbound) must still receive its
-    # endorsement flow and appear in the output — building nodes from
-    # out-edge sources alone silently dropped both. PERSISTED: the
-    # node frame is read twice, by the node-count/seed check below and
-    # by the one universe join after the loop, and as a bare plan each
-    # read re-ran the edge scan.
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    # ONE job over the cached node frame for BOTH the node count and
-    # the seed-presence check (collect_set skips the non-seed NULLs, so
-    # the collected set is bounded at |S|) — the count-then-filter
-    # shape paid a second full pass over the universe for a bounded
-    # answer (guide §1.2)
-    row = nodes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set(
-            F.when(F.col("id").isin(seed_list), F.col("id"))
-        ).alias("ks"),
-    ).collect()[0]
-    n_nodes = int(row["n"])
-    known = set(row["ks"])
-    missing = [s for s in seed_list if s not in known]
-    if missing:
-        raise ValueError(
-            f"personalized_pagerank: {len(missing)} seed ids are not"
-            f" graph nodes: {missing[:5]} — seed the walk"
-            " from nodes that exist"
-        )
-    t_seed = ((100 - int(damping_pct)) * n_nodes * int(scale)) // (
-        100 * len(seed_list)
-    )
-    pre = e.join(deg, "src").persist()
-    pre.count()
-    e.unpersist()
-    d = int(damping_pct)
-    # |S| bounded driver rows (a LocalRelation): the constant restart
-    # mass, re-injected each round through the SAME aggregation as the
-    # edge flow (cf_/cs_ columns keep the damping exact:
-    # rank = seed + (d·Σflow) div 100, never a second rounding)
-    seed_rows = local_frame(
-        edges.sparkSession,
-        [(s,) for s in seed_list],
-        "dst string",
-    ).select(
-        "dst",
-        F.lit(0).cast("long").alias("cf"),
-        F.lit(int(t_seed)).cast("long").alias("cs"),
-    )
-    # round 0's restart distribution: all mass on the seeds — the
-    # support-only invariant starts here (zero-rank rows are absent)
-    ranks = seed_rows.select(
-        F.col("dst").alias("id"), F.col("cs").alias("r")
-    )
-    for rnd in range(int(n_iter)):
-        flow = (
-            pre.join(ranks, pre["src"] == ranks["id"])
-            .select(
-                "dst",
-                F.expr("r div deg").alias("cf"),
-                F.lit(0).cast("long").alias("cs"),
+    # re-ran the whole upstream plan. nodes and pre outlive it (held).
+    with ExitStack() as held:
+        with pinned(
+            edges.select(
+                F.col("src").cast("string").alias("src"),
+                F.col("dst").cast("string").alias("dst"),
             )
-            .unionByName(seed_rows)
+        ) as e:
+            deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+            # node universe = src UNION dst (the hits_fixedpoint
+            # convention): a SINK node (inbound edges, no outbound) must
+            # still receive its endorsement flow and appear in the
+            # output — building nodes from out-edge sources alone
+            # silently dropped both. PINNED: the node frame is read
+            # twice, by the node-count/seed check below and by the one
+            # universe join after the loop, and as a bare plan each read
+            # re-ran the edge scan.
+            nodes = held.enter_context(
+                pinned(
+                    e.select(F.col("src").alias("id"))
+                    .union(e.select(F.col("dst").alias("id")))
+                    .distinct()
+                )
+            )
+            # ONE job over the cached node frame for BOTH the node count
+            # and the seed-presence check (collect_set skips the
+            # non-seed NULLs, so the collected set is bounded at |S|) —
+            # the count-then-filter shape paid a second full pass over
+            # the universe for a bounded answer (guide §1.2)
+            row = nodes.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.collect_set(
+                    F.when(F.col("id").isin(seed_list), F.col("id"))
+                ).alias("ks"),
+            ).collect()[0]
+            n_nodes = int(row["n"])
+            known = set(row["ks"])
+            missing = [s for s in seed_list if s not in known]
+            if missing:
+                raise ValueError(
+                    f"personalized_pagerank: {len(missing)} seed ids are"
+                    f" not graph nodes: {missing[:5]} — seed the walk"
+                    " from nodes that exist"
+                )
+            pre = held.enter_context(pinned(e.join(deg, "src")))
+            # fill pre while e is cached: e is released on leaving here
+            pre.count()
+        t_seed = ((100 - int(damping_pct)) * n_nodes * int(scale)) // (
+            100 * len(seed_list)
         )
-        ranks = (
-            flow.groupBy("dst")
-            .agg(F.sum("cf").alias("s"), F.sum("cs").alias("sm"))
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("sm") + F.expr(f"({d} * s) div 100")).alias("r"),
+        d = int(damping_pct)
+        # |S| bounded driver rows (a LocalRelation): the constant restart
+        # mass, re-injected each round through the SAME aggregation as
+        # the edge flow (cf_/cs_ columns keep the damping exact:
+        # rank = seed + (d·Σflow) div 100, never a second rounding)
+        seed_rows = local_frame(
+            edges.sparkSession,
+            [(s,) for s in seed_list],
+            "dst string",
+        ).select(
+            "dst",
+            F.lit(0).cast("long").alias("cf"),
+            F.lit(int(t_seed)).cast("long").alias("cs"),
+        )
+        # round 0's restart distribution: all mass on the seeds — the
+        # support-only invariant starts here (zero-rank rows are absent)
+        ranks = seed_rows.select(
+            F.col("dst").alias("id"), F.col("cs").alias("r")
+        )
+        for rnd in range(int(n_iter)):
+            flow = (
+                pre.join(ranks, pre["src"] == ranks["id"])
+                .select(
+                    "dst",
+                    F.expr("r div deg").alias("cf"),
+                    F.lit(0).cast("long").alias("cs"),
+                )
+                .unionByName(seed_rows)
+            )
+            ranks = (
+                flow.groupBy("dst")
+                .agg(F.sum("cf").alias("s"), F.sum("cs").alias("sm"))
+                .select(
+                    F.col("dst").alias("id"),
+                    (F.col("sm") + F.expr(f"({d} * s) div 100")).alias("r"),
+                )
+            )
+            ranks = truncate_lineage(ranks, rnd, n_iter, checkpoint_every)
+        # ONE universe join total (vs one per round): emit rank-0 rows
+        # for unreachable non-seeds, then cut so the returned plan reads
+        # a bounded materialization instead of re-deriving nodes/pre
+        # after their release
+        return truncate_lineage(
+            nodes.join(ranks, "id", "left").select(
+                "id",
+                F.coalesce(F.col("r"), F.lit(0).cast("long")).alias(
+                    "rank_fp"
+                ),
             )
         )
-        ranks = truncate_lineage(ranks, rnd, n_iter, checkpoint_every)
-    # ONE universe join total (vs one per round): emit rank-0 rows for
-    # unreachable non-seeds, then cut so the returned plan reads a
-    # bounded materialization instead of re-deriving nodes/pre after
-    # their unpersist below
-    out = (
-        nodes.join(ranks, "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("r"), F.lit(0).cast("long")).alias("rank_fp"),
-        )
-    )
-    out = truncate_lineage(out)
-    pre.unpersist()
-    nodes.unpersist()
-    return out

@@ -31,9 +31,11 @@ state per round is one (item, rating) row per item, lineage cut by
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import local_frame, truncate_lineage
+from ..session import local_frame, pinned, truncate_lineage
 
 
 def majority_vote(
@@ -213,54 +215,54 @@ def bradley_terry_from_pairs(
             F.coalesce("w2", s).alias("w2"),
             (F.coalesce("w2", s) + F.coalesce("w2_rev", s)).alias("n2"),
         )
-        .persist()  # loop-invariant: every MM round re-reads this
     )
-    pairs.count()
-    # one aggregation pass over the cached pairs for BOTH per-item
-    # totals (two separate groupBys shuffle the pair table twice)
-    tot = pairs.groupBy("i").agg(
-        F.sum("w2").alias("wins2"), F.sum("n2").alias("comparisons2")
-    )
-    # materialize the bounded per-item totals ONCE while pairs is still
-    # cached: the returned plan joins tot AFTER pairs.unpersist(), so
-    # without this cut every consumer action re-executed the whole
-    # outcome/pair pipeline just to re-derive the totals (the elo
-    # `tot` fix, round-12 verdict item 6, applied to the BT twin).
-    tot = truncate_lineage(tot)
-    w_tot = tot.select("i", "wins2")
+    # loop-invariant: every MM round re-reads the pair table
+    with pinned(pairs) as pairs:
+        # one aggregation pass over the cached pairs for BOTH per-item
+        # totals (two separate groupBys shuffle the pair table twice)
+        tot = pairs.groupBy("i").agg(
+            F.sum("w2").alias("wins2"), F.sum("n2").alias("comparisons2")
+        )
+        # materialize the bounded per-item totals ONCE while pairs is
+        # cached (this cut is the job that fills the pairs cache): the
+        # returned plan joins tot after the block releases pairs, so
+        # without this cut every consumer action re-executed the whole
+        # outcome/pair pipeline just to re-derive the totals (the elo
+        # `tot` fix, round-12 verdict item 6, applied to the BT twin).
+        tot = truncate_lineage(tot)
+        w_tot = tot.select("i", "wins2")
 
-    s2 = scale * scale
-    ratings = w_tot.select(
-        F.col("i").alias("id"), F.lit(int(scale)).cast("long").alias("p")
-    )
-    for rnd in range(n_iter):
-        ri = ratings.withColumnsRenamed({"id": "i", "p": "p_i"})
-        rj = ratings.withColumnsRenamed({"id": "j", "p": "p_j"})
-        # ratings are bounded MODEL STATE (one row per item): broadcast
-        # them into the pair-table joins so each MM round is map-only
-        # over the persisted pairs — no per-round shuffle of the pair
-        # table (an SMJ here re-sorts ~items² rows every round)
-        denom = (
-            pairs.join(F.broadcast(ri), "i")
-            .join(F.broadcast(rj), "j")
-            .select(
-                "i",
-                F.expr(f"(n2 * cast({s2} as bigint)) div (p_i + p_j)").alias(
-                    "d"
-                ),
-            )
-            .groupBy("i")
-            .agg(F.sum("d").alias("D"))
+        s2 = scale * scale
+        ratings = w_tot.select(
+            F.col("i").alias("id"), F.lit(int(scale)).cast("long").alias("p")
         )
-        ratings = (
-            denom.join(w_tot, "i")
-            .select(
-                F.col("i").alias("id"),
-                F.expr(f"(wins2 * cast({s2} as bigint)) div D").alias("p"),
+        for rnd in range(n_iter):
+            ri = ratings.withColumnsRenamed({"id": "i", "p": "p_i"})
+            rj = ratings.withColumnsRenamed({"id": "j", "p": "p_j"})
+            # ratings are bounded MODEL STATE (one row per item): broadcast
+            # them into the pair-table joins so each MM round is map-only
+            # over the persisted pairs — no per-round shuffle of the pair
+            # table (an SMJ here re-sorts ~items² rows every round)
+            denom = (
+                pairs.join(F.broadcast(ri), "i")
+                .join(F.broadcast(rj), "j")
+                .select(
+                    "i",
+                    F.expr(
+                        f"(n2 * cast({s2} as bigint)) div (p_i + p_j)"
+                    ).alias("d"),
+                )
+                .groupBy("i")
+                .agg(F.sum("d").alias("D"))
             )
-        )
-        ratings = truncate_lineage(ratings, rnd, n_iter, checkpoint_every)
-    pairs.unpersist()
+            ratings = (
+                denom.join(w_tot, "i")
+                .select(
+                    F.col("i").alias("id"),
+                    F.expr(f"(wins2 * cast({s2} as bigint)) div D").alias("p"),
+                )
+            )
+            ratings = truncate_lineage(ratings, rnd, n_iter, checkpoint_every)
     return (
         ratings.join(tot.withColumnsRenamed({"i": "id"}), "id")
         .select(
@@ -715,157 +717,156 @@ def dawid_skene(
     lbl_arr = F.array(*[F.lit(x) for x in labels])
     cut = False
     for rnd in range(int(n_iter)):
-        if not cut:
-            # consumed by priors AND confusion; a posterior the previous
-            # round's truncate_lineage cut is materialized already
-            post = post.persist()
-            post.count()
-        # ---- M-step: priors (BIGINT sums; ≤ |labels| rows) ----------
-        prior = (
-            post.groupBy("k")
-            .agg(F.sum("p").alias("P"))
-            .withColumn("_tot", F.sum("P").over(all_rows))
-            .select(
-                "k",
-                F.expr(
-                    f"((P + {s_num}) * cast({scale} as bigint))"
-                    f" div (_tot + {s_num * n_labels})"
-                ).alias("prior"),
-            )
-        )
-        # ---- M-step: confusion rates (votes ⋈ posteriors fan-out ×L,
-        # then bounded (rater, k, obs) sums) --------------------------
-        conf = (
-            v.join(post, "item")
-            .groupBy("rater", "k", "obs")
-            .agg(F.sum("p").alias("C"))
-        )
-        row_tot = conf.groupBy("rater", "k").agg(F.sum("C").alias("Crow"))
-        pi = conf.join(row_tot, ["rater", "k"]).select(
-            "rater",
-            "k",
-            "obs",
-            F.expr(
-                f"((C + {s_num}) * cast({scale} as bigint))"
-                f" div (Crow + {s_num * n_labels})"
-            ).alias("pi"),
-        )
-        # ---- E-step: per (item, class) ordered likelihood fold ------
-        vk = v.select("item", "rater", "obs", F.explode(lbl_arr).alias("k"))
-        scored = (
-            vk.join(F.broadcast(pi), ["rater", "k", "obs"], "left")
-            .join(F.broadcast(row_tot), ["rater", "k"], "left")
-            .select(
-                "item",
-                "k",
-                "rater",
-                "obs",
-                # unseen (rater, k, obs) cells get the exact Laplace
-                # floor the smoothed division would give them
-                F.coalesce(
-                    F.col("pi"),
+        # consumed by priors AND confusion; a posterior the previous
+        # round's truncate_lineage cut is materialized already
+        with nullcontext(post) if cut else pinned(post) as post:
+            if not cut:
+                post.count()
+            # ---- M-step: priors (BIGINT sums; ≤ |labels| rows) ----------
+            prior = (
+                post.groupBy("k")
+                .agg(F.sum("p").alias("P"))
+                .withColumn("_tot", F.sum("P").over(all_rows))
+                .select(
+                    "k",
                     F.expr(
-                        f"(cast({s_num} as bigint)"
-                        f" * cast({scale} as bigint))"
-                        f" div (coalesce(Crow, cast(0 as bigint))"
-                        f" + {s_num * n_labels})"
-                    ),
-                ).alias("pi_eff"),
+                        f"((P + {s_num}) * cast({scale} as bigint))"
+                        f" div (_tot + {s_num * n_labels})"
+                    ).alias("prior"),
+                )
             )
-        )
-        grouped = scored.groupBy("item", "k").agg(
-            F.sort_array(
-                F.collect_list(F.struct("rater", "obs", "pi_eff"))
-            ).alias("arr")
-        ).join(F.broadcast(prior), "k")
-        if log_space:
-            # SAME canonical order, folded as Σ ln terms; per-item
-            # softmax against the ordered max keeps any panel finite
-            folded = grouped.select(
-                "item",
+            # ---- M-step: confusion rates (votes ⋈ posteriors fan-out ×L,
+            # then bounded (rater, k, obs) sums) --------------------------
+            conf = (
+                v.join(post, "item")
+                .groupBy("rater", "k", "obs")
+                .agg(F.sum("p").alias("C"))
+            )
+            row_tot = conf.groupBy("rater", "k").agg(F.sum("C").alias("Crow"))
+            pi = conf.join(row_tot, ["rater", "k"]).select(
+                "rater",
                 "k",
-                F.aggregate(
-                    "arr",
-                    F.log(
-                        F.col("prior").cast("double") / F.lit(float(scale))
-                    ),
-                    lambda acc, x: acc
-                    + F.log(
-                        x["pi_eff"].cast("double") / F.lit(float(scale))
-                    ),
-                ).alias("lscore"),
-            )
-            normed = (
-                folded.groupBy("item")
-                .agg(
-                    F.sort_array(
-                        F.collect_list(F.struct("k", "lscore"))
-                    ).alias("ks")
-                )
-                .select(
-                    "item",
-                    F.aggregate(
-                        "ks",
-                        F.lit(float("-inf")),
-                        lambda a, x: F.greatest(a, x["lscore"]),
-                    ).alias("_m"),
-                    "ks",
-                )
-                .select(
-                    "item",
-                    F.aggregate(
-                        "ks",
-                        F.lit(0.0),
-                        lambda a, x: a + F.exp(x["lscore"] - F.col("_m")),
-                    ).alias("_tot"),
-                    "_m",
-                    F.explode("ks").alias("e"),
-                )
-            )
-            new_post = normed.select(
-                "item",
-                F.col("e.k").alias("k"),
+                "obs",
                 F.expr(
-                    f"cast(floor(exp(e.lscore - _m) / _tot * {scale}"
-                    " + 0.5d) as bigint)"
-                ).alias("p"),
+                    f"((C + {s_num}) * cast({scale} as bigint))"
+                    f" div (Crow + {s_num * n_labels})"
+                ).alias("pi"),
             )
-        else:
-            folded = grouped.select(
-                "item",
-                "k",
-                F.aggregate(
-                    "arr",
-                    F.col("prior").cast("double") / F.lit(float(scale)),
-                    lambda acc, x: acc
-                    * (x["pi_eff"].cast("double") / F.lit(float(scale))),
-                ).alias("score"),
-            )
-            normed = (
-                folded.groupBy("item")
-                .agg(
-                    F.sort_array(
-                        F.collect_list(F.struct("k", "score"))
-                    ).alias("ks")
-                )
+            # ---- E-step: per (item, class) ordered likelihood fold ------
+            vk = v.select("item", "rater", "obs", F.explode(lbl_arr).alias("k"))
+            scored = (
+                vk.join(F.broadcast(pi), ["rater", "k", "obs"], "left")
+                .join(F.broadcast(row_tot), ["rater", "k"], "left")
                 .select(
                     "item",
-                    F.aggregate(
-                        "ks", F.lit(0.0), lambda a, x: a + x["score"]
-                    ).alias("_tot"),
-                    F.explode("ks").alias("e"),
+                    "k",
+                    "rater",
+                    "obs",
+                    # unseen (rater, k, obs) cells get the exact Laplace
+                    # floor the smoothed division would give them
+                    F.coalesce(
+                        F.col("pi"),
+                        F.expr(
+                            f"(cast({s_num} as bigint)"
+                            f" * cast({scale} as bigint))"
+                            f" div (coalesce(Crow, cast(0 as bigint))"
+                            f" + {s_num * n_labels})"
+                        ),
+                    ).alias("pi_eff"),
                 )
             )
-            new_post = normed.select(
-                "item",
-                F.col("e.k").alias("k"),
-                F.expr(
-                    f"cast(floor(e.score / _tot * {scale} + 0.5d) as bigint)"
-                ).alias("p"),
-            )
-        cut_post = truncate_lineage(new_post, rnd, n_iter, checkpoint_every)
+            grouped = scored.groupBy("item", "k").agg(
+                F.sort_array(
+                    F.collect_list(F.struct("rater", "obs", "pi_eff"))
+                ).alias("arr")
+            ).join(F.broadcast(prior), "k")
+            if log_space:
+                # SAME canonical order, folded as Σ ln terms; per-item
+                # softmax against the ordered max keeps any panel finite
+                folded = grouped.select(
+                    "item",
+                    "k",
+                    F.aggregate(
+                        "arr",
+                        F.log(
+                            F.col("prior").cast("double") / F.lit(float(scale))
+                        ),
+                        lambda acc, x: acc
+                        + F.log(
+                            x["pi_eff"].cast("double") / F.lit(float(scale))
+                        ),
+                    ).alias("lscore"),
+                )
+                normed = (
+                    folded.groupBy("item")
+                    .agg(
+                        F.sort_array(
+                            F.collect_list(F.struct("k", "lscore"))
+                        ).alias("ks")
+                    )
+                    .select(
+                        "item",
+                        F.aggregate(
+                            "ks",
+                            F.lit(float("-inf")),
+                            lambda a, x: F.greatest(a, x["lscore"]),
+                        ).alias("_m"),
+                        "ks",
+                    )
+                    .select(
+                        "item",
+                        F.aggregate(
+                            "ks",
+                            F.lit(0.0),
+                            lambda a, x: a + F.exp(x["lscore"] - F.col("_m")),
+                        ).alias("_tot"),
+                        "_m",
+                        F.explode("ks").alias("e"),
+                    )
+                )
+                new_post = normed.select(
+                    "item",
+                    F.col("e.k").alias("k"),
+                    F.expr(
+                        f"cast(floor(exp(e.lscore - _m) / _tot * {scale}"
+                        " + 0.5d) as bigint)"
+                    ).alias("p"),
+                )
+            else:
+                folded = grouped.select(
+                    "item",
+                    "k",
+                    F.aggregate(
+                        "arr",
+                        F.col("prior").cast("double") / F.lit(float(scale)),
+                        lambda acc, x: acc
+                        * (x["pi_eff"].cast("double") / F.lit(float(scale))),
+                    ).alias("score"),
+                )
+                normed = (
+                    folded.groupBy("item")
+                    .agg(
+                        F.sort_array(
+                            F.collect_list(F.struct("k", "score"))
+                        ).alias("ks")
+                    )
+                    .select(
+                        "item",
+                        F.aggregate(
+                            "ks", F.lit(0.0), lambda a, x: a + x["score"]
+                        ).alias("_tot"),
+                        F.explode("ks").alias("e"),
+                    )
+                )
+                new_post = normed.select(
+                    "item",
+                    F.col("e.k").alias("k"),
+                    F.expr(
+                        f"cast(floor(e.score / _tot * {scale} + 0.5d) as bigint)"
+                    ).alias("p"),
+                )
+            cut_post = truncate_lineage(new_post, rnd, n_iter, checkpoint_every)
         cut = cut_post is not new_post
-        post.unpersist()
         post = cut_post
 
     w = Window.partitionBy("item").orderBy(
@@ -1569,61 +1570,59 @@ def elo_boards(
             F.sum(bad_pred.cast("bigint")).alias("_bad"),
         )
     )
-    mp_all = collapsed.repartitionByRange("p", "w").persist()
-    # one job over the bounded cached table: validation total + the
-    # bounded period calendar together. The calendar counts NON-SELF
-    # rows per period so a period holding only w==l rows (filtered
-    # below) never schedules an empty loop round — output-identical
-    # (an empty round is the identity update) but each skipped round
-    # saves a join+explode+groupBy job and a lineage cut.
-    stats = mp_all.groupBy("p").agg(
-        F.sum("_bad").alias("nb"),
-        F.sum((F.col("w") != F.col("l")).cast("bigint")).alias("nm"),
-    ).collect()
-    n_bad = sum(int(r.nb or 0) for r in stats)
-    if n_bad > 0:
-        mp_all.unpersist()
-        raise ValueError(
-            f"elo_boards: {n_bad} matches have a NULL winner, loser or"
-            f" period (or a NULL/non-positive multiplicity) — clean the"
-            f" match log first"
+    with pinned(collapsed.repartitionByRange("p", "w")) as mp_all:
+        # one job over the bounded cached table: validation total + the
+        # bounded period calendar together. The calendar counts NON-SELF
+        # rows per period so a period holding only w==l rows (filtered
+        # below) never schedules an empty loop round — output-identical
+        # (an empty round is the identity update) but each skipped round
+        # saves a join+explode+groupBy job and a lineage cut.
+        stats = mp_all.groupBy("p").agg(
+            F.sum("_bad").alias("nb"),
+            F.sum((F.col("w") != F.col("l")).cast("bigint")).alias("nm"),
+        ).collect()
+        n_bad = sum(int(r.nb or 0) for r in stats)
+        if n_bad > 0:
+            raise ValueError(
+                f"elo_boards: {n_bad} matches have a NULL winner, loser or"
+                f" period (or a NULL/non-positive multiplicity) — clean the"
+                f" match log first"
+            )
+        mp = mp_all.filter(F.col("w") != F.col("l")).drop("_bad")
+        periods = sorted(
+            r.p for r in stats if r.p is not None and int(r.nm or 0) > 0
         )
-    mp = mp_all.filter(F.col("w") != F.col("l")).drop("_bad")
-    periods = sorted(
-        r.p for r in stats if r.p is not None and int(r.nm or 0) > 0
-    )
 
-    sides = mp.select(
-        F.col("w").alias("item"), F.col("n_m").alias("n"),
-        F.col("n_m").alias("win_n"),
-    ).unionByName(
-        mp.select(
-            F.col("l").alias("item"), F.col("n_m").alias("n"),
-            F.lit(0).cast("long").alias("win_n"),
+        sides = mp.select(
+            F.col("w").alias("item"), F.col("n_m").alias("n"),
+            F.col("n_m").alias("win_n"),
+        ).unionByName(
+            mp.select(
+                F.col("l").alias("item"), F.col("n_m").alias("n"),
+                F.lit(0).cast("long").alias("win_n"),
+            )
         )
-    )
-    tot = sides.groupBy("item").agg(
-        F.sum("n").alias("n_matches"), F.sum("win_n").alias("wins")
-    )
-    # materialize the bounded per-item totals ONCE while mp_all is still
-    # cached: the returned plan reads tot AFTER mp_all.unpersist(), so
-    # without this cut the consumer's action would re-execute the whole
-    # upstream collapse just to re-derive the side totals
-    tot = truncate_lineage(tot)
-    boards = {f"r_{k}": k for k in ks}
-    ratings = tot.select(
-        "item",
-        *[F.lit(int(initial) * scale).cast("long").alias(rc) for rc in boards],
-    )
-    for rnd, p in enumerate(periods):
-        # `ratings` seeds EVERY item in the match log by construction
-        # (tot derives from both match sides), so the step needs no
-        # unseeded-item guard
-        ratings = _elo_period(
-            ratings, mp.filter(F.col("p") == p), boards, scale, "n_m"
+        tot = sides.groupBy("item").agg(
+            F.sum("n").alias("n_matches"), F.sum("win_n").alias("wins")
         )
-        ratings = truncate_lineage(ratings, rnd, len(periods), checkpoint_every)
-    mp_all.unpersist()
+        # materialize the bounded per-item totals ONCE while mp_all is
+        # cached: the returned plan reads tot after the block releases
+        # it, so without this cut the consumer's action would re-execute
+        # the whole upstream collapse just to re-derive the side totals
+        tot = truncate_lineage(tot)
+        boards = {f"r_{k}": k for k in ks}
+        ratings = tot.select(
+            "item",
+            *[F.lit(int(initial) * scale).cast("long").alias(rc) for rc in boards],
+        )
+        for rnd, p in enumerate(periods):
+            # `ratings` seeds EVERY item in the match log by construction
+            # (tot derives from both match sides), so the step needs no
+            # unseeded-item guard
+            ratings = _elo_period(
+                ratings, mp.filter(F.col("p") == p), boards, scale, "n_m"
+            )
+            ratings = truncate_lineage(ratings, rnd, len(periods), checkpoint_every)
     return ratings.join(tot, "item").select(
         "item",
         F.col("n_matches").cast("bigint").alias("n_matches"),
@@ -1835,54 +1834,54 @@ def bradley_terry_ties(
             F.coalesce("w2_rev", s).alias("w2_r"),
             F.coalesce("t2", F.lit(0)).alias("t2"),
         )
-        .persist()  # loop-invariant: every MM round re-reads this
     )
-    pairs.count()
-    tot = pairs.groupBy("i").agg(
-        F.sum(F.col("w2_f") + F.col("t2")).alias("A"),
-        F.sum("w2_f").alias("wins2"),
-        F.sum("t2").alias("ties2"),
-        F.sum(F.col("w2_f") + F.col("w2_r") + F.col("t2")).alias(
-            "comparisons2"
-        ),
-    )
-    # bounded totals cut once while pairs is cached — the returned plan
-    # joins tot after unpersist (see bradley_terry_from_pairs)
-    tot = truncate_lineage(tot)
-    a_tot = tot.select("i", "A")
+    # loop-invariant: every MM round re-reads the pair table
+    with pinned(pairs) as pairs:
+        tot = pairs.groupBy("i").agg(
+            F.sum(F.col("w2_f") + F.col("t2")).alias("A"),
+            F.sum("w2_f").alias("wins2"),
+            F.sum("t2").alias("ties2"),
+            F.sum(F.col("w2_f") + F.col("w2_r") + F.col("t2")).alias(
+                "comparisons2"
+            ),
+        )
+        # bounded totals cut once while pairs is cached (the job that fills
+        # it) — the returned plan joins tot after the release (see
+        # bradley_terry_from_pairs)
+        tot = truncate_lineage(tot)
+        a_tot = tot.select("i", "A")
 
-    s2 = scale * scale
-    ratings = a_tot.select(
-        F.col("i").alias("id"), F.lit(int(scale)).cast("long").alias("p")
-    )
-    for rnd in range(int(n_iter)):
-        ri = ratings.withColumnsRenamed({"id": "i", "p": "p_i"})
-        rj = ratings.withColumnsRenamed({"id": "j", "p": "p_j"})
-        denom = (
-            pairs.join(F.broadcast(ri), "i")
-            .join(F.broadcast(rj), "j")
-            .select(
-                "i",
-                (
-                    F.expr(
-                        f"((w2_f + t2) * cast({s2} as bigint) * {td})"
-                        f" div ({td} * p_i + {tn} * p_j)"
-                    )
-                    + F.expr(
-                        f"((w2_r + t2) * cast({s2} as bigint) * {tn})"
-                        f" div ({td} * p_j + {tn} * p_i)"
-                    )
-                ).alias("d"),
+        s2 = scale * scale
+        ratings = a_tot.select(
+            F.col("i").alias("id"), F.lit(int(scale)).cast("long").alias("p")
+        )
+        for rnd in range(int(n_iter)):
+            ri = ratings.withColumnsRenamed({"id": "i", "p": "p_i"})
+            rj = ratings.withColumnsRenamed({"id": "j", "p": "p_j"})
+            denom = (
+                pairs.join(F.broadcast(ri), "i")
+                .join(F.broadcast(rj), "j")
+                .select(
+                    "i",
+                    (
+                        F.expr(
+                            f"((w2_f + t2) * cast({s2} as bigint) * {td})"
+                            f" div ({td} * p_i + {tn} * p_j)"
+                        )
+                        + F.expr(
+                            f"((w2_r + t2) * cast({s2} as bigint) * {tn})"
+                            f" div ({td} * p_j + {tn} * p_i)"
+                        )
+                    ).alias("d"),
+                )
+                .groupBy("i")
+                .agg(F.sum("d").alias("B"))
             )
-            .groupBy("i")
-            .agg(F.sum("d").alias("B"))
-        )
-        ratings = denom.join(a_tot, "i").select(
-            F.col("i").alias("id"),
-            F.expr(f"(A * cast({s2} as bigint)) div B").alias("p"),
-        )
-        ratings = truncate_lineage(ratings, rnd, n_iter, checkpoint_every)
-    pairs.unpersist()
+            ratings = denom.join(a_tot, "i").select(
+                F.col("i").alias("id"),
+                F.expr(f"(A * cast({s2} as bigint)) div B").alias("p"),
+            )
+            ratings = truncate_lineage(ratings, rnd, n_iter, checkpoint_every)
     return ratings.join(tot.withColumnsRenamed({"i": "id"}), "id").select(
         F.col("id").alias("item"),
         "wins2",

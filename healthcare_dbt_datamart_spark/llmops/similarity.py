@@ -25,13 +25,12 @@ would add an exchange to them.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..session import local_frame, truncate_lineage
+from ..session import local_frame, pinned, truncate_lineage
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -283,8 +282,7 @@ def ivf_topk(
     result is eagerly materialized off the cache before release. In a
     real deployment train/assign happen once at index-build time and only
     the probe scan runs per query."""
-    cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned(emb) as cached:
         if centroids is None:
             centroids = _lloyd_fit(cached, n_centroids, n_iter, id_col, vec_col)
         qvec = _query_vec(cached, id_col, vec_col, query_id)
@@ -309,8 +307,6 @@ def ivf_topk(
         # k rows; materialize before the cache is released so the caller's
         # later action doesn't recompute the whole train+assign lineage
         return truncate_lineage(out)
-    finally:
-        cached.unpersist()
 
 
 def _query_probe_frame(
@@ -433,29 +429,26 @@ def ivf_topk_batch(
 
     Returns ``(query_id, vec_id, cell, cosine, rank)`` — rank 1..k per
     query by (cosine desc, id asc); queries never match themselves."""
-    own_cache = assigned is None
-    cached = emb.persist(StorageLevel.MEMORY_AND_DISK) if own_cache else emb
-    try:
-        if centroids is None:
-            centroids = _lloyd_fit(
-                cached, n_centroids, n_iter, id_col, vec_col
-            )
-        q = _query_probe_frame(
-            cached, query_ids, id_col, vec_col, centroids, nprobe
+
+    def search(vecs: DataFrame) -> DataFrame:
+        cents = (
+            centroids
+            if centroids is not None
+            else _lloyd_fit(vecs, n_centroids, n_iter, id_col, vec_col)
         )
+        q = _query_probe_frame(vecs, query_ids, id_col, vec_col, cents, nprobe)
         idx = (
             assigned
             if assigned is not None
-            else ivf_assign(cached, centroids, id_col, vec_col)
+            else ivf_assign(vecs, cents, id_col, vec_col)
         )
-        out = _ranked_probe(idx, q, k, id_col, vec_col, keep_cell=True)
-        if own_cache:
-            # |Q|·k rows; materialize before the cache is released
-            out = truncate_lineage(out)
-        return out
-    finally:
-        if own_cache:
-            cached.unpersist()
+        return _ranked_probe(idx, q, k, id_col, vec_col, keep_cell=True)
+
+    if assigned is not None:
+        return search(emb)
+    with pinned(emb) as cached:
+        # |Q|·k rows; materialize before the cache is released
+        return truncate_lineage(search(cached))
 
 
 # 16 axis-aligned hyperplane dims spread across a 64-dim embedding
@@ -834,9 +827,8 @@ def pq_codebooks_trained(
                 lambda x: x.cast("double"),
             ).alias("sv"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    try:
+    with pinned(subs) as subs:
         for _ in range(n_iter):
             best = _nearest_code(F.col("sv"), F.element_at("cb", F.col("s") + 1))
             assigned = subs.crossJoin(broadcast(_pq_cdf(spark, books))).select(
@@ -865,8 +857,6 @@ def pq_codebooks_trained(
                 ]
                 for s, book in enumerate(books)
             ]
-    finally:
-        subs.unpersist()
     return books
 
 
@@ -1106,11 +1096,8 @@ def kmeans_lloyd(
     re-runs whatever lineage produced ``emb`` — at 100 TB that is a full
     re-scan per round (memory-and-disk: spills rather than evicts under
     pressure). Released before returning."""
-    cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned(emb) as cached:
         return _lloyd_fit(cached, k, n_iter, id_col, vec_col)
-    finally:
-        cached.unpersist()
 
 
 def _lloyd_fit(
@@ -1170,8 +1157,7 @@ def kmeans_cells(
     unpersisted lineage a further time (the round-2 bench regression),
     and the k-row report is eagerly materialized before the cache is
     released so the caller's collect doesn't recompute anything."""
-    cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned(emb) as cached:
         trained = (
             centroids
             if centroids is not None
@@ -1187,8 +1173,6 @@ def kmeans_cells(
             )
         )
         return truncate_lineage(report)
-    finally:
-        cached.unpersist()
 
 
 def _semantic_salt(n_cells: int, parallelism: int) -> int:
@@ -1395,8 +1379,7 @@ def ivfadc_topk(
     raw books are shared with ``pq_encode_report``/``pq_topk``.
 
     Returns (id, cell, adc_dist, cosine) ordered by exact cosine."""
-    cached = emb.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with pinned(emb) as cached:
         if centroids is None:
             centroids = _lloyd_fit(cached, n_centroids, n_iter, id_col, vec_col)
         if codebooks is None:
@@ -1413,8 +1396,6 @@ def ivfadc_topk(
         )
         # k rows; materialize before the cache is released
         return truncate_lineage(out)
-    finally:
-        cached.unpersist()
 
 
 def ivfpq_index_rows(

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame, truncate_lineage
+from ..session import local_frame, pinned, truncate_lineage
 from .text import grams, hex_prefix_int, words
 
 # tiny per-language stopword lists for the n-gram/stopword-hit heuristic
@@ -679,53 +679,53 @@ def vocab_richness(
         .filter(F.col("t") != "")
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("tc"))
-        .persist()  # two jobs read it: the totals fold and the top-k
     )
-    tot = freq.agg(
-        F.sum("tc").alias("n"),
-        F.count(F.lit(1)).alias("v"),
-        F.sum((F.col("tc") == 1).cast("bigint")).alias("f1"),
-        F.sum((F.col("tc") == 2).cast("bigint")).alias("f2"),
-    ).collect()[0]
-    v = int(tot.v or 0)
-    if v < 2:
-        raise ValueError(
-            f"vocab_richness: corpus has {v} distinct types — the Zipf"
-            " slope needs at least 2"
-        )
-    f1, f2 = int(tot.f1), int(tot.f2)
-    chao1 = v + (f1 * f1 / (2.0 * f2) if f2 > 0 else f1 * (f1 - 1) / 2.0)
+    # two jobs read it: the totals fold and the top-k
+    with pinned(freq) as freq:
+        tot = freq.agg(
+            F.sum("tc").alias("n"),
+            F.count(F.lit(1)).alias("v"),
+            F.sum((F.col("tc") == 1).cast("bigint")).alias("f1"),
+            F.sum((F.col("tc") == 2).cast("bigint")).alias("f2"),
+        ).collect()[0]
+        v = int(tot.v or 0)
+        if v < 2:
+            raise ValueError(
+                f"vocab_richness: corpus has {v} distinct types — the Zipf"
+                " slope needs at least 2"
+            )
+        f1, f2 = int(tot.f1), int(tot.f2)
+        chao1 = v + (f1 * f1 / (2.0 * f2) if f2 > 0 else f1 * (f1 - 1) / 2.0)
 
-    top = freq.orderBy(F.col("tc").desc(), F.col("t").asc()).limit(
-        int(zipf_top_k)
-    )
-    w = Window.orderBy(F.col("tc").desc(), F.col("t").asc())
-    q = (
-        top.withColumn("r", F.row_number().over(w))
-        .select(
-            F.expr(f"cast(floor(ln(r) * {scale} + 0.5d) as bigint)").alias(
-                "qx"
-            ),
-            F.expr(f"cast(floor(ln(tc) * {scale} + 0.5d) as bigint)").alias(
-                "qy"
-            ),
-            F.expr(
-                f"cast(floor(ln(r) * ln(tc) * {scale} + 0.5d) as bigint)"
-            ).alias("qxy"),
-            F.expr(
-                f"cast(floor(ln(r) * ln(r) * {scale} + 0.5d) as bigint)"
-            ).alias("qx2"),
+        top = freq.orderBy(F.col("tc").desc(), F.col("t").asc()).limit(
+            int(zipf_top_k)
         )
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum("qx").alias("sx"),
-            F.sum("qy").alias("sy"),
-            F.sum("qxy").alias("sxy"),
-            F.sum("qx2").alias("sx2"),
-        )
-        .collect()[0]
-    )  # five integers: bounded model state
-    freq.unpersist()
+        w = Window.orderBy(F.col("tc").desc(), F.col("t").asc())
+        q = (
+            top.withColumn("r", F.row_number().over(w))
+            .select(
+                F.expr(
+                    f"cast(floor(ln(r) * {scale} + 0.5d) as bigint)"
+                ).alias("qx"),
+                F.expr(
+                    f"cast(floor(ln(tc) * {scale} + 0.5d) as bigint)"
+                ).alias("qy"),
+                F.expr(
+                    f"cast(floor(ln(r) * ln(tc) * {scale} + 0.5d) as bigint)"
+                ).alias("qxy"),
+                F.expr(
+                    f"cast(floor(ln(r) * ln(r) * {scale} + 0.5d) as bigint)"
+                ).alias("qx2"),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("k"),
+                F.sum("qx").alias("sx"),
+                F.sum("qy").alias("sy"),
+                F.sum("qxy").alias("sxy"),
+                F.sum("qx2").alias("sx2"),
+            )
+            .collect()[0]
+        )  # five integers: bounded model state
     kk = int(q.k)
     num = kk * int(q.sxy) * scale - int(q.sx) * int(q.sy)
     den = kk * int(q.sx2) * scale - int(q.sx) * int(q.sx)
@@ -868,65 +868,65 @@ def sparse_logreg_train(
         F.col(feats.columns[0]).alias("id"),
         F.col(feats.columns[1]).cast("bigint").alias("feat"),
         F.col(feats.columns[2]).cast("bigint").alias("v"),
-    ).persist()  # loop-invariant: both passes of every round read it
-    orphans = f3.join(lab, "id", "left_anti").count()
-    if orphans > 0:
-        f3.unpersist()
-        raise ValueError(
-            f"sparse_logreg_train: {orphans} feature rows have ids with"
-            " no label — every training id needs a label"
-        )
-    n_rows = lab.count()
-    if n_rows == 0:
-        raise ValueError("sparse_logreg_train got an empty label relation")
-
-    weights = f3.select("feat").distinct().select(
-        "feat", F.lit(0).cast("long").alias("w_fp")
     )
-    b_fp = 0
-    lr_c, l2_c = float(lr), float(l2)
-    for rnd in range(int(n_iter)):
-        # margin pass: exact integer z_fp per id (label-only rows get 0)
-        z = (
-            f3.join(weights, "feat")
-            .groupBy("id")
-            .agg(F.sum(F.col("w_fp") * F.col("v")).alias("z_fp"))
-        )
-        err = (
-            lab.join(z, "id", "left")
-            .select(
-                "id",
-                F.expr(
-                    f"cast(floor((1.0d / (1.0d + exp(-(({b_fp}"
-                    f" + coalesce(z_fp, 0)) / {scale}.0d))) - y)"
-                    f" * {scale} + 0.5d) as bigint)"
-                ).alias("q"),
+    # loop-invariant: both passes of every round read it
+    with pinned(f3) as f3:
+        orphans = f3.join(lab, "id", "left_anti").count()
+        if orphans > 0:
+            raise ValueError(
+                f"sparse_logreg_train: {orphans} feature rows have ids with"
+                " no label — every training id needs a label"
             )
+        n_rows = lab.count()
+        if n_rows == 0:
+            raise ValueError("sparse_logreg_train got an empty label relation")
+
+        weights = f3.select("feat").distinct().select(
+            "feat", F.lit(0).cast("long").alias("w_fp")
         )
-        # gradient pass: associative integer sums per feature + bias
-        g = (
-            f3.join(err, "id")
-            .groupBy("feat")
-            .agg(F.sum(F.col("q") * F.col("v")).alias("G"))
-        )
-        g0 = int(err.agg(F.sum("q")).collect()[0][0] or 0)
-        new_w = (
-            weights.join(g, "feat", "left")
-            .select(
-                "feat",
-                F.expr(
-                    f"cast(floor((w_fp / {scale}.0d - {lr_c!r}d *"
-                    f" (coalesce(G, 0) / ({n_rows} * cast({scale} as"
-                    f" bigint)) + {l2_c!r}d * (w_fp / {scale}.0d)))"
-                    f" * {scale} + 0.5d) as bigint)"
-                ).alias("w_fp"),
+        b_fp = 0
+        lr_c, l2_c = float(lr), float(l2)
+        for rnd in range(int(n_iter)):
+            # margin pass: exact integer z_fp per id (label-only rows get 0)
+            z = (
+                f3.join(weights, "feat")
+                .groupBy("id")
+                .agg(F.sum(F.col("w_fp") * F.col("v")).alias("z_fp"))
             )
-        )
-        weights = truncate_lineage(new_w, rnd, n_iter, checkpoint_every)
-        b_fp = math.floor(
-            (b_fp / scale - lr_c * (g0 / (n_rows * scale))) * scale + 0.5
-        )
-    f3.unpersist()
+            err = (
+                lab.join(z, "id", "left")
+                .select(
+                    "id",
+                    F.expr(
+                        f"cast(floor((1.0d / (1.0d + exp(-(({b_fp}"
+                        f" + coalesce(z_fp, 0)) / {scale}.0d))) - y)"
+                        f" * {scale} + 0.5d) as bigint)"
+                    ).alias("q"),
+                )
+            )
+            # gradient pass: associative integer sums per feature + bias
+            g = (
+                f3.join(err, "id")
+                .groupBy("feat")
+                .agg(F.sum(F.col("q") * F.col("v")).alias("G"))
+            )
+            g0 = int(err.agg(F.sum("q")).collect()[0][0] or 0)
+            new_w = (
+                weights.join(g, "feat", "left")
+                .select(
+                    "feat",
+                    F.expr(
+                        f"cast(floor((w_fp / {scale}.0d - {lr_c!r}d *"
+                        f" (coalesce(G, 0) / ({n_rows} * cast({scale} as"
+                        f" bigint)) + {l2_c!r}d * (w_fp / {scale}.0d)))"
+                        f" * {scale} + 0.5d) as bigint)"
+                    ).alias("w_fp"),
+                )
+            )
+            weights = truncate_lineage(new_w, rnd, n_iter, checkpoint_every)
+            b_fp = math.floor(
+                (b_fp / scale - lr_c * (g0 / (n_rows * scale))) * scale + 0.5
+            )
     return {
         "weights": weights,
         "intercept_fp": int(b_fp),

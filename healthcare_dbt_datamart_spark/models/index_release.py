@@ -184,10 +184,10 @@ def build_index_scorecard(
     per query is the brute list's k members.
     """
     from ..llmops.similarity import (
-        _lloyd_fit,
         cosine_topk_batch,
         ivf_assign,
         ivf_topk_batch,
+        kmeans_lloyd,
     )
 
     r = ModelRegistry(spark)
@@ -212,15 +212,7 @@ def build_index_scorecard(
         vecs = ctx.ref("stg_vectors")
         cents = _state["centroids"]
         if cents is None:
-            from pyspark import StorageLevel
-
-            cached = vecs.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                cents = _lloyd_fit(
-                    cached, N_CELLS, N_ITER, "vec_id", "embedding"
-                )
-            finally:
-                cached.unpersist()
+            cents = kmeans_lloyd(vecs, N_CELLS, N_ITER, "vec_id", "embedding")
             _state["centroids"] = cents
         return ivf_assign(vecs, cents, "vec_id", "embedding")
 

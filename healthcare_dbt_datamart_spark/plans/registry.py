@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class _UpstreamFailed(RuntimeError):
-    """A model needed one that already failed in this run (dbt "skipped")."""
+    """A model needed one that already failed (dbt "skipped")."""
 
 
 def _ref_literals(code) -> set[str]:
@@ -159,8 +159,9 @@ class ModelRegistry:
         self._selected: set[str] | None = None
         self.batch_range: tuple | None = None  # microbatch backfill bounds
         self.run_results: list[dict] = []
-        # model -> its error, during run() only (one attempt per run)
-        self._failed: dict[str, Exception] | None = None
+        # model -> its error: one attempt per model until the next run(),
+        # the failure twin of the _built memo
+        self._failed: dict[str, Exception] = {}
         self._exposures: dict[str, dict] = {}
         self._unit_tests: dict[str, dict] = {}
 
@@ -510,7 +511,9 @@ class ModelRegistry:
         per-THREAD ``_building`` stack catches genuine same-thread
         recursion. ``run()`` releases nodes only once their hinted
         upstreams are memoized, so the lock matters for refs the hints
-        miss. During a run a failed model is not attempted again.
+        miss. A failure is memoized like a success: until the next
+        ``run()``, the model is not attempted again, and a thread that
+        waited on its lock raises the recorded failure.
 
         A circular ref SPLIT ACROSS THREADS (X refs Y while another
         thread building Y refs X — invisible to both thread-local
@@ -546,8 +549,7 @@ class ModelRegistry:
         except Exception as exc:
             # recorded before the lock is released, so a waiter on this
             # node sees the failure instead of attempting the build again
-            if self._failed is not None:
-                self._failed.setdefault(name, exc)
+            self._failed.setdefault(name, exc)
             raise
         finally:
             with self._locks_guard:
@@ -582,9 +584,9 @@ class ModelRegistry:
     def _build_locked(self, name: str) -> DataFrame:
         if name in self._built:  # built by another thread while we waited
             return self._built[name]
-        if self._failed and name in self._failed:
+        if name in self._failed:
             raise _UpstreamFailed(
-                f"model {name!r} already failed in this run"
+                f"model {name!r} already failed"
             ) from self._failed[name]
         if (
             self._selected is not None
@@ -926,6 +928,7 @@ class ModelRegistry:
         """
         self.full_refresh = full_refresh
         self._built.clear()
+        self._failed.clear()
         if (event_time_start is None) != (event_time_end is None):
             raise ValueError(
                 "microbatch backfill needs BOTH event_time_start and"
@@ -977,7 +980,6 @@ class ModelRegistry:
 
         running: dict = {}
         try:
-            self._failed = {}
             ups = self._upstream_hints(selected)
             pool, inherit = self._pool(len(ups), threads)
             task = inherit(build_one)
@@ -1008,7 +1010,6 @@ class ModelRegistry:
                 )
             return {n: out[n] for n in self._models if n in out}
         finally:
-            self._failed = None
             self._selected = None
             self.batch_range = None  # a later build()/run_tests() must
             # not silently re-enter the backfill's table writes

@@ -1,5 +1,5 @@
-"""SparkSession factory, per-session state, the lineage-cut policy and
-driver-held local frames.
+"""SparkSession factory, per-session state, scoped caches, the
+lineage-cut policy and driver-held local frames.
 
 Mirrors the runtime assumptions the reference bakes into its adapter:
 UTC timestamps (dbt-snowflake normalizes ``current_timestamp`` to UTC,
@@ -141,6 +141,29 @@ def session_cached(spark: SparkSession, key, build):
     if key not in store:
         store[key] = build()
     return store[key]
+
+
+@contextmanager
+def pinned(df: DataFrame):
+    """Persist ``df`` for the block and unpersist it on every exit, return
+    or raise: the one place the package pairs ``persist``/``unpersist``
+    for a scoped cache.
+
+    One storage level, Spark's DataFrame default
+    (``MEMORY_AND_DISK_DESER``). Lazy: the first action that reads the
+    yielded frame fills the cache. A caller that must fill it before
+    releasing an upstream cache runs its own action (a ``count()``).
+
+    Whatever the block returns must not read the cache, which is gone
+    once the block exits: cut it with ``truncate_lineage`` inside the
+    block. The two Bradley-Terry fits and ``elo_boards`` cut their
+    per-item ``tot`` totals that way; a loop's last-round cut does the
+    same for its state."""
+    cached = df.persist()
+    try:
+        yield cached
+    finally:
+        cached.unpersist()
 
 
 def truncate_lineage(

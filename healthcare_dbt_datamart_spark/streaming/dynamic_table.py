@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import pinned
+
 # query.id (checkpoint-persistent, unlike runId) -> the checkpoint dir the
 # dynamic table was STARTED with, so alter_dynamic_table_lag can keep the
 # docstring's offset-resume promise without the caller re-passing it
@@ -232,17 +234,11 @@ def microbatch_stream(
     max_seen = None  # driver-side event-time high-water mark
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal max_seen
         # several passes read the batch (guard max, distinct periods, one
-        # filtered write per period) — persist once, or each pass re-runs
+        # filtered write per period) — pin it once, or each pass re-runs
         # the micro-batch source + transform
-        from pyspark import StorageLevel
-
-        batch_df = batch_df.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            _apply_batch_inner(batch_df)
-        finally:
-            batch_df.unpersist()
+        with pinned(batch_df) as cached:
+            _apply_batch_inner(cached)
 
     def _apply_batch_inner(batch_df: DataFrame) -> None:
         nonlocal max_seen

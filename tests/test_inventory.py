@@ -10,6 +10,9 @@ calls inside it:
 
 - lineage cuts: ``session.truncate_lineage`` holds every
   ``checkpoint``/``localCheckpoint`` call;
+- scoped caches: ``session.pinned`` holds every ``persist``/``unpersist``
+  pair; the one other ``persist`` is ``testdata_queries._persisted``,
+  the session-lifetime store that is never freed;
 - driver-held rows: ``session.local_frame`` holds the one
   ``createDataFrame`` call;
 - streaming state tables: ``streaming/state.py`` reads, replay-checks
@@ -74,39 +77,48 @@ def _package_trees():
         yield path, text, ast.parse(text)
 
 
-def _calls_outside(owner_module, owner_name, *needles):
+def _calls_outside(owners, *needles):
     """(file, line) of every package line holding one of ``needles``
-    outside the body of function ``owner_name`` in ``owner_module`` (a
-    path relative to the package)."""
-    owner = None
+    outside the bodies of the ``owners``, ``(module, function)`` pairs
+    with the module a path relative to the package."""
+    spans = []
     hits = []
     for path, text, tree in _package_trees():
         rel = path.relative_to(PACKAGE).as_posix()
         for n, line in enumerate(text.splitlines(), 1):
             if any(needle in line for needle in needles):
                 hits.append((rel, n))
-        if rel == owner_module:
-            owner = next(
-                node
-                for node in tree.body
-                if isinstance(node, ast.FunctionDef)
-                and node.name == owner_name
-            )
-    assert hits and owner is not None
+        spans += [
+            (rel, node.lineno, node.end_lineno)
+            for node in tree.body
+            if isinstance(node, ast.FunctionDef)
+            and (rel, node.name) in owners
+        ]
+    assert hits and len(spans) == len(owners)
     return [
         (f, n)
         for f, n in hits
-        if f != owner_module or not owner.lineno <= n <= owner.end_lineno
+        if not any(f == m and lo <= n <= hi for m, lo, hi in spans)
     ]
 
 
 def test_lineage_cuts_only_in_truncate_lineage():
     assert (
         _calls_outside(
-            "session.py", "truncate_lineage", "localCheckpoint(", ".checkpoint("
+            {("session.py", "truncate_lineage")},
+            "localCheckpoint(",
+            ".checkpoint(",
         )
         == []
     )
+
+
+def test_scoped_caches_only_through_pinned():
+    owners = {
+        ("session.py", "pinned"),
+        ("models/testdata_queries.py", "_persisted"),
+    }
+    assert _calls_outside(owners, ".persist(", ".unpersist(") == []
 
 
 BANNED_PARAMETERS = {"reliable", "trigger_once"}
@@ -130,7 +142,8 @@ def test_no_banned_parameter():
 
 def test_driver_rows_only_through_local_frame():
     assert (
-        _calls_outside("session.py", "local_frame", "createDataFrame(") == []
+        _calls_outside({("session.py", "local_frame")}, "createDataFrame(")
+        == []
     )
 
 
@@ -143,14 +156,16 @@ STATE_SINK_MODULES = (
 
 def test_state_sinks_only_through_streaming_state():
     hits = _calls_outside(
-        "streaming/state.py", "start_ingest", "catalog.tableExists(", "writeStream"
+        {("streaming/state.py", "start_ingest")},
+        "catalog.tableExists(",
+        "writeStream",
     )
     assert [(f, n) for f, n in hits if f in STATE_SINK_MODULES] == []
 
 
 def test_elo_expected_score_in_one_function():
     assert (
-        _calls_outside("llmops/preferences.py", "_elo_period", "power(10.0d")
+        _calls_outside({("llmops/preferences.py", "_elo_period")}, "power(10.0d")
         == []
     )
 

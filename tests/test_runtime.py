@@ -2155,21 +2155,28 @@ def test_cross_thread_model_cycle_raises_instead_of_deadlocking(spark):
     """A circular ref SPLIT ACROSS THREADS (X's body refs Y while another
     thread inside Y's body refs X — invisible to both thread-local
     recursion stacks) must surface as a 'model cycle' error via the
-    wait-for graph, not hang both node locks forever."""
+    wait-for graph, not hang both node locks forever. The thread that
+    waited on the failed node's lock raises the recorded failure instead
+    of running that body a second time (a rerun would sit at the
+    two-party barrier until its timeout)."""
     import threading
+    import time
 
     from healthcare_dbt_datamart_spark.plans.registry import ModelRegistry
 
     r = ModelRegistry(spark)
     barrier = threading.Barrier(2, timeout=30)
+    calls = {"cyc_x": 0, "cyc_y": 0}
 
     @r.model(materialized="view")
     def cyc_x(ctx):
+        calls["cyc_x"] += 1
         barrier.wait()          # both bodies in-flight before either refs
         return ctx.ref("cyc_y")
 
     @r.model(materialized="view")
     def cyc_y(ctx):
+        calls["cyc_y"] += 1
         barrier.wait()
         return ctx.ref("cyc_x")
 
@@ -2183,12 +2190,16 @@ def test_cross_thread_model_cycle_raises_instead_of_deadlocking(spark):
 
     t1 = threading.Thread(target=worker, args=("cyc_x",), daemon=True)
     t2 = threading.Thread(target=worker, args=("cyc_y",), daemon=True)
+    t0 = time.monotonic()
     t1.start()
     t2.start()
     t1.join(timeout=60)
     t2.join(timeout=60)
+    elapsed = time.monotonic() - t0
     assert not t1.is_alive() and not t2.is_alive(), "threads deadlocked"
     assert any("model cycle" in str(e) for e in errs)
+    assert calls == {"cyc_x": 1, "cyc_y": 1}, calls
+    assert elapsed < 10, f"cycle took {elapsed:.1f} s to surface"
 
 
 def test_merge_exclude_all_columns_keeps_target_values(spark):
