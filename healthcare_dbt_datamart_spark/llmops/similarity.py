@@ -1601,49 +1601,39 @@ def ivfadc_topk_indexed(
     )
 
 
-def save_ann_model(
+def quantizer_frame(
     spark,
-    table: str,
     centroids: list[tuple[int, list[float]]] | None = None,
     codebooks: list[list[tuple[int, list[float]]]] | None = None,
-) -> None:
-    """Persist the trained quantizers next to the codes table — the
-    missing half of the index deployment split: ``build_ivfpq_index``
-    makes the CODES durable, but the coarse centroids and PQ codebooks
-    they were encoded against are session-state Python lists; a fresh
-    session reading the index table could not probe or decode it.
-    One tiny catalog table holds both model parts:
-    (kind, group, cid, cvec) — kind 'coarse' rows carry group=-1, kind
-    'pq' rows carry their subspace index. k·d + m·k·(d/m) = O(k·d)
-    floats total: pure model state, trivially small at any corpus
-    scale. Overwrites atomically via the same swap as any table."""
-    from ..operators.materialize import materialize_table
-
-    rows = []
-    for cid, cv in centroids or []:
-        rows.append(("coarse", -1, int(cid), [float(x) for x in cv]))
-    for s, book in enumerate(codebooks or []):
-        for cid, cv in book:
-            rows.append(("pq", s, int(cid), [float(x) for x in cv]))
-    df = local_frame(
-        spark,
-        rows,
-        "kind string, grp int, cid int, cvec array<double>",
+) -> DataFrame:
+    """The trained quantizers as one relation (kind, grp, cid, cvec):
+    kind 'coarse' rows carry the centroids with grp=-1, kind 'pq' rows
+    carry each codebook entry with its subspace index as grp.
+    k·d + m·k·(d/m) = O(k·d) floats in total: pure model state, small
+    at any corpus scale. ``quantizers_from_frame`` reads it back."""
+    rows = [
+        ("coarse", -1, int(cid), [float(x) for x in cv])
+        for cid, cv in centroids or []
+    ] + [
+        ("pq", s, int(cid), [float(x) for x in cv])
+        for s, book in enumerate(codebooks or [])
+        for cid, cv in book
+    ]
+    return local_frame(
+        spark, rows, "kind string, grp int, cid int, cvec array<double>"
     )
-    materialize_table(spark, table, df)
 
 
-def load_ann_model(
-    spark, table: str
+def quantizers_from_frame(
+    df: DataFrame,
 ) -> tuple[
     list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]
 ]:
-    """Load quantizers saved by ``save_ann_model``: returns
-    (centroids, codebooks) in the exact list shapes every probe/encode
-    function takes, bit-identical to what was saved (doubles round-trip
-    parquet exactly). A bounded-model-state collect (same class as the
-    fit collects)."""
-    rows = spark.table(table).orderBy("kind", "grp", "cid").collect()
+    """(centroids, codebooks) from a ``quantizer_frame`` relation, in the
+    list shapes every probe/encode function takes and bit-identical to
+    what was written (doubles round-trip parquet exactly). A bounded
+    model-state collect (same class as the fit collects)."""
+    rows = df.orderBy("kind", "grp", "cid").collect()
     centroids = [
         (int(r.cid), [float(x) for x in r.cvec])
         for r in rows
@@ -1655,8 +1645,38 @@ def load_ann_model(
             books.setdefault(int(r.grp), []).append(
                 (int(r.cid), [float(x) for x in r.cvec])
             )
-    codebooks = [books[s] for s in sorted(books)]
-    return centroids, codebooks
+    return centroids, [books[s] for s in sorted(books)]
+
+
+def save_ann_model(
+    spark,
+    table: str,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    codebooks: list[list[tuple[int, list[float]]]] | None = None,
+) -> None:
+    """Persist the trained quantizers next to the codes table — the
+    missing half of the index deployment split: ``build_ivfpq_index``
+    makes the CODES durable, but the coarse centroids and PQ codebooks
+    they were encoded against are session-state Python lists; a fresh
+    session reading the index table could not probe or decode it.
+    One tiny catalog table holds both model parts, the
+    ``quantizer_frame`` relation. Overwrites atomically via the same
+    swap as any table."""
+    from ..operators.materialize import materialize_table
+
+    materialize_table(
+        spark, table, quantizer_frame(spark, centroids, codebooks)
+    )
+
+
+def load_ann_model(
+    spark, table: str
+) -> tuple[
+    list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]
+]:
+    """Load quantizers saved by ``save_ann_model``: the
+    ``quantizers_from_frame`` reading of the table."""
+    return quantizers_from_frame(spark.table(table))
 
 
 def ivf_residuals(

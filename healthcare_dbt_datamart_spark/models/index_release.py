@@ -8,7 +8,8 @@ registry that runs the datamart runs this:
 
   stg_vectors       stage view: typed projection of the embedding feed
   index_quantizers  TABLE — the trained model state AS A RELATION
-                    (``save_ann_model``'s (kind, grp, cid, cvec) shape):
+                    (``similarity.quantizer_frame``'s (kind, grp, cid,
+                    cvec) shape, the one ``save_ann_model`` writes):
                     coarse centroids + per-subspace PQ codebooks, Lloyd-
                     trained once per release; a fresh session reads this
                     table and can probe/decode the codes without any
@@ -43,36 +44,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import ModelRegistry
-from ..session import local_frame, truncate_lineage
+from ..session import truncate_lineage
 
 N_CELLS = 8
 PQ_M = 8
 PQ_CODES = 16
 LLOYD_ROUNDS = 2
-
-
-def quantizers_from_relation(
-    df: DataFrame,
-) -> tuple[
-    list[tuple[int, list[float]]], list[list[tuple[int, list[float]]]]
-]:
-    """Rebuild the (centroids, codebooks) python lists from the
-    ``index_quantizers`` relation — ``load_ann_model``'s logic given a
-    DataFrame instead of a table name (registry models hand refs, not
-    catalog names). Bounded model-state collect."""
-    rows = df.orderBy("kind", "grp", "cid").collect()
-    centroids = [
-        (int(r.cid), [float(x) for x in r.cvec])
-        for r in rows
-        if r.kind == "coarse"
-    ]
-    books: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in rows:
-        if r.kind == "pq":
-            books.setdefault(int(r.grp), []).append(
-                (int(r.cid), [float(x) for x in r.cvec])
-            )
-    return centroids, [books[s] for s in sorted(books)]
 
 
 def build_index_release(
@@ -93,32 +70,27 @@ def build_index_release(
         # TABLE: training is the expensive, once-per-release step; every
         # downstream consumer (encode, probe, NEXT session's upsert)
         # reads the persisted state instead of re-fitting
-        from ..llmops.similarity import kmeans_lloyd, pq_codebooks_trained
+        from ..llmops.similarity import (
+            kmeans_lloyd,
+            pq_codebooks_trained,
+            quantizer_frame,
+        )
 
         vecs = ctx.ref("stg_vectors")
         cents = kmeans_lloyd(vecs, k=N_CELLS, n_iter=LLOYD_ROUNDS)
         books = pq_codebooks_trained(
             vecs, m=PQ_M, k=PQ_CODES, n_iter=LLOYD_ROUNDS
         )
-        rows = [
-            ("coarse", -1, int(cid), [float(x) for x in cv])
-            for cid, cv in cents
-        ] + [
-            ("pq", s, int(cid), [float(x) for x in cv])
-            for s, book in enumerate(books)
-            for cid, cv in book
-        ]
-        return local_frame(
-            ctx.spark,
-            rows,
-            "kind string, grp int, cid int, cvec array<double>",
-        )
+        return quantizer_frame(ctx.spark, cents, books)
 
     @r.model(materialized="table", partition_by=["cell"])
     def index_codes(ctx):
-        from ..llmops.similarity import ivfpq_index_rows
+        from ..llmops.similarity import (
+            ivfpq_index_rows,
+            quantizers_from_frame,
+        )
 
-        cents, books = quantizers_from_relation(ctx.ref("index_quantizers"))
+        cents, books = quantizers_from_frame(ctx.ref("index_quantizers"))
         return ivfpq_index_rows(ctx.ref("stg_vectors"), cents, books)
 
     @r.model()

@@ -3992,8 +3992,7 @@ def _supplier_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier a beats supplier b when a's unit price is strictly
     cheaper (cents_a·qty_b < cents_b·qty_a — exact integer
     cross-multiplication, no division); period = order year (the
-    FIDE/arena rating-period unit). This exact construction is
-    pre-proven at driver shape in tests/test_round10_replays.py.
+    FIDE/arena rating-period unit).
 
     Persisted once per session and shared by every leaderboard query:
     whichever runs first pays the build. The cached frame is the same
@@ -4147,8 +4146,7 @@ def q_elo_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     bradley_terry's static fit. All-integer BIGINT state, one
     half-up quantization per match, exact zero-sum conservation per
     period; the oracle unrolls one MATERIALIZED CTE round per rating
-    period (the bradley_terry discipline). Body + oracle pre-proven
-    hash-green at driver shape in tests/test_round10_replays.py.
+    period (the bradley_terry discipline).
     Reads the session's shared pair-period collapse and fit cache
     (weighted rows are bit-identical to per-match rows — the
     shared-expected-score argument on elo_ratings)."""
@@ -4162,8 +4160,7 @@ def q_wilson_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the uncertainty column beside the Elo/BT point estimates, ranked
     by the lower bound. IEEE-only arithmetic (+,−,×,÷,sqrt are all
     correctly rounded by the standard), so the report is hash-exact
-    cross-engine with no quantization discipline. Pre-proven at
-    driver shape in tests/test_round10_replays.py. Reads the session's
+    cross-engine with no quantization discipline. Reads the session's
     shared pair-period collapse and board cache (integer sums over
     weighted rows are identical to per-match rows)."""
     return _supplier_wilson(spark, sf_dir)
@@ -4268,9 +4265,7 @@ def q_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     is MIXED capped/uncapped at every SF (the cap prefix grows with
     the language skew, not the scale). The budget scalar is collected
     bounded driver state (one integer — the seed-collect convention);
-    the oracle computes the same integer in-SQL. Body + closed-form
-    window oracle pre-proven hash-green at driver shape in
-    tests/test_round11_replays.py."""
+    the oracle computes the same integer in-SQL."""
     from ..llmops.splits import unimax_allocation
 
     docs = load(spark, sf_dir, "documents")
@@ -4288,8 +4283,7 @@ def q_conformal_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha = 0.25 (exactly dyadic — ceil((n+1)(1−alpha)) is the same
     integer in exact-rational and double arithmetic). Order-stat
     threshold + coverage replay as cumulative-count SQL over the
-    bounded quantized-score cell table. Pre-proven at driver shape in
-    tests/test_round11_replays.py."""
+    bounded quantized-score cell table."""
     from ..llmops.evaluation import conformal_report
 
     docs = load(spark, sf_dir, "documents").select(
@@ -4304,9 +4298,8 @@ def q_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row corpus vocabulary diagnostics (llmops/textstats.py::
     vocab_richness): V/N/f1/f2 integer folds, the Chao1 closed form,
     and the quantized-integer Zipf rank-frequency slope over the top
-    200 types (HUGEINT-safe combination — the overflow caught by the
-    pre-proof). Pre-proven at driver shape in
-    tests/test_round11_replays.py."""
+    200 types (HUGEINT-safe combination — the overflow a DuckDB replay
+    caught before the query shipped)."""
     from ..llmops.textstats import vocab_richness
 
     docs = load(spark, sf_dir, "documents")
@@ -4320,7 +4313,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc id, 3 integer rounds. The seed is collected bounded driver
     state; the oracle recomputes seed and teleport masses in-SQL (no
     data-dependent literals) and unrolls the rounds as MATERIALIZED
-    CTEs. Pre-proven at driver shape in tests/test_round11_replays.py.
+    CTEs.
     The verified pair table comes from the session's shared dedup-family
     cache (same construction as near_dup_jaccard/near_dup_clusters)."""
     from ..llmops.graph import personalized_pagerank, undirected_edges
@@ -4352,8 +4345,7 @@ def q_leaderboard_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     period-batched Elo → Wilson board → the exact-integer one-row
     verdict) over the shared supplier match log. The fourth release
     DAG joins curation_dag/corpus_release/index gate in the window;
-    its whole-DAG single-statement DuckDB replay is pre-proven at
-    driver shape in tests/test_round10_replays.py. The session's
+    its oracle replays the whole DAG as one DuckDB statement. The session's
     shared pair-period collapse and the bt/elo/wilson fit caches are
     injected through the DAG's warm-start hook, so the whole
     leaderboard family pays the match-log scan and each shared fit
@@ -4381,8 +4373,7 @@ def q_rrf_fuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-15 for 'filter join spark') with the ANN cosine board
     (top-10 vs vec_id 0) — integer scale-div terms, associative BIGINT
     sum, fused board ranked by (rrf_fp DESC, id ASC). The oracle
-    composes the two proven board oracles. Pre-proven at driver shape
-    in tests/test_round12_replays.py."""
+    composes the two proven board oracles."""
     from ..llmops.retrieval import rrf_fuse
 
     # RRF's semantics IS fusing two PUBLISHED system rankings — read
@@ -4421,8 +4412,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     release gate's tops_agree boolean. The sign-pair fold runs on the
     bounded item frame (model state); the oracle composes the two
     PROVEN rating replays (3 unrolled BT MM rounds, per-period unrolled
-    Elo). Pre-proven hash-green at driver shape in
-    tests/test_round12_replays.py. Both rating fits come from the
+    Elo). Both rating fits come from the
     session's shared fit caches (derived from the pair-period
     collapse — doubled pair counts and weighted Elo rows are
     bit-identical to per-match rows), so the agreement stat costs one
@@ -4444,8 +4434,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table in one projection pass — all-integer
     cross-multiplied rules, fail-as-data rows (the synthetic corpus
     carries no bullets/symbols, so those counters replay as exact
-    zeros while the word/stopword/alpha rules carry the variation).
-    Pre-proven at driver shape in tests/test_round12_replays.py."""
+    zeros while the word/stopword/alpha rules carry the variation)."""
     from ..llmops.textstats import gopher_rules
 
     return gopher_rules(load(spark, sf_dir, "documents"), "text", "doc_id")
@@ -4456,8 +4445,7 @@ def q_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     mcnemar_test — Dietterich 1998): a length-threshold classifier vs
     a token-budget classifier judged on lang='en' over documents —
     four exact BIGINT contingency cells in ONE fold, the
-    continuity-corrected chi² and the 3.841 table verdict. Pre-proven
-    at driver shape in tests/test_round12_replays.py."""
+    continuity-corrected chi² and the 3.841 table verdict."""
     from ..llmops.evaluation import mcnemar_test
 
     docs = load(spark, sf_dir, "documents")
@@ -4482,7 +4470,7 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the list-level number behind an ANN release's recall gate. The
     overlap series folds over the bounded top-k lists; the oracle
     composes the two PROVEN board oracles (incl. the unrolled Lloyd
-    fit). Pre-proven at driver shape in tests/test_round12_replays.py."""
+    fit)."""
     from ..llmops.evaluation import rbo
 
     # the session's published boards (shared with cosine_topk /
@@ -4513,8 +4501,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     content fingerprint, so the contamination detector is empty BY
     CONSTRUCTION. Full per-document (id, component, split) assignment;
     the oracle composes the PROVEN recursive-closure component oracle
-    with the cluster-min-fp rule. Pre-proven at driver shape in
-    tests/test_round12_replays.py. Short-circuits the pair pipeline
+    with the cluster-min-fp rule. Short-circuits the pair pipeline
     with the session's shared component cache (the operator's own
     ``components`` hook — same construction, bit-identical)."""
     from ..llmops.splits import leakage_safe_split
@@ -4536,8 +4523,7 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-shaped text per doc (content slices + a javascript line on
     doc_id % 7 and a brace poison on doc_id % 13) — both engines
     replicate the construction exactly and every rule fires somewhere
-    in the corpus. Pre-proven at driver shape in
-    tests/test_round12_replays.py."""
+    in the corpus."""
     from ..llmops.textstats import c4_line_filter
 
     docs = load(spark, sf_dir, "documents")
@@ -4567,8 +4553,8 @@ def q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c4_line_filter(lined, "text", "doc_id", min_sentences=2)
 
 
-# -- round-12 promotion cohort (the round-13 pre-proof file, promoted
-#    in-window per the round-11 verdict's backlog-drain order) -------------
+# -- round-12 promotion cohort (promoted in-window per the round-11
+#    verdict's backlog-drain order) ------------------------------------------
 
 
 def q_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4579,8 +4565,7 @@ def q_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     short-text fuzzy-dedup verifier beside jaccard_pairs. Runs ONLY on
     LSH candidates (never all-pairs), JVM levenshtein kernel, loud
     max_chars guard. DuckDB's levenshtein computes the same integer,
-    so every column replays. Pre-proven hash-green at driver shape in
-    tests/test_round13_replays.py."""
+    so every column replays."""
     from ..llmops.dedup import levenshtein_pairs
 
     # the dedup family's shared session-cached LSH candidate set
@@ -4597,8 +4582,7 @@ def q_chrf_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     chars 101-400 (the sliding-window construction — real overlap at
     every order, exact clipping exercised corpus-wide). Clipped counts,
     both denominators, and the (1+b²)m/(b²r+c) single-division F
-    replay per order. Pre-proven at driver shape in
-    tests/test_round13_replays.py. load_spread: the per-row char-gram
+    replay per order. load_spread: the per-row char-gram
     explode is the compute-dense shape the fan-out exists for (the
     minhash-family measurement on load_spread's docstring)."""
     from ..llmops.evaluation import chrf_report
@@ -4618,8 +4602,7 @@ def q_min_k_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     CCNet clean-reference convention shared with kn_bigram_scores),
     every document scored at k=20 — quantized per-token Laplace
     logprobs, per-doc rank-window tail selection, both integer-sum
-    means. Pre-proven at driver shape in
-    tests/test_round13_replays.py."""
+    means."""
     from ..llmops.filtering import min_k_prob
 
     docs = load(spark, sf_dir, "documents")
@@ -4634,8 +4617,7 @@ def q_mad_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     — Iglewicz & Hoaglin 1993 modified z): per-language n_chars over
     the whole documents corpus — exact cell-table lower medians at
     ceil ranks, the 0.6745 modified z, outlier flag at 3.5, NULL
-    robust_z on zero-MAD groups (never a fabricated infinity).
-    Pre-proven at driver shape in tests/test_round13_replays.py."""
+    robust_z on zero-MAD groups (never a fabricated infinity)."""
     from ..llmops.splits import mad_scores
 
     docs = load(spark, sf_dir, "documents")
@@ -4654,9 +4636,7 @@ def q_index_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     21] at nprobe=2 → brute cosine oracle → TREC-padded judged pool
     (misses at sentinel −2.0) → per-query recall/MRR/NDCG → the
     exact-integer release verdict. The fourth release-gate DAG beside
-    curation_dag / corpus_release / leaderboard_gate. Pre-proven at
-    driver shape (whole DAG as ONE DuckDB statement) in
-    tests/test_round13_replays.py."""
+    curation_dag / corpus_release / leaderboard_gate."""
     from .index_release import build_index_scorecard
 
     emb = load(spark, sf_dir, "embeddings")
@@ -4678,8 +4658,7 @@ def q_paired_bootstrap_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     under large item variance, the test's reason to exist. The
     md5(seed:rep:id) draws, Poisson CASE weights, replicate means, and
     ceil-rank CI walk replay the driver-green bootstrap_diff_ci oracle
-    machinery. Pre-proven at driver shape in
-    tests/test_round13_replays.py."""
+    machinery."""
     from ..llmops.bootstrap import paired_bootstrap_test
 
     docs = load(spark, sf_dir, "documents")
@@ -4702,8 +4681,7 @@ def q_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct counts, so the union-trick estimator path — not the exact
     degenerate — is what runs). 60-bit md5 fingerprints, two-stage
     k-smallest, union-slice arithmetic — sketch-sized state per
-    source, never a cross-source content join. Pre-proven at driver
-    shape in tests/test_round13_replays.py."""
+    source, never a cross-source content join."""
     from ..llmops.dedup import source_overlap_kmv
 
     docs = load(spark, sf_dir, "documents")
@@ -4748,8 +4726,7 @@ def q_implicit_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     which exercises the unmapped-action drop on real data); item = a
     deterministic event-id bucket per user. Strongest-action collapse,
     the 20-item cap, and the strict-rank pair build — the DPO/RLHF
-    pair-mining front end. Pre-proven at driver shape in
-    tests/test_round13_replays.py."""
+    pair-mining front end."""
     from ..llmops.preferences import implicit_preference_pairs
 
     ev = (
@@ -4774,8 +4751,7 @@ def q_weighted_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted_consensus — the one-round Dawid-Skene relaxation): the
     shared rater panel re-voted with agreement-rate weights — majority
     table, per-rater reliability, decimal mass sums, and the flipped
-    flag. Pre-proven at driver shape in
-    tests/test_round13_replays.py."""
+    flag."""
     from ..llmops.preferences import weighted_consensus
 
     return weighted_consensus(
@@ -4789,8 +4765,7 @@ def q_annotator_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     annotator_agreement): each rater's agreement with the
     (n desc, label asc) majority over the shared panel — counts
     BIGINT, one 6dp rate. The annotation-quality triage beside
-    krippendorff_alpha/fleiss_kappa. Pre-proven at driver shape in
-    tests/test_round13_replays.py."""
+    krippendorff_alpha/fleiss_kappa."""
     from ..llmops.preferences import annotator_agreement
 
     return annotator_agreement(
@@ -4805,8 +4780,7 @@ def q_rasch_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared panel with correct = the click bit, 4 joint-ascent rounds —
     per-vote half-up quantized errors, integer gradient sums,
     quantized updates, exact-integer sum-to-zero re-anchor per round.
-    Bounded model state (items + raters rows). Pre-proven at driver
-    shape (fully unrolled oracle) in tests/test_round13_replays.py."""
+    Bounded model state (items + raters rows)."""
     from ..llmops.preferences import rasch_fit
 
     # the family's shared session-cached panel: the selected rows are
@@ -4823,7 +4797,7 @@ def q_rasch_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- round-12 scheduled cohort (the round-14 pre-proof file; born after
+# -- round-12 scheduled cohort (born after
 #    the round-12 rotation locked, SCHEDULED to lead the round-13
 #    window — `SCHEDULED_NEXT_WINDOW` below is the machine contract) ------
 
@@ -4833,8 +4807,7 @@ def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-scale agreement route documented on kendall_tau's
     max_items guard): does document LENGTH rank like TOKEN COUNT
     (heavily tied short docs exercise the average-rank cells)? Both
-    axes quantized to BIGINT cells, five exact sums, one IEEE formula.
-    Pre-proven at driver shape in tests/test_round14_replays.py."""
+    axes quantized to BIGINT cells, five exact sums, one IEEE formula."""
     from ..llmops.evaluation import spearman_rho
 
     docs = load(spark, sf_dir, "documents").select(
@@ -4850,8 +4823,7 @@ def q_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """distinct-1/2/3 diversity report (llmops/evaluation.py::
     distinct_n — Li et al. 2016, the mode-collapse diagnostic): exact
     BIGINT gram counts over the documents corpus, one 6dp ratio per
-    order. Pre-proven at driver shape in
-    tests/test_round14_replays.py. load_spread: the tokenize +
+    order. load_spread: the tokenize +
     tagged-gram explode is per-row compute-dense work (the
     minhash-family measurement on load_spread's docstring)."""
     from ..llmops.evaluation import distinct_n
@@ -4865,8 +4837,7 @@ def q_wilson_from_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming arena ingest maintains) halves back to exact match
     units, so from-pairs output IS from-log output — the proven
     wilson_winrate oracle is the oracle, making the parity claim
-    itself the hash gate. Pre-proven at driver shape in
-    tests/test_round14_replays.py."""
+    itself the hash gate."""
     from ..llmops.preferences import wilson_from_pairs
 
     pc = _supplier_pair_periods(spark, sf_dir).groupBy(
@@ -4880,8 +4851,7 @@ def q_roc_auc_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data-card slice of the driver-green roc_auc rank-sum): a
     deterministic doc_id-hash score against the lang='en' label,
     sliced by source — grouped rank-sum under a PARTITION BY window,
-    all-integer until the final division. Pre-proven at driver shape
-    in tests/test_round14_replays.py."""
+    all-integer until the final division."""
     from ..llmops.evaluation import roc_auc_by_group
 
     docs = load(spark, sf_dir, "documents").select(
@@ -4898,8 +4868,7 @@ def q_calibration_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     calibration_by_group — the data-card slice of the driver-green
     calibration_report): the q_calibration_report scoring (mod-1000
     key hash, returns-bit label) sliced by l_linestatus — per-group
-    integer bin cells, every metric a division of exact BIGINT sums.
-    Pre-proven at driver shape in tests/test_round14_replays.py."""
+    integer bin cells, every metric a division of exact BIGINT sums."""
     from ..llmops.evaluation import calibration_by_group
 
     li = load(spark, sf_dir, "lineitem").select(
@@ -4923,8 +4892,7 @@ def q_source_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation): dup counts, token totals, majority language, and the
     quality_classifier gate means, every ratio a 6dp division of exact
     integer sums; the oracle composes the PROVEN quality_classifier
-    oracle for the score column. Pre-proven at driver shape in
-    tests/test_round14_replays.py."""
+    oracle for the score column."""
     from .data_card import source_data_card
 
     return source_data_card(load(spark, sf_dir, "documents"))
@@ -4941,37 +4909,33 @@ def q_source_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # source_data_card) entered the round-13 window and gets its first
 # driver rows. EMPTY this round: round 13 is an optimization round —
 # no new operators are born, so nothing is scheduled ahead; the next
-# build round's promotions (the round-15/16/17 pre-proof stock below)
-# re-fill this list when they land.
+# build round's promotions re-fill this list when they land.
 SCHEDULED_NEXT_WINDOW: list = []
 # PROMOTION QUEUE (audit_window + SCHEDULED_NEXT_WINDOW are the machine
 # contract; this prose is a POINTER, not a ledger — pruned each round).
-# Round 12 drained the backlog per the round-11 verdict: the ELEVEN
-# round-13-file pre-proofs promoted straight into the round-12 window
+# Round 12 drained the backlog per the round-11 verdict: ELEVEN
+# queries promoted straight into the round-12 window
 # (levenshtein_pairs, chrf_report, min_k_prob, mad_scores,
 # index_scorecard, paired_bootstrap_test, source_overlap_kmv,
 # rasch_fit, implicit_preference_pairs, weighted_consensus,
-# annotator_agreement) and the round-14 file's SIX scheduled above.
-# Remaining stock: the round-15 file's FOUR
-# (tests/test_round15_replays.py: retrieval_metrics,
-# trigram_interp_scores, line_dedup, hits_fixedpoint), the round-16
-# file's FIVE (tests/test_round16_replays.py: bradley_terry_ties,
-# hashed_ngram_features, curriculum_report, curriculum_phases,
-# bpe_token_counts), the round-17 file's FIVE
-# (tests/test_round17_replays.py: best_of_n, dpo_pairs, sparse_logreg,
-# matryoshka_truncate, mmr_rerank — list_reduce pins the SQL fold to
-# the driver's element order); winsorize_scores and lsh_plan carry
-# round-12-file proofs (available alternates for any window). Behind
-# them, implemented + DuckDB/pure-Python replay-gated in pytest (each
-# needs a driver-shape pre-proof before scheduling, or carries a
-# DOCUMENTED hash-gate blocker): bleu_corpus, rouge_l,
+# annotator_agreement) and the SIX scheduled above.
+# Remaining stock, each with a DuckDB replay in the test file of its
+# module: retrieval_metrics, trigram_interp_scores, line_dedup,
+# hits_fixedpoint, bradley_terry_ties, hashed_ngram_features,
+# curriculum_report, curriculum_phases, bpe_token_counts, best_of_n,
+# dpo_pairs, sparse_logreg, matryoshka_truncate, mmr_rerank
+# (list_reduce pins the SQL fold to the driver's element order),
+# winsorize_scores and lsh_plan. Behind them, implemented +
+# DuckDB/pure-Python replay-gated in pytest (each needs a DuckDB
+# replay before scheduling, or carries a DOCUMENTED hash-gate
+# blocker): bleu_corpus, rouge_l,
 # pca_train/pca_apply, brier_decomposition, isotonic_calibration,
 # procrustes_align, calibration_summary,
 # streaming_mcnemar_ingest/mcnemar_from_cells.
 # (calibration_summary / bleu_corpus / brier_decomposition carry
 # DOCUMENTED hash-gate blockers — float-addition order, Python
 # banker's-vs-half-up rounding on exact rationals, final
-# transcendentals — see the round-14/15 replay file docstrings.)
+# transcendentals — see COVERAGE.md.)
 # unigram_lm_train/unigram_segment_report stay pytest-gated (Viterbi
 # DP — not SQL-expressible; the brute-force optimality test is the
 # gate); zorder stays pytest-level by nature (its observable is
@@ -8723,8 +8687,7 @@ FROM feats CROSS JOIN w6
 
 # -- round-9 promotion cohort oracles (scheduled for the round-10 window) --
 
-# Supplier match log shared by the elo/wilson oracles — the exact CTE
-# pre-proven in tests/test_round10_replays.py (integer cents/qty
+# Supplier match log shared by the elo/wilson oracles (integer cents/qty
 # cross-multiplication; period = order year; win counts per item).
 _MATCH_CTE = """
 lx AS MATERIALIZED (
@@ -8948,8 +8911,8 @@ FROM agg
 # UniMax water-filling: budget = corpus_total // 3 computed IN-SQL (the
 # spark side collects the same bounded scalar), caps = 2·n_tokens; the
 # capped prefix, div/mod leftover split, and 6dp epochs report replay
-# the closed-form window SQL pre-proven in tests/test_round11_replays.py
-# (there with a literal budget — the algebra is identical).
+# as closed-form window SQL (tests/test_splits.py runs the same algebra
+# at a literal budget).
 ORACLE["unimax_allocation"] = """
 WITH counts AS (
   SELECT lang AS grp, CAST(SUM(n_chars) AS BIGINT) AS n_tokens
@@ -8988,8 +8951,7 @@ FROM tot
 """
 
 # Split conformal at alpha=0.25: order-stat threshold over the bounded
-# quantized-score cell table + the eval coverage check — the exact SQL
-# pre-proven in tests/test_round11_replays.py.
+# quantized-score cell table + the eval coverage check.
 ORACLE["conformal_report"] = """
 WITH cal AS (
   SELECT CAST(floor((n_chars / 1000.0) * 1000000 + 0.5) AS BIGINT) AS s_fp
@@ -9024,7 +8986,7 @@ FROM kk, thr
 
 # Vocabulary diagnostics: V/N/f1/f2 integer folds, Chao1 closed form,
 # quantized-integer Zipf slope over the top-200 types (HUGEINT-safe
-# combination) — pre-proven in tests/test_round11_replays.py.
+# combination).
 ORACLE["vocab_richness"] = """
 WITH freq AS (
   SELECT t, COUNT(*) AS tc FROM (
@@ -9069,8 +9031,7 @@ FROM tot, reg
 def _ppr_oracle_sql() -> str:
     """Seed-restart PageRank unrolled: the verified near-dup graph (the
     pagerank_docs edge construction via _LLM_ORACLE), seed = MIN node
-    and teleport masses computed in-SQL, 3 MATERIALIZED integer rounds
-    — pre-proven in tests/test_round11_replays.py."""
+    and teleport masses computed in-SQL, 3 MATERIALIZED integer rounds."""
     sql = f"""
 WITH
 v AS MATERIALIZED ({_LLM_ORACLE["near_dup_jaccard"]}),
@@ -9119,8 +9080,7 @@ def _leaderboard_gate_oracle_sql() -> str:
     +1-smoothed pair counts -> 3 unrolled BT MM rounds -> per-period
     unrolled Elo (k=32; 1995-2001 — a year with no matches is an exact
     no-op round, the elo_ratings static-unroll convention) -> Wilson
-    board -> the exact-integer verdict row. Pre-proven at driver shape
-    in tests/test_round10_replays.py."""
+    board -> the exact-integer verdict row."""
     s2 = 10**12  # BT scale^2 at the DAG's default scale 1e6
     sql = "WITH " + _MATCH_CTE + """,
 pc AS MATERIALIZED (
@@ -9242,8 +9202,7 @@ ORACLE["leaderboard_gate"] = _leaderboard_gate_oracle_sql()
 
 # RRF fusion of the two proven boards (BM25 top-15 for 'filter join
 # spark'; ANN cosine top-10 vs vec 0): integer scale-div terms,
-# associative BIGINT sum, fused rank by (rrf_fp DESC, id ASC) —
-# pre-proven in tests/test_round12_replays.py.
+# associative BIGINT sum, fused rank by (rrf_fp DESC, id ASC).
 ORACLE["rrf_fuse"] = f"""
 WITH bm AS ({ORACLE["bm25_topk"]}),
 ann AS ({ORACLE["cosine_topk"]}),
@@ -9276,8 +9235,7 @@ def _kendall_tau_oracle_sql() -> str:
     doubled pair counts -> 3 unrolled BT MM rounds (scale 1e6), and
     per-period unrolled Elo (k=16, 1995-2001, the elo_ratings
     static-unroll convention) — then folds the exact sign-pair counts
-    over the bounded item board. Pre-proven at driver shape in
-    tests/test_round12_replays.py."""
+    over the bounded item board."""
     s2 = 10**12  # BT scale^2 at bradley_terry's default scale 1e6
     sql = "WITH " + _MATCH_CTE + """,
 pc AS MATERIALIZED (
@@ -9376,7 +9334,7 @@ FROM agg"""
 ORACLE["kendall_tau"] = _kendall_tau_oracle_sql()
 
 # The Gopher battery (Rae et al. 2021 A1.1): all-integer counters and
-# cross-multiplied rules — pre-proven in tests/test_round12_replays.py.
+# cross-multiplied rules.
 ORACLE["gopher_rules"] = """
 WITH base AS (
   SELECT doc_id,
@@ -9427,8 +9385,7 @@ SELECT *,
 FROM rules
 """
 
-# McNemar's continuity-corrected chi² from four exact BIGINT cells —
-# pre-proven in tests/test_round12_replays.py.
+# McNemar's continuity-corrected chi² from four exact BIGINT cells.
 ORACLE["mcnemar_test"] = """
 WITH j AS (
   SELECT CAST((n_chars >= 250) = (lang = 'en') AS INT) AS ca,
@@ -9462,8 +9419,7 @@ FROM cells
 
 # RBO (Webber et al. 2010, prefix form, p=0.9) between the exact cosine
 # top-10 and the IVF(nprobe=2) top-10 — composes the two proven board
-# oracles (incl. the unrolled Lloyd fit); pre-proven in
-# tests/test_round12_replays.py.
+# oracles (incl. the unrolled Lloyd fit).
 ORACLE["rbo"] = f"""
 WITH ex AS ({ORACLE["cosine_topk"]}),
 ap AS ({ORACLE["ivf_topk"]}),
@@ -9500,8 +9456,7 @@ FROM ov
 """
 
 # Leakage-safe splits: the recursive-closure component oracle composed
-# with the cluster-min-fingerprint split rule — pre-proven in
-# tests/test_round12_replays.py.
+# with the cluster-min-fingerprint split rule.
 ORACLE["leakage_safe_split"] = f"""
 WITH comp AS ({ORACLE["near_dup_clusters"]}),
 fp AS (SELECT doc_id, md5(text) AS f FROM documents),
@@ -9527,8 +9482,7 @@ FROM keyed
 """
 
 # C4 line/page cleaning over the deterministic line-shaped rebuild —
-# both engines replicate the construction exactly; pre-proven in
-# tests/test_round12_replays.py.
+# both engines replicate the construction exactly.
 ORACLE["c4_line_filter"] = """
 WITH lined AS (
   SELECT doc_id,
@@ -9576,9 +9530,7 @@ FROM base
 """
 
 # ---------------------------------------------------------------------------
-# round-12 promotion-cohort oracles (bodies + SQL lifted from their
-# pre-proof replays: tests/test_round13_replays.py for the in-window
-# eleven, tests/test_round14_replays.py for the scheduled six)
+# round-12 promotion-cohort oracles
 # ---------------------------------------------------------------------------
 
 # Edit-distance verification over the LSH candidate set — DuckDB's
@@ -10090,8 +10042,7 @@ def _rasch_fit_oracle_sql() -> str:
     half-up quantized errors, integer gradient sums, quantized
     parameter updates, and the exact-integer sum-to-zero re-anchor per
     round (Python FLOOR division emulated via the mod identity, since
-    DuckDB's // truncates). Pre-proven in
-    tests/test_round13_replays.py."""
+    DuckDB's // truncates)."""
     s = 10**6
     sql = """WITH raw AS MATERIALIZED (
   SELECT user_id % 25 AS item0,
@@ -10153,7 +10104,7 @@ FROM t4 t JOIN nr USING (rater)
 
 ORACLE["rasch_fit"] = _rasch_fit_oracle_sql()
 
-# -- the round-12 SCHEDULED cohort's oracles (round-14 pre-proof file) -----
+# -- the round-12 SCHEDULED cohort's oracles ---------------------------------
 
 # Spearman: both axes quantized to BIGINT cells, average ranks from
 # cumulative cell counts, five exact sums, one IEEE formula.

@@ -337,9 +337,13 @@ class ModelRegistry:
                 checks.append((name, f"{kind}_{name}_{args[0]}", v, opts))
         pool, inherit = self._pool(len(checks))
         with pool:
-            results = list(pool.map(
-                inherit(lambda c: T.run_test(c[2], name=c[1], **c[3])), checks
-            ))
+            futures = [
+                pool.submit(
+                    inherit(lambda c: T.run_test(c[2], name=c[1], **c[3])), c
+                )
+                for c in checks
+            ]
+            results = [f.result() for f in futures]
         out: dict[str, list] = {}
         for (name, *_), res in zip(checks, results):
             out.setdefault(name, []).append(res)
@@ -351,12 +355,20 @@ class ModelRegistry:
         """A pool of ``threads`` workers (default: one per task, up to
         Spark's default parallelism) and the wrapper every task goes
         through, which carries the calling thread's job group, job
-        description and session tags, captured now, into the worker."""
+        description and session tags into the worker.
+
+        Wrap each task on its own, on the calling thread: one wrap
+        clones the caller's local properties once, and every call of the
+        wrapped function installs that same Java ``Properties`` object
+        in its worker. Tasks sharing one wrap would share one object, so
+        one model's job group or ``spark.sql.execution.root.id`` would
+        show in, or be cleared under, a model running beside it."""
         workers = threads or min(tasks, self.spark.sparkContext.defaultParallelism)
-        return (
-            ThreadPoolExecutor(max_workers=max(1, workers)),
-            inheritable_thread_target(self.spark),
-        )
+
+        def inherit(fn: Callable) -> Callable:
+            return inheritable_thread_target(self.spark)(fn)
+
+        return ThreadPoolExecutor(max_workers=max(1, workers)), inherit
 
     def _tested_relation(self, name: str) -> DataFrame:
         """dbt test semantics: tests read the EXISTING built relation —
@@ -982,7 +994,6 @@ class ModelRegistry:
         try:
             ups = self._upstream_hints(selected)
             pool, inherit = self._pool(len(ups), threads)
-            task = inherit(build_one)
             with pool:
                 while ups or running:
                     if not errors:
@@ -993,7 +1004,7 @@ class ModelRegistry:
                             ready = [next(iter(ups))]
                         for n in ready:
                             del ups[n]
-                            running[pool.submit(task, n)] = n
+                            running[pool.submit(inherit(build_one), n)] = n
                     if not running:
                         break  # after an error, unstarted models never start
                     finished, _ = wait(running, return_when=FIRST_COMPLETED)

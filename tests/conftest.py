@@ -5,6 +5,8 @@ from pathlib import Path
 
 import pytest
 
+from refs import SF_DIR
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
@@ -15,6 +17,25 @@ def spark():
     s = get_spark("tests", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def oracle_check():
+    """Check a Spark frame against DuckDB SQL over the sf0.001 testdata
+    with the correctness comparator of ``tools/check_correctness.py``:
+    ``oracle_check(sdf, sql)`` asserts the verdict is ok and returns it.
+    One DuckDB connection serves the whole session."""
+    from tools.check_correctness import compare, oracle_connection
+
+    con = oracle_connection(SF_DIR)
+
+    def check(sdf, sql):
+        verdict = compare(sdf, con, sql)
+        assert verdict["ok"], verdict
+        return verdict
+
+    yield check
+    con.close()
 
 
 @pytest.fixture

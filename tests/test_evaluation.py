@@ -9,6 +9,11 @@ from __future__ import annotations
 from fractions import Fraction
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from refs import SF_DIR, r6, texts
 
 
 def _eval_rows():
@@ -2316,3 +2321,149 @@ def test_rrf_fuse_null_system_raises_cleanly(spark):
     )
     with _pt.raises(ValueError, match="NULL system"):
         rrf_fuse(df)
+
+
+def _py_chrf_counts(pairs, max_n=6):
+    from collections import Counter
+
+    agg = {n: [0, 0, 0] for n in range(1, max_n + 1)}
+    for cand, ref in pairs:
+        c = "".join(cand.lower().strip().split())
+        r = "".join(ref.lower().strip().split())
+        for n in range(1, max_n + 1):
+            cg = Counter(c[i : i + n] for i in range(len(c) - n + 1))
+            rg = Counter(r[i : i + n] for i in range(len(r) - n + 1))
+            agg[n][0] += sum(cg.values())
+            agg[n][1] += sum(rg.values())
+            agg[n][2] += sum((cg & rg).values())
+    return agg
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    st.lists(st.tuples(texts(1, 5), texts(1, 5)), min_size=1, max_size=5)
+)
+def test_chrf_report_matches_python_counter(spark, pairs):
+    """Corpus chrF counts equal a pure-Python Counter-intersection
+    reference at every order; F follows the single-division identity."""
+    from healthcare_dbt_datamart_spark.llmops.evaluation import chrf_report
+
+    df = spark.createDataFrame(
+        [(i, c, r) for i, (c, r) in enumerate(pairs)],
+        "id long, cand string, ref string",
+    )
+    got = {r.order: r for r in chrf_report(df, "cand", "ref", "id").collect()}
+    want = _py_chrf_counts(pairs)
+    for n in range(1, 7):
+        c, r, m = want[n]
+        assert (got[n].cand_ngrams, got[n].ref_ngrams, got[n].match_ngrams) \
+            == (c, r, m), n
+        if 4 * r + c > 0:
+            assert got[n].fscore == r6(5 * m / (4 * r + c))
+        else:
+            assert got[n].fscore is None
+
+def test_chrf_report_unit_and_guards(spark):
+    """Hand-computed chrF cells on a two-pair corpus: clipped counts,
+    the (1+b2)m/(b2r+c) single-division identity, NULL semantics for
+    gramless orders, null-pair accounting, and the empty-corpus
+    guard."""
+    from healthcare_dbt_datamart_spark.llmops.evaluation import chrf_report
+
+    df = spark.createDataFrame(
+        [
+            (1, "abab", "abab"),   # identical: all orders perfect
+            (2, "ab", "ba"),       # 1-grams match fully, 2-grams miss
+            (3, None, "x"),        # NULL pair: excluded + counted
+        ],
+        "id long, cand string, ref string",
+    )
+    got = {r.order: r for r in chrf_report(df, "cand", "ref", "id").collect()}
+    assert got[1].n_pairs == 2 and got[1].n_null_pairs == 1
+    # order 1: cand grams a,b,a,b + a,b = 6; identical for ref; all match
+    assert (got[1].cand_ngrams, got[1].ref_ngrams) == (6, 6)
+    assert got[1].match_ngrams == 6
+    assert got[1].precision == 1.0 and got[1].recall == 1.0
+    assert got[1].fscore == 1.0
+    # order 2: pair1 has ab,ba,ab (clip 3 of 3), pair2 cand=ab ref=ba
+    # (clip 0): c=4, r=4, m=3; F = 5*3/(4*4+4) = 15/20
+    assert (got[2].cand_ngrams, got[2].ref_ngrams, got[2].match_ngrams) == (
+        4, 4, 3,
+    )
+    assert got[2].fscore == round(5 * 3 / (4 * 4 + 4), 6)
+    # order 4: only pair1 ('abab') has a 4-gram; clip 1
+    assert (got[4].cand_ngrams, got[4].match_ngrams) == (1, 1)
+    # order 5/6: no grams anywhere -> every metric NULL, counts 0
+    assert got[5].cand_ngrams == 0 and got[5].fscore is None
+    assert got[6].precision is None and got[6].recall is None
+    # whitespace is stripped before gramming
+    ws = spark.createDataFrame(
+        [(1, "a b", "ab")], "id long, cand string, ref string"
+    )
+    w1 = {r.order: r for r in chrf_report(ws, "cand", "ref", "id").collect()}
+    assert w1[2].match_ngrams == 1  # 'ab' == 'ab' after stripping
+
+    with pytest.raises(ValueError, match="no non-NULL"):
+        chrf_report(
+            spark.createDataFrame(
+                [(1, None, "x")], "id long, cand string, ref string"
+            ),
+            "cand", "ref", "id",
+        )
+    with pytest.raises(ValueError, match="max_n"):
+        chrf_report(df, "cand", "ref", "id", max_n=11)
+    with pytest.raises(ValueError, match="beta"):
+        chrf_report(df, "cand", "ref", "id", beta=0)
+
+@pytest.mark.battery
+def test_retrieval_metrics_driver_shape_duckdb_replay(spark, oracle_check):
+    """MRR / precision@10 / recall@10 per language over the
+    driver-green ndcg_at_k judged pool (query = lang, score = doc
+    length, graded rel = doc_id mod 4 coerced binary) — integer
+    counts, three 6dp divisions."""
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        retrieval_metrics,
+    )
+
+    pool = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .filter(F.col("doc_id") % 3 == 0)
+        .select(
+            "lang",
+            "doc_id",
+            F.col("n_chars").cast("double").alias("score"),
+            F.pmod(F.col("doc_id"), F.lit(4)).cast("int").alias("rel"),
+        )
+    )
+    out = retrieval_metrics(
+        pool, "lang", "doc_id", "score", "rel", k=10
+    ).withColumnRenamed("lang", "query")
+
+    sql = """
+WITH pool AS (
+  SELECT lang, doc_id, CAST(n_chars AS DOUBLE) AS score,
+         CAST((doc_id % 4) > 0 AS INT) AS rel
+  FROM documents WHERE doc_id % 3 = 0
+),
+ranked AS (
+  SELECT lang, rel,
+    row_number() OVER (PARTITION BY lang
+      ORDER BY score DESC, doc_id ASC) AS r
+  FROM pool
+),
+agg AS (
+  SELECT lang AS query, CAST(COUNT(*) AS BIGINT) AS n_docs,
+    CAST(SUM(rel) AS BIGINT) AS n_relevant,
+    CAST(MIN(CASE WHEN rel = 1 THEN r END) AS BIGINT) AS first_rel_rank,
+    CAST(SUM(CASE WHEN r <= 10 AND rel = 1 THEN 1 ELSE 0 END) AS BIGINT)
+      AS hits
+  FROM ranked GROUP BY 1
+)
+SELECT query, n_docs, n_relevant, first_rel_rank,
+  round(1.0 / first_rel_rank, 6) AS mrr,
+  round(hits / 10.0, 6) AS precision_at_k,
+  CASE WHEN n_relevant > 0
+       THEN round(hits::DOUBLE / n_relevant, 6) END AS recall_at_k
+FROM agg
+"""
+    assert oracle_check(out, sql)["spark_rows"] > 0

@@ -14,6 +14,7 @@ from healthcare_dbt_datamart_spark.llmops.filtering import (
     redact_report,
 )
 from healthcare_dbt_datamart_spark.llmops.similarity import embedding_outliers
+from refs import SF_DIR, r6, texts
 
 
 def test_redact_report_pii_patterns(spark):
@@ -1245,11 +1246,11 @@ def test_index_release_pipeline_end_to_end(spark):
         ivfadc_topk_indexed,
         ivfpq_index_upsert,
         kmeans_lloyd,
+        load_ann_model,
         pq_codebooks_trained,
     )
     from healthcare_dbt_datamart_spark.models.index_release import (
         build_index_release,
-        quantizers_from_relation,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1260,9 +1261,7 @@ def test_index_release_pipeline_end_to_end(spark):
         r.run()
 
         # quantizer relation round-trips the deterministic fit exactly
-        cents, books = quantizers_from_relation(
-            spark.table("index_quantizers")
-        )
+        cents, books = load_ann_model(spark, "index_quantizers")
         assert cents == kmeans_lloyd(emb, k=8, n_iter=2)
         assert books == pq_codebooks_trained(emb, m=8, k=16, n_iter=2)
 
@@ -5963,3 +5962,167 @@ def test_rasch_fit_reliable_checkpoint_parity(spark, request):
     }
     assert rel == base
     assert any(ckpt.rglob("part-*"))
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    st.lists(texts(1, 6), min_size=1, max_size=6),
+    st.integers(min_value=1, max_value=100),
+)
+def test_min_k_prob_matches_python_reference(spark, texts, k_pct):
+    """Min-K% tail means equal a pure-Python replay of the quantized
+    Laplace-unigram arithmetic (self-reference fit) at any k."""
+    import math
+    from collections import Counter
+
+    from healthcare_dbt_datamart_spark.llmops.filtering import min_k_prob
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    got = {
+        r.doc_id: r
+        for r in min_k_prob(docs, "text", "doc_id", k_pct=k_pct).collect()
+    }
+
+    toks = [t.lower().strip().split() for t in texts]
+    freq = Counter(w for ws in toks for w in ws)
+    denom = sum(freq.values()) + len(freq)
+    for i, ws in enumerate(toks):
+        lps = sorted(
+            math.floor(
+                math.log((freq[w] + 1) / float(denom)) * 10**9 + 0.5
+            )
+            for w in ws
+        )
+        n = len(lps)
+        kk = max(math.ceil(n * k_pct / 100.0), 1)
+        assert got[i].n_tokens == n and got[i].n_lowest == kk
+        assert got[i].min_k_logprob == r6(sum(lps[:kk]) / (kk * 1e9))
+        assert got[i].mean_logprob == r6(sum(lps) / (n * 1e9))
+
+def test_min_k_prob_unit_and_guards(spark):
+    """Min-K% Prob against a hand-built Laplace unigram reference:
+    tail selection picks exactly the ceil(n·k/100) lowest-logprob
+    tokens (pos tie-break), quantized means replay bit-for-bit in
+    pure Python, unseen tokens get the 1/(N+V) floor, empty docs keep
+    NULL-scored rows, and the guards fire."""
+    import math
+
+    from healthcare_dbt_datamart_spark.llmops.filtering import min_k_prob
+
+    ref = spark.createDataFrame(
+        [(100, "a a a b")], "doc_id long, text string"
+    )
+    docs = spark.createDataFrame(
+        [(1, "a b z a"), (2, "a a"), (3, "   ")],
+        "doc_id long, text string",
+    )
+    out = {
+        r.doc_id: r
+        for r in min_k_prob(
+            docs, "text", "doc_id", ref_df=ref, k_pct=50
+        ).collect()
+    }
+    # reference: c(a)=3 c(b)=1, N=4, V=2 -> denom 6
+    q = lambda p: math.floor(math.log(p) * 10**9 + 0.5)  # noqa: E731
+    lp_a, lp_b, lp_z = q(4 / 6.0), q(2 / 6.0), q(1 / 6.0)
+    # doc 1: 4 tokens, k=50% -> 2 lowest = z then b
+    assert out[1].n_tokens == 4 and out[1].n_lowest == 2
+    assert out[1].min_k_logprob == round((lp_z + lp_b) / (2 * 1e9), 6)
+    assert out[1].mean_logprob == round(
+        (2 * lp_a + lp_b + lp_z) / (4 * 1e9), 6
+    )
+    # doc 2: 2 tokens -> 1 lowest (ceil(2*50/100)=1), both are 'a'
+    assert out[2].n_lowest == 1
+    assert out[2].min_k_logprob == round(lp_a / 1e9, 6)
+    # doc 3: no tokens -> NULL scores, zero counts (fail-as-data)
+    assert out[3].n_tokens == 0 and out[3].n_lowest == 0
+    assert out[3].min_k_logprob is None and out[3].mean_logprob is None
+    # a SEEN doc's tail mean sits above an unseen-token doc's
+    assert out[2].min_k_logprob > out[1].min_k_logprob
+
+    with pytest.raises(ValueError, match="k_pct"):
+        min_k_prob(docs, "text", "doc_id", ref_df=ref, k_pct=0)
+    with pytest.raises(ValueError, match="no tokens"):
+        min_k_prob(
+            docs, "text", "doc_id",
+            ref_df=spark.createDataFrame(
+                [(1, " ")], "doc_id long, text string"
+            ),
+        )
+
+@pytest.mark.battery
+def test_trigram_interp_scores_driver_shape_duckdb_replay(spark, oracle_check):
+    """Recursive-JM trigram scoring at the future query shape: the
+    bigram_interp_scores CCNet split (fit on src0, score the rest),
+    one rung up — the exact recursive-formula SQL from the unit
+    replay, over the real corpus."""
+    from healthcare_dbt_datamart_spark.llmops.filtering import (
+        trigram_interp_scores,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    out = trigram_interp_scores(
+        docs.filter(F.col("source") != "src0"),
+        "text",
+        "doc_id",
+        ref_df=docs.filter(F.col("source") == "src0"),
+    ).withColumnRenamed("id", "doc_id")
+
+    sql = r"""
+WITH rarr AS (
+  SELECT string_split_regex(lower(trim(text)), '\s+') AS w
+  FROM documents WHERE source = 'src0'
+),
+ucnt AS (
+  SELECT t, COUNT(*) AS uc FROM (SELECT unnest(w) AS t FROM rarr)
+  GROUP BY t
+),
+rp AS (
+  SELECT unnest(list_transform(generate_series(1, len(w) - 1),
+                               i -> {'w1': w[i], 'w2': w[i+1]})) AS p
+  FROM rarr WHERE len(w) >= 2
+),
+bcnt AS (
+  SELECT p.w1 AS w1, p.w2 AS w2, COUNT(*) AS bc FROM rp GROUP BY 1, 2
+),
+rt AS (
+  SELECT unnest(list_transform(generate_series(1, len(w) - 2),
+           i -> {'w1': w[i], 'w2': w[i+1], 'w3': w[i+2]})) AS g
+  FROM rarr WHERE len(w) >= 3
+),
+tcnt AS (
+  SELECT g.w1 AS w1, g.w2 AS w2, g.w3 AS w3, COUNT(*) AS tc
+  FROM rt GROUP BY 1, 2, 3
+),
+c12 AS (SELECT w1, w2, SUM(tc) AS c12 FROM tcnt GROUP BY 1, 2),
+c2 AS (SELECT w1, SUM(bc) AS c2 FROM bcnt GROUP BY 1),
+nv AS (SELECT (SUM(uc) + COUNT(*) + 1)::DOUBLE AS n_v1 FROM ucnt),
+darr AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w
+  FROM documents WHERE source != 'src0'
+),
+dt AS (
+  SELECT doc_id,
+         unnest(list_transform(generate_series(1, len(w) - 2),
+           i -> {'w1': w[i], 'w2': w[i+1], 'w3': w[i+2]})) AS g
+  FROM darr WHERE len(w) >= 3
+),
+tg AS (SELECT doc_id, g.w1 AS w1, g.w2 AS w2, g.w3 AS w3 FROM dt)
+SELECT tg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_trigrams,
+       round(-avg(ln(
+         0.5 * COALESCE(tc::DOUBLE / c12.c12, 0.0)
+         + 0.5 * (0.75 * COALESCE(bc::DOUBLE / c2.c2, 0.0)
+                  + 0.25 * ((COALESCE(uc, 0) + 1)::DOUBLE
+                            / nv.n_v1)))), 6) AS lm_score
+FROM tg
+LEFT JOIN tcnt USING (w1, w2, w3)
+LEFT JOIN c12 USING (w1, w2)
+LEFT JOIN bcnt ON bcnt.w1 = tg.w2 AND bcnt.w2 = tg.w3
+LEFT JOIN c2 ON c2.w1 = tg.w2
+LEFT JOIN ucnt ON ucnt.t = tg.w3
+CROSS JOIN nv
+GROUP BY tg.doc_id
+"""
+    assert oracle_check(out, sql)["spark_rows"] > 0

@@ -35,6 +35,10 @@ tie-average rank term ``2·below + cnt + 1`` lives only in
 ``evaluation._rank2``, and the streamed readers hold no metric
 arithmetic of their own.
 
+Tests are grouped by the module they test, never by the round that
+added them, and every oracle comparison in ``tests/`` goes through the
+one comparator, ``tools/check_correctness.compare``.
+
 Per-call knobs those owners replaced stay out: no function takes a
 ``reliable`` (fault tolerance comes from the session's checkpoint dir)
 or a ``trigger_once`` (every state sink ingest drains what is available).
@@ -334,3 +338,26 @@ def test_rank_sum_term_in_one_function():
 
 def test_streamed_readers_hold_no_scorecard_fold():
     assert _pattern_hits(r"scorecard_from_cells") == []
+
+
+TESTS = Path(__file__).resolve().parent
+
+
+def test_no_test_file_named_after_a_round():
+    named = [
+        p.name for p in TESTS.glob("*.py")
+        if p.name.startswith("test_round") or p.name.endswith("_replays.py")
+    ]
+    assert named == []
+
+
+def test_fingerprints_only_through_the_comparator():
+    """``frame_fingerprint`` is called in ``tools/check_correctness.py``'s
+    ``compare`` alone; a test compares with an oracle through it (the
+    ``oracle_check`` fixture), never with a fingerprint of its own."""
+    me = Path(__file__).name
+    hits = [
+        p.name for p in sorted(TESTS.glob("*.py"))
+        if p.name != me and "frame_fingerprint" in p.read_text()
+    ]
+    assert hits == []

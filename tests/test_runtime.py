@@ -2202,6 +2202,45 @@ def test_cross_thread_model_cycle_raises_instead_of_deadlocking(spark):
     assert elapsed < 10, f"cycle took {elapsed:.1f} s to surface"
 
 
+def test_concurrent_models_have_their_own_local_properties(spark):
+    """Two models built side by side by ``run(threads=2)`` each hold their
+    own copy of the caller's local properties: distinct Java
+    ``Properties`` objects, and a property one model sets is not seen by
+    the other. Sharing one object would let a model's job group or
+    execution id leak into, or be cleared under, its neighbour."""
+    import threading
+
+    from healthcare_dbt_datamart_spark.plans.registry import ModelRegistry
+
+    sc = spark.sparkContext
+    system = sc._jvm.java.lang.System
+    r = ModelRegistry(spark)
+    barrier = threading.Barrier(2, timeout=30)
+    seen = {}
+
+    def body(name):
+        def fn(ctx):
+            props = sc._jsc.sc().getLocalProperties()
+            sc.setLocalProperty("test.local_owner", name)
+            barrier.wait()  # both set before either reads
+            seen[name] = (
+                system.identityHashCode(props),
+                sc.getLocalProperty("test.local_owner"),
+            )
+            barrier.wait()
+            return spark.range(1)
+
+        return fn
+
+    for name in ("props_a", "props_b"):
+        r.model(name=name, materialized="view")(body(name))
+    r.run(threads=2)
+    assert seen["props_a"][0] != seen["props_b"][0]
+    assert seen["props_a"][1] == "props_a"
+    assert seen["props_b"][1] == "props_b"
+    assert sc.getLocalProperty("test.local_owner") is None
+
+
 def test_merge_exclude_all_columns_keeps_target_values(spark):
     """merge_exclude_columns covering every non-key column yields an
     EMPTY update set — matched rows must keep ALL target values (and new

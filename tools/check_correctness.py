@@ -71,6 +71,52 @@ def frame_fingerprint(cols, rows):
     return sorted(cols), len(rows), h
 
 
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per testdata table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare(sdf, con, sql: str, pandas_mode: bool = False) -> dict:
+    """The oracle gate for one Spark frame: run ``sql`` on ``con``, take
+    both ``frame_fingerprint``s and return the verdict. ``ok`` needs the
+    sorted column names, the row counts and the value hashes to agree;
+    an empty result is not a failure. When schema and row count agree
+    but the hashes do not, ``spark_only``/``oracle_only`` hold up to
+    three differing normalised rows of each side."""
+    if pandas_mode:
+        spdf = sdf.toPandas()
+        s_cols = list(spdf.columns)
+        s_rows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
+    else:
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    d = con.execute(sql)
+    d_cols = [c[0] for c in d.description]
+    if pandas_mode:
+        d_rows = [tuple(r) for r in d.df().itertuples(index=False, name=None)]
+    else:
+        d_rows = d.fetchall()
+    sc, sn, sh = frame_fingerprint(s_cols, s_rows)
+    dc, dn, dh = frame_fingerprint(d_cols, d_rows)
+    v = {
+        "ok": sc == dc and sn == dn and sh == dh,
+        "spark_rows": sn, "oracle_rows": dn,
+        "schema_match": sc == dc, "hash_match": sh == dh,
+        "spark_cols": sc, "oracle_cols": dc,
+    }
+    if not v["ok"] and sc == dc and sn == dn:
+        s_set = {tuple(norm_cell(x) for x in r) for r in s_rows}
+        d_set = {tuple(norm_cell(x) for x in r) for r in d_rows}
+        v["spark_only"] = list(s_set - d_set)[:3]
+        v["oracle_only"] = list(d_set - s_set)[:3]
+    return v
+
+
 def main() -> int:
     args = sys.argv[1:]
     pandas_mode = "--pandas" in args
@@ -104,11 +150,7 @@ def main() -> int:
         from healthcare_dbt_datamart_spark.session import get_spark
 
         spark = get_spark("correctness-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     qs, oracles = e.queries(), e.oracle_sql()
     failures = []
@@ -117,42 +159,28 @@ def main() -> int:
         if only and name not in only:
             continue
         sdf = fn(spark, sf_dir)
-        if pandas_mode:
-            spdf = sdf.toPandas()
-            s_cols = list(spdf.columns)
-            s_rows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
-        else:
-            s_rows = [tuple(r) for r in sdf.collect()]
-            s_cols = sdf.columns
         if name not in oracles:
-            print(f"{name:28s} rows-only: {len(s_rows)} rows (no oracle)")
-            results[name] = {"rows": len(s_rows), "oracle": False}
+            n = len(sdf.toPandas() if pandas_mode else sdf.collect())
+            print(f"{name:28s} rows-only: {n} rows (no oracle)")
+            results[name] = {"rows": n, "oracle": False}
             continue
-        d = con.execute(oracles[name])
-        d_cols = [c[0] for c in d.description]
-        if pandas_mode:
-            ddf = d.df()
-            d_rows = [tuple(r) for r in ddf.itertuples(index=False, name=None)]
-        else:
-            d_rows = d.fetchall()
-        sc, sn, sh = frame_fingerprint(s_cols, s_rows)
-        dc, dn, dh = frame_fingerprint(d_cols, d_rows)
-        ok = (sc == dc) and (sn == dn) and (sh == dh)
-        status = "OK " if ok else "FAIL"
+        v = compare(sdf, con, oracles[name], pandas_mode)
+        sn, dn = v["spark_rows"], v["oracle_rows"]
         results[name] = {
-            "ok": ok, "spark_rows": sn, "oracle_rows": dn,
-            "schema_match": sc == dc, "hash_match": sh == dh,
+            k: v[k] for k in
+            ("ok", "spark_rows", "oracle_rows", "schema_match", "hash_match")
         }
-        print(f"{name:28s} {status} spark={sn} duck={dn} "
-              f"schema={'=' if sc == dc else f'{sc} vs {dc}'} hash={'=' if sh == dh else 'MISMATCH'}")
-        if not ok:
+        schema = "=" if v["schema_match"] else (
+            f"{v['spark_cols']} vs {v['oracle_cols']}"
+        )
+        print(f"{name:28s} {'OK ' if v['ok'] else 'FAIL'} spark={sn} "
+              f"duck={dn} schema={schema} "
+              f"hash={'=' if v['hash_match'] else 'MISMATCH'}")
+        if not v["ok"]:
             failures.append(name)
-            if sc == dc and sn == dn:
-                # show first differing rows for debugging
-                s_set = {tuple(norm_cell(v) for v in r) for r in s_rows}
-                d_set = {tuple(norm_cell(v) for v in r) for r in d_rows}
-                print("  spark-only:", list(s_set - d_set)[:3])
-                print("  duck-only :", list(d_set - s_set)[:3])
+            if "spark_only" in v:
+                print("  spark-only:", v["spark_only"])
+                print("  duck-only :", v["oracle_only"])
     print("\nFAILURES:", failures or "none")
     if json_path:
         import json as _json

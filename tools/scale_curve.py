@@ -14,9 +14,11 @@ small scale (quadratic pair blowups, driver collects, single-partition
 sorts would all show >>10x). Ratios meaningfully BELOW 10x just mean
 fixed local-mode job overhead still dominates at sf0.1.
 
-    python tools/scale_curve.py [--copies N] [query ...]
+    python tools/scale_curve.py [--copies N] [name ...]
 
-Prints one JSON line per query: {query, base_sec, scaled_sec, ratio}.
+A name is a ``queries()`` key or one of the ``OPS`` below: operators
+with no query slot, each run on a fixed input built from the testdata.
+Prints one JSON line per name: {query, base_sec, scaled_sec, ratio}.
 Replica parquet lives under /tmp (process-unique, removed on exit).
 """
 
@@ -31,6 +33,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 TABLES = [
@@ -68,6 +71,221 @@ DEFAULT_QUERIES = [
     # one-shuffle claim-grain rollup, the composed trained-quantizer index
     "exact_substr_dedup", "claim_rollups", "ivfadc_topk",
 ]
+
+
+def _docs(spark, d):
+    return spark.read.parquet(f"{d}/documents.parquet")
+
+
+def _lineitem(spark, d):
+    return spark.read.parquet(f"{d}/lineitem.parquet")
+
+
+def _scored_lineitem(spark, d):
+    return _lineitem(spark, d).select(
+        (F.pmod(F.col("l_partkey"), F.lit(97)) / 96.0).alias("score"),
+        (F.col("l_orderkey") % 2).cast("int").alias("label"),
+    )
+
+
+def op_retrieval_metrics(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        retrieval_metrics,
+    )
+
+    pool = _lineitem(spark, d).select(
+        F.pmod(F.col("l_orderkey"), F.lit(50000)).alias("query"),
+        F.col("l_partkey").alias("doc_id"),
+        (F.pmod(F.col("l_suppkey"), F.lit(97)) / 96.0).alias("score"),
+        F.pmod(F.col("l_partkey"), F.lit(4)).cast("int").alias("rel"),
+    )
+    return retrieval_metrics(pool, "query", "doc_id", "score", "rel")
+
+
+def op_calibration_summary(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        calibration_summary,
+    )
+
+    return calibration_summary(_scored_lineitem(spark, d), "score", "label")
+
+
+def op_bleu_corpus(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.evaluation import bleu_corpus
+
+    pairs = _docs(spark, d).select(
+        "doc_id",
+        F.col("text").alias("cand"),
+        F.concat_ws(" ", F.col("text"), F.lit("tail token")).alias("ref"),
+    )
+    return bleu_corpus(pairs, "cand", "ref", "doc_id")
+
+
+def op_rouge_l(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.evaluation import rouge_l
+
+    pairs = _docs(spark, d).select(
+        "doc_id",
+        F.col("text").alias("cand"),
+        F.reverse(F.col("text")).alias("ref"),
+    )
+    return rouge_l(pairs, "cand", "ref", "doc_id")
+
+
+def op_line_dedup(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.dedup import line_dedup
+
+    return line_dedup(_docs(spark, d), "text", "doc_id")
+
+
+def op_hits_fixedpoint(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.graph import hits_fixedpoint
+
+    edges = _lineitem(spark, d).select(
+        F.pmod(F.col("l_partkey"), F.lit(20000)).alias("src"),
+        F.pmod(F.col("l_suppkey"), F.lit(20000)).alias("dst"),
+    ).filter("src != dst")
+    return hits_fixedpoint(edges, n_iter=2)
+
+
+def op_pca_train(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.similarity import pca_train
+
+    emb = spark.read.parquet(f"{d}/embeddings.parquet")
+    return pca_train(emb, "embedding", d_out=4)
+
+
+def op_curriculum_report(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.splits import curriculum_report
+
+    return curriculum_report(
+        _docs(spark, d), "n_chars", "doc_id", [500.0, 2000.0]
+    )
+
+
+def op_brier_decomposition(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        brier_decomposition,
+    )
+
+    return brier_decomposition(_scored_lineitem(spark, d), "score", "label")
+
+
+def op_isotonic_calibration(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.evaluation import (
+        isotonic_apply,
+        isotonic_calibration,
+    )
+
+    sc = _scored_lineitem(spark, d)
+    blocks = isotonic_calibration(sc, "score", "label")
+    return isotonic_apply(sc, "score", blocks)
+
+
+def op_sparse_logreg(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.textstats import (
+        hashed_ngram_features,
+        sparse_logreg_score,
+        sparse_logreg_train,
+    )
+
+    docs = _docs(spark, d)
+    feats = hashed_ngram_features(docs, "text", "doc_id", n_buckets=2**16)
+    labels = docs.select(
+        "doc_id", (F.col("n_chars") % 2).cast("int").alias("y")
+    )
+    model = sparse_logreg_train(feats, labels, n_iter=2, lr=0.5)
+    return sparse_logreg_score(feats, model)
+
+
+def op_bradley_terry_ties(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.preferences import (
+        bradley_terry_ties,
+    )
+
+    # the supplier match log (cheaper unit price wins within an order),
+    # with the matches of every seventh order year called ties
+    orders = spark.read.parquet(f"{d}/orders.parquet")
+    lx = _lineitem(spark, d).select(
+        "l_orderkey",
+        F.col("l_suppkey").alias("supp"),
+        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias(
+            "cents"
+        ),
+        F.col("l_quantity").cast("bigint").alias("qty"),
+    )
+    a, b = lx.alias("a"), lx.alias("b")
+    m = (
+        a.join(b, "l_orderkey")
+        .filter(
+            (F.col("a.supp") != F.col("b.supp"))
+            & (
+                F.col("a.cents") * F.col("b.qty")
+                < F.col("b.cents") * F.col("a.qty")
+            )
+        )
+        .join(
+            orders.select("o_orderkey", "o_orderdate"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .select(
+            F.col("a.supp").alias("side_a"),
+            F.col("b.supp").alias("side_b"),
+            (F.year("o_orderdate") % 7 == 0).alias("is_tie"),
+        )
+    )
+    return bradley_terry_ties(m, n_iter=2)
+
+
+def op_procrustes_align(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.similarity import (
+        procrustes_align,
+    )
+
+    emb = spark.read.parquet(f"{d}/embeddings.parquet")
+    pairs = emb.select(
+        "vec_id",
+        F.col("embedding").alias("x"),
+        F.reverse(F.col("embedding")).alias("y"),  # a fixed permutation
+    )
+    return procrustes_align(pairs, "x", "y")
+
+
+def op_bpe_token_counts(spark, d):
+    from healthcare_dbt_datamart_spark.llmops.bpe import (
+        bpe_token_counts,
+        bpe_train,
+    )
+
+    docs = _docs(spark, d)
+    merges = bpe_train(docs.limit(200), "text", n_merges=4)
+    return bpe_token_counts(docs, "text", "doc_id", merges)
+
+
+# operators with no queries() slot: name -> (spark, sf_dir) -> the result
+# frame, or the fitted model for the trainers, which run at call time
+OPS = {
+    "retrieval_metrics": op_retrieval_metrics,
+    "calibration_summary": op_calibration_summary,
+    "bleu_corpus": op_bleu_corpus,
+    "rouge_l": op_rouge_l,
+    "line_dedup": op_line_dedup,
+    "hits_fixedpoint": op_hits_fixedpoint,
+    "pca_train": op_pca_train,
+    "curriculum_report": op_curriculum_report,
+    "brier_decomposition": op_brier_decomposition,
+    "isotonic_calibration": op_isotonic_calibration,
+    "sparse_logreg": op_sparse_logreg,
+    "bradley_terry_ties": op_bradley_terry_ties,
+    "procrustes_align": op_procrustes_align,
+    "bpe_token_counts": op_bpe_token_counts,
+}
+
+
+def _run(fn, spark, sf_dir: str) -> None:
+    out = fn(spark, sf_dir)
+    if isinstance(out, DataFrame):
+        out.write.format("noop").mode("overwrite").save()
 
 
 def build_replica(spark, base_dir: str, out_dir: str, copies: int) -> None:
@@ -124,16 +342,16 @@ def main() -> None:
         build_replica(spark, base, out_dir, copies)
         print(f"# replica x{copies} built in {time.perf_counter() - t0:.1f}s "
               f"at {out_dir}", file=sys.stderr)
-        qs = e.queries()
+        table = {**e.queries(), **OPS}
         for name in names:
-            fn = qs[name]
+            fn = table[name]
             # warm codegen on the base dir, then time base and replica
-            fn(spark, base).write.format("noop").mode("overwrite").save()
+            _run(fn, spark, base)
             t0 = time.perf_counter()
-            fn(spark, base).write.format("noop").mode("overwrite").save()
+            _run(fn, spark, base)
             t_base = time.perf_counter() - t0
             t0 = time.perf_counter()
-            fn(spark, out_dir).write.format("noop").mode("overwrite").save()
+            _run(fn, spark, out_dir)
             t_scaled = time.perf_counter() - t0
             print(json.dumps({
                 "query": name,
