@@ -1,7 +1,6 @@
-"""Tests for llmops/preferences.py: the tie-aware Bradley-Terry fit,
-best-of-n and DPO pairs against DuckDB replays, and the per-match-row
-rating paths checked against the shipped oracles (the shipped queries
-read the pre-collapsed pair-period board instead)."""
+"""Tests for llmops/preferences.py: the per-match-row rating paths
+checked against the shipped oracles (the shipped queries read the
+pre-collapsed pair-period board instead)."""
 
 from __future__ import annotations
 
@@ -9,208 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from refs import SF_DIR
-
-
-@pytest.mark.battery
-def test_bradley_terry_ties_driver_shape_duckdb_replay(spark, oracle_check):
-    """Rao-Kupper BT at the future query shape: within-order supplier
-    comparisons where a unit-price gap within 5% is a TIE (exact
-    BIGINT cross-multiplied rule — the data carries no exact price
-    ties, so the margin rule is what makes ties a real population:
-    275 tie rows at sf0.001), the cheaper side wins otherwise.
-    3 MM rounds at theta = 3/2, unrolled as MATERIALIZED CTEs with
-    the per-direction theta split (the leaderboard_gate BT oracle
-    discipline)."""
-    from healthcare_dbt_datamart_spark.llmops.preferences import (
-        bradley_terry_ties,
-    )
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    lx = li.select(
-        "l_orderkey",
-        F.col("l_suppkey").alias("supp"),
-        F.round(F.col("l_extendedprice") * 100, 0).cast("bigint").alias(
-            "cents"
-        ),
-        F.col("l_quantity").cast("bigint").alias("qty"),
-    )
-    a, b = lx.alias("a"), lx.alias("b")
-    d = F.col("a.cents") * F.col("b.qty") - F.col("b.cents") * F.col("a.qty")
-    tie = F.abs(d) * 20 <= F.col("b.cents") * F.col("a.qty")
-    rows = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.supp") < F.col("b.supp"))
-        .select(
-            F.when(tie | (d < 0), F.col("a.supp"))
-            .otherwise(F.col("b.supp"))
-            .alias("side_a"),
-            F.when(tie | (d < 0), F.col("b.supp"))
-            .otherwise(F.col("a.supp"))
-            .alias("side_b"),
-            tie.alias("is_tie"),
-        )
-    )
-    out = bradley_terry_ties(rows, n_iter=3, theta=(3, 2))
-
-    s2, tn, td = 10**12, 3, 2
-    sql = """
-WITH lx AS MATERIALIZED (
-  SELECT l_orderkey, l_suppkey AS supp,
-         CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS cents,
-         CAST(l_quantity AS BIGINT) AS qty
-  FROM lineitem
-),
-o AS MATERIALIZED (
-  SELECT CASE WHEN tie OR d < 0 THEN sa ELSE sb END AS a,
-         CASE WHEN tie OR d < 0 THEN sb ELSE sa END AS b,
-         tie AS t
-  FROM (
-    SELECT CAST(x.supp AS VARCHAR) AS sa, CAST(y.supp AS VARCHAR) AS sb,
-           x.cents * y.qty - y.cents * x.qty AS d,
-           abs(x.cents * y.qty - y.cents * x.qty) * 20
-             <= y.cents * x.qty AS tie
-    FROM lx x JOIN lx y USING (l_orderkey)
-    WHERE x.supp < y.supp
-  )
-),
-w AS MATERIALIZED (
-  SELECT a AS i, b AS j, CAST(2 * COUNT(*) + 1 AS BIGINT) AS w2
-  FROM o WHERE NOT t GROUP BY 1, 2
-),
-tsym AS MATERIALIZED (
-  SELECT i, j, CAST(2 * COUNT(*) AS BIGINT) AS t2 FROM (
-    SELECT a AS i, b AS j FROM o WHERE t
-    UNION ALL SELECT b, a FROM o WHERE t
-  ) GROUP BY 1, 2
-),
-obs AS (
-  SELECT i, j FROM w UNION SELECT j, i FROM w UNION SELECT i, j FROM tsym
-),
-pairs AS MATERIALIZED (
-  SELECT obs.i, obs.j,
-         COALESCE(w.w2, 1) AS w2_f,
-         COALESCE(wr.w2, 1) AS w2_r,
-         COALESCE(tsym.t2, 0) AS t2
-  FROM obs
-  LEFT JOIN w ON w.i = obs.i AND w.j = obs.j
-  LEFT JOIN w wr ON wr.i = obs.j AND wr.j = obs.i
-  LEFT JOIN tsym ON tsym.i = obs.i AND tsym.j = obs.j
-),
-tot AS MATERIALIZED (
-  SELECT i, CAST(SUM(w2_f + t2) AS BIGINT) AS A,
-         CAST(SUM(w2_f) AS BIGINT) AS wins2,
-         CAST(SUM(t2) AS BIGINT) AS ties2,
-         CAST(SUM(w2_f + w2_r + t2) AS BIGINT) AS comparisons2
-  FROM pairs GROUP BY 1
-),
-bt0 AS MATERIALIZED (
-  SELECT i AS id, CAST(1000000 AS BIGINT) AS p FROM tot
-)"""
-    for r in range(3):
-        sql += f""",
-btd{r} AS MATERIALIZED (
-  SELECT pairs.i,
-         CAST(SUM(
-           ((w2_f + t2) * CAST({s2} AS BIGINT) * {td})
-             // ({td} * ri.p + {tn} * rj.p)
-           + ((w2_r + t2) * CAST({s2} AS BIGINT) * {tn})
-             // ({td} * rj.p + {tn} * ri.p)
-         ) AS BIGINT) AS B
-  FROM pairs JOIN bt{r} ri ON ri.id = pairs.i
-             JOIN bt{r} rj ON rj.id = pairs.j
-  GROUP BY 1
-),
-bt{r + 1} AS MATERIALIZED (
-  SELECT btd{r}.i AS id,
-         CAST((A * CAST({s2} AS BIGINT)) // B AS BIGINT) AS p
-  FROM btd{r} JOIN tot ON tot.i = btd{r}.i
-)"""
-    sql += """
-SELECT tot.i AS item, wins2, ties2, comparisons2, bt3.p AS rating_fp
-FROM bt3 JOIN tot ON tot.i = bt3.id
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-    # the tie population is real at this SF and theta > 1 weighs it
-    rows_out = out.collect()
-    assert sum(r.ties2 for r in rows_out) > 0
-
-@pytest.mark.battery
-def test_best_of_n_driver_shape_duckdb_replay(spark, oracle_check):
-    """Best-of-n at the future query shape: per user keep the
-    highest-value event — one rank-then-filter window per prompt
-    partition, ties on ascending event id, NULL rewards never win."""
-    from healthcare_dbt_datamart_spark.llmops.preferences import best_of_n
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        F.col("user_id").alias("prompt_id"),
-        F.col("event_id").alias("response_id"),
-        F.col("value").cast("double").alias("reward"),
-    )
-    out = best_of_n(ev)
-
-    sql = """
-WITH s AS (
-  SELECT user_id AS prompt_id, event_id AS response_id,
-         CAST(value AS DOUBLE) AS reward
-  FROM events
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY prompt_id
-              ORDER BY reward DESC NULLS LAST, response_id ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY prompt_id) AS n_samples
-  FROM s
-)
-SELECT prompt_id, response_id, reward,
-       CAST(n_samples AS BIGINT) AS n_samples
-FROM ranked WHERE rn = 1
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-
-@pytest.mark.battery
-def test_dpo_pairs_driver_shape_duckdb_replay(spark, oracle_check):
-    """DPO pair construction at the future query shape: per user the
-    highest-value event (chosen) against the lowest (rejected), kept
-    only when the reward gap exceeds the margin — 6dp gap, NULL
-    rewards excluded up front, single-response prompts pair with
-    themselves and drop."""
-    from healthcare_dbt_datamart_spark.llmops.preferences import dpo_pairs
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        F.col("user_id").alias("prompt_id"),
-        F.col("event_id").alias("response_id"),
-        F.col("value").cast("double").alias("reward"),
-    )
-    out = dpo_pairs(ev, min_margin=0.5)
-
-    sql = """
-WITH s AS (
-  SELECT user_id AS prompt_id, event_id AS response_id,
-         CAST(value AS DOUBLE) AS reward
-  FROM events
-  WHERE value IS NOT NULL
-),
-ranked AS (
-  SELECT prompt_id AS prompt, response_id AS resp, reward AS r,
-    row_number() OVER (PARTITION BY prompt_id
-      ORDER BY reward DESC, response_id ASC) AS best,
-    row_number() OVER (PARTITION BY prompt_id
-      ORDER BY reward ASC, response_id ASC) AS worst
-  FROM s
-),
-b AS (SELECT prompt, resp AS chosen, r AS reward_chosen
-      FROM ranked WHERE best = 1),
-w AS (SELECT prompt, resp AS rejected, r AS reward_rejected
-      FROM ranked WHERE worst = 1)
-SELECT prompt AS prompt_id, chosen, rejected,
-       reward_chosen, reward_rejected,
-       round(reward_chosen - reward_rejected, 6) AS reward_gap
-FROM b JOIN w USING (prompt)
-WHERE chosen != rejected
-  AND round(reward_chosen - reward_rejected, 6) > 0.5
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-    rows = out.collect()
-    assert all(r.reward_gap > 0.5 for r in rows)
 
 
 @pytest.mark.battery

@@ -1,50 +1,20 @@
-"""Driver-SHAPE DuckDB oracle replays for the round-16 promotion queue.
-
-Seventh file in the pre-proof convention. Cohort here: the Rao-Kupper
-tie-aware Bradley-Terry over a supplier match log WITH a deterministic
-integer tie rule — the arena-vote shape plain ``bradley_terry`` cannot
-ingest (tie rows are real closeness evidence, not noise to drop).
+"""Driver-shape DuckDB replays of the operators that have no ``QUERIES``
+slot: the tie-aware Bradley-Terry fit, hashed n-gram features, the
+curriculum phases and report, and trained-merge BPE token counts. Each
+compares through the shared comparator (the ``oracle_check`` fixture).
 """
 
 from __future__ import annotations
 
 import pytest
-
 from pyspark.sql import functions as F
 
-pytestmark = pytest.mark.battery  # opt-out: `-m "not battery"` fast path
+from refs import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _compare(spark_df, oracle_sql, tables=("lineitem",)):
-    import duckdb
-
-    from tools.check_correctness import frame_fingerprint
-
-    s_cols = spark_df.columns
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    con = duckdb.connect()
-    try:
-        for t in tables:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')"
-            )
-        res = con.execute(oracle_sql)
-        d_cols = [c[0] for c in res.description]
-        d_rows = res.fetchall()
-    finally:
-        con.close()
-    sc, sn, sh = frame_fingerprint(s_cols, s_rows)
-    dc, dn, dh = frame_fingerprint(d_cols, d_rows)
-    assert sn > 0, "empty Spark result voids the replay"
-    assert sc == dc, f"schema {sc} vs oracle {dc}"
-    assert sn == dn, f"rows {sn} vs oracle {dn}"
-    assert sh == dh, "value-hash mismatch vs DuckDB oracle"
+pytestmark = pytest.mark.battery
 
 
-def test_bradley_terry_ties_driver_shape_duckdb_replay(spark):
+def test_bradley_terry_ties_driver_shape_duckdb_replay(spark, oracle_check):
     """Rao-Kupper BT at the future query shape: within-order supplier
     comparisons where a unit-price gap within 5% is a TIE (exact
     BIGINT cross-multiplied rule — the data carries no exact price
@@ -161,13 +131,13 @@ bt{r + 1} AS MATERIALIZED (
 SELECT tot.i AS item, wins2, ties2, comparisons2, bt3.p AS rating_fp
 FROM bt3 JOIN tot ON tot.i = bt3.id
 """
-    _compare(out, sql)
+    assert oracle_check(out, sql)["spark_rows"] > 0
     # the tie population is real at this SF and theta > 1 weighs it
     rows_out = out.collect()
     assert sum(r.ties2 for r in rows_out) > 0
 
 
-def test_hashed_ngram_features_driver_shape_duckdb_replay(spark):
+def test_hashed_ngram_features_driver_shape_duckdb_replay(spark, oracle_check):
     """The fastText input layer at the future query shape: word
     unigrams + bigrams hashed into 2^18 buckets over the documents
     corpus — (id, feat, v) sparse triples, feat a deterministic
@@ -200,10 +170,10 @@ SELECT id, CAST(('0x' || substr(md5(g), 1, 5))::BIGINT % 262144 AS BIGINT)
        CAST(COUNT(*) AS BIGINT) AS v
 FROM grams GROUP BY 1, 2
 """
-    _compare(out, sql, tables=("documents",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
 
 
-def test_curriculum_report_driver_shape_duckdb_replay(spark):
+def test_curriculum_report_driver_shape_duckdb_replay(spark, oracle_check):
     """Curriculum scheduling audit at the future query shape: documents
     phased by n_chars against ascending thresholds [200, 350] — per
     phase, row counts + the observed difficulty envelope next to the
@@ -237,12 +207,12 @@ SELECT CAST(phase AS INT) AS phase,
          AS bound_hi
 FROM staged GROUP BY phase
 """
-    _compare(out, sql, tables=("documents",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
     # the thresholds genuinely split the corpus into 3 phases
     assert {r.phase for r in out.collect()} == {0, 1, 2}
 
 
-def test_curriculum_phases_key_matches_sql_hash(spark):
+def test_curriculum_phases_key_matches_sql_hash(spark, oracle_check):
     """The per-row shuffle key is the engine-independent md5-prefix
     integer (seed:id, 15 hex digits) — full projection replay so the
     phase rule AND the key replay bit-for-bit."""
@@ -266,10 +236,10 @@ SELECT doc_id,
     AS curriculum_key
 FROM documents
 """
-    _compare(out, sql, tables=("documents",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
 
 
-def test_bpe_token_counts_driver_shape_duckdb_replay(spark):
+def test_bpe_token_counts_driver_shape_duckdb_replay(spark, oracle_check):
     """Trained-merge BPE token budgets at the future query shape: 3
     merges trained on the corpus (driver model state, the bpe_merges
     construction), then per-document exact piece counts — the oracle
@@ -333,7 +303,7 @@ SELECT d.doc_id AS id,
 FROM documents d LEFT JOIN counts c ON c.id = d.doc_id
 """
     )
-    _compare(out, sql, tables=("documents",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
     # the merges genuinely compress: total pieces < total characters
     tot = out.agg(F.sum("n_tokens")).collect()[0][0]
     chars = (
@@ -355,7 +325,3 @@ FROM documents d LEFT JOIN counts c ON c.id = d.doc_id
         .collect()[0][0]
     )
     assert tot < chars
-
-
-if __name__ == "__main__":
-    raise SystemExit(pytest.main([__file__, "-v"]))

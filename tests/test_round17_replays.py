@@ -1,51 +1,20 @@
-"""Driver-SHAPE DuckDB oracle replays for the round-17 promotion queue.
-
-Eighth file in the pre-proof convention. Cohort here: the RLHF
-data-construction pair — best_of_n (rejection sampling over a reward
-column) and dpo_pairs (chosen/rejected preference pairs with a reward
-margin), both over the events table as the natural (prompt, response,
-reward) relation (user = prompt, event = response, value = reward).
+"""Driver-shape DuckDB replays of the operators that have no ``QUERIES``
+slot: best-of-n, DPO pairs, the sparse logistic-regression trainer,
+Matryoshka truncation and MMR re-ranking. Each compares through the
+shared comparator (the ``oracle_check`` fixture).
 """
 
 from __future__ import annotations
 
 import pytest
-
 from pyspark.sql import functions as F
 
-pytestmark = pytest.mark.battery  # opt-out: `-m "not battery"` fast path
+from refs import SF_DIR
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _compare(spark_df, oracle_sql, tables=("events",)):
-    import duckdb
-
-    from tools.check_correctness import frame_fingerprint
-
-    s_cols = spark_df.columns
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    con = duckdb.connect()
-    try:
-        for t in tables:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')"
-            )
-        res = con.execute(oracle_sql)
-        d_cols = [c[0] for c in res.description]
-        d_rows = res.fetchall()
-    finally:
-        con.close()
-    sc, sn, sh = frame_fingerprint(s_cols, s_rows)
-    dc, dn, dh = frame_fingerprint(d_cols, d_rows)
-    assert sn > 0, "empty Spark result voids the replay"
-    assert sc == dc, f"schema {sc} vs oracle {dc}"
-    assert sn == dn, f"rows {sn} vs oracle {dn}"
-    assert sh == dh, "value-hash mismatch vs DuckDB oracle"
+pytestmark = pytest.mark.battery
 
 
-def test_best_of_n_driver_shape_duckdb_replay(spark):
+def test_best_of_n_driver_shape_duckdb_replay(spark, oracle_check):
     """Best-of-n at the future query shape: per user keep the
     highest-value event — one rank-then-filter window per prompt
     partition, ties on ascending event id, NULL rewards never win."""
@@ -74,10 +43,10 @@ SELECT prompt_id, response_id, reward,
        CAST(n_samples AS BIGINT) AS n_samples
 FROM ranked WHERE rn = 1
 """
-    _compare(out, sql)
+    assert oracle_check(out, sql)["spark_rows"] > 0
 
 
-def test_dpo_pairs_driver_shape_duckdb_replay(spark):
+def test_dpo_pairs_driver_shape_duckdb_replay(spark, oracle_check):
     """DPO pair construction at the future query shape: per user the
     highest-value event (chosen) against the lowest (rejected), kept
     only when the reward gap exceeds the margin — 6dp gap, NULL
@@ -118,12 +87,12 @@ FROM b JOIN w USING (prompt)
 WHERE chosen != rejected
   AND round(reward_chosen - reward_rejected, 6) > 0.5
 """
-    _compare(out, sql)
+    assert oracle_check(out, sql)["spark_rows"] > 0
     rows = out.collect()
     assert all(r.reward_gap > 0.5 for r in rows)
 
 
-def test_sparse_logreg_driver_shape_duckdb_replay(spark):
+def test_sparse_logreg_driver_shape_duckdb_replay(spark, oracle_check):
     """The fastText-shape classifier trainer at the future query shape:
     sparse logistic regression over hashed unigram+bigram features
     (labels = lang == 'en'), 3 quantized joint rounds — margins are
@@ -214,12 +183,12 @@ SELECT feat, w_fp FROM w3
 UNION ALL
 SELECT CAST(-1 AS BIGINT), b FROM b3
 """
-    _compare(out, sql, tables=("documents",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
     # the trained model is non-trivial: weights moved off zero
     assert out.filter("w_fp != 0").count() > 0
 
 
-def test_matryoshka_truncate_driver_shape_duckdb_replay(spark):
+def test_matryoshka_truncate_driver_shape_duckdb_replay(spark, oracle_check):
     """MRL prefix truncation at the future query shape: keep the first
     16 of 64 dims and L2-renormalize — per-row left-fold norm (the
     oracle's list_reduce matches Spark's F.aggregate element order
@@ -244,13 +213,13 @@ FROM (
   FROM (SELECT vec_id, label, embedding[1:16] AS sliced FROM embeddings)
 )
 """
-    _compare(out, sql, tables=("embeddings",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
     # unit geometry: renormalized prefixes have ~unit L2 norm
     row = out.filter("embedding is not null").first()
     assert abs(sum(x * x for x in row.embedding) - 1.0) < 1e-4
 
 
-def test_mmr_rerank_driver_shape_duckdb_replay(spark):
+def test_mmr_rerank_driver_shape_duckdb_replay(spark, oracle_check):
     """MMR re-ranking at the future query shape: diversify the proven
     cosine top-10 pool down to k=5 at lambda=0.5 — the greedy rounds
     unroll as selection CTEs, and every float matches bit-for-bit
@@ -317,12 +286,8 @@ FROM (
     ) + """
 )
 """
-    _compare(out, sql, tables=("embeddings",))
+    assert oracle_check(out, sql)["spark_rows"] > 0
     # diversification is real: later picks carry nonzero redundancy
     rows = {r.mmr_rank: r for r in out.collect()}
     assert rows[1].redundancy == 0.0
     assert any(rows[r].redundancy > 0 for r in range(2, 6))
-
-
-if __name__ == "__main__":
-    raise SystemExit(pytest.main([__file__, "-v"]))

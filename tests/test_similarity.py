@@ -1,7 +1,6 @@
-"""Tests for llmops/similarity.py and the index release: Matryoshka
-truncation, MMR re-ranking, and the paths the shipped queries do not
-take (``ivf_topk`` fitting its own centroids, the index DAG training its
-own quantizer)."""
+"""Tests for llmops/similarity.py and the index release: the paths the
+shipped queries do not take (``ivf_topk`` fitting its own centroids, the
+index DAG training its own quantizer)."""
 
 from __future__ import annotations
 
@@ -9,112 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from refs import SF_DIR
-
-
-@pytest.mark.battery
-def test_matryoshka_truncate_driver_shape_duckdb_replay(spark, oracle_check):
-    """MRL prefix truncation at the future query shape: keep the first
-    16 of 64 dims and L2-renormalize — per-row left-fold norm (the
-    oracle's list_reduce matches Spark's F.aggregate element order
-    exactly), 6dp-rounded output vectors."""
-    from healthcare_dbt_datamart_spark.llmops.similarity import (
-        matryoshka_truncate,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = matryoshka_truncate(emb, "embedding", d_out=16)
-
-    sql = """
-SELECT vec_id,
-  list_transform(sliced,
-    x -> round(CAST(x AS DOUBLE) / greatest(nrm, 1e-12), 6)) AS embedding,
-  label
-FROM (
-  SELECT vec_id, label, sliced,
-    sqrt(list_reduce(
-      list_transform(sliced, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-      (a, b) -> a + b)) AS nrm
-  FROM (SELECT vec_id, label, embedding[1:16] AS sliced FROM embeddings)
-)
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-    # unit geometry: renormalized prefixes have ~unit L2 norm
-    row = out.filter("embedding is not null").first()
-    assert abs(sum(x * x for x in row.embedding) - 1.0) < 1e-4
-
-@pytest.mark.battery
-def test_mmr_rerank_driver_shape_duckdb_replay(spark, oracle_check):
-    """MMR re-ranking at the future query shape: diversify the proven
-    cosine top-10 pool down to k=5 at lambda=0.5 — the greedy rounds
-    unroll as selection CTEs, and every float matches bit-for-bit
-    because the SQL dot/norm folds run in the same element order as
-    the driver's sequential sums (list_reduce over index order), the
-    relevance column is the already-6dp-rounded cosine, and
-    multiplication/division/sqrt are IEEE-correctly-rounded on both
-    engines. (The earlier 'not hash-gateable' note was too
-    pessimistic — THIS test is the evidence.)"""
-    from healthcare_dbt_datamart_spark.llmops.similarity import mmr_rerank
-    from healthcare_dbt_datamart_spark.models.testdata_queries import ORACLE
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = mmr_rerank(emb, 0, k=5, pool=10, lam=0.5)
-
-    fold = (
-        "list_reduce(list_transform(generate_series(1, len({a})),"
-        " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)),"
-        " (x, y) -> x + y)"
-    )
-    sql = f"""
-WITH ct AS ({ORACLE["cosine_topk"]}),
-pool AS MATERIALIZED (
-  SELECT ct.vec_id AS id, ct.cosine AS rel, e.embedding AS v
-  FROM ct JOIN embeddings e USING (vec_id)
-),
-nrm AS MATERIALIZED (
-  SELECT id, sqrt({fold.format(a="v", b="v")}) AS n FROM pool
-),
-sims AS MATERIALIZED (
-  SELECT a.id AS ia, b.id AS ib,
-    CASE WHEN na.n > 0 AND nb.n > 0
-         THEN {fold.format(a="a.v", b="b.v")} / (na.n * nb.n)
-         ELSE 0.0 END AS s
-  FROM pool a JOIN pool b ON a.id != b.id
-  JOIN nrm na ON na.id = a.id JOIN nrm nb ON nb.id = b.id
-),
-sel1 AS MATERIALIZED (
-  SELECT id, rel, 0.0 AS red, 0.5 * rel - 0.5 * 0.0 AS score
-  FROM pool ORDER BY (0.5 * rel - 0.5 * 0.0) DESC, id ASC LIMIT 1
-)"""
-    for r in range(2, 6):
-        prev_union = " UNION ALL ".join(
-            f"SELECT id FROM sel{p}" for p in range(1, r)
-        )
-        sql += f""",
-sel{r} AS MATERIALIZED (
-  SELECT p.id, p.rel, red.red,
-         0.5 * p.rel - 0.5 * red.red AS score
-  FROM pool p
-  JOIN (SELECT ia AS id, MAX(s) AS red FROM sims
-        WHERE ib IN ({prev_union}) GROUP BY ia) red USING (id)
-  WHERE p.id NOT IN ({prev_union})
-  ORDER BY score DESC, p.id ASC LIMIT 1
-)"""
-    sql += """
-SELECT CAST(id AS BIGINT) AS vec_id, CAST(rnk AS INT) AS mmr_rank,
-       round(rel, 6) AS relevance, round(red, 6) AS redundancy,
-       round(score, 6) AS mmr_score
-FROM (
-""" + "\n  UNION ALL\n".join(
-        f"  SELECT id, {r} AS rnk, rel, red, score FROM sel{r}"
-        for r in range(1, 6)
-    ) + """
-)
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-    # diversification is real: later picks carry nonzero redundancy
-    rows = {r.mmr_rank: r for r in out.collect()}
-    assert rows[1].redundancy == 0.0
-    assert any(rows[r].redundancy > 0 for r in range(2, 6))
 
 
 @pytest.mark.battery

@@ -1,8 +1,8 @@
-"""Tests for llmops/splits.py: winsorization and curriculum phases
-against DuckDB replays, the median/MAD unit, guard and pure-Python
-property checks, UniMax at a fixed budget, and the leakage-safe split
-building its own components (``mad_scores`` and the shipped UniMax and
-split queries are checked by the query gate)."""
+"""Tests for llmops/splits.py: winsorization against a DuckDB replay,
+the median/MAD unit, guard and pure-Python property checks, UniMax at a
+fixed budget, and the leakage-safe split building its own components
+(``mad_scores`` and the shipped UniMax and split queries are checked by
+the query gate)."""
 
 from __future__ import annotations
 
@@ -20,6 +20,8 @@ from refs import SF_DIR
         st.integers(min_value=-50, max_value=50), min_size=1, max_size=12
     )
 )
+
+
 def test_mad_scores_matches_python_order_stats(spark, vals):
     """Median/MAD equal the pure-Python lower-median reference; every
     robust_z follows; zero-MAD yields NULLs."""
@@ -53,6 +55,7 @@ def test_mad_scores_matches_python_order_stats(spark, vals):
             assert r.robust_z == z and r.outlier == (abs(z_fp) > 3500000)
         else:
             assert r.robust_z is None and r.outlier is None
+
 
 def test_mad_scores_unit_and_guards(spark):
     """Median/MAD robust scoring on hand-built groups: exact lower
@@ -96,6 +99,7 @@ def test_mad_scores_unit_and_guards(spark):
             ),
             "v", "id", grp_col="grp",
         )
+
 
 @pytest.mark.battery
 def test_unimax_allocation_driver_shape_duckdb_replay(spark, oracle_check):
@@ -151,6 +155,7 @@ FROM tot
 """
     assert oracle_check(out, sql)["spark_rows"] > 0
 
+
 @pytest.mark.battery
 def test_winsorize_scores_driver_shape_duckdb_replay(spark, oracle_check):
     """Winsorization at the future query shape: per-language document
@@ -185,72 +190,6 @@ SELECT t.lang, t.id, t.v AS value, b.lo, b.hi,
   GREATEST(LEAST(t.v, b.hi), b.lo) AS value_w,
   (t.v < b.lo OR t.v > b.hi) AS clipped
 FROM t JOIN bounds b USING (lang)
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-
-@pytest.mark.battery
-def test_curriculum_report_driver_shape_duckdb_replay(spark, oracle_check):
-    """Curriculum scheduling audit at the future query shape: documents
-    phased by n_chars against ascending thresholds [200, 350] — per
-    phase, row counts + the observed difficulty envelope next to the
-    declared bounds; the oracle recomputes the first-threshold phase
-    rule in SQL."""
-    from healthcare_dbt_datamart_spark.llmops.splits import (
-        curriculum_report,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", F.col("n_chars").cast("double").alias("difficulty")
-    )
-    out = curriculum_report(
-        docs, "difficulty", "doc_id", thresholds=[200.0, 350.0]
-    )
-
-    sql = """
-WITH staged AS (
-  SELECT CAST(n_chars AS DOUBLE) AS d,
-    CASE WHEN CAST(n_chars AS DOUBLE) <= 200.0 THEN 0
-         WHEN CAST(n_chars AS DOUBLE) <= 350.0 THEN 1
-         ELSE 2 END AS phase
-  FROM documents
-)
-SELECT CAST(phase AS INT) AS phase,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       MIN(d) AS d_min, MAX(d) AS d_max,
-       CASE WHEN phase = 1 THEN 200.0 WHEN phase = 2 THEN 350.0 END
-         AS bound_lo,
-       CASE WHEN phase = 0 THEN 200.0 WHEN phase = 1 THEN 350.0 END
-         AS bound_hi
-FROM staged GROUP BY phase
-"""
-    assert oracle_check(out, sql)["spark_rows"] > 0
-    # the thresholds genuinely split the corpus into 3 phases
-    assert {r.phase for r in out.collect()} == {0, 1, 2}
-
-@pytest.mark.battery
-def test_curriculum_phases_key_matches_sql_hash(spark, oracle_check):
-    """The per-row shuffle key is the engine-independent md5-prefix
-    integer (seed:id, 15 hex digits) — full projection replay so the
-    phase rule AND the key replay bit-for-bit."""
-    from healthcare_dbt_datamart_spark.llmops.splits import (
-        curriculum_phases,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", F.col("n_chars").cast("double").alias("difficulty")
-    )
-    out = curriculum_phases(
-        docs, "difficulty", "doc_id", thresholds=[200.0, 350.0]
-    ).select("doc_id", "phase", "curriculum_key")
-
-    sql = """
-SELECT doc_id,
-  CAST(CASE WHEN CAST(n_chars AS DOUBLE) <= 200.0 THEN 0
-            WHEN CAST(n_chars AS DOUBLE) <= 350.0 THEN 1
-            ELSE 2 END AS INT) AS phase,
-  ('0x' || substr(md5('cur1:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-    AS curriculum_key
-FROM documents
 """
     assert oracle_check(out, sql)["spark_rows"] > 0
 
